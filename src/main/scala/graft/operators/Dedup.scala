@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Snapshot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,15 +21,6 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   private val P: Long = 2147483647L // 2^31 - 1, Mersenne prime
-
-  private def ccTimed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      System.err.println(f"[graft-timing]   $name%-26s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    r
-  }
-
 
   /** Exact dedup: keep the smallest `idCol` row per distinct content hash.
     *
@@ -586,7 +578,8 @@ object Dedup {
     *    between them (hot degree ≥ 16384 → star).
     *
     * Throws if `maxIter` rounds don't converge (a silent partial clustering
-    * would under-dedup downstream).
+    * would under-dedup downstream). Round snapshots and what the result
+    * retains: [[graft.core.Snapshot]].
     *
     * @return one row per node: (`idCol`, `component`), both long.
     */
@@ -599,7 +592,7 @@ object Dedup {
     // produce (q75's cosine pair build), and both the auto skew probe and
     // the algorithms' initial edge materialization would otherwise each
     // replay it. Safe to release afterwards — both algorithms return
-    // frames rooted in their own localCheckpoint snapshots.
+    // frames rooted in their own snapshots (graft.core.Snapshot).
     import org.apache.spark.storage.StorageLevel
     val pn = pairs
       .select(col(aCol).cast("long").as(aCol), col(bCol).cast("long").as(bCol))
@@ -630,87 +623,45 @@ object Dedup {
     out.select(col("id").as(idCol), col("comp").as("component"))
   }
 
-  /** The local-checkpoint block handle of a checkpointed frame: its
-    * analyzed plan is a LogicalRDD over the persisted RDD. Unpersisting
-    * the PREVIOUS round's handle after the next round materializes keeps
-    * exactly one round snapshot alive instead of `maxIter` of them.
-    */
-  private[operators] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
   private def ccPointerJumping(ids: DataFrame, pairs: DataFrame,
                                aCol: String, bCol: String,
-                               maxIter: Int): DataFrame = {
-    // eager localCheckpoint, NOT persist (r18, measured): every round's
-    // localCheckpoint(false) runs queryExecution.toRdd, which re-OPTIMIZES
-    // the whole per-round plan — and a persisted `edges` keeps its full
-    // logical subtree (for q290's inline shape, the entire co-activity
-    // build) in that plan, so each round paid ~0.3–1.0 s of DRIVER
-    // planning against a ~0.07 s job at gate scale. A checkpointed edge
-    // set is a LogicalRDD leaf: the per-round plan is three joins over
-    // two leaves, whatever the build plan was (probe: round-0 construct
-    // 0.95 → 0.27 s, table-backed; inline builds save more). Same
-    // materialization work — round 0's job paid it before, the
-    // checkpoint job pays it now — and the storage level is the same
-    // MEMORY_AND_DISK default.
-    val edges = pairs
-      .select(col(aCol).cast("long").as("s"), col(bCol).cast("long").as("d"))
-      .unionByName(pairs
-        .select(col(bCol).cast("long").as("s"), col(aCol).cast("long").as("d")))
-      .distinct()
-      .localCheckpoint(true)
-    val edgesCkpt = checkpointRdd(edges)
-    // each round references `labels` twice (propagation join + merge join),
-    // so a persist-only chain DOUBLES the logical plan per round —
-    // localCheckpoint materializes the round AND truncates lineage to a
-    // LogicalRDD (a fault-tolerant deployment swaps in reliable
-    // checkpointing via sparkContext.setCheckpointDir; same shape)
-    // lazy checkpoint: the null-safe convergence probe is the materializing
-    // action (coalesce also covers the empty-node-set case — sum() over
-    // zero rows is null, and the loop then converges on 0 == 0)
-    var labels = ids.withColumn("comp", col("id")).localCheckpoint(false)
-    var prevCkpt = checkpointRdd(labels)
-    var prevSum = labels.agg(coalesce(sum("comp"), lit(0L)))
-      .collect()(0).getLong(0)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val prop = edges.join(labels, col("s") === col("id"))
-        .groupBy(col("d"))
-        .agg(min(col("comp")).as("pcomp"))
-      val merged = labels.join(prop, col("id") === col("d"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("pcomp"), col("comp"))).as("comp"))
-      // pointer jumping: comp := comp(comp). Labels are node ids (mins over
-      // ids), so the mapping is total and the inner join loses no rows.
-      val jump = merged.select(col("id").as("jid"), col("comp").as("jcomp"))
-      // lazy checkpoint: the convergence probe below is the materializing
-      // action, so each round runs ONE job, not checkpoint + probe
-      val next = merged.join(jump, col("comp") === col("jid"))
-        .select(col("id"), col("jcomp").as("comp"))
-        .localCheckpoint(false)
-      val newSum = ccTimed(s"cc-pj round $iter") {
-        next.agg(coalesce(sum("comp"), lit(0L))).collect()(0).getLong(0)
-      }
-      // `next` is materialized and lineage-truncated now — the previous
-      // round's snapshot can go (the FINAL round's snapshot backs the
-      // returned frame and stays)
-      prevCkpt.foreach(_.unpersist(false))
-      prevCkpt = checkpointRdd(next)
-      labels = next
-      converged = newSum == prevSum
-      prevSum = newSum
-      iter += 1
+                               maxIter: Int): DataFrame =
+    Snapshot.loop("cc-pj") { loop =>
+      // eager: every round reads the edge set (r18: a persisted edge set
+      // kept q290's whole build in each round's plan, ~0.3–1.0 s of driver
+      // planning per ~0.07 s round). The rounds are lazy: their label-sum
+      // probe materializes them.
+      val edges = loop.take(pairs
+        .select(col(aCol).cast("long").as("s"), col(bCol).cast("long").as("d"))
+        .unionByName(pairs
+          .select(col(bCol).cast("long").as("s"), col(aCol).cast("long").as("d")))
+        .distinct(), eager = true)
+      // coalesce covers the empty node set: sum() over zero rows is null,
+      // and the loop then converges on 0 == 0
+      def labelSum(l: DataFrame): Long =
+        l.agg(coalesce(sum("comp"), lit(0L))).collect()(0).getLong(0)
+      val init = loop.take(ids.withColumn("comp", col("id")), eager = false)
+      val r = loop.untilStable(init, Some(labelSum(init)), maxIter,
+          eager = false) { labels =>
+        val prop = edges.join(labels, col("s") === col("id"))
+          .groupBy(col("d"))
+          .agg(min(col("comp")).as("pcomp"))
+        val merged = labels.join(prop, col("id") === col("d"), "left")
+          .select(col("id"),
+            least(col("comp"), coalesce(col("pcomp"), col("comp"))).as("comp"))
+        // pointer jumping: comp := comp(comp). Labels are node ids (mins
+        // over ids), so the mapping is total and the inner join loses no rows.
+        val jump = merged.select(col("id").as("jid"), col("comp").as("jcomp"))
+        merged.join(jump, col("comp") === col("jid"))
+          .select(col("id"), col("jcomp").as("comp"))
+      }(labelSum)
+      loop.release(edges)
+      if (!r.converged)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds — " +
+            "raise maxIter (cluster diameter exceeds the bound)")
+      r.frame
     }
-    edgesCkpt.foreach(_.unpersist(false))
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "raise maxIter (cluster diameter exceeds the bound)")
-    labels
-  }
 
   /** Alternating large-star/small-star rounds (Kiveris et al., SoCC'14).
     * Edge set is kept oriented large→small; a round rewrites every edge
@@ -723,61 +674,53 @@ object Dedup {
     * of equal counts and sums.
     */
   private def ccStar(ids: DataFrame, pairs: DataFrame,
-                     aCol: String, bCol: String, maxIter: Int): DataFrame = {
-    var edges = pairs
-      .select(greatest(col(aCol), col(bCol)).cast("long").as("s"),
-        least(col(aCol), col(bCol)).cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .distinct()
-      .localCheckpoint(false) // the initial probe below materializes it
-    var prevCkpt = checkpointRdd(edges)
-    // xxhash64 spans the full long range, so its sum accumulates in
-    // decimal — a long sum would hit ANSI ARITHMETIC_OVERFLOW
-    def probe(e: DataFrame): Seq[Any] = e.agg(count(lit(1)),
-      coalesce(sum(col("s") + col("d")), lit(0L)),
-      coalesce(sum(xxhash64(col("s"), col("d")).cast("decimal(20,0)")),
-        lit(0).cast("decimal(30,0)"))).collect()(0).toSeq
-    var prev = probe(edges)
-    var iter = 0
-    var converged = prev.head == 0L // no edges at all: nothing to contract
-    while (!converged && iter < maxIter) {
-      // large-star: for every node u, neighbors v > u re-link to
-      // m = min(Γ(u) ∪ {u}); output stays oriented v > u >= m
-      val sym = edges.select(col("s").as("u"), col("d").as("v"))
-        .unionByName(edges.select(col("d").as("u"), col("s").as("v")))
-      val lm = sym.groupBy(col("u")).agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-      val large = sym.join(lm, "u").filter(col("v") > col("u"))
-        .select(col("v").as("s"), col("m").as("d"))
-        .distinct()
-      // small-star: for every node u, its smaller neighbors (plus u) hang
-      // off m = min of them; d >= m always, so orientation is preserved
-      val sm = large.groupBy(col("s")).agg(min(col("d")).as("m"))
-      val next = large.join(sm, "s")
-        .filter(col("d") =!= col("m"))
-        .select(col("d").as("s"), col("m").as("d"))
-        .unionByName(sm.select(col("s"), col("m").as("d")))
-        .distinct()
-        .localCheckpoint(false) // the probe below materializes it
-      val cur = ccTimed(s"cc-star round $iter")(probe(next))
-      prevCkpt.foreach(_.unpersist(false))
-      prevCkpt = checkpointRdd(next)
-      edges = next
-      converged = cur == prev
-      prev = cur
-      iter += 1
+                     aCol: String, bCol: String, maxIter: Int): DataFrame =
+    Snapshot.loop("cc-star") { loop =>
+      // lazy snapshots throughout: each one's probe materializes it
+      val init = loop.take(pairs
+        .select(greatest(col(aCol), col(bCol)).cast("long").as("s"),
+          least(col(aCol), col(bCol)).cast("long").as("d"))
+        .filter(col("s") =!= col("d"))
+        .distinct(), eager = false)
+      // xxhash64 spans the full long range, so its sum accumulates in
+      // decimal — a long sum would hit ANSI ARITHMETIC_OVERFLOW
+      def probe(e: DataFrame): Seq[Any] = e.agg(count(lit(1)),
+        coalesce(sum(col("s") + col("d")), lit(0L)),
+        coalesce(sum(xxhash64(col("s"), col("d")).cast("decimal(20,0)")),
+          lit(0).cast("decimal(30,0)"))).collect()(0).toSeq
+      val p0 = probe(init)
+      val r =
+        if (p0.head == 0L) Snapshot.Stable(init, 0, converged = true) // no edges
+        else loop.untilStable(init, Some(p0), maxIter, eager = false) { edges =>
+          // large-star: for every node u, neighbors v > u re-link to
+          // m = min(Γ(u) ∪ {u}); output stays oriented v > u >= m
+          val sym = edges.select(col("s").as("u"), col("d").as("v"))
+            .unionByName(edges.select(col("d").as("u"), col("s").as("v")))
+          val lm = sym.groupBy(col("u")).agg(min(col("v")).as("mv"))
+            .select(col("u"), least(col("u"), col("mv")).as("m"))
+          val large = sym.join(lm, "u").filter(col("v") > col("u"))
+            .select(col("v").as("s"), col("m").as("d"))
+            .distinct()
+          // small-star: for every node u, its smaller neighbors (plus u)
+          // hang off m = min of them; d >= m always, so orientation holds
+          val sm = large.groupBy(col("s")).agg(min(col("d")).as("m"))
+          large.join(sm, "s")
+            .filter(col("d") =!= col("m"))
+            .select(col("d").as("s"), col("m").as("d"))
+            .unionByName(sm.select(col("s"), col("m").as("d")))
+            .distinct()
+        }(probe)
+      if (!r.converged)
+        throw new IllegalStateException(
+          s"connectedComponents(star) did not converge in $maxIter rounds — " +
+            "raise maxIter")
+      // star fixpoint: every non-min node carries exactly one edge to its
+      // component min; isolated nodes label themselves
+      val lab = r.frame.groupBy(col("s")).agg(min(col("d")).as("comp"))
+        .select(col("s").as("lid"), col("comp"))
+      ids.join(lab, col("id") === col("lid"), "left")
+        .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents(star) did not converge in $maxIter rounds — " +
-          "raise maxIter")
-    // star fixpoint: every non-min node carries exactly one edge to its
-    // component min; isolated nodes label themselves
-    val lab = edges.groupBy(col("s")).agg(min(col("d")).as("comp"))
-      .select(col("s").as("lid"), col("comp"))
-    ids.join(lab, col("id") === col("lid"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-  }
 
   /** End-to-end embedding-cosine near-duplicate dedup: semantic duplicates
     * (translations re-crawled, templated rewrites, boilerplate with token

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Snapshot
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -174,7 +175,7 @@ object Graph {
       // NOW (blocking): left to the async ContextCleaner it outlives the
       // whole consumer query, and a single 100× kcore run was heap-
       // marginal on a 24g JVM from exactly this.
-      Dedup.checkpointRdd(weighted).foreach(_.unpersist(true))
+      Snapshot.release(weighted, blocking = true)
       result
     }
   }
@@ -230,14 +231,11 @@ object Graph {
     *
     * Per round: one join of edges to ranks (keyed by src), one dst-keyed
     * agg, one left join back to the node set — all hash-partitioned on the
-    * node key, nothing global. Every `checkpointInterval` rounds the rank
-    * frame is eagerly local-checkpointed (the same truncation
-    * `Dedup.connectedComponents` uses) and the previous snapshot released,
-    * so lineage — and with it driver plan size and recovery cost — stays
-    * bounded at any iteration count; at the gate's 3 rounds no checkpoint
-    * fires and the plan is byte-identical to the untruncated one. A
-    * fault-tolerant deployment swaps in reliable checkpointing via
-    * `sparkContext.setCheckpointDir` — same shape.
+    * node key, nothing global. The edge list is an eager snapshot and the
+    * rounds run under `Snapshot.Loop.iterate`, so plan size stays bounded
+    * at any iteration count; at the gate's 3 rounds no rank snapshot is
+    * taken and the plan is byte-identical to the untruncated one
+    * (eager/lazy rule and retention: [[graft.core.Snapshot]]).
     * Dangling nodes (no out-edges) simply don't contribute — the standard
     * redistribute-to-all correction would need a scalar broadcast per round
     * and is omitted, matching the common "weakly preferential" variant.
@@ -245,47 +243,39 @@ object Graph {
   def pageRankFixedPoint(edges: DataFrame, srcCol: String = "src",
                          dstCol: String = "dst", iterations: Int = 3,
                          dampNum: Long = 85, dampDen: Long = 100,
-                         unit: Long = 1000000000L,
-                         checkpointInterval: Int = 8): DataFrame = {
-    // eager localCheckpoint (r18, measured): the edge list feeds every
-    // round's contribution join PLUS deg PLUS nodes, so the final plan
-    // carried ~5 copies of the caller's edge-build subtree through the
-    // optimizer — q104's single action spent more time PLANNING than
-    // running (as-is 2.6–3.5 s vs 1.6–1.7 s with the edge leaf, same-host
-    // A/B). One materialization job at call time replaces the first
-    // consumer's implicit one; the snapshot backs the returned lazy frame
-    // (same retention contract as connectedComponents' final labels).
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint(true)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("od"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val base = (unit * (dampDen - dampNum)) / dampDen
-    var ranks = nodes.withColumn("r", lit(unit))
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
-    for (i <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .join(deg, "src")
-        .select(col("dst").as("node"), expr("r div od").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("c"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(
-            s"($dampNum * coalesce(c, CAST(0 AS BIGINT))) div $dampDen"))
-            .as("r"))
-      if (checkpointInterval > 0 && i % checkpointInterval == 0 &&
-          i < iterations) {
-        // eager: materializes this round now (one extra pass over the rank
-        // frame per interval), truncates lineage to a LogicalRDD, and lets
-        // the previous interval's snapshot go — exactly one alive at a time
-        ranks = ranks.localCheckpoint(true)
-        prevCkpt.foreach(_.unpersist(false))
-        prevCkpt = Dedup.checkpointRdd(ranks)
+                         unit: Long = 1000000000L): DataFrame =
+    Snapshot.loop("pagerank") { loop =>
+      // eager (r18: q104 planned ~5 copies of the caller's edge build —
+      // 2.6–3.5 s vs 1.6–1.7 s with the edge leaf)
+      val e = loop.take(
+        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), eager = true)
+      val deg = e.groupBy("src").agg(count(lit(1)).as("od"))
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+      val base = (unit * (dampDen - dampNum)) / dampDen
+      loop.iterate(nodes.withColumn("r", lit(unit)), iterations) { ranks =>
+        val contrib = e
+          .join(ranks.withColumnRenamed("node", "src"), "src")
+          .join(deg, "src")
+          .select(col("dst").as("node"), expr("r div od").as("c"))
+          .groupBy("node").agg(sum(col("c")).as("c"))
+        nodes.join(contrib, Seq("node"), "left")
+          .select(col("node"),
+            (lit(base) + expr(
+              s"($dampNum * coalesce(c, CAST(0 AS BIGINT))) div $dampDen"))
+              .as("r"))
       }
     }
-    ranks
-  }
+
+  /** The undirected edge set of a directed edge list: one id-ordered
+    * (`a` < `b`) row per node pair, self-loops dropped.
+    */
+  private def undirected(edges: DataFrame, srcCol: String,
+                         dstCol: String): DataFrame =
+    edges.select(least(col(srcCol), col(dstCol)).as("a"),
+        greatest(col(srcCol), col(dstCol)).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
 
   /** Per-node triangle counts over an undirected edge list (self-loops and
     * duplicate/reversed edges collapse first).
@@ -323,11 +313,7 @@ object Graph {
     //    rank window replayed 4× side by side over the pre-cap pair
     //    census and the JVM died on heap) — checkpoint ONCE, the query is
     //    scan-shaped again.
-    val undLazy = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val undLazy = undirected(edges, srcCol, dstCol)
     val und =
       if (graft.core.Sizing.materializeForFanout(edges))
         undLazy.localCheckpoint(true)
@@ -384,11 +370,7 @@ object Graph {
     // join) and the candidate census replays the adjacency twice more —
     // materialize once IF the input is a big un-materialized build, the
     // same Sizing gate (and full rationale) as triangleCount's checkpoint
-    val undLazy = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val undLazy = undirected(edges, srcCol, dstCol)
     val und =
       if (graft.core.Sizing.materializeForFanout(edges))
         undLazy.localCheckpoint(true)
@@ -419,70 +401,60 @@ object Graph {
     * semi-join-shaped filters — hash-partitioned on node ids, no windows,
     * no cartesian. The only driver sync per round is the scalar survivor
     * count (the convergence test: peeling is monotone, so an unchanged
-    * count means an unchanged set). Lineage is truncated with the same
-    * eager localCheckpoint pattern as `pageRankFixedPoint` every
-    * `checkpointInterval` rounds, so plan size stays bounded however deep
-    * the peel goes; degeneracy-ordered corpora converge in O(peel-depth)
-    * rounds, each a fraction of the previous edge volume.
+    * count means an unchanged set). Each round's surviving edge set is an
+    * eager snapshot ([[graft.core.Snapshot]]), so plan size stays bounded
+    * however deep the peel goes; degeneracy-ordered corpora converge in
+    * O(peel-depth) rounds, each a fraction of the previous edge volume.
     */
   def kCore(edges: DataFrame, k: Int, srcCol: String = "src",
             dstCol: String = "dst", maxRounds: Int = 100,
             oracleRounds: Int = -1): DataFrame = {
     require(k >= 1 && maxRounds >= 1, "k, maxRounds >= 1")
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      // eager: the peel rounds below re-read the edge set; materializing
-      // it once stops every round's action from replaying the raw scan
-      .localCheckpoint(true)
-    var cur = und
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = Dedup.checkpointRdd(und)
-    var survivors = -1L
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      round += 1
-      // cached: the survivor set feeds the count AND two endpoint joins
-      val keep = cur.select(col("a").as("n"))
-        .unionAll(cur.select(col("b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val kept = keep.count()
-      if (kept == survivors) done = true
-      else {
-        survivors = kept
-        // eager checkpoint every round: materializes the shrunk edge set
-        // (so the next round's degree aggregate reads a LogicalRDD, not a
-        // replayed join chain), truncates lineage, and lets the PREVIOUS
-        // round's snapshot go — exactly one survivor set alive at a time
-        // (the round-9 version held every round's cache to convergence)
-        cur = cur.join(keep.withColumnRenamed("n", "a"), "a")
-          .join(keep.withColumnRenamed("n", "b"), "b")
-          .select(col("a"), col("b"))
-          .localCheckpoint(true)
-        prevCkpt.foreach(_.unpersist(false))
-        prevCkpt = Dedup.checkpointRdd(cur)
+    Snapshot.loop("kcore") { loop =>
+      // eager: every peel round re-reads the edge set
+      var cur = loop.rotate(loop.take(undirected(edges, srcCol, dstCol),
+        eager = true))
+      var survivors = -1L
+      var round = 0
+      var done = false
+      while (!done && round < maxRounds) {
+        round += 1
+        loop.round(round) {
+          // cached: the survivor set feeds the count AND two endpoint joins
+          val keep = cur.select(col("a").as("n"))
+            .unionAll(cur.select(col("b").as("n")))
+            .groupBy("n").agg(count(lit(1)).as("d"))
+            .filter(col("d") >= k).select(col("n"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val kept = keep.count()
+          if (kept == survivors) done = true
+          else {
+            survivors = kept
+            // eager: materialized now, while `keep` is still cached
+            cur = loop.rotate(loop.take(
+              cur.join(keep.withColumnRenamed("n", "a"), "a")
+                .join(keep.withColumnRenamed("n", "b"), "b")
+                .select(col("a"), col("b")), eager = true))
+          }
+          // keep's only consumers (count + the joins into cur) have
+          // materialized by here
+          keep.unpersist(false)
+        }
       }
-      // keep's only consumers (count + the joins into cur) have
-      // materialized by here
-      keep.unpersist(false)
+      // loud overrun check: the gate oracles replay the peel as a FIXED
+      // unrolled round count — a convergence depth past the unroll would
+      // otherwise surface as a silent hash mismatch at some new scale
+      // factor instead of a named error (rounds past convergence are
+      // no-ops on both engines, so <= is the correct bound)
+      val peels = if (done) round - 1 else round
+      if (oracleRounds > 0 && (!done || peels > oracleRounds))
+        throw new IllegalStateException(
+          s"kCore(k=$k) used $peels peel rounds (converged=$done) but the " +
+            s"oracle unrolls only $oracleRounds — regenerate the oracle")
+      cur.select(col("a").as("node")).unionAll(cur.select(col("b").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("core_degree"))
+        .filter(col("core_degree") >= k)
     }
-    // loud overrun check: the gate oracles replay the peel as a FIXED
-    // unrolled round count — a convergence depth past the unroll would
-    // otherwise surface as a silent hash mismatch at some new scale
-    // factor instead of a named error (rounds past convergence are
-    // no-ops on both engines, so <= is the correct bound)
-    val peels = if (done) round - 1 else round
-    if (oracleRounds > 0 && (!done || peels > oracleRounds))
-      throw new IllegalStateException(
-        s"kCore(k=$k) used $peels peel rounds (converged=$done) but the " +
-          s"oracle unrolls only $oracleRounds — regenerate the oracle")
-    cur.select(col("a").as("node")).unionAll(cur.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("core_degree"))
-      .filter(col("core_degree") >= k)
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -496,58 +468,32 @@ object Graph {
     * Scale shape: a round is one neighbor-label join + a two-level hash
     * aggregate — the (count desc, label asc) argmax is `min(struct(-c,
     * lab))`, scalar-only so the partial aggregate collapses votes
-    * map-side (the pqAssign rule), never a per-node sort window. Lineage
-    * truncates on the pageRank checkpoint pattern.
+    * map-side (the pqAssign rule), never a per-node sort window. Both
+    * loop inputs are eager snapshots (r18: q314's consumer action spent
+    * 5.3–6.0 s optimizing `rounds` copies of the caller's edge build for a
+    * ~0.08 s job); the rounds run under `Snapshot.Loop.iterate` and the
+    * result stays lazy ([[graft.core.Snapshot]]).
     */
   def labelPropagation(nodes: DataFrame, nodeCol: String,
                        edges: DataFrame, srcCol: String = "src",
-                       dstCol: String = "dst", rounds: Int = 3,
-                       checkpointInterval: Int = 8): DataFrame = {
+                       dstCol: String = "dst", rounds: Int = 3): DataFrame = {
     require(rounds >= 1, "rounds >= 1")
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    // Both loop inputs become eager localCheckpoint LEAVES (r18,
-    // measured): the rounds are lazy, so the consumer's single action
-    // used to optimize a plan carrying `rounds` copies of the caller's
-    // full edge-build subtree plus four copies of the node set — for
-    // q314's inline co-activity build that was 5.3–6.0 s of which the
-    // 3-round JOB was ~0.08 s. With two LogicalRDD leaves the plan is
-    // just the rounds. The result stays LAZY: Dataset.localCheckpoint's
-    // own materialization runs the static plan (no AQE re-optimization
-    // — measured 1.1 s vs 0.08 s for an adaptive action over the SAME
-    // frame), so the old finally-block eager checkpoint cost more than
-    // the whole query; the consumer's action now materializes through
-    // AQE. The two snapshots back the returned frame and stay alive —
-    // the same retention contract as connectedComponents' final labels.
-    val sym = und.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(und.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(true)
-    val n = nodes.select(col(nodeCol).as("u")).localCheckpoint(true)
-    var labels = n.withColumn("lab", col("u"))
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
-    for (i <- 1 to rounds) {
-      val votes = sym
-        .join(labels.withColumnRenamed("u", "v"), "v")
-        .groupBy(col("u"), col("lab")).agg(count(lit(1)).as("c"))
-        .groupBy(col("u"))
-        .agg(min(struct(-col("c"), col("lab"))).as("_m"))
-        .select(col("u"), col("_m.lab").as("_new"))
-      labels = n.join(votes, Seq("u"), "left")
-        .select(col("u"), coalesce(col("_new"), col("u")).as("lab"))
-      // long runs still truncate lineage every `checkpointInterval`
-      // rounds (plan depth stays bounded); at the gate's 3 rounds this
-      // never fires and the whole loop stays lazy
-      if (checkpointInterval > 0 && i % checkpointInterval == 0 &&
-          i < rounds) {
-        labels = labels.localCheckpoint(true)
-        prevCkpt.foreach(_.unpersist(false))
-        prevCkpt = Dedup.checkpointRdd(labels)
-      }
+    Snapshot.loop("lpa") { loop =>
+      val und = undirected(edges, srcCol, dstCol)
+      val sym = loop.take(und.select(col("a").as("u"), col("b").as("v"))
+        .unionAll(und.select(col("b").as("u"), col("a").as("v"))), eager = true)
+      val n = loop.take(nodes.select(col(nodeCol).as("u")), eager = true)
+      loop.iterate(n.withColumn("lab", col("u")), rounds) { labels =>
+        val votes = sym
+          .join(labels.withColumnRenamed("u", "v"), "v")
+          .groupBy(col("u"), col("lab")).agg(count(lit(1)).as("c"))
+          .groupBy(col("u"))
+          .agg(min(struct(-col("c"), col("lab"))).as("_m"))
+          .select(col("u"), col("_m.lab").as("_new"))
+        n.join(votes, Seq("u"), "left")
+          .select(col("u"), coalesce(col("_new"), col("u")).as("lab"))
+      }.select(col("u").as("node"), col("lab").as("community"))
     }
-    labels.select(col("u").as("node"), col("lab").as("community"))
   }
 
   /** k-truss: the maximal subgraph in which every edge participates in
@@ -560,21 +506,15 @@ object Graph {
     * Scale shape: support is the triangle wedge join (the q118
     * machinery) — two keyed equi-joins through the symmetrized adjacency,
     * then an edge-keyed count; a round adds one inner join back to the
-    * edge list. Driver sync per round is the scalar surviving-edge count;
-    * lineage truncates on the shared localCheckpoint pattern.
+    * edge list. Driver sync per round is the scalar surviving-edge count.
+    * Each round's survivors are an eager snapshot, so round i+1's wedge
+    * join (it reads the edge set three times) runs over a leaf instead of
+    * replaying the peel chain ([[graft.core.Snapshot]]).
     */
   def kTruss(edges: DataFrame, k: Int, srcCol: String = "src",
              dstCol: String = "dst", maxRounds: Int = 100,
              oracleRounds: Int = -1): DataFrame = {
     require(k >= 3 && maxRounds >= 1, "k >= 3, maxRounds >= 1")
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      // eager: the first round's wedge join reads the edge set several
-      // times — materialize once, never replay the raw scan
-      .localCheckpoint(true)
     // Two physically different, value-identical support strategies — the
     // choice is a scalar density probe, AQE-style: per-edge triangle
     // support is the same number whether wedges enumerate symmetrically
@@ -637,52 +577,34 @@ object Graph {
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
     }
-    // density probe: one tiny two-scalar aggregate over the materialized
-    // edge set (the localCheckpoint above already paid the scan)
-    val vc = und.select(col("a")).unionAll(und.select(col("b")))
-      .agg(countDistinct(col("a")).as("v"), count(lit(1)).as("e2")).head()
-    val avgDeg =
-      if (vc.getLong(0) == 0L) 0.0
-      else vc.getLong(1).toDouble / vc.getLong(0)
-    val support: DataFrame => DataFrame =
-      if (avgDeg > 64.0) supportOriented else supportSymmetric
-    var cur = und
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = Dedup.checkpointRdd(und)
-    var edgesLeft = -1L
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      round += 1
-      // eager checkpoint of each round's survivors: round i+1's wedge
-      // join (the expensive pass — it reads the edge set three times)
-      // runs over a materialized LogicalRDD instead of replaying the
-      // peel chain, and the previous round's snapshot releases as soon
-      // as this one exists — one edge set alive at a time (the round-9
-      // version stacked every round's strong-cache to convergence and
-      // re-ran i joins of lineage in round i)
-      val strong = support(cur).filter(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
-      val n = strong.count()
-      if (n == edgesLeft) done = true
-      else {
-        edgesLeft = n
-        prevCkpt.foreach(_.unpersist(false))
-        prevCkpt = Dedup.checkpointRdd(strong)
-        cur = strong
-      }
+    Snapshot.loop("ktruss") { loop =>
+      // eager: the first round's wedge join reads the edge set several
+      // times, and the density probe below reads it first
+      val und = loop.take(undirected(edges, srcCol, dstCol), eager = true)
+      val vc = und.select(col("a")).unionAll(und.select(col("b")))
+        .agg(countDistinct(col("a")).as("v"), count(lit(1)).as("e2")).head()
+      val avgDeg =
+        if (vc.getLong(0) == 0L) 0.0
+        else vc.getLong(1).toDouble / vc.getLong(0)
+      val support: DataFrame => DataFrame =
+        if (avgDeg > 64.0) supportOriented else supportSymmetric
+      // surviving-edge count as the probe; on the converging round the
+      // (equal) new snapshot replaces the previous one
+      val r = loop.untilStable(und, None, maxRounds, eager = true) { cur =>
+        support(cur).filter(col("support") >= k - 2).select(col("a"), col("b"))
+      }(_.count())
+      // same loud unroll-depth contract as kCore: a peel deeper than the
+      // oracle's fixed round count must be a named error, not a silent
+      // hash mismatch
+      val peels = if (r.converged) r.rounds - 1 else r.rounds
+      if (oracleRounds > 0 && (!r.converged || peels > oracleRounds))
+        throw new IllegalStateException(
+          s"kTruss(k=$k) used $peels peel rounds (converged=${r.converged}) " +
+            s"but the oracle unrolls only $oracleRounds — regenerate the oracle")
+      r.frame.join(support(r.frame), Seq("a", "b"), "left")
+        .select(col("a"), col("b"),
+          coalesce(col("support"), lit(0L)).as("support"))
+        .filter(col("support") >= k - 2)
     }
-    // same loud unroll-depth contract as kCore: a peel deeper than the
-    // oracle's fixed round count must be a named error, not a silent
-    // hash mismatch
-    val peels = if (done) round - 1 else round
-    if (oracleRounds > 0 && (!done || peels > oracleRounds))
-      throw new IllegalStateException(
-        s"kTruss(k=$k) used $peels peel rounds (converged=$done) but the " +
-          s"oracle unrolls only $oracleRounds — regenerate the oracle")
-    cur.join(support(cur), Seq("a", "b"), "left")
-      .select(col("a"), col("b"),
-        coalesce(col("support"), lit(0L)).as("support"))
-      .filter(col("support") >= k - 2)
   }
 }

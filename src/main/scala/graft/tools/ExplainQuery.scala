@@ -13,9 +13,11 @@ object ExplainQuery {
     val name = args.headOption.getOrElse(
       throw new IllegalArgumentException("usage: ExplainQuery <query> [sfDir]"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -182,12 +182,11 @@ class AnalyticsGraphSpec extends SparkSpec {
   test("pageRankFixedPoint: 20 iterations stay plan-bounded via checkpoints") {
     // 2-cycle at unit mass is invariant under any iteration count, so the
     // values pin correctness while the iteration count exercises the
-    // lineage truncation: with interval 4, the 20-round frame must be
-    // rooted in a checkpoint snapshot (LogicalRDD), not 20 rounds of
-    // joins, and only the rounds after the last checkpoint remain as plan.
+    // lineage truncation: snapshots every 8 rounds, so the 20-round frame
+    // must be rooted in a checkpoint snapshot (LogicalRDD), not 20 rounds
+    // of joins, and only the rounds after the last checkpoint remain as plan.
     val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
-    val ranks = Graph.pageRankFixedPoint(edges, iterations = 20,
-      checkpointInterval = 4)
+    val ranks = Graph.pageRankFixedPoint(edges, iterations = 20)
     val joins = ranks.queryExecution.analyzed.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }.size
@@ -312,6 +311,36 @@ class AnalyticsGraphSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("oracle unrolls only 1"), e2.getMessage)
     assert(Graph.kTruss(diamond, 3, oracleRounds = 4).count() == 5L)
+  }
+
+  test("iterative operators hold exactly the snapshots Snapshot documents") {
+    // graft.core.Snapshot's retention contract: after each operator
+    // returns, the RDDs it left persisted are exactly the snapshot leaves
+    // its lazy result reads, as many as the contract lists
+    val path = (0L until 6L).map(i => (i, i + 1)).toDF("src", "dst")
+    val nodes = (0L to 6L).toDF("n")
+    val diamond = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (1L, 3L))
+      .toDF("src", "dst")
+    val cases = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+      ("cc pointer-jumping", 1,
+        () => Dedup.connectedComponents(nodes, "n", path, "src", "dst")),
+      ("cc star", 1, () => Dedup.connectedComponents(nodes, "n", path,
+        "src", "dst", algorithm = "star")),
+      ("pageRankFixedPoint", 1, () => Graph.pageRankFixedPoint(path)),
+      ("pageRankFixedPoint past 8 rounds", 2,
+        () => Graph.pageRankFixedPoint(path, iterations = 20)),
+      ("labelPropagation", 2, () => Graph.labelPropagation(nodes, "n", path)),
+      ("labelPropagation past 8 rounds", 3,
+        () => Graph.labelPropagation(nodes, "n", path, rounds = 10)),
+      ("kCore", 1, () => Graph.kCore(diamond, 2)),
+      ("kTruss", 1, () => Graph.kTruss(diamond, 3)))
+    for ((name, documented, op) <- cases) {
+      val (out, residue) = persistResidue(op())(snapshotIds)
+      assert(residue.isEmpty,
+        s"$name: persisted RDDs differ from the result's snapshots: $residue")
+      assert(snapshotIds(out).size == documented,
+        s"$name holds ${snapshotIds(out).size} snapshots, documented $documented")
+    }
   }
 
   test("kTruss: dense graph takes the oriented-support path, same values") {

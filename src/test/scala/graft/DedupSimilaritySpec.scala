@@ -329,8 +329,14 @@ class DedupSimilaritySpec extends SparkSpec {
     val out = Dedup.connectedComponents(nodes, "doc_id", pairs, "a", "b")
       .as[(Long, Long)].collect()
     assert(out.forall(_._2 == 1L), "one path component labeled by its min")
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(nodes, "doc_id", pairs, "a", "b", maxIter = 2)
+    // a run that fails to converge still releases every round snapshot
+    for (algorithm <- Seq("pointer-jumping", "star")) {
+      val (_, residue) = persistResidue(intercept[IllegalStateException] {
+        Dedup.connectedComponents(nodes, "doc_id", pairs, "a", "b",
+          maxIter = 2, algorithm = algorithm)
+      })(_ => Set.empty)
+      assert(residue.isEmpty,
+        s"$algorithm left RDDs persisted after throwing: $residue")
     }
   }
 
