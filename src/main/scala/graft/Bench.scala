@@ -122,22 +122,31 @@ object Bench {
 
   /** Deterministic synthetic OHLCV (FIXTURES.md §3 shape: 1-min grid from
     * 2023-01-01, ~1% of rows removed, single symbol, naive timestamps to
-    * exercise the assume-UTC localization path).
+    * exercise the assume-UTC localization path). Every value and the drop
+    * are functions of (row id, stream seed) through `xxhash64` — never a
+    * per-partition `rand` stream — so the rows are identical at any
+    * partition count.
     */
   def genOhlcv(spark: SparkSession, gridRows: Long): DataFrame = {
     val t0 = 1672531200L // 2023-01-01T00:00:00Z
+    // uniform [0, 1) from the hash's top 53 bits
+    def u(seed: Int) =
+      shiftrightunsigned(xxhash64(col("id"), lit(seed)), 11).cast("double") /
+        lit(9007199254740992.0)
     spark.range(gridRows)
       .select(
         // typed timestamps: the reference's extract stage (excluded from its
         // measured pipeline) already parsed CSV stamps before normalize ran
         timestamp_seconds(lit(t0) + col("id") * 60).as("timestamp"),
-        (lit(1.10) + (rand(42) - 0.5) * 0.02).as("open"),
-        (lit(1.10) + rand(43) * 0.01).as("high"),
-        (lit(1.10) - rand(44) * 0.01).as("low"),
-        (lit(1.10) + (rand(45) - 0.5) * 0.01).as("close"),
-        floor(rand(46) * 499 + 1).cast("double").as("volume"),
-        lit("EURUSD").as("symbol"))
-      .filter(rand(47) > 0.01)
+        (lit(1.10) + (u(42) - 0.5) * 0.02).as("open"),
+        (lit(1.10) + u(43) * 0.01).as("high"),
+        (lit(1.10) - u(44) * 0.01).as("low"),
+        (lit(1.10) + (u(45) - 0.5) * 0.01).as("close"),
+        floor(u(46) * 499 + 1).cast("double").as("volume"),
+        lit("EURUSD").as("symbol"),
+        u(47).as("_keep"))
+      .filter(col("_keep") > 0.01)
+      .drop("_keep")
   }
 
   def main(args: Array[String]): Unit = {

@@ -10,8 +10,8 @@ import org.apache.spark.storage.StorageLevel
   * fastest. Above [[spillBytes]] the cached batches compete with the
   * executor heap for the whole run — the 60M-row repair probe spent >25%
   * of wall in GC (medians 22–28 s/rep) with the heap-resident cache — so
-  * large frames go `DISK_ONLY`: the SAME RDD partitioning (FastFill's
-  * assumeSorted layout contract survives, unlike a parquet round-trip,
+  * large frames go `DISK_ONLY`: the SAME RDD partitioning (the range
+  * layout FastFill requires survives, unlike a parquet round-trip,
   * whose file splits lose the global partition order), but the serialized
   * batches live in spark.local.dir (page-cache-backed scratch) instead of
   * the heap.

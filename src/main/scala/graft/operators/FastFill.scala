@@ -2,24 +2,26 @@ package graft.operators
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions.{col, min, unix_micros}
 import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass per-series gap filling: forward-fill + pandas-style linear
-  * positional interpolation (limit_direction="both") in ONE partition scan.
+/** Single-pass per-series reindex + gap filling: pandas `reindex` onto the
+  * series' grid, forward-fill, and pandas-style linear positional
+  * interpolation (limit_direction="both") in ONE narrow partition scan.
   *
-  * The window-algebra form ([[Interpolate]]) needs two global sorts per
-  * pass (asc + desc running frames); for a single-symbol series those
-  * serialize onto one task and dominate the pipeline. This operator instead
-  * repartitions by the series key, sorts within partitions once, and runs a
-  * linear forward scan with a per-gap backward fix-up — the same O(n) shape
-  * pandas uses, but distributed across series.
+  * The input must be in the [[RangeLayout]]: one series may span many
+  * consecutive ordered partitions, so a hot series parallelizes across
+  * tasks (the 100 TB skew answer). The scan stays narrow; cross-boundary
+  * state (grid continuation, ffill carry, interpolation neighbors) comes
+  * from two cheap metadata jobs (per-series anchors + per-partition
+  * boundary summaries, both fixed-size per (partition, series)) folded on
+  * the driver into seeds. The summary pass also checks the layout.
+  * Positions are grid indices, which are globally consistent, so the grid
+  * step is required.
   *
   * This is the deliberate `mapPartitions` escape hatch (SURVEY.md §7.4
   * preference order (d)): fill semantics are inherently sequential per
@@ -36,22 +38,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * row is one `UnsafeRow.copy()` — compact bytes, no per-field objects —
   * so per-task retention for a 250k-row partition drops from ~2M boxes to
   * 250k byte arrays, and fills mutate fixed-width slots in place.
-  *
-  * Two distribution modes:
-  *  - default (`crossPartition = false`): each series is fully contained in
-  *    one partition (hash-by-key layout). Per-series memory is bounded by
-  *    series length — fine when series are small, a straggler/spill risk
-  *    for one huge series.
-  *  - `crossPartition = true`: the input is RANGE-partitioned on
-  *    (keys, ts) — one series may span many consecutive partitions, so a
-  *    hot series parallelizes across tasks (the 100 TB skew answer). The
-  *    scan stays narrow; cross-boundary state (grid continuation, ffill
-  *    carry, interpolation neighbors) is computed by two cheap metadata
-  *    jobs (per-series anchors + per-partition boundary summaries, both
-  *    fixed-size per (partition, series)) and broadcast as seeds. Requires
-  *    `assumeSorted` and `reindexStepMicros` (positions are grid indices,
-  *    which are globally consistent; row-positional interpolation without a
-  *    grid would need global row numbering).
   */
 object FastFill {
 
@@ -63,7 +49,7 @@ object FastFill {
     */
   private final case class Seed(
       anchorUs: Long,                     // series' global first stamp
-      prevGridUs: Long,                   // last on-grid stamp in earlier partitions (MinValue = none)
+      prevGridUs: Long,                   // grid floor of earlier partitions' last stamp (MinValue = none)
       ffillCarry: Array[Any],             // last non-null per ffill col in earlier partitions (null = none)
       inUs: Array[Long], inV: Array[Double],   // per interp col: last non-null (stamp, value) before
       inHas: Array[Boolean],
@@ -72,7 +58,7 @@ object FastFill {
 
   /** One (partition, series-run) boundary summary from the metadata scan. */
   private final case class SeedSummary(
-      pid: Int, key: List[Any], lastGrid: java.lang.Long, ff: Array[Any],
+      run: RangeLayout.Run, lastGrid: Long, ff: Array[Any],
       inUs: Array[java.lang.Long], inV: Array[java.lang.Double],
       outUs: Array[java.lang.Long], outV: Array[java.lang.Double])
 
@@ -83,49 +69,31 @@ object FastFill {
     case _ => false
   }
 
-  /** Internal → external for partition-key values, matching what a
-    * DataFrame `collect()` yields for the same column (the anchors job
-    * collects externally): the two seed jobs and the fill scan must agree
-    * on map keys. Supported key types are checked by `fill`.
-    */
-  private def externalizeKey(v: Any): Any = v match {
-    case u: UTF8String => u.toString
-    case x => x
-  }
+  /** Last grid point at or before `us` on the grid anchored at `anchorUs`. */
+  private def gridFloor(us: Long, anchorUs: Long, stepUs: Long): Long =
+    anchorUs + Math.floorDiv(us - anchorUs, stepUs) * stepUs
 
-  /** @param ffillCols   columns forward-filled (nulls take the previous
+  /** @param df          input in the [[RangeLayout]] on
+    *                    (partitionCols, tsCol); an empty key list is one
+    *                    keyless series
+    * @param ffillCols   columns forward-filled (nulls take the previous
     *                    non-null value)
-    * @param interpCols  columns linearly interpolated over row position
+    * @param interpCols  columns linearly interpolated over grid position
     *                    with both-direction edge fill (must be DOUBLE)
-    * @param reindexStepMicros when set, the scan also performs the pandas
-    *                    `reindex` inline: missing grid stamps (anchored at
-    *                    each series' first stamp) are emitted as null rows
-    *                    and off-grid source rows are dropped — no dense
-    *                    grid materialization, no join
+    * @param stepMicros  the grid step: the scan performs the pandas
+    *                    `reindex` inline — the grid runs from each series'
+    *                    first stamp to the last grid point at or before its
+    *                    last stamp (`date_range(min, max)`); missing grid
+    *                    stamps are emitted as null rows and off-grid source
+    *                    rows are dropped — no dense grid, no join
     * @param trueOnGenerated columns set to boolean true on generated grid
     *                    rows (pre-fill null flags for repair accounting)
-    * @param assumeSorted caller guarantees the input is already partitioned
-    *                    and sorted by (partitionCols, tsCol) within
-    *                    partitions — the scan runs as a narrow mapPartitions
-    *                    with NO shuffle and NO sort
-    * @param crossPartition series may span consecutive ordered partitions
-    *                    (range layout); see scaladoc above. The layout MUST
-    *                    be pinned (cached/materialized): an uncached
-    *                    repartitionByRange re-samples its bounds per job,
-    *                    and the seed pass and fill scan must observe one
-    *                    partitioning (a drift tripwire throws otherwise)
+    * @throws RangeLayout.LayoutError when the input is not in the layout
     */
   def fill(df: DataFrame, ffillCols: Seq[String], interpCols: Seq[String],
-           tsCol: String, partitionCols: Seq[String] = Nil,
-           reindexStepMicros: Option[Long] = None,
-           trueOnGenerated: Seq[String] = Nil,
-           assumeSorted: Boolean = false,
-           crossPartition: Boolean = false): DataFrame = {
-    if (ffillCols.isEmpty && interpCols.isEmpty && reindexStepMicros.isEmpty)
-      return df
-    require(!crossPartition || (assumeSorted && reindexStepMicros.isDefined &&
-      partitionCols.nonEmpty),
-      "crossPartition needs a sorted keyed layout and a reindex grid")
+           tsCol: String, stepMicros: Long,
+           partitionCols: Seq[String] = Nil,
+           trueOnGenerated: Seq[String] = Nil): DataFrame = {
     val schema = df.schema
     val types: Array[DataType] = schema.fields.map(_.dataType)
     val nCols = schema.length
@@ -138,11 +106,11 @@ object FastFill {
       s"FastFill: $tsCol must be a timestamp column")
     require(iIdx.forall(i => types(i) == DoubleType),
       "FastFill: interpolation columns must be DOUBLE")
-    require(!crossPartition || kIdx.forall(i => types(i) match {
+    require(kIdx.forall(i => types(i) match {
       case StringType | IntegerType | LongType | ShortType | ByteType |
            BooleanType => true
       case _ => false
-    }), "FastFill crossPartition: partition keys must be string/integral " +
+    }), "FastFill: partition keys must be string/integral " +
       "(seed-map key equality across the internal and external views)")
     // fast path: every MUTATED column is fixed-width, so buffered rows stay
     // UnsafeRow byte copies and fills are in-place primitive writes. A
@@ -156,19 +124,10 @@ object FastFill {
     // synthesized rows carry nulls in data columns regardless of the
     // input's nullability flags
     val outSchema = StructType(schema.fields.map(_.copy(nullable = true)))
-
-    val prepared =
-      if (assumeSorted && partitionCols.nonEmpty) df
-      else
-        (if (partitionCols.isEmpty) df.coalesce(1)
-         else df.repartition(partitionCols.map(col): _*))
-          .sortWithinPartitions((partitionCols :+ tsCol).map(col): _*)
+    val stepUs = stepMicros
 
     val seeds: Map[(Int, List[Any]), Seed] =
-      if (crossPartition)
-        buildSeeds(prepared, fIdx, iIdx, tsIdx, kIdx, types,
-          partitionCols, reindexStepMicros.get)
-      else Map.empty
+      buildSeeds(df, fIdx, iIdx, tsIdx, kIdx, types, partitionCols, stepUs)
 
     // generic deep copy for the non-fast path (internal values cloned so
     // nothing references the scan's reused buffer row)
@@ -182,9 +141,11 @@ object FastFill {
       new GenericInternalRow(a)
     }
 
-    val inRdd = prepared.queryExecution.toRdd
-    val filledRdd = inRdd.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
+    // the summary pass and this scan read the SAME physical RDD, so they
+    // observe one partitioning by construction; seeds are keyed by that
+    // RDD's partition index, not the running task's (a downstream coalesce
+    // runs several of these partitions in one task)
+    val filledRdd = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       // write one internal value into a fixed-width slot (fast path) or a
       // generic slot (buffered rows are GenericInternalRow there)
       def writeValue(r: InternalRow, ci: Int, v: Any): Unit =
@@ -213,84 +174,72 @@ object FastFill {
         // unavoidable minimum for a scan whose interpolation needs the
         // gap's far edge.
         private def processSeries(rows: ArrayBuffer[InternalRow]): Iterator[InternalRow] = {
-          val seed: Seed =
-            if (seeds.isEmpty) null
-            else {
-              val k = kIdx.map(i =>
-                externalizeKey(rows.head.get(i, types(i)))).toList
-              seeds.getOrElse((pid, k), null)
-            }
+          for (r <- rows)
+            if (r.isNullAt(tsIdx))
+              throw new IllegalStateException(
+                "FastFill: null timestamp in a reindex scan — filter " +
+                  "null stamps before filling")
+          val seed = seeds((pid,
+            RangeLayout.externalize(RangeLayout.keyOf(rows.head, kIdx, types))))
+          // inline reindex: keep on-grid rows, synthesize null rows for
+          // missing stamps; anchor = first observed stamp of the SERIES.
+          // Stamps are bare epoch-micros longs here — no Timestamp objects
+          // anywhere in the loop.
+          val anchorUs = seed.anchorUs
+          val vals = new ArrayBuffer[InternalRow](rows.length)
           var firstEmitUs = Long.MinValue
-          val vals = reindexStepMicros match {
-            case None => rows
-            case Some(stepUs) =>
-              // inline reindex: keep on-grid rows, synthesize null rows for
-              // missing stamps; anchor = first observed stamp of the SERIES
-              // (seed-supplied when the series started in an earlier
-              // partition). Stamps are bare epoch-micros longs here — no
-              // Timestamp objects anywhere in the loop.
-              val out = new ArrayBuffer[InternalRow](rows.length)
-              if (rows.head.isNullAt(tsIdx))
-                throw new IllegalStateException(
-                  "FastFill: null timestamp in a reindex scan — filter " +
-                    "null stamps before filling")
-              val anchorUs =
-                if (seed != null) seed.anchorUs else rows.head.getLong(tsIdx)
-              // grid continuation: synthesis resumes right after the last
-              // on-grid stamp of the previous partitions
-              var prevUs =
-                if (seed != null && seed.prevGridUs != Long.MinValue)
-                  seed.prevGridUs
-                else anchorUs - stepUs
-              var firstOnGrid = true
-              for (r <- rows) {
-                // per-row, not head-only: under assumeSorted a mid-buffer
-                // null stamp (nulls-last layouts) would read as epoch-0 and
-                // silently drop as off-grid instead of failing loudly
-                if (r.isNullAt(tsIdx))
-                  throw new IllegalStateException(
-                    "FastFill: null timestamp in a reindex scan — filter " +
-                      "null stamps before filling")
-                val us = r.getLong(tsIdx)
-                if ((us - anchorUs) % stepUs == 0 && us >= anchorUs) {
-                  // tripwire: a seed pointing at-or-past the first local
-                  // on-grid stamp means the exchange re-sampled different
-                  // range bounds between the seed jobs and this scan — the
-                  // caller must pin the layout (cache/materialize) first
-                  if (firstOnGrid && seed != null &&
-                      seed.prevGridUs != Long.MinValue && us <= seed.prevGridUs)
-                    throw new IllegalStateException(
-                      "FastFill crossPartition: input partitioning drifted " +
-                        "between the seed pass and the fill scan — cache the " +
-                        "layout before filling (range bounds are re-sampled " +
-                        "per job on uncached plans)")
-                  firstOnGrid = false
-                  var g = prevUs + stepUs
-                  while (g < us) { // synthesize the missing stamps
-                    val a = r.copy() // keys ride along; data slots nulled
-                    var j = 0
-                    while (j < nullOutIdx.length) {
-                      a.setNullAt(nullOutIdx(j)); j += 1
-                    }
-                    a.setLong(tsIdx, g)
-                    j = 0
-                    while (j < genIdx.length) {
-                      a.setBoolean(genIdx(j), true); j += 1
-                    }
-                    if (firstEmitUs == Long.MinValue) firstEmitUs = g
-                    out += a
-                    g += stepUs
-                  }
-                  if (firstEmitUs == Long.MinValue) firstEmitUs = us
-                  out += r
-                  prevUs = us
-                } // off-grid rows drop (pandas reindex semantics)
+          // grid continuation: synthesis resumes right after the grid floor
+          // of the previous partitions' last stamp
+          var prevUs =
+            if (seed.prevGridUs != Long.MinValue) seed.prevGridUs
+            else anchorUs - stepUs
+          // emits the missing grid stamps in (prevUs, upToUs] as copies of
+          // `template` (keys ride along; data slots nulled)
+          def synthesize(template: InternalRow, upToUs: Long): Unit = {
+            var g = prevUs + stepUs
+            while (g <= upToUs) {
+              val a = template.copy()
+              var j = 0
+              while (j < nullOutIdx.length) {
+                a.setNullAt(nullOutIdx(j)); j += 1
               }
-              out
+              a.setLong(tsIdx, g)
+              j = 0
+              while (j < genIdx.length) {
+                a.setBoolean(genIdx(j), true); j += 1
+              }
+              if (firstEmitUs == Long.MinValue) firstEmitUs = g
+              vals += a
+              prevUs = g
+              g += stepUs
+            }
           }
+          var firstOnGrid = true
+          for (r <- rows) {
+            val us = r.getLong(tsIdx)
+            if ((us - anchorUs) % stepUs == 0 && us >= anchorUs) {
+              // tripwire: a seed pointing at-or-past the first local
+              // on-grid stamp means the partitioning changed between the
+              // summary pass and this scan
+              if (firstOnGrid && seed.prevGridUs != Long.MinValue &&
+                  us <= seed.prevGridUs)
+                throw new RangeLayout.LayoutError(
+                  "FastFill: input partitioning drifted between the seed " +
+                    "pass and the fill scan — pin the layout (cache it) " +
+                    "before filling")
+              firstOnGrid = false
+              synthesize(r, us - stepUs)
+              if (firstEmitUs == Long.MinValue) firstEmitUs = us
+              vals += r
+              prevUs = us
+            } // off-grid rows drop (pandas reindex semantics)
+          }
+          // the grid runs to the last grid point at or before the run's last
+          // stamp, on-grid or not (pandas date_range(min, max))
+          synthesize(rows.last,
+            gridFloor(rows.last.getLong(tsIdx), anchorUs, stepUs))
           val n = vals.length
           if (n == 0) return Iterator.empty
-          val stepUs = reindexStepMicros.getOrElse(1L)
           // forward-fill columns (carry-in = last non-null of earlier
           // partitions — identical to one uninterrupted scan). DOUBLE (the
           // production shape) runs a primitive-register loop; other types
@@ -301,7 +250,7 @@ object FastFill {
             if (types(ci) == DoubleType) {
               var has = false
               var lastV = 0.0
-              if (seed != null && seed.ffillCarry(j) != null) {
+              if (seed.ffillCarry(j) != null) {
                 has = true; lastV = seed.ffillCarry(j).asInstanceOf[Double]
               }
               var i = 0
@@ -312,7 +261,7 @@ object FastFill {
                 i += 1
               }
             } else {
-              var lastV: Any = if (seed != null) seed.ffillCarry(j) else null
+              var lastV: Any = seed.ffillCarry(j)
               var i = 0
               while (i < n) {
                 val r = vals(i)
@@ -335,12 +284,12 @@ object FastFill {
             var havePrev = false
             var prevPos = 0L
             var prevV = 0.0
-            if (seed != null && seed.inHas(j)) {
+            if (seed.inHas(j)) {
               havePrev = true
               prevPos = (seed.inUs(j) - firstEmitUs) / stepUs
               prevV = seed.inV(j)
             }
-            val haveOut = seed != null && seed.outHas(j)
+            val haveOut = seed.outHas(j)
             val outPos = if (haveOut) (seed.outUs(j) - firstEmitUs) / stepUs else 0L
             val outV = if (haveOut) seed.outV(j) else 0.0
             var runStart = 0
@@ -386,24 +335,13 @@ object FastFill {
           if (pending != null) {
             // key values held from the OWNED pending copy (iterator rows
             // are reused buffers); comparison is on internal values
-            val keyArr: Array[Any] =
-              kIdx.map(i => pending.get(i, types(i)))
-            def sameKey(r: InternalRow): Boolean = {
-              var i = 0
-              while (i < kIdx.length) {
-                val ci = kIdx(i)
-                val v = if (r.isNullAt(ci)) null else r.get(ci, types(ci))
-                if (v != keyArr(i)) return false
-                i += 1
-              }
-              true
-            }
+            val keyArr = RangeLayout.keyOf(pending, kIdx, types)
             val buf = ArrayBuffer(pending)
             pending = null
             var break = false
             while (!break && it.hasNext) {
               val r = it.next()
-              if (sameKey(r)) buf += bufferRow(r)
+              if (RangeLayout.sameKey(r, keyArr, kIdx, types)) buf += bufferRow(r)
               else { pending = bufferRow(r); break = true }
             }
             out = processSeries(buf)
@@ -420,31 +358,23 @@ object FastFill {
       }
     }
 
-    val filled =
-      GraftSqlBridge.internalCreateDataFrame(df.sparkSession, filledRdd,
-        outSchema)
-
-    // The degenerate single-series path ran on one partition; fan the result
-    // back out so downstream aggregation/writes regain parallelism.
-    if (partitionCols.isEmpty)
-      filled.repartition(
-        df.sparkSession.sessionState.conf.numShufflePartitions)
-    else filled
+    GraftSqlBridge.internalCreateDataFrame(df.sparkSession, filledRdd,
+      outSchema)
   }
 
-  /** Two fixed-size metadata jobs over the (cached) layout, then a driver
+  /** Two fixed-size metadata jobs over the layout, then a driver
     * prefix/suffix scan — never row-shaped data:
     *  1. per-series anchors (min stamp): one partial-aggregated groupBy,
     *     one row per series;
-    *  2. per-(partition, series) boundary summary: last on-grid stamp,
-    *     last non-null per ffill col, first/last non-null per interp col —
-    *     a narrow InternalRow scan over the same physical RDD as the fill
-    *     (same `queryExecution.toRdd` instance, so the two jobs observe one
-    *     partitioning by construction), emitting one record per series-run.
+    *  2. per-(partition, series) boundary summary: the run's stamp extent
+    *     (checked by [[RangeLayout.check]]), the grid floor of its last
+    *     stamp, last non-null per ffill col and first/last non-null per
+    *     interp col over its on-grid rows — a narrow InternalRow scan over
+    *     the same physical RDD as the fill, one record per series-run.
     * The driver folds summaries in partition order into per-partition
     * carry-in/carry-out seeds. Driver memory is O(partitions × series) —
-    * series-count ceilings are documented at the call sites (Runner keys by
-    * SYMBOL; a catalog of millions of series should pre-split by key range).
+    * Runner keys by SYMBOL; a catalog of millions of series should
+    * pre-split by key range.
     */
   private def buildSeeds(prepared: DataFrame, fIdx: Array[Int],
                          iIdx: Array[Int], tsIdx: Int, kIdx: Array[Int],
@@ -461,6 +391,7 @@ object FastFill {
       .groupBy(partitionCols.map(col): _*)
       .agg(min(unix_micros(col(tsCol))).as("_a"))
       .collect()
+      .filterNot(_.isNullAt(nK)) // a keyless empty input still yields a row
       .map(r => (0 until nK).map(r.get).toList -> r.getLong(nK))
       .toMap
     val anchorsB = prepared.sparkSession.sparkContext.broadcast(anchors)
@@ -468,68 +399,55 @@ object FastFill {
     // job 2: per-(partition, series) boundary summaries — plain RDD of a
     // small case class, no DataFrame/encoder detour
     val summaries: Array[SeedSummary] =
-      prepared.queryExecution.toRdd.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
+      prepared.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
         val acc = ArrayBuffer.empty[SeedSummary]
-        var key: List[Any] = null     // externalized, owned
         var keyInt: Array[Any] = null // internal, owned (run comparison)
-        var lastGrid: java.lang.Long = null
+        var tracker: RangeLayout.RunTracker = null
+        var anchorUs = 0L
+        var lastGrid = Long.MinValue
         var ff: Array[Any] = null
         var inUs: Array[java.lang.Long] = null
         var inV: Array[java.lang.Double] = null
         var outUs: Array[java.lang.Long] = null
         var outV: Array[java.lang.Double] = null
-        def flush(): Unit = if (key != null)
-          acc += SeedSummary(pid, key, lastGrid, ff, inUs, inV, outUs, outV)
-        def sameKey(r: InternalRow): Boolean = {
-          if (keyInt == null) return false
-          var i = 0
-          while (i < nK) {
-            val ci = kIdx(i)
-            val v = if (r.isNullAt(ci)) null else r.get(ci, types(ci))
-            if (v != keyInt(i)) return false
-            i += 1
-          }
-          true
-        }
+        def flush(): Unit = if (tracker != null)
+          acc += SeedSummary(tracker.run, lastGrid, ff, inUs, inV, outUs, outV)
         while (it.hasNext) {
           val r = it.next()
           if (r.isNullAt(tsIdx)) { /* null stamps never repair */ }
           else {
-            if (!sameKey(r)) {
+            if (!RangeLayout.sameKey(r, keyInt, kIdx, types)) {
               flush()
-              keyInt = kIdx.map(i =>
-                if (r.isNullAt(i)) null
-                else InternalRow.copyValue(r.get(i, types(i))))
-              key = keyInt.map(externalizeKey).toList
-              lastGrid = null
+              keyInt = RangeLayout.keyOf(r, kIdx, types)
+              val key = RangeLayout.externalize(keyInt)
+              tracker = new RangeLayout.RunTracker(pid, key)
+              anchorUs = anchorsB.value(key)
               ff = new Array[Any](nF)
               inUs = new Array[java.lang.Long](nI)
               inV = new Array[java.lang.Double](nI)
               outUs = new Array[java.lang.Long](nI)
               outV = new Array[java.lang.Double](nI)
             }
-            anchorsB.value.get(key).foreach { anchorUs =>
-              val us = r.getLong(tsIdx)
-              if ((us - anchorUs) % stepUs == 0 && us >= anchorUs) {
-                lastGrid = us
-                var j = 0
-                while (j < nF) {
-                  val ci = fIdx(j)
-                  if (!r.isNullAt(ci))
-                    ff(j) = InternalRow.copyValue(r.get(ci, types(ci)))
-                  j += 1
+            val us = r.getLong(tsIdx)
+            tracker.add(us)
+            lastGrid = gridFloor(us, anchorUs, stepUs)
+            if ((us - anchorUs) % stepUs == 0 && us >= anchorUs) {
+              var j = 0
+              while (j < nF) {
+                val ci = fIdx(j)
+                if (!r.isNullAt(ci))
+                  ff(j) = InternalRow.copyValue(r.get(ci, types(ci)))
+                j += 1
+              }
+              j = 0
+              while (j < nI) {
+                val ci = iIdx(j)
+                if (!r.isNullAt(ci)) {
+                  val v = r.getDouble(ci)
+                  if (outUs(j) == null) { outUs(j) = us; outV(j) = v }
+                  inUs(j) = us; inV(j) = v
                 }
-                j = 0
-                while (j < nI) {
-                  val ci = iIdx(j)
-                  if (!r.isNullAt(ci)) {
-                    val v = r.getDouble(ci)
-                    if (outUs(j) == null) { outUs(j) = us; outV(j) = v }
-                    inUs(j) = us; inV(j) = v
-                  }
-                  j += 1
-                }
+                j += 1
               }
             }
           }
@@ -537,60 +455,58 @@ object FastFill {
         flush()
         acc.iterator
       }.collect()
+    anchorsB.destroy()
+    RangeLayout.check("FastFill", summaries.map(_.run))
 
     // driver fold: partition-ordered prefix (anchor, grid continuation,
     // ffill carry, interp carry-in) + suffix (interp carry-out) per series
-    val byKey = summaries.groupBy(_.key)
     val seeds = scala.collection.mutable.Map.empty[(Int, List[Any]), Seed]
-    for ((k, rows0) <- byKey) {
-      val anchorUs = anchors.getOrElse(k, Long.MinValue)
-      if (anchorUs != Long.MinValue) {
-        val rows = rows0.sortBy(_.pid)
-        // prefix pass
-        var prevGrid = Long.MinValue
-        val ffC = new Array[Any](nF)
-        val ciUs = new Array[Long](nI); val ciV = new Array[Double](nI)
-        val ciHas = new Array[Boolean](nI)
-        val pre = rows.map { s =>
-          val seed = Seed(anchorUs, prevGrid, ffC.clone(),
-            ciUs.clone(), ciV.clone(), ciHas.clone(),
-            new Array[Long](nI), new Array[Double](nI), new Array[Boolean](nI))
-          if (s.lastGrid != null) prevGrid = s.lastGrid
-          var j = 0
-          while (j < nF) {
-            if (s.ff(j) != null) ffC(j) = s.ff(j)
-            j += 1
-          }
-          j = 0
-          while (j < nI) {
-            if (s.inUs(j) != null) { // last non-null of this partition
-              ciUs(j) = s.inUs(j); ciV(j) = s.inV(j); ciHas(j) = true
-            }
-            j += 1
-          }
-          (s.pid, seed)
+    for ((k, rows0) <- summaries.groupBy(_.run.key)) {
+      val anchorUs = anchors(k)
+      val rows = rows0.sortBy(_.run.pid)
+      // prefix pass
+      var prevGrid = Long.MinValue
+      val ffC = new Array[Any](nF)
+      val ciUs = new Array[Long](nI); val ciV = new Array[Double](nI)
+      val ciHas = new Array[Boolean](nI)
+      val pre = rows.map { s =>
+        val seed = Seed(anchorUs, prevGrid, ffC.clone(),
+          ciUs.clone(), ciV.clone(), ciHas.clone(),
+          new Array[Long](nI), new Array[Double](nI), new Array[Boolean](nI))
+        prevGrid = s.lastGrid
+        var j = 0
+        while (j < nF) {
+          if (s.ff(j) != null) ffC(j) = s.ff(j)
+          j += 1
         }
-        // suffix pass for carry-out
-        val coUs = new Array[Long](nI); val coV = new Array[Double](nI)
-        val coHas = new Array[Boolean](nI)
-        for (idx <- rows.indices.reverse) {
-          val (pid, s) = pre(idx)
-          System.arraycopy(coUs, 0, s.outUs, 0, nI)
-          System.arraycopy(coV, 0, s.outV, 0, nI)
-          System.arraycopy(coHas, 0, s.outHas, 0, nI)
-          val r = rows(idx)
-          var j = 0
-          while (j < nI) {
-            if (r.outUs(j) != null) { // first non-null of this partition
-              coUs(j) = r.outUs(j); coV(j) = r.outV(j); coHas(j) = true
-            }
-            j += 1
+        j = 0
+        while (j < nI) {
+          if (s.inUs(j) != null) { // last non-null of this partition
+            ciUs(j) = s.inUs(j); ciV(j) = s.inV(j); ciHas(j) = true
           }
-          seeds((pid, k)) = s
+          j += 1
         }
+        (s.run.pid, seed)
+      }
+      // suffix pass for carry-out
+      val coUs = new Array[Long](nI); val coV = new Array[Double](nI)
+      val coHas = new Array[Boolean](nI)
+      for (idx <- rows.indices.reverse) {
+        val (pid, s) = pre(idx)
+        System.arraycopy(coUs, 0, s.outUs, 0, nI)
+        System.arraycopy(coV, 0, s.outV, 0, nI)
+        System.arraycopy(coHas, 0, s.outHas, 0, nI)
+        val r = rows(idx)
+        var j = 0
+        while (j < nI) {
+          if (r.outUs(j) != null) { // first non-null of this partition
+            coUs(j) = r.outUs(j); coV(j) = r.outV(j); coHas(j) = true
+          }
+          j += 1
+        }
+        seeds((pid, k)) = s
       }
     }
-    anchorsB.destroy()
     seeds.toMap
   }
 }

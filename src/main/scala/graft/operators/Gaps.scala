@@ -17,12 +17,12 @@ import org.apache.spark.sql.functions._
   *  - missing stamps: grid anti-join observed (gaps.py:63);
   *  - clustering: gaps-and-islands — `ts - row_number * step` island key,
   *    then one groupBy (replaces the reference's Python loop, gaps.py:72-117);
-  *  - repair: grid LEFT JOIN observed = pandas `reindex` (exactly-on-grid
-  *    rows only — off-grid rows drop, the §2.2.4 quirk), then window
-  *    ffill + linear interpolation (gaps.py:148-169).
+  *  - repair: one narrow [[FastFill]] scan over the [[RangeLayout]] does
+  *    pandas `reindex` (exactly-on-grid rows only — off-grid rows drop, the
+  *    §2.2.4 quirk), ffill and linear interpolation (gaps.py:148-169).
   *
-  * `partitionCols` (SYMBOL) keys every window and join; the grid explode is
-  * guarded against pathological spans.
+  * `partitionCols` (SYMBOL) keys every window, join and scan; the grid
+  * explode is guarded against pathological spans.
   */
 object Gaps {
 
@@ -70,19 +70,28 @@ object Gaps {
     val keys = partitionCols.map(col)
 
     // grid anchor = per-series min stamp (pandas date_range starts at min);
-    // off-grid stamps are not in `expected`, so they never subtract
+    // off-grid stamps are not in `expected`, so they never subtract. The
+    // grid ends at the last grid point at or before the series' max stamp:
+    // a sentinel one step past it closes a trailing gap like any other
+    val anchorUs = unix_micros(col("_anchor"))
     val spans =
-      if (partitionCols.isEmpty)
-        df.agg(min(col(TsCol)).as("_anchor"))
-      else df.groupBy(keys: _*).agg(min(col(TsCol)).as("_anchor"))
+      (if (partitionCols.isEmpty)
+        df.agg(min(col(TsCol)).as("_anchor"), max(col(TsCol)).as("_max"))
+      else df.groupBy(keys: _*)
+        .agg(min(col(TsCol)).as("_anchor"), max(col(TsCol)).as("_max")))
+        .filter(col("_anchor").isNotNull)
+    val sentinels = spans.select(partitionCols.map(col) :+ timestamp_micros(
+      anchorUs + (floor((unix_micros(col("_max")) - anchorUs) / stepMicros) + 1)
+        * stepMicros).as(TsCol): _*)
     val obs0 = df.select((partitionCols :+ TsCol).map(col): _*)
       .filter(col(TsCol).isNotNull)
-    val obs =
+    val onGrid =
       (if (partitionCols.isEmpty) obs0.crossJoin(broadcast(spans))
        else obs0.join(broadcast(spans), partitionCols))
         .filter(
-          pmod(unix_micros(col(TsCol)) - unix_micros(col("_anchor")),
-            lit(stepMicros)) === 0)
+          pmod(unix_micros(col(TsCol)) - anchorUs, lit(stepMicros)) === 0)
+    val obs = onGrid.select((partitionCols :+ TsCol).map(col): _*)
+      .union(sentinels)
 
     val clustered =
       if (partitionCols.isEmpty) keylessGapClusters(obs, stepMicros)
@@ -194,6 +203,10 @@ object Gaps {
     * (gaps.py:121-190). One extra aggregation job produces the report
     * (filled counts before/after, remaining NaNs, rows_after).
     *
+    * `df` must be in the [[RangeLayout]] on (partitionCols, TIMESTAMP) —
+    * Normalize's output is; [[FastFill.fill]] throws
+    * [[RangeLayout.LayoutError]] otherwise.
+    *
     * Storage note: KEYED report-mode repair leaves zero persistent-RDD
     * residue (GapsSpec pin). The KEYLESS report path additionally leaves
     * the gap-cluster `localCheckpoint` from [[keylessGapClusters]] — KBs
@@ -209,12 +222,6 @@ object Gaps {
                  computeReport: Boolean = true,
                  maxGapsInReport: Int = 10000,
                  cacheResult: Boolean = false,
-                 /** input already partitioned by `partitionCols` and sorted
-                   * by (keys, stamp) within partitions — see FastFill */
-                 assumeSorted: Boolean = false,
-                 /** input is RANGE-partitioned on (keys, stamp): one series
-                   * may span consecutive partitions (see FastFill) */
-                 crossPartition: Boolean = false,
                  /** caller's size hint for the `cacheResult` persist level
                    * (core.Sizing): the repaired frame's own plan stats are
                    * the bridge's unknown sentinel, so only a hint can
@@ -240,14 +247,12 @@ object Gaps {
       .withColumn("_generated", lit(false))
 
     // single-pass per-series reindex+fill (see FastFill scaladoc): the
-    // pandas `reindex` happens inline in the same scan as ffill and
-    // interpolation — no dense grid materialization, no join, one
-    // repartition+sort instead of three window exchanges
+    // pandas `reindex` happens inline in the same narrow scan as ffill and
+    // interpolation — no dense grid materialization, no join, no exchange
     val repaired0 = FastFill.fill(flagged, ffillCols,
-      if (interpolatePrices) priceCols else Nil, TsCol, partitionCols,
-      reindexStepMicros = Some(Rules.stepMicros(rule)),
-      trueOnGenerated = ffillCols.map(c => s"_wasnull_$c") :+ "_generated",
-      assumeSorted = assumeSorted, crossPartition = crossPartition)
+      if (interpolatePrices) priceCols else Nil, TsCol, Rules.stepMicros(rule),
+      partitionCols,
+      trueOnGenerated = ffillCols.map(c => s"_wasnull_$c") :+ "_generated")
 
     val repaired1 = repaired0
       .select((partitionCols ++ Seq(TsCol) ++ dataCols ++
@@ -296,7 +301,8 @@ object Gaps {
       val step = Rules.stepSeconds(rule)
       // the flat agg runs FIRST: it is the job that materializes the cache,
       // and it parallelizes better than the windowed cluster pass below
-      val aggs = Seq(count(lit(1)).as("_rows")) ++
+      val aggs = Seq(count(lit(1)).as("_rows"),
+          max(unix_micros(col(TsCol))).as("_last")) ++
         ffillCols.map(c =>
           sum(when(col(s"_wasnull_$c") && col(c).isNotNull, 1).otherwise(0))
             .as(s"_filled_$c")) ++
@@ -308,12 +314,18 @@ object Gaps {
       // of re-detecting over the full frame (the flagged subset is tiny).
       // Keyless inputs take the range-layout path over the OBSERVED rows
       // (runs of generated stamps = gaps between consecutive observed
-      // stamps — same clusters, no single-task global window)
+      // stamps — same clusters, no single-task global window); a sentinel
+      // one step past the grid's last point closes a trailing gap
       val clustered =
-        if (partitionCols.isEmpty)
-          keylessGapClusters(repaired.filter(!col("_generated")),
+        if (partitionCols.isEmpty) {
+          val observed = repaired.filter(!col("_generated")).select(TsCol)
+          keylessGapClusters(
+            if (row.isNullAt(1)) observed
+            else observed.union(repaired.sparkSession.range(1).select(
+              timestamp_micros(lit(row.getLong(1) + Rules.stepMicros(rule)))
+                .as(TsCol))),
             Rules.stepMicros(rule))
-        else clusterStamps(repaired.filter(col("_generated")), step,
+        } else clusterStamps(repaired.filter(col("_generated")), step,
           partitionCols)
       val gaps = withClassification(clustered, step, shortGapMinutes)
         .orderBy((partitionCols :+ "start").map(col): _*)

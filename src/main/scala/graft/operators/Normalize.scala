@@ -3,7 +3,6 @@ package graft.operators
 import scala.collection.immutable.ListMap
 
 import graft.core.Json
-import graft.functions.TzLocalize
 import graft.sources.Readers
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -19,10 +18,10 @@ import org.apache.spark.sql.types._
   * aggregation job over the pre-dedup frame rather than one eager pass per
   * stage — same numbers, one scan.
   *
-  * Scale notes: the only shuffle is the dedup window + final sort, keyed on
-  * SYMBOL when present (never a global single-partition window); the rename
-  * and required-column logic is driver-side name logic, exactly like the
-  * reference's `_build_rename_map`.
+  * Scale notes: the only shuffles are the dedup's [[RangeLayout]] exchange
+  * (keyed on SYMBOL when present, never a single-partition window) and the
+  * final sort; the rename and required-column logic is driver-side name
+  * logic, exactly like the reference's `_build_rename_map`.
   */
 object Normalize {
 
@@ -99,13 +98,10 @@ object Normalize {
     * @param unsorted  deduped frame WITHOUT the final global sort —
     *                  order-insensitive consumers (aggregation, windowed
     *                  repair, resample) should prefer this: a global range
-    *                  sort mid-pipeline is pure waste. When `partitionCols`
-    *                  was non-empty this frame is additionally guaranteed
-    *                  RANGE-partitioned on (keys, TIMESTAMP) and sorted by
-    *                  (keys, TIMESTAMP) within partitions — one series may
-    *                  span consecutive ordered partitions, so downstream
-    *                  per-series scans must run in cross-partition mode
-    *                  (FastFill `crossPartition`, Reporting's seeded SMA).
+    *                  sort mid-pipeline is pure waste. This frame is in the
+    *                  [[RangeLayout]] on (partitionCols, TIMESTAMP) — the
+    *                  input FastFill, Gaps.repairGaps and Reporting's SMA
+    *                  require (an empty key list is one keyless series).
     *
     * The report aggregation is DEFERRED: it first runs when `report` (or
     * `reportWithPostCount`) is accessed, so callers can materialize their
@@ -196,10 +192,9 @@ object Normalize {
         if (offUs == 0L) parsed
         else timestamp_micros(unix_micros(parsed) - offUs)
       } else {
-        // DST-bearing region zone: the native codegen expression (the
-        // TzLocalize UDF is the reference form, kept for the spec's
-        // semantic cross-check; the expression keeps this projection
-        // inside whole-stage codegen)
+        // DST-bearing region zone: the native codegen expression (keeps
+        // this projection inside whole-stage codegen; TzLocalizeSpec checks
+        // it against a UDF oracle)
         graft.plans.GraftExtensions.register(input.sparkSession)
         call_function("tz_localize", parsed, lit(effectiveSourceTz))
       }
@@ -225,45 +220,28 @@ object Normalize {
 
     // O8: dedup keep-first in file order (pre-sort — normalize.py:271 vs 275)
     val dedupKeys = partitionCols.filter(withTs.columns.contains)
+    // RANGE layout: repartitionByRange(keys, stamp) then one partition-local
+    // sort. The dedup window partitions by (keys, stamp) ordered by file
+    // order — RangePartitioning(keys, stamp) satisfies that window's
+    // ClusteredDistribution and the sort matches its required ordering, so
+    // Catalyst inserts NO further exchange and NO further sort (asserted by
+    // CrossPartitionSpec's plan test). A row survives iff it is the first
+    // file-order occurrence of its stamp (equal stamps — and all-NaT runs —
+    // share a window partition, so they dedup to their first row exactly
+    // like pandas index.duplicated).
+    //
+    // Why range and not hash-by-key: hash(keys) puts a symbol's ENTIRE
+    // history through one task — the per-symbol straggler/spill that kills
+    // a hot symbol at 100 TB. The range layout splits a series across
+    // consecutive ordered partitions; downstream per-series scans (FastFill,
+    // SMA) stay narrow via cross-partition boundary seeds.
+    val w = Window.partitionBy((dedupKeys :+ TsCol).map(col): _*)
+      .orderBy(col(Readers.FileOrderCol).asc)
     val deduped =
-      if (dedupKeys.nonEmpty) {
-        // Keyed form, RANGE layout: repartitionByRange(keys, stamp) then one
-        // partition-local sort. The dedup window partitions by (keys, stamp)
-        // ordered by file order — RangePartitioning(keys, stamp) satisfies
-        // that window's ClusteredDistribution and the sort matches its
-        // required ordering, so Catalyst inserts NO further exchange and NO
-        // further sort (asserted by NormalizeSpec's plan test). A row
-        // survives iff it is the first file-order occurrence of its stamp
-        // (equal stamps — and all-NaT runs — share a window partition, so
-        // they dedup to their first row exactly like pandas
-        // index.duplicated).
-        //
-        // Why range and not hash-by-key: hash(keys) puts a symbol's ENTIRE
-        // history through one task — the per-symbol straggler/spill that
-        // kills a hot symbol at 100 TB (and serialized the whole single-
-        // symbol bench pipeline). The range layout splits a series across
-        // consecutive ordered partitions; downstream per-series scans
-        // (FastFill, SMA) stay narrow via cross-partition boundary seeds.
-        val laidOut = withTs
-          .repartitionByRange((dedupKeys :+ TsCol).map(col): _*)
-          .sortWithinPartitions(
-            (dedupKeys :+ TsCol :+ Readers.FileOrderCol).map(col): _*)
-        val w = Window.partitionBy((dedupKeys :+ TsCol).map(col): _*)
-          .orderBy(col(Readers.FileOrderCol).asc)
-        laidOut
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1)
-          .drop("_rn", "_ts_parsed", Readers.FileOrderCol)
-      } else {
-        // Unkeyed form: partition by the stamp itself — fully parallel, no
-        // single-task window (order within a stamp group is all that matters)
-        val w = Window.partitionBy(col(TsCol))
-          .orderBy(col(Readers.FileOrderCol))
-        withTs
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1)
-          .drop("_rn", "_ts_parsed", Readers.FileOrderCol)
-      }
+      RangeLayout(withTs, dedupKeys, thenBy = Seq(Readers.FileOrderCol))
+        .withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1)
+        .drop("_rn", "_ts_parsed", Readers.FileOrderCol)
 
     // O9: final sort; pandas sort_index puts NaT last.
     val sorted = deduped.orderBy(col(TsCol).asc_nulls_last)

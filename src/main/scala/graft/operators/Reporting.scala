@@ -14,10 +14,10 @@ import org.apache.spark.sql.types.NumericType
   *
   * Cost shape: ONE whole-frame aggregation job for the profile (rows,
   * extent, per-column NaNs, dup stamps, range stats, CLOSE stats + exact
-  * median) and, when indicators are on, one window+aggregate job for all
-  * SMA windows together. The reference runs ~10 separate pandas passes;
-  * both jobs here scan the frame once each. Reports are fixed-size driver
-  * aggregates — nothing row-shaped is ever collected.
+  * median) and, when indicators are on, two narrow scans of the range
+  * layout for all SMA windows together. The reference runs ~10 separate
+  * pandas passes; each job here scans the frame once. Reports are
+  * fixed-size driver aggregates — nothing row-shaped is ever collected.
   */
 object Reporting {
 
@@ -36,23 +36,16 @@ object Reporting {
   /** `knownDistinctTs`: callers holding a frame whose timestamps are
     * distinct by construction (anything post-dedup) can skip the
     * countDistinct expand — the reported value is identically 0.
+    *
+    * With `computeIndicators`, `df` must be in the [[RangeLayout]] on
+    * (partitionCols, TIMESTAMP): the SMA summaries run as a seeded
+    * parallel scan and throw [[RangeLayout.LayoutError]] otherwise.
     */
   def dataQualityReport(df: DataFrame,
                         computeIndicators: Boolean = true,
                         smaWindows: Seq[Int] = Seq(10, 50),
                         partitionCols: Seq[String] = Nil,
                         knownDistinctTs: Boolean = false,
-                        /** caller knows the keyed frame holds ONE series —
-                          * routes to the single-pass scan (exact median from
-                          * the sort, no percentile agg buffer, no window
-                          * shuffle) without giving up the keyed API */
-                        knownSingleSeries: Boolean = false,
-                        /** input is RANGE-partitioned on (keys, ts) and
-                          * sorted within partitions (Normalize's layout) —
-                          * SMA runs as a seeded parallel scan instead of a
-                          * per-key window (which would re-serialize a hot
-                          * symbol through one task) */
-                        layoutSorted: Boolean = false,
                         /** row count the caller already holds (e.g. the
                           * Runner's cache-materialization count) — lets the
                           * CLOSE-median path pick its implementation without
@@ -63,7 +56,6 @@ object Reporting {
     val dataCols = cols.filterNot(_ == TsCol)
     val hasHL = cols.contains("HIGH") && cols.contains("LOW")
     val hasClose = cols.contains("CLOSE")
-    val singleSeries = partitionCols.isEmpty || knownSingleSeries
 
     var aggs = Vector(
       count(lit(1)).as("_rows"),
@@ -166,10 +158,7 @@ object Reporting {
     var indicators = ListMap.empty[String, Any]
     if (computeIndicators && hasClose && rows > 0) {
       val t1 = System.nanoTime()
-      indicators =
-        if (singleSeries) smaSummariesSinglePass(df, smaWindows)
-        else if (layoutSorted) smaSummariesChunked(df, smaWindows, partitionCols)
-        else smaSummariesWindowed(df, smaWindows, partitionCols)
+      indicators = smaSummaries(df, smaWindows, partitionCols)
       if (sys.env.get("GRAFT_TIMING").contains("1"))
         System.err.println(f"[graft-timing] qr_sma_agg ${(System.nanoTime()-t1)/1e9}%8.2f s")
     }
@@ -192,88 +181,26 @@ object Reporting {
     * the quality report's dominant cost at the 100× probe scale).
     */
   private final case class SmaPartial(
-      pid: Int, key: List[Any],
       lasts: Array[java.lang.Double], lastTs: Array[java.lang.Long],
       nans: Array[Long],
       mins: Array[java.lang.Double], maxs: Array[java.lang.Double])
 
-  /** Rolling-mean summaries for a single series in ONE sorted scan —
-    * min_periods=1 semantics (value = mean of non-null entries in the
-    * trailing window; null only when the whole window is null). A sliding
-    * window over a single symbol serializes onto one task anyway, so a
-    * ring-buffer scan beats a WindowExec sort+frame evaluation. Task memory
-    * is bounded by max(smaWindows) ring slots — never by series length.
-    * The scan runs over `queryExecution.toRdd` with primitive ring slots:
-    * no per-row objects at all.
+  /** SMA summaries over the [[RangeLayout]]: a series spans consecutive
+    * ordered partitions (a keyless frame is one series), so the ring-buffer
+    * scan runs per partition in parallel, primed with the previous
+    * partitions' trailing CLOSE values (a trailing window of w rows only
+    * ever needs the last w-1 predecessor rows). min_periods=1 semantics:
+    * value = mean of the non-null entries in the trailing window, null only
+    * when the whole window is null. Two narrow jobs: a tail-collection pass
+    * (≤ maxW-1 values plus the stamp extent per (partition, series) —
+    * fixed-size metadata, never row-shaped data; the extents are checked by
+    * [[RangeLayout.check]]) and the seeded scan emitting per-(partition,
+    * series) partials merged on the driver. Task memory is bounded by
+    * max(smaWindows) ring slots, never by series length.
     */
-  private def smaSummariesSinglePass(df: DataFrame, smaWindows: Seq[Int])
-      : ListMap[String, Any] = {
-    val ws = smaWindows.toArray
-    val maxW = ws.max
-    val partials = df.select(col(TsCol), col("CLOSE"))
-      .coalesce(1)
-      .sortWithinPartitions(col(TsCol).asc_nulls_last)
-      .queryExecution.toRdd.mapPartitions { it =>
-        val k = ws.length
-        val ringV = Array.fill(k)(new Array[Double](maxW))
-        val ringP = Array.fill(k)(new Array[Boolean](maxW))
-        val sums = new Array[Double](k)
-        val counts = new Array[Int](k)
-        val nans = new Array[Long](k)
-        val mins = Array.fill(k)(Double.MaxValue)
-        val maxs = Array.fill(k)(Double.MinValue)
-        val lasts = new Array[java.lang.Double](k)
-        var n = 0L
-        while (it.hasNext) {
-          val r = it.next()
-          val present = !r.isNullAt(1)
-          val v = if (present) r.getDouble(1) else 0.0
-          var j = 0
-          while (j < k) {
-            val w = ws(j)
-            val slot = (n % w).toInt
-            if (ringP(j)(slot)) { sums(j) -= ringV(j)(slot); counts(j) -= 1 }
-            ringV(j)(slot) = v
-            ringP(j)(slot) = present
-            if (present) { sums(j) += v; counts(j) += 1 }
-            if (counts(j) == 0) nans(j) += 1
-            else {
-              val sma = sums(j) / counts(j)
-              lasts(j) = sma
-              if (sma < mins(j)) mins(j) = sma
-              if (sma > maxs(j)) maxs(j) = sma
-            }
-            j += 1
-          }
-          n += 1
-        }
-        Iterator.single(SmaPartial(0, Nil, lasts, null, nans,
-          ws.indices.map(j => if (mins(j) != Double.MaxValue)
-            java.lang.Double.valueOf(mins(j)) else null).toArray,
-          ws.indices.map(j => if (maxs(j) != Double.MinValue)
-            java.lang.Double.valueOf(maxs(j)) else null).toArray))
-      }.collect()
-    val sr = partials(0)
-    ListMap(ws.toIndexedSeq.zipWithIndex.map { case (w, j) =>
-      s"SMA_$w" -> Json.obj(
-        "last" -> sr.lasts(j), "nan_count" -> sr.nans(j),
-        "min" -> sr.mins(j), "max" -> sr.maxs(j))
-    }: _*)
-  }
-
-  /** SMA summaries over the RANGE layout: a series spans consecutive
-    * ordered partitions, so the ring-buffer scan runs per partition in
-    * parallel, primed with the previous partitions' trailing CLOSE values
-    * (a trailing window of w rows only ever needs the last w-1 predecessor
-    * rows). Two narrow jobs: a tail-collection pass (≤ maxW-1 values per
-    * (partition, series) — fixed-size metadata, never row-shaped data) and
-    * the seeded scan emitting per-(partition, series) partials merged on
-    * the driver. Exactly the windowed form's numbers, no key-alone shuffle.
-    */
-  private def smaSummariesChunked(df: DataFrame, smaWindows: Seq[Int],
-                                  partitionCols: Seq[String]): ListMap[String, Any] = {
-    import org.apache.spark.TaskContext
-    import org.apache.spark.sql.catalyst.InternalRow
+  private def smaSummaries(df: DataFrame, smaWindows: Seq[Int],
+                           partitionCols: Seq[String]): ListMap[String, Any] = {
+    import RangeLayout.{externalize, keyOf, sameKey}
     val ws = smaWindows.toArray
     val maxW = ws.max
     val schema = df.schema
@@ -281,51 +208,33 @@ object Reporting {
     val kIdx = partitionCols.map(schema.fieldIndex).toArray
     val tsIdx = schema.fieldIndex(TsCol)
     val cIdx = schema.fieldIndex("CLOSE")
-    val nK = kIdx.length
-    // both passes run on the SAME physical RDD of the (cached) layout —
-    // partition ids are consistent by construction, and neither pass
-    // crosses the external-Row encoder (internal values: a timestamp is a
-    // bare long of epoch micros)
+    // both passes run on the SAME physical RDD of the layout — partition
+    // ids are consistent by construction, and neither pass crosses the
+    // external-Row encoder (internal values: a timestamp is a bare long of
+    // epoch micros). Runs are detected on owned internal key values; map
+    // keys are externalized once per run.
     val inRdd = df.queryExecution.toRdd
-    // series-key helpers shared by the two scans: runs are detected on
-    // owned internal values, map keys externalized once per run (the
-    // FastFill seed-key convention — string/integral keys)
-    def keyInternal(r: InternalRow): Array[Any] =
-      kIdx.map(i => if (r.isNullAt(i)) null
-        else InternalRow.copyValue(r.get(i, types(i))))
-    def externalize(a: Array[Any]): List[Any] = a.map {
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case x => x
-    }.toList
-    def sameKey(r: InternalRow, k: Array[Any]): Boolean = {
-      if (k == null) return false
-      var i = 0
-      while (i < nK) {
-        val ci = kIdx(i)
-        val v = if (r.isNullAt(ci)) null else r.get(ci, types(ci))
-        if (v != k(i)) return false
-        i += 1
-      }
-      true
-    }
 
     // pass 1: per-(partition, series) trailing values (nulls included — the
     // ring counts null entries as window slots, exactly like rowsBetween)
-    val tails: Array[(Int, List[Any], Array[java.lang.Double])] =
-      inRdd.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
+    // and stamp extent
+    val tails: Array[(RangeLayout.Run, Array[java.lang.Double])] =
+      inRdd.mapPartitionsWithIndex { (pid, it) =>
         val acc = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, List[Any], Array[java.lang.Double])]
+          .empty[(RangeLayout.Run, Array[java.lang.Double])]
         var keyInt: Array[Any] = null
+        var tracker: RangeLayout.RunTracker = null
         var buf: scala.collection.mutable.ArrayDeque[java.lang.Double] = null
         def flush(): Unit = if (keyInt != null)
-          acc += ((pid, externalize(keyInt), buf.toArray))
+          acc += ((tracker.run, buf.toArray))
         while (it.hasNext) {
           val r = it.next()
-          if (!sameKey(r, keyInt)) {
-            flush(); keyInt = keyInternal(r)
+          if (!sameKey(r, keyInt, kIdx, types)) {
+            flush(); keyInt = keyOf(r, kIdx, types)
+            tracker = new RangeLayout.RunTracker(pid, externalize(keyInt))
             buf = scala.collection.mutable.ArrayDeque.empty
           }
+          tracker.add(if (r.isNullAt(tsIdx)) Long.MinValue else r.getLong(tsIdx))
           buf += (if (r.isNullAt(cIdx)) null
                   else java.lang.Double.valueOf(r.getDouble(cIdx)))
           if (buf.length > maxW - 1) buf.removeHead()
@@ -333,14 +242,15 @@ object Reporting {
         flush()
         acc.iterator
       }.collect()
+    RangeLayout.check("Reporting SMA", tails.map(_._1))
 
     // driver: carry-in per (partition, series) = last maxW-1 values of the
     // concatenated predecessor tails
     val carries = scala.collection.mutable.Map.empty[(Int, List[Any]), Array[java.lang.Double]]
-    for ((k, runs) <- tails.groupBy(_._2)) {
+    for ((k, runs) <- tails.groupBy(_._1.key)) {
       var run = Vector.empty[java.lang.Double]
-      for ((pid, _, tail) <- runs.sortBy(_._1)) {
-        carries((pid, k)) = run.toArray
+      for ((r, tail) <- runs.sortBy(_._1.pid)) {
+        carries((r.pid, k)) = run.toArray
         run = (run ++ tail).takeRight(maxW - 1)
       }
     }
@@ -348,8 +258,7 @@ object Reporting {
 
     // pass 2: seeded ring scan, per-(partition, series) partials —
     // primitive ring slots (value + present), no per-row allocation
-    val partials: Array[SmaPartial] = inRdd.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
+    val partials: Array[SmaPartial] = inRdd.mapPartitionsWithIndex { (pid, it) =>
       val acc = scala.collection.mutable.ArrayBuffer.empty[SmaPartial]
       val k = ws.length
       var keyInt: Array[Any] = null
@@ -385,16 +294,15 @@ object Reporting {
         n += 1
       }
       def flush(): Unit = if (keyInt != null)
-        acc += SmaPartial(pid, externalize(keyInt),
-          lasts.clone(), lastTs.clone(), nans.clone(),
+        acc += SmaPartial(lasts.clone(), lastTs.clone(), nans.clone(),
           ws.indices.map(j => if (mins(j) != Double.MaxValue)
             java.lang.Double.valueOf(mins(j)) else null).toArray,
           ws.indices.map(j => if (maxs(j) != Double.MinValue)
             java.lang.Double.valueOf(maxs(j)) else null).toArray)
       while (it.hasNext) {
         val r = it.next()
-        if (!sameKey(r, keyInt)) {
-          flush(); keyInt = keyInternal(r)
+        if (!sameKey(r, keyInt, kIdx, types)) {
+          flush(); keyInt = keyOf(r, kIdx, types)
           ringP.foreach(a => java.util.Arrays.fill(a, false))
           java.util.Arrays.fill(sums, 0.0); java.util.Arrays.fill(counts, 0)
           java.util.Arrays.fill(nans, 0L)
@@ -435,36 +343,6 @@ object Reporting {
       }
       s"SMA_$w" -> Json.obj(
         "last" -> last, "nan_count" -> nan, "min" -> mn, "max" -> mx)
-    }: _*)
-  }
-
-  /** Multi-series SMA summaries via per-series windows (the declarative
-    * form; partitioned by the series key so no global single-task window).
-    */
-  private def smaSummariesWindowed(df: DataFrame, smaWindows: Seq[Int],
-                                   partitionCols: Seq[String]): ListMap[String, Any] = {
-    val base = Window.partitionBy(partitionCols.map(col): _*).orderBy(TsCol)
-    val smaCols = smaWindows.map { w =>
-      s"_sma_$w" -> avg(col("CLOSE")).over(base.rowsBetween(-(w - 1), 0))
-    }
-    val withSma = df.withColumns(smaCols.toMap)
-    val smaAggs = smaWindows.flatMap { w =>
-      val c = col(s"_sma_$w")
-      Seq(
-        max_by(c, when(c.isNotNull, col(TsCol))).as(s"_last_$w"),
-        sum(when(c.isNull, 1).otherwise(0)).as(s"_nans_$w"),
-        min(c).as(s"_min_$w"),
-        max(c).as(s"_max_$w"))
-    }
-    val sr = withSma.agg(smaAggs.head, smaAggs.tail: _*).collect()(0)
-    def sopt(n: String): Any =
-      if (sr.isNullAt(sr.fieldIndex(n))) null else sr.getAs[Double](n)
-    ListMap(smaWindows.map { w =>
-      s"SMA_$w" -> Json.obj(
-        "last" -> sopt(s"_last_$w"),
-        "nan_count" -> sr.getAs[Long](s"_nans_$w"),
-        "min" -> sopt(s"_min_$w"),
-        "max" -> sopt(s"_max_$w"))
     }: _*)
   }
 

@@ -142,13 +142,15 @@ object Resample {
     * reindexes onto the target-frequency grid and silently drops every
     * source row not exactly on it — so coarse candles are grid-samples, not
     * true aggregates. Kept as an explicit, documented mode for parity.
+    * `df` may have any layout: the repair input is laid out here.
     */
   def faithful(df: DataFrame, rule: String,
                useFfillFor: Seq[String] = Seq("VOLUME"),
                interpolatePrices: Boolean = true,
                dropIncomplete: Boolean = true,
                partitionCols: Seq[String] = Nil): DataFrame = {
-    val repaired = Gaps.repairGaps(df, rule, useFfillFor, interpolatePrices,
+    val repaired = Gaps.repairGaps(RangeLayout(df, partitionCols), rule,
+      useFfillFor, interpolatePrices,
       partitionCols = partitionCols, computeReport = false).df
     resampleOhlc(repaired, rule, dropIncomplete, partitionCols = partitionCols)
   }

@@ -112,8 +112,8 @@ object Runner {
 
     // every window/join/scan below is keyed on the series column — a
     // multi-symbol frame never serializes through one task (the injected
-    // SYMBOL column always exists; single-symbol frames are one partition
-    // either way, so reference parity is unaffected)
+    // SYMBOL column always exists; a single-symbol frame is one series
+    // spread over consecutive range partitions)
     val seriesKeys = Seq("SYMBOL")
 
     val normalized0 = timed("normalize")(
@@ -129,8 +129,8 @@ object Runner {
     // Persist level is size-aware (core.Sizing): in-memory columnar at
     // gate scale, DISK_ONLY past the spill threshold — the 60M-row probe
     // spent >25% of wall in GC with this cache (plus the repair cache)
-    // heap-resident. DISK_ONLY keeps the RDD partitioning, so the
-    // assumeSorted repair contract below is unaffected.
+    // heap-resident. DISK_ONLY keeps the RDD partitioning, so the range
+    // layout the repair and SMA scans require is unaffected.
     val ndfPlain = normalized0.unsorted
     val ndfEstBytes = graft.core.Sizing.planEstimate(ndfPlain)
     val ndf = ndfPlain.persist(graft.core.Sizing.storageFor(ndfEstBytes))
@@ -189,8 +189,7 @@ object Runner {
     val qualityF: Future[ListMap[String, Any]] =
       if (computeReports) Future(timed("quality_report")(
         Reporting.dataQualityReport(ndf, partitionCols = seriesKeys,
-          knownDistinctTs = true, layoutSorted = true,
-          knownRows = Some(postRows))))
+          knownDistinctTs = true, knownRows = Some(postRows))))
       else Future.successful(ListMap.empty[String, Any])
     // Resample mode (O26 `resampleMode`, SURVEY §7.3). "correct" (default):
     // ONE gap repair at the finest configured rule, then every timeframe is
@@ -205,9 +204,8 @@ object Runner {
     // exporter.py only forwards `normalization_report` — so skipping the
     // report aggregation is parity AND removes two jobs per timeframe.
     //
-    // `assumeSorted + crossPartition` is sound here: `ndf` is Normalize's
-    // keyed-dedup output, guaranteed RANGE-partitioned on (keys, TIMESTAMP)
-    // and sorted within partitions — the repair scan runs as a narrow
+    // `ndf` is Normalize's output, in the RangeLayout on (keys, TIMESTAMP)
+    // that the repair and SMA scans require: they run as narrow
     // mapPartitions with no shuffle and no sort, parallel across a single
     // symbol's time ranges (cross-boundary state via FastFill's seeds).
     val correctMode = cfg.resampleMode != "faithful"
@@ -221,8 +219,8 @@ object Runner {
       // rows — same magnitude, so ndf's estimate serves as its size hint
       val df = Gaps.repairGaps(ndf, rule, gp.useFfillFor,
         gp.interpolatePrices, gp.shortGapMinutes, partitionCols = seriesKeys,
-        computeReport = false, cacheResult = true, assumeSorted = true,
-        crossPartition = true, approxResultBytes = ndfEstBytes).df
+        computeReport = false, cacheResult = true,
+        approxResultBytes = ndfEstBytes).df
       // materialize BEFORE the fan-out: four chains read this cache
       // concurrently, and racing an unmaterialized cache serializes them
       // all on the partition lock
@@ -241,8 +239,7 @@ object Runner {
               val r = Gaps.repairGaps(ndf, tf, gp.useFfillFor,
                 gp.interpolatePrices, gp.shortGapMinutes,
                 partitionCols = seriesKeys, computeReport = false,
-                cacheResult = true, assumeSorted = true,
-                crossPartition = true, approxResultBytes = ndfEstBytes).df
+                cacheResult = true, approxResultBytes = ndfEstBytes).df
               // materialize here so the export's concurrent validate+write
               // read a hot cache instead of racing its first computation
               timed(s"repair_$tf")(r.count())

@@ -449,9 +449,10 @@ object StreamingOps {
     gapRepairEngine(ticks, rule, delay, retention, blend = false)
 
   /** Streaming linear INTERPOLATION — the other half of batch O13
-    * ([[graft.operators.Interpolate.linear]]) that the ffill-only repair
-    * deliberately deferred: synthesized grid rows blend linearly between
-    * the gap's two real edges instead of carrying the left edge.
+    * ([[graft.operators.Gaps.repairGaps]]'s linear interpolation) that the
+    * ffill-only repair deliberately deferred: synthesized grid rows blend
+    * linearly between the gap's two real edges instead of carrying the
+    * left edge.
     *
     * Interpolation needs the gap's FAR edge, so a fill can only be
     * emitted once the closing tick is final — which costs nothing extra

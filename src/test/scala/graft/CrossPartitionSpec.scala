@@ -1,14 +1,17 @@
 package graft
 
-import graft.operators.{FastFill, Normalize, Reporting}
+import scala.collection.immutable.ListMap
+
+import graft.operators.{FastFill, Normalize, RangeLayout, Reporting}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The RANGE layout contract: a series spanning many consecutive ordered
-  * partitions must repair/aggregate EXACTLY like the same series contained
-  * in one partition — the cross-partition seeds (grid continuation, ffill
-  * carry, interpolation neighbors, SMA ring priming) are pure plumbing.
+  * partitions must repair/aggregate EXACTLY like the same series laid out
+  * on one partition — the cross-partition seeds (grid continuation, ffill
+  * carry, interpolation neighbors, SMA ring priming) are pure plumbing —
+  * and a frame that is not in the layout fails with the named error.
   *
   * The fixture is adversarial on purpose: leading/trailing null runs, a
   * null run and a missing-stamp gap that both straddle partition
@@ -59,57 +62,91 @@ class CrossPartitionSpec extends SparkSpec {
       schema)
   }
 
-  private def rangeLayout(df: DataFrame, parts: Int): DataFrame =
-    df.repartitionByRange(parts, col("SYMBOL"), col("TIMESTAMP"))
-      .sortWithinPartitions(col("SYMBOL"), col("TIMESTAMP"))
+  /** The fixture laid out on `parts` range partitions, pinned (cached). */
+  private def laidOut(df: DataFrame, parts: Int, keys: Seq[String] = Seq("SYMBOL")): DataFrame = {
+    val laid = RangeLayout(df, keys, partitions = Some(parts)).cache()
+    assert(laid.count() > 0 && laid.rdd.getNumPartitions == parts)
+    laid
+  }
 
-  private def collectSorted(df: DataFrame): Seq[Seq[Any]] =
-    df.orderBy("SYMBOL", "TIMESTAMP").collect()
+  private def collectSorted(df: DataFrame,
+                            order: Seq[String] = Seq("SYMBOL", "TIMESTAMP")): Seq[Seq[Any]] =
+    df.orderBy(order.map(col): _*).collect()
       .map(_.toSeq.map {
         case d: Double => math.round(d * 1e9) // exact-arithmetic compare
         case x => x
       }.toSeq).toSeq
 
-  test("cross-partition FastFill matches the contained-series scan exactly") {
-    val df = fixture().cache()
-    df.count()
-    val cols = (Seq("VOLUME"), Seq("CLOSE"))
-    // reference: hash layout, each series contained in one partition
-    val ref = FastFill.fill(df, cols._1, cols._2, "TIMESTAMP",
-      partitionCols = Seq("SYMBOL"), reindexStepMicros = Some(60000000L))
-    // candidate: 16-way range layout, series span many partitions. The
-    // layout is CACHED: range bounds are re-sampled per job on uncached
-    // plans, and the seed pass + fill scan must see one pinned partitioning
-    // (the Runner's cached normalize output gives exactly this).
-    val laid = rangeLayout(df, 16).cache()
-    assert(laid.count() > 0 && laid.rdd.getNumPartitions == 16)
-    val got = FastFill.fill(laid, cols._1, cols._2, "TIMESTAMP",
-      partitionCols = Seq("SYMBOL"), reindexStepMicros = Some(60000000L),
-      assumeSorted = true, crossPartition = true)
-    assert(collectSorted(got) == collectSorted(ref))
-    df.unpersist()
+  private def fill(df: DataFrame, keys: Seq[String] = Seq("SYMBOL")): DataFrame =
+    FastFill.fill(df, Seq("VOLUME"), Seq("CLOSE"), "TIMESTAMP", 60000000L,
+      partitionCols = keys)
+
+  /** SMA summaries with doubles rounded for an exact-arithmetic compare. */
+  private def rounded(indicators: Any) =
+    indicators.asInstanceOf[ListMap[String, ListMap[String, Any]]]
+      .map { case (k, v) => k -> v.map { case (k2, x) => k2 -> (x match {
+        case d: Double => math.round(d * 1e9)
+        case other => other
+      })}}
+
+  private def smas(df: DataFrame, keys: Seq[String] = Seq("SYMBOL")) =
+    rounded(Reporting.dataQualityReport(df, partitionCols = keys,
+      knownDistinctTs = true)("indicators"))
+
+  test("FastFill on an N-partition layout matches the 1-partition layout exactly") {
+    // the layouts are CACHED, as the Runner's normalize output is: the
+    // anchor job, the summary pass and the fill scan then read one pinned
+    // partitioning
+    val one = laidOut(fixture(), 1)
+    val many = laidOut(one, 16)
+    assert(collectSorted(fill(many)) == collectSorted(fill(one)))
+    many.unpersist(); one.unpersist()
   }
 
   test("chunked SMA summaries match the windowed form on a spanning series") {
     val df = fixture().filter(col("TIMESTAMP").isNotNull).cache()
     df.count()
-    val laid = rangeLayout(df, 16).cache()
-    laid.count()
-    val winForm = Reporting.dataQualityReport(df, partitionCols = Seq("SYMBOL"),
-      knownDistinctTs = true)
-    val chunked = Reporting.dataQualityReport(laid, partitionCols = Seq("SYMBOL"),
-      knownDistinctTs = true, layoutSorted = true)
-    def smas(m: scala.collection.immutable.ListMap[String, Any]) =
-      m("indicators").asInstanceOf[scala.collection.immutable.ListMap[String, Any]]
-        .map { case (k, v) =>
-          k -> v.asInstanceOf[scala.collection.immutable.ListMap[String, Any]]
-            .map { case (k2, x) => k2 -> (x match {
-              case d: Double => math.round(d * 1e9)
-              case other => other
-            })}
-        }
-    assert(smas(chunked) == smas(winForm))
-    laid.unpersist(); df.unpersist()
+    val one = laidOut(df, 1)
+    val many = laidOut(df, 16)
+    val oracle = rounded(SmaOracle.summaries(df, Seq(10, 50), Seq("SYMBOL")))
+    assert(smas(many) == smas(one))
+    assert(smas(many) == oracle)
+    many.unpersist(); one.unpersist(); df.unpersist()
+  }
+
+  test("frames outside the range layout fail with the named layout error") {
+    val df = fixture().filter(col("TIMESTAMP").isNotNull).cache()
+    df.count()
+    // hash layout sorted within partitions: every partition holds a slice of
+    // each series, so per-partition stamp ranges overlap
+    val hashed = df.repartition(4).sortWithinPartitions("SYMBOL", "TIMESTAMP")
+      .cache()
+    hashed.count()
+    // the cached fixture itself is shuffled: stamps go backwards and series
+    // interleave
+    for ((name, bad) <- Seq("shuffled" -> df, "hash-sorted" -> hashed)) {
+      val e1 = intercept[RangeLayout.LayoutError](fill(bad).count())
+      assert(e1.getMessage.contains("FastFill"), s"$name: ${e1.getMessage}")
+      val e2 = intercept[RangeLayout.LayoutError](smas(bad))
+      assert(e2.getMessage.contains("Reporting SMA"), s"$name: ${e2.getMessage}")
+    }
+    hashed.unpersist(); df.unpersist()
+  }
+
+  test("a keyless series laid out over 8 partitions repairs and reports like 1 partition") {
+    // one series, no key columns: the same seeded scans with zero keys
+    val df = fixture().filter(col("SYMBOL") === "AAA").drop("SYMBOL")
+    val one = laidOut(df, 1, Nil)
+    val many = laidOut(one, 8, Nil)
+    val repaired = collectSorted(fill(many, Nil), Seq("TIMESTAMP"))
+    assert(repaired == collectSorted(fill(one, Nil), Seq("TIMESTAMP")))
+    // a downstream coalesce runs all 8 scan partitions in one task: seeds
+    // must follow the scan's partitions, not the task's
+    assert(repaired ==
+      collectSorted(fill(many, Nil).coalesce(1), Seq("TIMESTAMP")))
+    assert(repaired.length > one.count())
+    assert(smas(many, Nil) == smas(one, Nil))
+    many.unpersist(); one.unpersist()
   }
 
   test("keyed dedup emits the range layout with a single exchange and sort") {

@@ -38,7 +38,7 @@ class FaithfulGoldenSpec extends SparkSpec {
   }
 
   test("5T faithful pipeline: candles equal the reference's grid samples") {
-    val repaired = Gaps.repairGaps(normalized().df, "5T",
+    val repaired = Gaps.repairGaps(normalized().unsorted, "5T",
       useFfillFor = Seq("VOLUME"), interpolatePrices = true)
     // reference: 1 gap [00:10, 00:15), missing_count=1, short_gap; ffill 1
     val gaps = repaired.report("detected_gaps").asInstanceOf[Seq[Any]]
@@ -75,7 +75,7 @@ class FaithfulGoldenSpec extends SparkSpec {
   }
 
   test("1T pipeline: row count, volume conservation and interpolation match") {
-    val repaired = Gaps.repairGaps(normalized().df, "1T",
+    val repaired = Gaps.repairGaps(normalized().unsorted, "1T",
       useFfillFor = Seq("VOLUME"), interpolatePrices = true)
     assert(repaired.report("filled_counts")
       .asInstanceOf[ListMap[String, Long]]("VOLUME") == 3L)

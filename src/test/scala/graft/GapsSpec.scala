@@ -5,7 +5,7 @@ import java.time.Instant
 
 import scala.collection.immutable.ListMap
 
-import graft.operators.Gaps
+import graft.operators.{Gaps, RangeLayout}
 import org.apache.spark.sql.functions._
 
 /** Ports of tests/test_phase8_gaps.py: 10×1-min frame with minutes 3–4
@@ -23,6 +23,10 @@ class GapsSpec extends SparkSpec {
     (0 until 10).filterNot(m => m == 3 || m == 4)
       .map(m => (ts(m), m.toDouble, m.toDouble, 100.0))
       .toDF("TIMESTAMP", "OPEN", "CLOSE", "VOLUME")
+
+  // repair input in the range layout (keyless unless keys are given)
+  private def laid(df: org.apache.spark.sql.DataFrame,
+                   keys: Seq[String] = Nil) = RangeLayout(df, keys)
 
   test("detect_gaps finds the 2-stamp cluster and classifies it short") {
     val gaps = Gaps.detectGaps(frame(), "1T", shortGapMinutes = 5).collect()
@@ -42,7 +46,7 @@ class GapsSpec extends SparkSpec {
   }
 
   test("repair restores the full grid, ffills VOLUME, interpolates prices") {
-    val res = Gaps.repairGaps(frame(), "1T",
+    val res = Gaps.repairGaps(laid(frame()), "1T",
       useFfillFor = Seq("VOLUME"), interpolatePrices = true)
     val out = res.df.orderBy("TIMESTAMP").collect()
     assert(out.length == 10, "reindex to the 10-stamp grid")
@@ -64,7 +68,8 @@ class GapsSpec extends SparkSpec {
     val withOffGrid = frame().union(
       Seq((Timestamp.from(Instant.parse("2024-01-01T00:02:30Z")), 99.0, 99.0, 1.0))
         .toDF("TIMESTAMP", "OPEN", "CLOSE", "VOLUME"))
-    val out = Gaps.repairGaps(withOffGrid, "1T", computeReport = false).df
+    val out = Gaps.repairGaps(laid(withOffGrid), "1T",
+      computeReport = false).df
     assert(out.count() == 10)
     assert(out.filter(col("OPEN") === 99.0).count() == 0)
   }
@@ -75,7 +80,7 @@ class GapsSpec extends SparkSpec {
       (ts(1), Some(5.0)),
       (ts(2), Option.empty[Double]))
       .toDF("TIMESTAMP", "OPEN")
-    val out = Gaps.repairGaps(df, "1T", useFfillFor = Nil,
+    val out = Gaps.repairGaps(laid(df), "1T", useFfillFor = Nil,
       computeReport = false).df
       .orderBy("TIMESTAMP").select("OPEN").as[Double].collect()
     assert(out.toSeq == Seq(5.0, 5.0, 5.0))
@@ -91,8 +96,9 @@ class GapsSpec extends SparkSpec {
       ("B", ts(0), Some(50.0), Option.empty[Double]),
       ("B", ts(2), Some(52.0), Some(520.0)))
       .toDF("SYMBOL", "TIMESTAMP", "OPEN", "VOLUME")
-    val out = Gaps.repairGaps(df, "1T", useFfillFor = Seq("VOLUME"),
-        partitionCols = Seq("SYMBOL"), computeReport = false).df
+    val out = Gaps.repairGaps(laid(df, Seq("SYMBOL")), "1T",
+        useFfillFor = Seq("VOLUME"), partitionCols = Seq("SYMBOL"),
+        computeReport = false).df
       .orderBy("SYMBOL", "TIMESTAMP").collect()
     assert(out.length == 8) // A: 5 grid rows, B: 3 grid rows
     val a = out.filter(_.getString(0) == "A")
@@ -135,9 +141,9 @@ class GapsSpec extends SparkSpec {
     // no-leak property gets three windows — a REAL leak (an RDD this call
     // cached that nothing can ever unpersist) fails every window, while
     // cross-suite pollution is transient.
-    val keyed = (0 until 10).filterNot(m => m == 3 || m == 4).flatMap(m =>
+    val keyed = laid((0 until 10).filterNot(m => m == 3 || m == 4).flatMap(m =>
       Seq(("A", ts(m), m.toDouble, 100.0), ("B", ts(m), m + 0.5, 200.0)))
-      .toDF("SYMBOL", "TIMESTAMP", "CLOSE", "VOLUME")
+      .toDF("SYMBOL", "TIMESTAMP", "CLOSE", "VOLUME"), Seq("SYMBOL"))
     val cleanWindow = (1 to 3).iterator.map { _ =>
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val res = Gaps.repairGaps(keyed, "1T",
@@ -178,9 +184,9 @@ class GapsSpec extends SparkSpec {
         if (m == 1 || m == 2 || m == 5) null else s"n$m",
         m.toDouble))
       .toDF("TIMESTAMP", "NOTE", "CLOSE")
-    val got = graft.operators.FastFill.fill(df,
+    val got = graft.operators.FastFill.fill(laid(df),
         ffillCols = Seq("NOTE"), interpCols = Seq("CLOSE"),
-        tsCol = "TIMESTAMP", reindexStepMicros = Some(60000000L))
+        tsCol = "TIMESTAMP", stepMicros = 60000000L)
       .orderBy("TIMESTAMP").collect()
     assert(got.length == 10, "reindex restores the full grid")
     val notes = got.map(_.getAs[String]("NOTE")).toSeq
@@ -191,5 +197,37 @@ class GapsSpec extends SparkSpec {
     val closes = got.map(_.getAs[Double]("CLOSE")).toSeq
     // synthesized minutes 3/4 interpolate linearly between 2.0 and 5.0
     assert(closes == Seq(0.0, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0))
+  }
+
+  test("the grid runs to the last grid point before the last stamp (trailing gap)") {
+    // 1-min rows 0..29 without minute 25: at 5T the grid is
+    // date_range(00:00, 00:29) = 0,5,..,25, so the last grid point is
+    // missing although rows follow it; it must be synthesized, filled and
+    // reported — on one partition and with the series spread over several
+    val rows = (0 until 30).filterNot(_ == 25)
+      .map(m => ("S", ts(m), m.toDouble, 100.0))
+      .toDF("SYMBOL", "TIMESTAMP", "OPEN", "VOLUME")
+    for (keys <- Seq(Nil, Seq("SYMBOL")); parts <- Seq(1, 6)) {
+      val what = s"keys=$keys parts=$parts"
+      val df = RangeLayout(rows, keys, partitions = Some(parts)).cache()
+      df.count()
+      val res = Gaps.repairGaps(df, "5T", useFfillFor = Seq("VOLUME"),
+        partitionCols = keys)
+      val out = res.df.orderBy("TIMESTAMP").collect()
+      assert(out.map(_.getAs[Timestamp]("TIMESTAMP")).toSeq ==
+        (0 to 25 by 5).map(ts), what)
+      assert(out.last.getAs[Double]("OPEN") == 20.0, s"$what: trailing ffill")
+      assert(out.last.getAs[Double]("VOLUME") == 100.0, what)
+      assert(res.report("rows_after") == 6L, what)
+      val gaps = res.report("detected_gaps").asInstanceOf[Seq[ListMap[String, Any]]]
+      assert(gaps.map(g => (g("start"), g("end"), g("missing_count"))) ==
+        Seq(("2024-01-01 00:25:00+00:00", "2024-01-01 00:30:00+00:00", 1L)),
+        what)
+      val detected = Gaps.detectGaps(df, "5T", partitionCols = keys).collect()
+      assert(detected.map(g => (g.getAs[Timestamp]("start"),
+        g.getAs[Timestamp]("end"), g.getAs[Long]("missing_count"))).toSeq ==
+        Seq((ts(25), ts(25), 1L)), what)
+      df.unpersist()
+    }
   }
 }

@@ -5,7 +5,7 @@ import java.time.Instant
 
 import scala.collection.immutable.ListMap
 
-import graft.operators.{Dedup, Gaps, Normalize, Resample}
+import graft.operators.{Dedup, Gaps, Normalize, RangeLayout, Resample}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -83,7 +83,8 @@ class PropertySpec extends AnyFunSuite {
     for (minutes <- samples(gen, 5)) {
       if (minutes.length >= 2) {
         val obs = minutes.map(m => (ts(m), 100.0 + m)).toMap
-        val df = minutes.map(m => (ts(m), 100.0 + m)).toDF("TIMESTAMP", "OPEN")
+        val df = RangeLayout(
+          minutes.map(m => (ts(m), 100.0 + m)).toDF("TIMESTAMP", "OPEN"), Nil)
         val out = Gaps.repairGaps(df, "1T", useFfillFor = Nil,
           computeReport = false).df.collect()
         val lo = minutes.min; val hi = minutes.max
@@ -106,7 +107,8 @@ class PropertySpec extends AnyFunSuite {
     // with limit_direction=both: the InternalRow scan (the production
     // engine) and Interpolate.linear's composed window expressions — on
     // random multi-key series with random null runs (incl. leading/
-    // trailing, and one all-null key) they must agree to the bit
+    // trailing, and one all-null key) they must agree to the bit. The
+    // grids are complete, so FastFill's grid positions are row positions
     val gen = for {
       nullEvery <- Gen.chooseNum(2, 9)
       phase <- Gen.chooseNum(0, 5)
@@ -123,11 +125,12 @@ class PropertySpec extends AnyFunSuite {
           else 100.0 + m * 1.7 + (if (sym == "A") 0 else 50)
         (sym, ts(m), v)
       }
-      val df = rows.toDF("SYMBOL", "TIMESTAMP", "CLOSE")
+      val df = RangeLayout(rows.toDF("SYMBOL", "TIMESTAMP", "CLOSE"),
+        Seq("SYMBOL"))
       def key(r: org.apache.spark.sql.Row) =
         (r.getString(0), r.getTimestamp(1))
       val a = graft.operators.FastFill.fill(df, Nil, Seq("CLOSE"),
-          "TIMESTAMP", partitionCols = Seq("SYMBOL"))
+          "TIMESTAMP", 60000000L, partitionCols = Seq("SYMBOL"))
         .orderBy("SYMBOL", "TIMESTAMP").collect()
       val b = graft.operators.Interpolate.linear(df, Seq("CLOSE"),
           "TIMESTAMP", partitionCols = Seq("SYMBOL"))
@@ -141,11 +144,11 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("cross-partition repair equals contained repair on random fixtures") {
-    import org.apache.spark.sql.functions.col
+  test("N-partition layout repair equals 1-partition layout repair on random fixtures") {
     // random series: random subsets of a 600-min grid, random null runs in
-    // both fill classes, random partition counts — the seeded cross-
-    // partition scan must be indistinguishable from the contained one
+    // both fill classes, random partition counts — the seeded scan over a
+    // series spanning many partitions must be indistinguishable from the
+    // same scan over one partition
     val gen = for {
       keep <- Gen.listOfN(400, Gen.chooseNum(0, 599)).map(_.distinct.sorted)
       nullEvery <- Gen.chooseNum(3, 17)
@@ -162,21 +165,21 @@ class PropertySpec extends AnyFunSuite {
         }
         val df = rows.toDF("SYMBOL", "TIMESTAMP", "CLOSE", "VOLUME").cache()
         df.count()
-        val ref = Gaps.repairGaps(df, "1T", useFfillFor = Seq("VOLUME"),
-          partitionCols = Seq("SYMBOL"), computeReport = false).df
-          .orderBy("TIMESTAMP").collect()
-        val laid = df
-          .repartitionByRange(parts, col("SYMBOL"), col("TIMESTAMP"))
-          .sortWithinPartitions(col("SYMBOL"), col("TIMESTAMP"))
-          .cache()
-        laid.count()
-        val got = Gaps.repairGaps(laid, "1T", useFfillFor = Seq("VOLUME"),
-          partitionCols = Seq("SYMBOL"), computeReport = false,
-          assumeSorted = true, crossPartition = true).df
-          .orderBy("TIMESTAMP").collect()
-        assert(got.map(_.toString).toSeq == ref.map(_.toString).toSeq,
+        def repaired(n: Int) = {
+          val laid = RangeLayout(df, Seq("SYMBOL"), partitions = Some(n))
+            .cache()
+          laid.count()
+          val out = Gaps.repairGaps(laid, "1T", useFfillFor = Seq("VOLUME"),
+            partitionCols = Seq("SYMBOL"), computeReport = false).df
+            .orderBy("TIMESTAMP").collect()
+          laid.unpersist()
+          out
+        }
+        val ref = repaired(1)
+        assert(ref.length == keep.last - keep.head + 1, "full grid restored")
+        assert(repaired(parts).map(_.toString).toSeq == ref.map(_.toString).toSeq,
           s"case $i (parts=$parts nullEvery=$nullEvery n=${keep.length})")
-        laid.unpersist(); df.unpersist()
+        df.unpersist()
       }
     }
   }
@@ -203,7 +206,8 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     // 1M minutes, one series: the ring-buffer SMA scan is O(max window)
     // memory and the median comes from the partial-aggregated median() —
-    // nothing buffers the whole series on one task
+    // nothing buffers the whole series on one task. `range` partitions are
+    // consecutive id ranges, so the frame is already in the range layout
     val df = spark.range(1000000L).select(
       timestamp_seconds(lit(1672531200L) + col("id") * 60).as("TIMESTAMP"),
       (lit(1.0) + (col("id") % 1000).cast("double") / 1000.0).as("CLOSE"))

@@ -7,7 +7,7 @@ import java.time.Instant
 import scala.collection.immutable.ListMap
 
 import graft.core.Json
-import graft.operators.{Exporter, Reporting}
+import graft.operators.{Exporter, RangeLayout, Reporting}
 import org.apache.spark.sql.functions.{col, input_file_name}
 
 /** Ports of test_phase7_export.py + reporting assertions (test.py,
@@ -25,7 +25,8 @@ class ReportingExportSpec extends SparkSpec {
     }.toDF("TIMESTAMP", "OPEN", "HIGH", "LOW", "CLOSE", "VOLUME")
 
   test("quality report has the reference's fields and values") {
-    val rep = Reporting.dataQualityReport(frame(), smaWindows = Seq(3, 5))
+    val rep = Reporting.dataQualityReport(RangeLayout(frame(), Nil),
+      smaWindows = Seq(3, 5))
     assert(rep("rows") == 10L)
     assert(rep("candles_count") == 10L)
     assert(rep("start") == "2024-01-01 00:00:00+00:00")

@@ -15,10 +15,10 @@ import org.apache.spark.sql.functions.udf
   *  - nonexistent spring-forward wall times → shifted to the end of the gap;
   *  - normal wall times → the unique instant.
   *
-  * Spark's built-in `to_utc_timestamp` silently resolves both cases, so this
-  * is one of the few places the engine needs custom evaluation. A Scala UDF
-  * is acceptable here: localization runs once per ingest on the tz-naive
-  * path only, never in per-query hot loops.
+  * Spark's built-in `to_utc_timestamp` silently resolves both cases. The
+  * engine evaluates this with the codegen expression
+  * `graft.plans.TzLocalizeExpr`; this `java.time` UDF is the independent
+  * oracle TzLocalizeSpec checks it against.
   *
   * Input convention: the naive wall time arrives as a TimestampType whose
   * UTC rendering equals the wall-clock reading (how Spark parses tz-less

@@ -4,31 +4,20 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Reusable fill transformers (reference O13: src/etl/transform/gaps.py
+/** Window-algebra fill oracle (reference O13: src/etl/transform/gaps.py
   * :150-169): forward-fill and pandas-style linear positional interpolation
   * with `limit_direction="both"` (leading nulls take the first observed
   * value, trailing nulls the last).
   *
-  * Everything is composed window expressions — no UDAF, stays inside
-  * whole-stage codegen. Windows partition by the given keys (SYMBOL at
-  * scale); an empty partition list means one global ordered partition and
-  * is only for single-series parity workloads.
+  * An independent implementation of [[FastFill]]'s arithmetic for the
+  * property specs: everything is composed window expressions partitioned
+  * by the given keys (an empty list is one global ordered window).
   */
 object Interpolate {
 
-  private lazy val log =
-    org.slf4j.LoggerFactory.getLogger(Interpolate.getClass)
-
   private def base(partitionCols: Seq[String], orderCol: String): WindowSpec =
-    if (partitionCols.isEmpty) {
-      // deliberate, LOUD: an unpartitioned window serializes every row
-      // onto one task. Single-series parity tests are the only sane
-      // caller; anything at scale belongs on FastFill.fill (range layout)
-      log.warn("Interpolate with no partition keys plans a single-task " +
-        "global window — use FastFill.fill(crossPartition = true) for " +
-        "anything beyond a small single-series frame")
-      Window.orderBy(orderCol)
-    } else Window.partitionBy(partitionCols.map(col): _*).orderBy(orderCol)
+    if (partitionCols.isEmpty) Window.orderBy(orderCol)
+    else Window.partitionBy(partitionCols.map(col): _*).orderBy(orderCol)
 
   /** Forward-fill `cols` in order of `orderCol`. */
   def ffill(df: DataFrame, cols: Seq[String], orderCol: String,
