@@ -169,7 +169,7 @@ object Exporter {
     import scala.concurrent.duration.Duration
     val valReportF = Future(
       timed("ex_validate")(validateFinalDf(df, knownDistinctTs)))(
-      Runner.tfExecutionContext)
+      Runner.driverPool)
     val (prepared0, parts) = preparePartitionCols(df, partitionCols)
     val prepared = prepared0.drop(Readers.FileOrderCol)
 
@@ -343,13 +343,19 @@ object Exporter {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
-  /** O21: append one JSON line per export. */
-  def appendExportLog(logDir: String, entry: ListMap[String, Any]): Unit = {
-    Files.createDirectories(Paths.get(logDir))
-    Files.writeString(Paths.get(logDir, "export_log.ndjson"),
-      Json.write(entry, indent = 0).replace("\n", " ") + "\n",
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
+  /** Serializes every export-log append in the process: concurrent files
+    * in a batch share one log. */
+  private val exportLogLock = new Object
+
+  /** O21: append one JSON line per export; the entries land as one
+    * contiguous block, in the order given. */
+  def appendExportLog(logDir: String, entries: ListMap[String, Any]*): Unit =
+    exportLogLock.synchronized {
+      Files.createDirectories(Paths.get(logDir))
+      Files.writeString(Paths.get(logDir, "export_log.ndjson"),
+        entries.map(Json.write(_, indent = 0).replace("\n", " ") + "\n").mkString,
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    }
 
   /** The Morton (Z-order) key for two long columns already quantized to
     * 16 bits: bit i of `a` lands at bit 2i, bit i of `b` at 2i+1. Pure

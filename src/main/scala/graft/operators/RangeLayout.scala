@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,16 +34,33 @@ object RangeLayout {
     * range partition count (default: the session's shuffle partitions,
     * which AQE may coalesce); `thenBy` only orders rows sharing a stamp
     * (Normalize's dedup sorts by file order there).
+    *
+    * A key the optimizer folds to a constant (a `lit` series column) is
+    * left out of the range partitioning: Catalyst drops it from a
+    * downstream window's partitioning but not from the range exchange,
+    * and `rangepartitioning(constant, TIMESTAMP)` does not satisfy the
+    * window's clustering on TIMESTAMP — Catalyst would hash-exchange after
+    * the range exchange and break the layout. A constant key is one
+    * series, so ranging on the stamp alone is the same layout.
     */
   def apply(df: DataFrame, keys: Seq[String],
             partitions: Option[Int] = None,
             thenBy: Seq[String] = Nil): DataFrame = {
     val ts = Normalize.TsCol
-    val rangeCols = (keys :+ ts).map(col)
+    val rangeCols = (keys.filterNot(constantKeys(df, keys)) :+ ts).map(col)
     partitions.fold(df.repartitionByRange(rangeCols: _*))(
         df.repartitionByRange(_, rangeCols: _*))
       .sortWithinPartitions((keys ++ (ts +: thenBy)).map(col): _*)
   }
+
+  /** The `keys` whose values the optimized plan of `df` folds to literals. */
+  private def constantKeys(df: DataFrame, keys: Seq[String]): Set[String] =
+    if (keys.isEmpty) Set.empty
+    else df.select(keys.map(col): _*).queryExecution.optimizedPlan match {
+      case p: Project => keys.zip(p.projectList)
+        .collect { case (k, a: Alias) if a.child.foldable => k }.toSet
+      case _ => Set.empty
+    }
 
   /** One series run inside one partition, as a summary pass saw it. Null
     * stamps count as the smallest stamp (they sort first).

@@ -69,8 +69,8 @@ object Readers {
     * cache build parses every field once (caching materializes whole rows,
     * so the parser converts every column and populates the corrupt column
     * regardless of downstream pruning — which also satisfies Spark's
-    * corrupt-column-only query restriction), the total and corrupt counts
-    * read it, and the RETURNED frame's first materialization reads it too
+    * corrupt-column-only query restriction), one aggregate that fills it
+    * takes both the total and the corrupt count, and the RETURNED frame's first materialization reads it too
     * — the caller drops it via `ReadResult.release()` afterwards. The
     * returned frame filters on the corrupt column behind an RDD barrier:
     * the barrier references every field, so the row set is identical under
@@ -97,14 +97,24 @@ object Readers {
         org.apache.spark.sql.types.StructField(CorruptCol, StringType)))
       .csv(path)
       .cache()
-    val totalRows = corruptScan.count() // fills the cache — the only parse
-    val corruptRows = corruptScan.filter(col(CorruptCol).isNotNull).count()
+    withoutCorruptRows(spark, corruptScan, path, "csv")
+  }
+
+  /** The clean rows of a cached PERMISSIVE scan, behind the
+    * projection-proof barrier, with the total and corrupt counts from ONE
+    * aggregate — the job that fills the cache, and the only parse.
+    */
+  private def withoutCorruptRows(spark: SparkSession, corruptScan: DataFrame,
+                                 path: String, format: String): ReadResult = {
+    val counts = corruptScan
+      .agg(count(lit(1)), count(col(CorruptCol))).collect()(0)
+    val (totalRows, corruptRows) = (counts.getLong(0), counts.getLong(1))
     val clean = corruptScan.filter(col(CorruptCol).isNull).drop(CorruptCol)
     val df = spark
       .createDataFrame(clean.rdd, clean.schema) // projection-proof barrier
       .withColumn(FileOrderCol, monotonically_increasing_id())
     ReadResult(df,
-      meta(df, path, "csv", totalRows - corruptRows) +
+      meta(df, path, format, totalRows - corruptRows) +
         ("corrupt_rows" -> corruptRows),
       baseName(path),
       release = () => corruptScan.unpersist())
@@ -142,17 +152,7 @@ object Readers {
         org.apache.spark.sql.types.StructField(CorruptCol, StringType)))
       .json(path)
       .cache()
-    val totalRows = corruptScan.count() // fills the cache — the only parse
-    val corruptRows = corruptScan.filter(col(CorruptCol).isNotNull).count()
-    val clean = corruptScan.filter(col(CorruptCol).isNull).drop(CorruptCol)
-    val df = spark
-      .createDataFrame(clean.rdd, clean.schema) // projection-proof barrier
-      .withColumn(FileOrderCol, monotonically_increasing_id())
-    ReadResult(df,
-      meta(df, path, "ndjson", totalRows - corruptRows) +
-        ("corrupt_rows" -> corruptRows),
-      baseName(path),
-      release = () => corruptScan.unpersist())
+    withoutCorruptRows(spark, corruptScan, path, "ndjson")
   }
 
   def readParquet(spark: SparkSession, path: String): ReadResult = {
@@ -251,15 +251,22 @@ object Readers {
   final case class ScanResult(loaded: Seq[ReadResult], quarantined: Seq[(String, String)])
 
   def loadAll(spark: SparkSession, rawDir: String): ScanResult = {
-    val dir = new java.io.File(rawDir)
-    val files = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(_.isFile).map(_.getPath).sorted
-    val results = files.map { p =>
-      try Right(read(spark, p))
-      catch { case e: Exception => Left(p -> e.getMessage) }
-    }
+    val results = listFiles(rawDir).map(readOrQuarantine(spark, _))
     ScanResult(
-      loaded = results.collect { case Right(r) => r }.toSeq,
-      quarantined = results.collect { case Left(q) => q }.toSeq)
+      loaded = results.collect { case Right(r) => r },
+      quarantined = results.collect { case Left(q) => q })
   }
+
+  /** The regular files directly under `rawDir`, in sorted path order. */
+  def listFiles(rawDir: String): Seq[String] =
+    Option(new java.io.File(rawDir).listFiles()).getOrElse(Array.empty)
+      .filter(_.isFile).map(_.getPath).sorted.toSeq
+
+  /** Reads one file; a file that fails to read is quarantined as
+    * (path, message) instead of failing the batch (extractor.py:56-59).
+    */
+  def readOrQuarantine(spark: SparkSession,
+                       path: String): Either[(String, String), ReadResult] =
+    try Right(read(spark, path))
+    catch { case e: Exception => Left(path -> e.getMessage) }
 }

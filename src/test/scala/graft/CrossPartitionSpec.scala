@@ -2,7 +2,8 @@ package graft
 
 import scala.collection.immutable.ListMap
 
-import graft.operators.{FastFill, Normalize, RangeLayout, Reporting}
+import graft.core.GraftConfig
+import graft.operators.{FastFill, Normalize, RangeLayout, Reporting, Runner}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -169,6 +170,37 @@ class CrossPartitionSpec extends SparkSpec {
     val distinctStamps = df.filter(col("TIMESTAMP").isNotNull)
       .select("SYMBOL", "TIMESTAMP").distinct().count()
     assert(n == distinctStamps)
+  }
+
+  test("a constant series key keeps the range layout with no exchange after it") {
+    val base = spark.range(600).select(
+      timestamp_seconds(lit(1704067200L) + col("id") * 60).as("timestamp"),
+      (lit(1.1) + col("id") * 1e-4).as("open"),
+      (lit(1.1005) + col("id") * 1e-4).as("high"),
+      (lit(1.0995) + col("id") * 1e-4).as("low"),
+      (lit(1.1002) + col("id") * 1e-4).as("close"),
+      lit(100.0).as("volume"))
+    // Catalyst folds the literal key out of the dedup window's partitioning:
+    // the range exchange must not keep it, or a hash exchange follows it
+    val res = Normalize(base.withColumn("SYMBOL", lit("EURUSD")),
+      GraftConfig.defaultColumnsMap, requiredColumns = Seq("CLOSE"),
+      sourceTz = Some("UTC"), computeReport = false,
+      partitionCols = Seq("SYMBOL"))
+    val plan = res.unsorted.queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllIn(plan).length == 1,
+      s"one exchange, the range exchange:\n$plan")
+    assert(plan.contains("rangepartitioning") && !plan.contains("hashpartitioning"),
+      s"range layout expected:\n$plan")
+    // the pipeline repairs it with the symbol given as a literal or injected
+    for (input <- Seq(base.withColumn("symbol", lit("EURUSD")), base)) {
+      val out = java.nio.file.Files.createTempDirectory("graft_constkey").toString
+      val cfg = GraftConfig(rawPath = out, processedPath = out,
+        timeframes = Seq("1T", "5T"), partitionCols = Nil)
+      val r = Runner.processDataFrame(spark, input, cfg, None, "EURUSD_const",
+        out, computeReports = false)
+      assert(r.errors.isEmpty, s"errors: ${r.errors}")
+      assert(r.symbol == "EURUSD" && r.exports.map(_.rows) == Seq(600L, 120L))
+    }
   }
 
   test("cross-partition as-of join matches the hash layout on a hot key") {

@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import graft.core.GraftConfig
@@ -282,5 +284,153 @@ class RunnerSpec extends SparkSpec {
       _.df.select(col("doc_id").cast("long")).collect().map(_.getLong(0))).sorted
     assert(ids == Seq(1L, 2L, 3L, 4L, 5L), ids)
     scan.loaded.foreach(_.release())
+  }
+
+  /** `n` one-minute candles for `symbol` from 2024-01-01, opening at
+    * `open0` and rising 0.001 a minute, as an OHLC CSV.
+    */
+  private def candles(symbol: String, n: Int, open0: Double = 1.10): String = {
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    val sb = new StringBuilder("timestamp,open,high,low,close,volume,symbol\n")
+    for (m <- 0 until n) {
+      val o = open0 + m * 0.001
+      sb.append(s"${fmt.format(t0.plusMinutes(m))},").append(
+        f"$o%.4f,${o + 0.0005}%.4f,${o - 0.0005}%.4f,${o + 0.0002}%.4f,${100 + m},$symbol\n")
+    }
+    sb.toString
+  }
+
+  /** A raw directory with one `candles` CSV per symbol; returns (raw, out). */
+  private def batchDirs(prefix: String, symbols: Seq[String],
+                        n: Int): (Path, String) = {
+    val work = Files.createTempDirectory(prefix)
+    val raw = Files.createDirectories(work.resolve("raw"))
+    for (s <- symbols) Files.writeString(raw.resolve(s"${s}_2024.csv"), candles(s, n))
+    (raw, work.resolve("processed").toString)
+  }
+
+  /** Runs `f` with Runner's timing sink recording every `file` stage as a
+    * [start, end] nanoTime interval.
+    */
+  private def fileIntervals[T](f: => T): (T, Seq[(Long, Long)]) = {
+    val q = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    Runner.timingSink = Some((stage, sec) => if (stage == "file") {
+      val end = System.nanoTime()
+      q.add((end - (sec * 1e9).toLong, end)); ()
+    })
+    try (f, q.asScala.toSeq) finally Runner.timingSink = None
+  }
+
+  /** Most intervals open at one instant (an end precedes a start at a tie). */
+  private def peakOverlap(spans: Seq[(Long, Long)]): Int =
+    spans.flatMap { case (a, b) => Seq((a, 1), (b, -1)) }
+      .sortBy { case (t, d) => (t, d) }
+      .scanLeft(0)(_ + _._2).max
+
+  test("twelve timeframes finish: the driver pool cannot deadlock") {
+    import org.apache.spark.sql.functions._
+    val input = spark.range(1200).select(
+      timestamp_seconds(lit(1704067200L) + col("id") * 60).as("timestamp"),
+      (lit(1.1) + col("id") * 1e-4).as("open"),
+      (lit(1.1005) + col("id") * 1e-4).as("high"),
+      (lit(1.0995) + col("id") * 1e-4).as("low"),
+      (lit(1.1002) + col("id") * 1e-4).as("close"),
+      (lit(100.0) + col("id")).as("volume")).cache()
+    input.count()
+    val tfs = Seq("1T", "2T", "3T", "4T", "5T", "6T", "10T", "15T", "20T",
+      "30T", "1H", "2H")
+    val out = Files.createTempDirectory("graft_tf12").toString
+    val cfg = GraftConfig(rawPath = out, processedPath = out, timeframes = tfs,
+      partitionCols = Nil)
+    // on its own thread: a deadlocked pool must fail the test, not hang it
+    val run = Future(Runner.processDataFrame(spark, input, cfg, None,
+      "EURUSD_tf12", out))(ExecutionContext.global)
+    val r = try Await.result(run, 120.seconds) finally input.unpersist()
+    assert(r.errors.isEmpty, s"errors: ${r.errors}")
+    val steps = Seq(1, 2, 3, 4, 5, 6, 10, 15, 20, 30, 60, 120)
+    assert(r.exports.map(_.rows) == steps.map(k => (1200L + k - 1) / k))
+  }
+
+  test("one failing file or base repair leaves the other files to finish") {
+    val (raw, out) = batchDirs("graft_isolate", Seq("AAA", "CCC", "DDD"), 30)
+    // BBB lacks the required CLOSE column: it fails in Normalize
+    Files.writeString(raw.resolve("BBB_2024.csv"),
+      "timestamp,open,high,low\n2024-01-01 00:00:00,1,2,0.5\n")
+    val cfg = GraftConfig(rawPath = raw.toString, processedPath = out,
+      timeframes = Seq("1T", "5T"), partitionCols = Nil)
+    // the first base repair to finish fails (Runner's timing hook throws)
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    Runner.timingSink = Some((stage, _) =>
+      if (stage.startsWith("repair_base_") && failed.compareAndSet(false, true))
+        throw new IllegalStateException("repair failed"))
+    val rs = try Runner.runBatch(spark, cfg, dryRun = false)
+      finally Runner.timingSink = None
+    assert(rs.map(_.symbol) == Seq("AAA", "BBB", "CCC", "DDD"))
+    val bbb = rs(1)
+    assert(bbb.exports.isEmpty && bbb.errors.map(_._1) == Seq("file") &&
+      bbb.errors.head._2.contains("Missing required"), s"BBB: ${bbb.errors}")
+    val (repairFailed, good) = rs.filter(_.symbol != "BBB")
+      .partition(_.errors.nonEmpty)
+    assert(repairFailed.size == 1, rs.map(_.errors))
+    assert(repairFailed.head.errors == Seq("repair_base_1T" -> "repair failed"))
+    assert(repairFailed.head.exports.isEmpty, "no export of the unrepaired frame")
+    assert(good.size == 2 && good.forall(_.exports.map(_.rows) == Seq(30L, 6L)))
+    val log = Files.readAllLines(Paths.get(s"$out/exports/export_log.ndjson"))
+    assert(log.size == 4)
+  }
+
+  test("concurrent files: the export log has one timeframe-ordered block per file") {
+    val symbols = (0 until 5).map(i => s"SYM$i")
+    val (raw, out) = batchDirs("graft_batch_log", symbols, 60)
+    val cfg = GraftConfig(rawPath = raw.toString, processedPath = out,
+      partitionCols = Nil)
+    val (rs, spans) = fileIntervals(Runner.runBatch(spark, cfg, dryRun = false))
+    assert(rs.map(_.symbol) == symbols, "results in sorted file order")
+    assert(rs.forall(r => r.errors.isEmpty && r.exports.size == 4), rs)
+    // more files than local[4]'s parallelism: files overlap, at most 4 at once
+    val peak = peakOverlap(spans)
+    assert(spans.size == 5 && peak >= 2 &&
+      peak <= spark.sparkContext.defaultParallelism, s"peak $peak")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val lines = Files.readAllLines(Paths.get(s"$out/exports/export_log.ndjson"))
+      .asScala.map(json.readTree).toSeq
+    assert(lines.size == 5 * 4)
+    val blocks = lines.grouped(4).toSeq
+    for (b <- blocks) {
+      assert(b.map(_.get("symbol").asText).distinct.size == 1, b)
+      assert(b.map(_.get("timeframe").asText) == cfg.timeframes, b)
+    }
+    assert(blocks.map(_.head.get("symbol").asText).sorted == symbols)
+  }
+
+  test("a spill threshold below every file admits files one at a time") {
+    val (raw, out) = batchDirs("graft_admit", Seq("AAA", "BBB", "CCC"), 30)
+    val cfg = GraftConfig(rawPath = raw.toString, processedPath = out,
+      timeframes = Seq("1T", "5T"), partitionCols = Nil)
+    sys.props("graft.mat.spill.bytes") = "1"
+    val (rs, spans) =
+      try fileIntervals(Runner.runBatch(spark, cfg, dryRun = false))
+      finally sys.props -= "graft.mat.spill.bytes"
+    assert(rs.forall(r => r.errors.isEmpty && r.exports.map(_.rows) == Seq(30L, 6L)))
+    assert(spans.size == 3 && peakOverlap(spans) == 1, s"spans: $spans")
+  }
+
+  test("two files naming the same outputs write them one after the other") {
+    val (raw, out) = batchDirs("graft_same_name", Nil, 0)
+    Files.writeString(raw.resolve("AAA_a.csv"), candles("AAA", 30))
+    Files.writeString(raw.resolve("AAA_b.csv"), candles("AAA", 30, open0 = 2.10))
+    val cfg = GraftConfig(rawPath = raw.toString, processedPath = out,
+      timeframes = Seq("1T", "5T"), partitionCols = Nil)
+    val rs = Runner.runBatch(spark, cfg, dryRun = false)
+    assert(rs.forall(r => r.errors.isEmpty && r.exports.map(_.rows) == Seq(30L, 6L)),
+      rs.map(_.errors))
+    // each export holds one file's rows, never a mix of both
+    for (e <- rs.head.exports) {
+      val opens = spark.read.parquet(e.path).select("OPEN").collect().map(_.getDouble(0))
+      assert(opens.length == e.rows &&
+        (opens.forall(_ < 2) || opens.forall(_ >= 2)), opens.toSeq)
+    }
+    assert(Files.readAllLines(Paths.get(s"$out/exports/export_log.ndjson")).size == 4)
   }
 }
