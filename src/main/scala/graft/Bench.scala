@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import graft.core.GraftConfig
+import graft.core.{GraftConfig, Json}
 import graft.operators.Runner
+import graft.tools.Harness
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,7 +65,7 @@ object Bench {
           val isJvm = exe.endsWith("/java") || exe == "java"
           val suspect = isJvm && (c.contains("sbt.boot.Boot") ||
             c.contains("org.apache.spark") || c.contains("graft.Bench") ||
-            c.contains("graft.Verify"))
+            c.contains("graft.Verify") || c.contains("graft.tools."))
           if (suspect) Some(s"pid=${p.pid}") else None
         }
       }.toSeq
@@ -85,40 +86,6 @@ object Bench {
     }
     s
   }
-
-  /** Remove stale RAM-backed scratch left by a dead benchmark JVM. tmpfs
-    * pages from an earlier run compete with this run's executor heap — the
-    * r6 monotonic 5 s → 37 s degradation traced to exactly this.
-    */
-  private def cleanStaleScratch(): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (!Files.isDirectory(shm)) return Nil
-    val stale = Files.list(shm).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("graft_scratch")).toList
-    stale.map { dir =>
-      try {
-        Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(Files.deleteIfExists(_))
-      } catch { case _: java.io.IOException => () }
-      dir.toString
-    }
-  }
-
-  /** JSON string literal: escape backslash, quote, and all control chars.
-    * Every interpolated string in the emitted JSON goes through here — a
-    * path or error message containing a quote must not yield an
-    * unparseable line (the bench JSON is the round's perf record).
-    */
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   /** Deterministic synthetic OHLCV (FIXTURES.md §3 shape: 1-min grid from
     * 2023-01-01, ~1% of rows removed, single symbol, naive timestamps to
@@ -151,7 +118,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
+      .map(_.group(1).toDouble).getOrElse(0.1)
+    val gridRows = math.max(1000L, (6000000 * sf).toLong)
 
     // contamination guard (r5/r6 both published host-skewed numbers): give
     // transient siblings 60 s to drain, surface persistent ones in the JSON,
@@ -168,36 +137,26 @@ object Bench {
     // only reclaim scratch when no sibling is alive — a live sibling's
     // shuffle dirs are its problem to clean, deleting them under it would
     // turn one bad measurement into two broken runs
-    val staleScratch = if (survivors.isEmpty) cleanStaleScratch() else Nil
+    val staleScratch = if (survivors.isEmpty) Harness.sweepStaleScratch() else Nil
     if (staleScratch.nonEmpty)
       contamination :+= s"stale_scratch_cleaned:${staleScratch.length}"
 
-    // shuffle/cache scratch on the fastest local storage available (Spark's
-    // own guidance for spark.local.dir); exports still write to real disk
-    val scratch = java.nio.file.Paths.get("/dev/shm")
-    val localDir =
-      if (Files.isWritable(scratch))
-        Files.createTempDirectory(scratch, "graft_scratch").toString
-      else Files.createTempDirectory("graft_scratch").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle/cache scratch on tmpfs; exports still write to real disk
+    Harness.run(scratchRows = Some(gridRows))(
+      measure(_, sfDir, gridRows, contamination))
+  }
 
-    val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
-      .map(_.group(1).toDouble).getOrElse(0.1)
-    val gridRows = math.max(1000L, (6000000 * sf).toLong)
+  private def measure(h: Harness, sfDir: String, gridRows: Long,
+                      guard: Vector[String]): Unit = {
+    val spark = h.spark
+    var contamination = guard
 
     // materialize the input outside the timed window (the baseline excludes
     // extract time)
     val raw = genOhlcv(spark, gridRows).cache()
     val inputRows = raw.count()
 
-    val outDir = Files.createTempDirectory("graft_bench").toString
+    val outDir = h.tempDir("graft_bench").toString
     val cfg = GraftConfig(timeframes = Seq("1T", "5T", "15T", "1H"))
 
     // warmup: run the identical pipeline shape at 5% size so whole-stage
@@ -211,7 +170,7 @@ object Bench {
     for (mode <- Seq("faithful", "correct"))
       Runner.processDataFrame(spark, warm, cfg.copy(resampleMode = mode),
         sourceTz = None, basename = "EURUSD_warm",
-        outDir = Files.createTempDirectory("graft_warm").toString)
+        outDir = h.tempDir("graft_warm").toString)
     warm.unpersist()
 
     // last round's per-query numbers, loaded BEFORE the pipeline and query
@@ -263,12 +222,8 @@ object Bench {
     val canaryNames = Seq("q13_multi_agg", "q24_global_topk", "q98_column_profile")
     def timeCanaries(): Map[String, Double] = canaryNames.flatMap { n =>
       SparkEntry.queries.get(n).map { fn =>
-        def once(): Double = {
-          val c0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          (System.nanoTime() - c0) / 1e9
-        }
-        n -> (try Seq(once(), once(), once()).sorted.apply(1)
+        def once() = Harness.seconds(fn(spark, sfDir).count())
+        n -> (try Harness.median(Seq(once(), once(), once()))
               catch { case _: Throwable => -1.0 })
       }
     }.toMap
@@ -295,11 +250,6 @@ object Bench {
     // jitter, and a median is the standard way to report wall time under it.
     // per-run GC time + heap high-water: a contaminated/memory-starved run
     // is self-diagnosing from the JSON (gc spikes or heap near -Xmx)
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
     var gcPerRun = Vector.empty[Long]
     var heapHighWater = 0L
     def timedRun(mode: String): Double = {
@@ -309,27 +259,25 @@ object Bench {
       // monotonically as tmpfs pages compete with the executor heap
       System.gc()
       Thread.sleep(200)
-      val dir = Files.createTempDirectory(s"graft_bench_$mode").toString
-      val g0 = gcMillis()
-      val t0 = System.nanoTime()
-      val r = Runner.processDataFrame(spark, raw,
-        cfg.copy(resampleMode = mode), sourceTz = None,
-        basename = "EURUSD_bench", outDir = dir)
-      val sec = (System.nanoTime() - t0) / 1e9
-      gcPerRun :+= gcMillis() - g0
+      val dir = h.tempDir(s"graft_bench_$mode").toString
+      val g0 = Harness.gcMillis()
+      val sec = Harness.seconds {
+        val r = Runner.processDataFrame(spark, raw,
+          cfg.copy(resampleMode = mode), sourceTz = None,
+          basename = "EURUSD_bench", outDir = dir)
+        require(r.errors.isEmpty, s"$mode errors: ${r.errors.mkString("; ")}")
+        require(r.exports.length == 4, "four timeframe exports expected")
+      }
+      gcPerRun :+= Harness.gcMillis() - g0
       heapHighWater = math.max(heapHighWater,
         Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory)
-      require(r.errors.isEmpty, s"$mode errors: ${r.errors.mkString("; ")}")
-      require(r.exports.length == 4, "four timeframe exports expected")
       sec
     }
-    val g0 = gcMillis()
-    val t0 = System.nanoTime()
-    val result = Runner.processDataFrame(spark, raw,
+    val g0 = Harness.gcMillis()
+    val (result, firstSec) = Harness.timed(Runner.processDataFrame(spark, raw,
       cfg.copy(resampleMode = "faithful"), sourceTz = None,
-      basename = "EURUSD_bench", outDir = outDir)
-    val firstSec = (System.nanoTime() - t0) / 1e9
-    gcPerRun :+= gcMillis() - g0
+      basename = "EURUSD_bench", outDir = outDir))
+    gcPerRun :+= Harness.gcMillis() - g0
     require(result.errors.isEmpty,
       s"pipeline errors: ${result.errors.mkString("; ")}")
     require(result.exports.length == 4, "four timeframe exports expected")
@@ -401,11 +349,7 @@ object Bench {
       "q345_triangles_persisted", "q346_components_persisted",
       "q347_neardup_index_probe", "q75_embedding_dedup")
     val queryTimes = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
-        val q0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - q0) / 1e9
-      }
+      def once() = Harness.seconds(fn(spark, sfDir).count())
       val t =
         try {
           val t1 = once()
@@ -426,7 +370,7 @@ object Bench {
           else try {
             val extra = if (wideSpread(name)) 4 else 2
             val samples = t1 +: Vector.fill(extra)(once())
-            val med = samples.sorted.apply(samples.size / 2)
+            val med = Harness.median(samples)
             medianed :+= name // only after every re-run succeeded — a
             // flaky re-run below reports t1, which is NOT a median
             med
@@ -461,20 +405,16 @@ object Bench {
       // (drop + retrain + rewrite), so re-timing is safe and ~0.7 s/rep.
       def buildOnce(): Double = {
         graft.operators.Exporter.dropBucketed(spark, tb)
-        val b0 = System.nanoTime()
-        graft.operators.Similarity.buildIvfIndex(emb, tb, "vec_id", "embedding",
-          nLists = 8, iterations = 1, sampleFraction = 0.2)
-        (System.nanoTime() - b0) / 1e9
+        Harness.seconds(graft.operators.Similarity.buildIvfIndex(emb, tb,
+          "vec_id", "embedding", nLists = 8, iterations = 1,
+          sampleFraction = 0.2))
       }
-      val buildSec = Seq(buildOnce(), buildOnce(), buildOnce()).sorted.apply(1)
-      def probeOnce(): Double = {
-        val p0 = System.nanoTime()
+      val buildSec = Harness.median(Seq(buildOnce(), buildOnce(), buildOnce()))
+      def probeOnce() = Harness.seconds(
         graft.operators.Similarity.ivfProbe(spark, tb,
           emb.filter(col("vec_id") <= 5), "vec_id", "embedding",
-          k = 3, nProbe = 8).count()
-        (System.nanoTime() - p0) / 1e9
-      }
-      val probeSec = Seq(probeOnce(), probeOnce(), probeOnce()).sorted.apply(1)
+          k = 3, nProbe = 8).count())
+      val probeSec = Harness.median(Seq(probeOnce(), probeOnce(), probeOnce()))
       q54Split = Vector("q54_build" -> buildSec, "q54_probe" -> probeSec)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] q54 build/probe split FAILED: ${e.getMessage}")
@@ -567,21 +507,21 @@ object Bench {
     // a contaminated measurement must be loud: surface it in query_errors
     // (the field the harness already alarms on) as well as its own field
     failed ++= contamination
-    def jarr(xs: Seq[String]): String = xs.map(jstr).mkString("[", ",", "]")
     // bounded string arrays for the compact line: the r9 capture failed
     // BECAUSE 46 alarm strings pushed the compact line itself past the
     // driver's 2000-char tail window — cap any list at `max` entries plus
     // an explicit overflow marker so the line length is bounded by
     // construction, whatever happens on the host
     def jarrCapped(xs: Seq[String], max: Int): String =
-      jarr(if (xs.size <= max) xs
-           else xs.take(max) :+ s"...+${xs.size - max}_more")
-    val qs = allQueryTimes.map { case (k, v) => jstr(k) + f":$v%.3f" }
+      Harness.jsonStrings(if (xs.size <= max) xs
+                          else xs.take(max) :+ s"...+${xs.size - max}_more")
+    val qs = allQueryTimes.map { case (k, v) => Json.write(k) + f":$v%.3f" }
       .mkString("{", ",", "}")
-    val disc = discarded.map(s => f"$s%.3f").mkString("[", ",", "]")
+    val disc = Harness.jsonSecs(discarded)
+    val runsJson = Harness.jsonSecs(faithfulRuns)
     val maxHeap = Runtime.getRuntime.maxMemory
     val json =
-      f"""{"metric":"etl_pipeline_sec","value":$pipelineSec%.3f,"unit":"sec","pipeline_runs":${faithfulRuns.map(s => f"$s%.3f").mkString("[", ",", "]")},"pipeline_min":${faithfulRuns.head}%.3f,"pipeline_canary_factor":$pipelineCanaryFactor%.2f,"pipeline_spread":$spread%.2f,"pipeline_discarded":$disc,"contamination":${jarr(contamination)},"correct_mode_sec":$correctSec%.3f,"gc_ms_per_run":${gcPerRun.mkString("[", ",", "]")},"heap_high_water_mb":${heapHighWater / 1048576},"heap_max_mb":${maxHeap / 1048576},"input_rows":$inputRows,"exports":${result.exports.map(_.rows).mkString("[", ",", "]")},"query_errors":${jarr(failed)},"query_medians":${jarr(medianed)},"queries":$qs,"sf":${jstr(sfDir)},"canary_factor":$canaryFactor%.2f,"alarms":${jarr(alarms)},"etl_pipeline_sec":$pipelineSec%.3f}"""
+      f"""{"metric":"etl_pipeline_sec","value":$pipelineSec%.3f,"unit":"sec","pipeline_runs":$runsJson,"pipeline_min":${faithfulRuns.head}%.3f,"pipeline_canary_factor":$pipelineCanaryFactor%.2f,"pipeline_spread":$spread%.2f,"pipeline_discarded":$disc,"contamination":${Harness.jsonStrings(contamination)},"correct_mode_sec":$correctSec%.3f,"gc_ms_per_run":${gcPerRun.mkString("[", ",", "]")},"heap_high_water_mb":${heapHighWater / 1048576},"heap_max_mb":${maxHeap / 1048576},"input_rows":$inputRows,"exports":${result.exports.map(_.rows).mkString("[", ",", "]")},"query_errors":${Harness.jsonStrings(failed)},"query_medians":${Harness.jsonStrings(medianed)},"queries":$qs,"sf":${Json.write(sfDir)},"canary_factor":$canaryFactor%.2f,"alarms":${Harness.jsonStrings(alarms)},"etl_pipeline_sec":$pipelineSec%.3f}"""
     println(json)
     // the driver's stdout capture keeps only the LAST 2000 chars, which
     // truncates the 300-entry queries map's line into unparseable JSON
@@ -595,7 +535,7 @@ object Bench {
     // metric=etl_pipeline_sec: it is the same measurement, and the driver
     // contract keys on that metric name.
     val compact =
-      f"""{"metric":"etl_pipeline_sec","value":$pipelineSec%.3f,"unit":"sec","compact":true,"full_json":${jstr(benchOut)},"pipeline_runs":${faithfulRuns.map(s => f"$s%.3f").mkString("[", ",", "]")},"pipeline_min":${faithfulRuns.head}%.3f,"pipeline_canary_factor":$pipelineCanaryFactor%.2f,"pipeline_spread":$spread%.2f,"correct_mode_sec":$correctSec%.3f,"input_rows":$inputRows,"n_queries":${allQueryTimes.size},"query_sec_total":${allQueryTimes.map(_._2).sum}%.1f,"query_errors":${jarrCapped(failed, 4)},"canary_factor":$canaryFactor%.2f,"alarms":${jarrCapped(alarms, 4)},"sf":${jstr(sfDir)},"etl_pipeline_sec":$pipelineSec%.3f}"""
+      f"""{"metric":"etl_pipeline_sec","value":$pipelineSec%.3f,"unit":"sec","compact":true,"full_json":${Json.write(benchOut)},"pipeline_runs":$runsJson,"pipeline_min":${faithfulRuns.head}%.3f,"pipeline_canary_factor":$pipelineCanaryFactor%.2f,"pipeline_spread":$spread%.2f,"correct_mode_sec":$correctSec%.3f,"input_rows":$inputRows,"n_queries":${allQueryTimes.size},"query_sec_total":${allQueryTimes.map(_._2).sum}%.1f,"query_errors":${jarrCapped(failed, 4)},"canary_factor":$canaryFactor%.2f,"alarms":${jarrCapped(alarms, 4)},"sf":${Json.write(sfDir)},"etl_pipeline_sec":$pipelineSec%.3f}"""
     println(compact)
     // the whole line, un-truncatable: the driver (and next round's alarm
     // comparison) read it from here
@@ -606,6 +546,5 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench] could not write bench JSON: ${e.getMessage}")
     }
-    spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Json
+import graft.tools.Harness
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,58 +15,41 @@ object Verify {
       case _ => throw new IllegalArgumentException(
         "usage: Verify <sfDir> <outDir> [queryFilter]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // only stop a session this main created — under getOrCreate an
-    // embedding JVM (tests) may already own one, and stopping it would
-    // kill every subsequent user of the shared context
-    val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) =>
-        only.forall(_.split(',').exists(name.contains)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        // Loud failure: a broken query must surface as an `err` row in the
-        // driver's correctness report, not a silently missing key (round-8
-        // regression read as "99/99 green" because failures left no trace).
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        Files.writeString(Paths.get(s"$outDir/${name}_ERROR.txt"),
-          s"$name\n${e.getClass.getName}: ${e.getMessage}\n")
+    // an embedding JVM (tests) may already own a session: the harness
+    // then leaves it running for every subsequent user of the context
+    Harness.run() { h =>
+      val spark = h.spark
+      new java.io.File(outDir).mkdirs()
+      SparkEntry.queries
+        .filter { case (name, _) =>
+          only.forall(_.split(',').exists(name.contains)) }
+        .foreach { case (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          // Loud failure: a broken query must surface as an `err` row in the
+          // driver's correctness report, not a silently missing key (round-8
+          // regression read as "99/99 green" because failures left no trace).
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Files.writeString(Paths.get(s"$outDir/${name}_ERROR.txt"),
+            s"$name\n${e.getClass.getName}: ${e.getMessage}\n")
+        }
       }
+      val errs = new java.io.File(outDir).listFiles()
+        .filter(_.getName.endsWith("_ERROR.txt")).map(_.getName).sorted
+      if (errs.nonEmpty)
+        System.err.println(s"[verify] ${errs.length} FAILED: ${errs.mkString(", ")}")
+      // leave the warehouse empty for the next harness JVM (q48's bucketed
+      // tables are session-scoped scratch, not a deliverable)
+      for (t <- spark.catalog.listTables().collect().map(_.name)
+           if t.startsWith("graft_bkt_"))
+        graft.operators.Exporter.dropBucketed(spark, t)
+      // every string is escaped (a tab or CR in authored SQL would
+      // otherwise make the driver's json.load fail)
+      val json = SparkEntry.oracleSql
+        .map { case (k, v) => s"${Json.write(k)}: ${Json.write(v)}" }
+        .mkString("{", ",", "}")
+      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     }
-    val errs = new java.io.File(outDir).listFiles()
-      .filter(_.getName.endsWith("_ERROR.txt")).map(_.getName).sorted
-    if (errs.nonEmpty)
-      System.err.println(s"[verify] ${errs.length} FAILED: ${errs.mkString(", ")}")
-    // leave the warehouse empty for the next harness JVM (q48's bucketed
-    // tables are session-scoped scratch, not a deliverable)
-    for (t <- spark.catalog.listTables().collect().map(_.name)
-         if t.startsWith("graft_bkt_"))
-      graft.operators.Exporter.dropBucketed(spark, t)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    if (!preExisting) spark.stop()
   }
 }

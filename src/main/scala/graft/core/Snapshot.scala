@@ -53,8 +53,6 @@ object Snapshot {
   /** Rounds between the lineage-truncating snapshots of [[Loop.iterate]]. */
   val Interval = 8
 
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
-
   /** Releases the blocks behind `snap`, a frame returned by
     * `localCheckpoint` (its analyzed plan is the `LogicalRDD` leaf).
     */
@@ -113,14 +111,7 @@ object Snapshot {
     }
 
     /** Round `i` of the loop, timed under `GRAFT_TIMING=1`. */
-    def round[T](i: Int)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (timing)
-        System.err.println(f"[graft-timing]   ${s"$name round $i"}%-26s " +
-          f"${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
+    def round[T](i: Int)(body: => T): T = Timing.timed(s"$name round $i")(body)
 
     /** Until-stable loop control from the round snapshot `init`, whose
       * probe is `initProbe` (None: round 1 is not compared). Each round

@@ -5,7 +5,7 @@ import java.security.MessageDigest
 
 import scala.collection.immutable.ListMap
 
-import graft.core.Json
+import graft.core.{Json, Timing}
 import graft.sources.Readers
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -28,14 +28,6 @@ import org.apache.spark.sql.functions._
 object Exporter {
 
   val TsCol: String = Normalize.TsCol
-
-  private def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      System.err.println(f"[graft-timing]   $name%-26s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    r
-  }
 
   def validateFinalDf(df: DataFrame,
                       knownDistinctTs: Boolean = false): ListMap[String, Any] = {
@@ -168,7 +160,7 @@ object Exporter {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     val valReportF = Future(
-      timed("ex_validate")(validateFinalDf(df, knownDistinctTs)))(
+      Timing.timed("ex_validate")(validateFinalDf(df, knownDistinctTs)))(
       Runner.driverPool)
     val (prepared0, parts) = preparePartitionCols(df, partitionCols)
     val prepared = prepared0.drop(Readers.FileOrderCol)
@@ -187,7 +179,7 @@ object Exporter {
       .option("compression", compression)
     val writer = rowGroupSize.fold(writer0)(n =>
       writer0.option("parquet.block.size", n))
-    timed("ex_write")(
+    Timing.timed("ex_write")(
       (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
         .parquet(outPath))
     val valReport = Await.result(valReportF, Duration.Inf)
@@ -211,7 +203,7 @@ object Exporter {
       case (r: Long, _, _) if r == 0L => Some((0L, "", ""))
       case _ => None
     }
-    exportReport + ("content_hash" -> timed("ex_hash")(contentHash(df,
+    exportReport + ("content_hash" -> Timing.timed("ex_hash")(contentHash(df,
       if (df.columns.contains("OPEN")) Seq("OPEN", "CLOSE") else Nil, pre)))
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.immutable.ListMap
 
-import graft.core.Json
+import graft.core.{Json, Timing}
 import graft.sources.Readers
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -95,10 +95,8 @@ object Reporting {
         aggs :+= sum(when(isnan(cd), 1L).otherwise(0L)).as("_cnan")
       } else aggs :+= median(col("CLOSE")).as("_cmed")
     }
-    val t0 = System.nanoTime()
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      System.err.println(f"[graft-timing] qr_profile_agg ${(System.nanoTime()-t0)/1e9}%8.2f s")
+    val r = Timing.timed("qr_profile_agg")(
+      df.agg(aggs.head, aggs.tail: _*).collect()(0))
 
     def opt[T](name: String): Option[T] =
       if (r.isNullAt(r.fieldIndex(name))) None else Some(r.getAs[T](name))
@@ -156,12 +154,9 @@ object Reporting {
 
     // SMA summaries — all windows in one pass (reporting.py:106-123)
     var indicators = ListMap.empty[String, Any]
-    if (computeIndicators && hasClose && rows > 0) {
-      val t1 = System.nanoTime()
-      indicators = smaSummaries(df, smaWindows, partitionCols)
-      if (sys.env.get("GRAFT_TIMING").contains("1"))
-        System.err.println(f"[graft-timing] qr_sma_agg ${(System.nanoTime()-t1)/1e9}%8.2f s")
-    }
+    if (computeIndicators && hasClose && rows > 0)
+      indicators = Timing.timed("qr_sma_agg")(
+        smaSummaries(df, smaWindows, partitionCols))
     report += "indicators" -> indicators
 
     val nanTotal = ListMap(dataCols.map(c => c -> r.getAs[Long](s"_nan_$c")): _*)

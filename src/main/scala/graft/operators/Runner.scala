@@ -4,7 +4,7 @@ import scala.collection.immutable.ListMap
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import graft.core.{GraftConfig, Json, Rules, Sizing}
+import graft.core.{GraftConfig, Json, Rules, Sizing, Timing}
 import graft.sources.Readers
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,23 +45,15 @@ object Runner {
           }
         }))
 
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
   /** Optional per-stage timing hook: when set, every timed stage also
-    * reports (name, seconds) here — tools/ScaleBench uses it to break the
-    * pipeline's scale ratio down by stage (a super-linear stage must not
+    * reports (name, seconds) here — `tools.Harness.stageTimes` uses it to
+    * break a pipeline run down by stage (a super-linear stage must not
     * hide inside a healthy total). Called from concurrent files and
     * timeframe chains, so the sink must be thread-safe.
     */
   @volatile var timingSink: Option[(String, Double) => Unit] = None
-  private def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    val sec = (System.nanoTime() - t0) / 1e9
-    if (timing)
-      System.err.println(f"[graft-timing] $name%-28s $sec%8.2f s")
-    timingSink.foreach(_(name, sec))
-    r
-  }
+  private def timed[T](name: String)(f: => T): T =
+    Timing.timed(name, sec => timingSink.foreach(_(name, sec)))(f)
 
   /** O22: symbol inference — first value of a symbol-ish column, else the
     * basename prefix before '_' (src/run.py:31-49).
@@ -164,7 +156,7 @@ object Runner {
             "MEMORY_AND_DISK — set GRAFT_MAT_SPILL_BYTES or feed a sized " +
             "lineage if this run GC-thrashes")
       }
-      if (timing)
+      if (Timing.enabled)
         System.err.println(s"[graft-timing] ndf partitions: ${ndf.rdd.getNumPartitions}" +
           s", est bytes: ${ndfEstBytes.getOrElse(-1L)}" +
           s", level: ${ndf.storageLevel.description}")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Tables, Timing}
 import graft.queries.QueryUtils.fr
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -551,24 +551,13 @@ object WindowQueries {
     "q341_streaming_neardup" -> { (s, d) =>
       import graft.streaming.StreamingOps
       graft.plans.GraftExtensions.register(s)
-      // profiling scaffold is fully inert unless GRAFT_TIMING is set
-      // (ADVICE r13): no clock reads, no state threading in gate runs
-      val profile = sys.env.contains("GRAFT_TIMING")
-      def mark(label: String, t0: Long): Long =
-        if (!profile) 0L
-        else {
-          System.err.println(
-            f"[q341-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          System.nanoTime()
-        }
-      var t = if (profile) System.nanoTime() else 0L
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"),
         timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts"))
-      val hits = replay(s, docs, "graft_q341") { st =>
-        StreamingOps.streamingNearDup(st, "doc_id", "text", "ts",
-          numHashes = 64, bands = 16, shingleSize = 3).toDF()
-      }
-      t = mark("replay", t)
+      val hits = Timing.timed("q341 replay")(
+        replay(s, docs, "graft_q341") { st =>
+          StreamingOps.streamingNearDup(st, "doc_id", "text", "ts",
+            numHashes = 64, bands = 16, shingleSize = 3).toDF()
+        })
       val pairs = hits.select(col("docId"), col("dupOf")).distinct()
       // localCheckpoint: this projection feeds every subplan below (two
       // verify joins on each side, the candidate explode, AND the exact-
@@ -576,13 +565,13 @@ object WindowQueries {
       // subexpression across join branches — one materialization of the
       // 5k-row shingle+hash table replaces seven scans + shingle passes
       // of the corpus
-      val shn = Tables.documents(s, d).select(col("doc_id"),
-        call_function("shingle_hashes",
-          transform(split(trim(lower(col("text"))), "\\s+"),
-            t => xxhash64(t)), lit(3)).as("sh"),
-        xxhash64(col("text")).as("_h"))
-        .localCheckpoint()
-      t = mark("shn_checkpoint", t)
+      val shn = Timing.timed("q341 shn_checkpoint")(
+        Tables.documents(s, d).select(col("doc_id"),
+          call_function("shingle_hashes",
+            transform(split(trim(lower(col("text"))), "\\s+"),
+              t => xxhash64(t)), lit(3)).as("sh"),
+          xxhash64(col("text")).as("_h"))
+          .localCheckpoint())
       def verifyGe05(cands: DataFrame): DataFrame = cands
         .join(shn.select(col("doc_id").as("docId"), col("sh").as("_sa")),
           "docId")
@@ -594,7 +583,8 @@ object WindowQueries {
       // 244 rows at sf0.1 — pinning them makes the tripwire's `except` and
       // the returned result share ONE evaluation of the verify joins (the
       // final orderBy used to re-run them after the tripwire had passed)
-      val detected = verifyGe05(pairs).localCheckpoint()
+      val detected = Timing.timed("q341 verify_checkpoint")(
+        verifyGe05(pairs).localCheckpoint())
       // ADVICE r11: the oracle is the exact all-pairs detection contract,
       // so the gate holds only while banding recall is exactly 1.0 — a
       // band/shingle parameter change or data regen that drops a truly-
@@ -638,7 +628,7 @@ object WindowQueries {
       // un-materialized, each side replays shn-scan → group-min join →
       // explode. One eager checkpoint (≈½M narrow rows at sf0.1) halves
       // the tripwire's dominant stage (measured 1.2–2.3 s → ~0.9 s).
-      val exM = ex.localCheckpoint()
+      val exM = Timing.timed("q341 tripwire_checkpoint")(ex.localCheckpoint())
       val expectedMins = exM.as("a")
         .join(exM.as("b"),
           col("a.e") === col("b.e") && col("a.doc_id") > col("b.doc_id"))
@@ -652,10 +642,8 @@ object WindowQueries {
           / (col("_na") + col("_nb") - col("_i")) >= 0.5)
         .select(col("docId").as("doc_id"))
       val expected = nonMin.unionByName(expectedMins).distinct()
-      t = mark("tripwire_build", t)
-      val missed = expected.except(detected).limit(10)
-        .collect().map(_.getLong(0))
-      t = mark("tripwire_collect", t)
+      val missed = Timing.timed("q341 tripwire_collect")(
+        expected.except(detected).limit(10).collect().map(_.getLong(0)))
       if (missed.nonEmpty) {
         val surfaced = pairs
           .filter(col("docId").isin(missed.map(Long.box): _*))
@@ -775,7 +763,7 @@ object WindowQueries {
         // watermark-flush batch — each paying `parts` state-store commits
         // plus the trigger's fixed planning/offset-log fsync cost. More
         // batches here means the floor is commit cadence, not the operator.
-        if (sys.env.contains("GRAFT_TIMING")) {
+        if (Timing.enabled) {
           val prog = q.recentProgress
           System.err.println(s"[replay-timing] $name: ${prog.length} " +
             "micro-batches " + prog.map(p =>

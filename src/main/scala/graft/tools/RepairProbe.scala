@@ -1,36 +1,76 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.nio.file.Path
 
 import graft.Bench
-import graft.core.GraftConfig
+import graft.core.{GraftConfig, Json}
 import graft.operators.Runner
-import org.apache.spark.sql.SparkSession
 
 /** Isolation probe for the scale rehearsal's repair-stage readings: run
-  * ONE single-timeframe pipeline chain at one or more grid sizes and
-  * print (and optionally publish as JSON) the per-stage wall times plus
-  * GC delta and post-GC heap — separates a stage's own growth from
+  * ONE faithful pipeline per rep over the timeframes in `<tf>`
+  * (comma-separated, one chain each; reports off, the Runner production
+  * shape) at one or more grid sizes and print
+  * (and optionally publish as JSON) the per-stage wall times plus GC
+  * delta and post-GC heap — separates a stage's own growth from
   * block-manager/GC pressure that a longer sweep builds, and makes the
   * "repair is linear at N×" claim a MEASURED record instead of
-  * commit-message lore (VERDICT r13 items 1/6).
+  * commit-message lore (VERDICT r13 items 1/6). `RepairProbe 600000
+  * 1T,5T,15T,1H 5` times Bench's four-timeframe pipeline shape.
   *
   * Multiple comma-separated grid sizes produce in-record growth ratios
   * (median wall and per-stage) between consecutive sizes, so a 100×
-  * probe publishes base→scaled linearity directly. Reports are off by
-  * default (the Runner production shape); GRAFT_PROBE_REPORTS=1 adds the
-  * quality-report stage to the probe.
+  * probe publishes base→scaled linearity directly. GRAFT_PROBE_REPORTS=1
+  * adds the quality-report stage to the probe.
   *
-  * usage: runMain graft.tools.RepairProbe <rows[,rows2,...]> <tf> [reps] [outJson]
+  * usage: runMain graft.tools.RepairProbe <rows[,rows2,...]> <tf[,tf2,...]> [reps] [outJson]
   */
 object RepairProbe {
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+
+  /** `rows` grid rows of `Bench.genOhlcv` staged as parquet for [[rep]]. */
+  def stage(h: Harness, rows: Long): Path = {
+    val dir = h.tempDir("graft_probe_raw")
+    Bench.genOhlcv(h.spark, rows).write.mode("overwrite").parquet(dir.toString)
+    dir
+  }
+
+  /** One rep: a faithful pipeline over `timeframes` on the staged input,
+    * read FRESH (the deployment shape — feeds come from storage, not a
+    * tenured driver-side cache; a shared cached input put a 3.4 GB
+    * old-gen cache plus rep 1's shuffle cleanup on rep 2, which measured
+    * 3× rep 1 with 32 s of GC). Isolated first, with shuffle partitions
+    * sized to `rows`. Returns the wall seconds and the per-stage sums.
+    */
+  def rep(h: Harness, raw: Path, rows: Long, timeframes: Seq[String],
+          reports: Boolean): (Double, Map[String, Double]) = {
+    h.isolate()
+    // let the ContextCleaner drain the previous rep's shuffle files
+    // before the timed window opens (it deletes tens of GB at the 60M
+    // grid — I/O the next rep must not pay); sized to the data
+    Thread.sleep(math.min(10000L, math.max(500L, rows / 10000L)))
+    val out = h.tempDir("graft_repair_probe")
+    try h.withPartsFor(rows)(Harness.stageTimes {
+      val r = Runner.processDataFrame(h.spark, h.spark.read.parquet(raw.toString),
+        GraftConfig(timeframes = timeframes, resampleMode = "faithful"),
+        sourceTz = None, basename = "EURUSD_probe", outDir = out.toString,
+        computeReports = reports)
+      require(r.errors.isEmpty, r.errors.mkString("; "))
+    }) finally Harness.delete(out)
+  }
+
+  // per grid size: median AND min wall/per-stage, per-rep gc + heap.
+  // Growth ratios use the MIN: on a shared 64g local JVM the noise is
+  // strictly additive (GC pacing, page-cache state, the rep's position
+  // after earlier heavy reps), so the least-contended rep is the
+  // faithful estimate of the plan's own cost; medians at the 60M grid
+  // swung 3× between identical reps from exactly that session debt.
+  private final case class GridRec(rows: Long, walls: Seq[Double],
+                                   stageRuns: Seq[Map[String, Double]],
+                                   gcsMs: Seq[Long], heapsMb: Seq[Long],
+                                   leakedRdds: Int) {
+    val wallMed = Harness.median(walls)
+    val stagesMed = Harness.perStage(stageRuns)(Harness.median)
+    val stagesMin = Harness.perStage(stageRuns)(_.min)
+  }
 
   def main(args: Array[String]): Unit = {
     val gridSizes = args(0).split(",").map(_.trim.toLong).toSeq
@@ -38,175 +78,89 @@ object RepairProbe {
     val reps = if (args.length > 2) args(2).toInt else 3
     val outJson = if (args.length > 3) Some(args(3)) else None
     val withReports = sys.env.contains("GRAFT_PROBE_REPORTS")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-
-    // per grid size: median AND min wall/per-stage, per-rep gc + heap.
-    // Growth ratios use the MIN: on a shared 64g local JVM the noise is
-    // strictly additive (GC pacing, page-cache state, the rep's position
-    // after earlier heavy reps), so the least-contended rep is the
-    // faithful estimate of the plan's own cost; medians at the 60M grid
-    // swung 3× between identical reps from exactly that session debt.
-    final case class GridRec(rows: Long, wallMed: Double, wallMin: Double,
-                             stagesMed: Map[String, Double],
-                             stagesMin: Map[String, Double],
-                             walls: Seq[Double], gcsMs: Seq[Long],
-                             heapsMb: Seq[Long], leakedRdds: Int)
-
-    val records = gridSizes.map { gridRows =>
-      // input staged as parquet, read FRESH per rep (the ScaleBench
-      // seqStages shape and the deployment shape — feeds come from
-      // storage, not a tenured driver-side cache). A shared cached input
-      // polluted the first probe cut: at 60M rows the 3.4 GB old-gen
-      // cache plus rep 1's async shuffle-file cleanup landed on rep 2,
-      // which measured 3x rep 1 (63 -> 192 s) with 32 s of GC — debt,
-      // not growth. clearCache + GC + a settle pause between reps puts
-      // every rep on the same clean JVM, same rationale as the
-      // rehearsal's per-chain isolation.
-      val rawDir = Files.createTempDirectory("graft_probe_raw").toString
-      Bench.genOhlcv(spark, gridRows).write.mode("overwrite").parquet(rawDir)
-      // data-sized partitioning, the ScaleBench/deployment convention:
-      // ~250k rows per partition bounds FastFill's per-task series buffer.
-      // Override with SPARK_GRAFT_PARTS to probe a pinned layout.
-      val parts = sys.env.get("SPARK_GRAFT_PARTS").map(_.toInt)
-        .getOrElse(math.max(cpus.toInt, (gridRows / 250000L).toInt))
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      println(s"[probe] rows $gridRows shuffle partitions = $parts")
-      var walls = Vector.empty[Double]
-      var gcs = Vector.empty[Long]
-      var heaps = Vector.empty[Long]
-      var stageRuns = Vector.empty[Map[String, Double]]
-      var leaked = 0
-      for (i <- 1 to reps) {
-        spark.catalog.clearCache()
-        System.gc()
-        // let the ContextCleaner drain the previous rep's shuffle files
-        // before the timed window opens (it deletes tens of GB at the
-        // 60M grid — I/O the next rep must not pay); sized to the data
-        Thread.sleep(math.min(10000L, math.max(500L, gridRows / 10000L)))
-        val raw = spark.read.parquet(rawDir)
-        val buf = new ConcurrentLinkedQueue[(String, Double)]()
-        Runner.timingSink = Some((n, s) => { buf.add((n, s)); () })
-        val dir = Files.createTempDirectory("graft_repair_probe")
-        val g0 = gcMs
-        val t0 = System.nanoTime()
-        try {
-          val r = Runner.processDataFrame(spark, raw,
-            GraftConfig(timeframes = Seq(tf), resampleMode = "faithful"),
-            sourceTz = None, basename = s"EURUSD_probe",
-            outDir = dir.toString, computeReports = withReports)
-          require(r.errors.isEmpty, r.errors.mkString("; "))
-        } finally Runner.timingSink = None
-        val wall = (System.nanoTime() - t0) / 1e9
-        val gcDelta = gcMs - g0
-        import scala.jdk.CollectionConverters._
-        val stages = buf.iterator().asScala.toSeq
-          .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).sum }
-        println(f"[probe] $tf rep $i rows $gridRows wall $wall%.2f s " +
-          f"gc $gcDelta ms  " + stages.toSeq.sortBy(_._1)
-          .map { case (n, s) => f"$n=$s%.2f" }.mkString(" "))
-        System.gc()
-        val rt = Runtime.getRuntime
-        val heapMb = (rt.totalMemory - rt.freeMemory) / 1048576
-        // nothing may persist between reps — the input is parquet now
-        val rdds = spark.sparkContext.getPersistentRDDs
-        leaked = math.max(leaked, rdds.size)
-        println(f"[probe] post-rep $i: heap used after gc $heapMb MB, " +
-          f"persistent RDDs ${rdds.size} " +
-          rdds.values.take(5).map(_.name).mkString("[", ",", "]"))
-        walls :+= wall; gcs :+= gcDelta; heaps :+= heapMb
-        stageRuns :+= stages
-        rm(dir.toFile)
+    Harness.run() { h =>
+      val records = gridSizes.map(probe(h, _, tf.split(",").map(_.trim).toSeq,
+        reps, withReports))
+      // growth ratios between consecutive grid sizes, wall and per-stage
+      // (min-of-reps; see GridRec)
+      val ratios = records.sliding(2).collect { case Seq(a, b) =>
+        def ratio(x: Double, y: Double) = if (x > 0) y / x else -1.0
+        val stageR = (a.stagesMin.keySet intersect b.stagesMin.keySet)
+          .toSeq.sorted.map(n => n -> ratio(a.stagesMin(n), b.stagesMin(n)))
+        // both estimators: min-of-reps is the plan's own cost (noise on a
+        // shared JVM is strictly additive) but one lucky rep at one grid
+        // can skew it when identical reps swing 3×; the median-based ratio
+        // sits beside it so readers see the spread between the two
+        (a.rows, b.rows, b.rows.toDouble / a.rows,
+          ratio(a.walls.min, b.walls.min), ratio(a.wallMed, b.wallMed), stageR)
+      }.toSeq
+      for ((ar, br, rr, wr, wrMed, st) <- ratios) {
+        println(f"[probe] growth $ar -> $br (${rr}%.0fx rows): " +
+          f"wall x$wr%.2f (median x$wrMed%.2f)  " +
+          st.map { case (n, r) => f"$n x$r%.2f" }.mkString(" "))
       }
-      rm(new java.io.File(rawDir))
-      val wallMed = walls.sorted.apply(walls.length / 2)
-      val stageNames = stageRuns.flatMap(_.keys).distinct
-      val stagesMed = stageNames.map { n =>
-        val xs = stageRuns.flatMap(_.get(n)).sorted
-        n -> xs(xs.length / 2)
-      }.toMap
-      val stagesMin = stageNames.map { n =>
-        n -> stageRuns.flatMap(_.get(n)).min
-      }.toMap
-      GridRec(gridRows, wallMed, walls.min, stagesMed, stagesMin,
-        walls, gcs, heaps, leaked)
+      outJson.foreach { path =>
+        def stagesJson(m: Map[String, Double]): String =
+          m.toSeq.sortBy(_._1)
+            .map { case (n, s) => f"${Json.write(n)}:$s%.3f" }
+            .mkString("{", ",", "}")
+        val gridsJson = records.map { r =>
+          f"${Json.write(r.rows.toString)}:{" +
+            f""""wall_median_sec":${r.wallMed}%.3f,""" +
+            f""""wall_min_sec":${r.walls.min}%.3f,""" +
+            f""""stages_median":${stagesJson(r.stagesMed)},""" +
+            f""""stages_min":${stagesJson(r.stagesMin)},""" +
+            f""""walls":${Harness.jsonSecs(r.walls)},""" +
+            f""""gc_ms":${r.gcsMs.mkString("[", ",", "]")},""" +
+            f""""heap_after_gc_mb":${r.heapsMb.mkString("[", ",", "]")},""" +
+            f""""leaked_rdds":${r.leakedRdds}}"""
+        }.mkString("{", ",", "}")
+        val ratiosJson = ratios.map { case (ar, br, rr, wr, wrMed, st) =>
+          f"${Json.write(s"${ar}->$br")}:{" +
+            f""""row_growth":$rr%.1f,"wall_ratio":$wr%.2f,""" +
+            f""""wall_ratio_median":$wrMed%.2f,""" +
+            f""""stage_ratios":${st.map { case (n, x) =>
+              f"${Json.write(n)}:$x%.2f" }.mkString("{", ",", "}")}}"""
+        }.mkString("{", ",", "}")
+        val json = f"""{"metric":"repair_probe","tf":${Json.write(tf)},""" +
+          f""""reports":$withReports,"reps":$reps,""" +
+          f""""note":"one pipeline (one chain per timeframe) per rep on a """ +
+          """quiet session — growth ratios use the min across reps (noise """ +
+          """on a shared local JVM is strictly additive: GC pacing and """ +
+          """page-cache state swing identical reps 3x at the 60M grid), """ +
+          """so they are the plan's own cost, free of the multi-chain """ +
+          """session debt the rehearsal's concurrent phase carries; """ +
+          f"""heap_after_gc_mb flat across reps = no leak",""" +
+          f""""grids":$gridsJson,"growth":$ratiosJson}"""
+        Harness.publish(path, json)
+      }
     }
+  }
 
-    // growth ratios between consecutive grid sizes, wall and per-stage
-    // (min-of-reps; see GridRec)
-    val ratios = records.sliding(2).collect { case Seq(a, b) =>
-      val rowsR = b.rows.toDouble / a.rows
-      val stageR = (a.stagesMin.keySet intersect b.stagesMin.keySet)
-        .toSeq.sorted.map { n =>
-          n -> (if (a.stagesMin(n) > 0) b.stagesMin(n) / a.stagesMin(n)
-                else -1.0)
-        }
-      // both estimators: min-of-reps is the plan's own cost (noise on a
-      // shared JVM is strictly additive) but one lucky rep at one grid
-      // can skew it when identical reps swing 3×; the median-based ratio
-      // sits beside it so readers see the spread between the two
-      (a.rows, b.rows, rowsR,
-        if (a.wallMin > 0) b.wallMin / a.wallMin else -1.0,
-        if (a.wallMed > 0) b.wallMed / a.wallMed else -1.0, stageR)
-    }.toSeq
-    for ((ar, br, rr, wr, wrMed, st) <- ratios) {
-      println(f"[probe] growth $ar -> $br (${rr}%.0fx rows): " +
-        f"wall x$wr%.2f (median x$wrMed%.2f)  " +
-        st.map { case (n, r) => f"$n x$r%.2f" }.mkString(" "))
+  /** `reps` reps at one grid size, printed as they run. */
+  private def probe(h: Harness, gridRows: Long, timeframes: Seq[String],
+                    reps: Int, reports: Boolean): GridRec = {
+    val raw = stage(h, gridRows)
+    println(s"[probe] rows $gridRows shuffle partitions = ${h.partsFor(gridRows)}")
+    val runs = (1 to reps).map { i =>
+      val g0 = Harness.gcMillis()
+      val (wall, stages) = rep(h, raw, gridRows, timeframes, reports)
+      val gcDelta = Harness.gcMillis() - g0
+      println(f"[probe] ${timeframes.mkString(",")} rep $i rows $gridRows " +
+        f"wall $wall%.2f s gc $gcDelta ms  " + stages.toSeq.sortBy(_._1)
+        .map { case (n, s) => f"$n=$s%.2f" }.mkString(" "))
+      System.gc()
+      val rt = Runtime.getRuntime
+      val heapMb = (rt.totalMemory - rt.freeMemory) / 1048576
+      // nothing may persist between reps — the input is parquet
+      val rdds = h.spark.sparkContext.getPersistentRDDs
+      println(f"[probe] post-rep $i: heap used after gc $heapMb MB, " +
+        f"persistent RDDs ${rdds.size} " +
+        rdds.values.take(5).map(_.name).mkString("[", ",", "]"))
+      (wall, stages, gcDelta, heapMb, rdds.size)
     }
-
-    outJson.foreach { path =>
-      def stagesJson(m: Map[String, Double]): String =
-        m.toSeq.sortBy(_._1)
-          .map { case (n, s) => f"${jstr(n)}:$s%.3f" }
-          .mkString("{", ",", "}")
-      val gridsJson = records.map { r =>
-        f"${jstr(r.rows.toString)}:{" +
-          f""""wall_median_sec":${r.wallMed}%.3f,""" +
-          f""""wall_min_sec":${r.wallMin}%.3f,""" +
-          f""""stages_median":${stagesJson(r.stagesMed)},""" +
-          f""""stages_min":${stagesJson(r.stagesMin)},""" +
-          f""""walls":${r.walls.map(w => f"$w%.3f").mkString("[", ",", "]")},""" +
-          f""""gc_ms":${r.gcsMs.mkString("[", ",", "]")},""" +
-          f""""heap_after_gc_mb":${r.heapsMb.mkString("[", ",", "]")},""" +
-          f""""leaked_rdds":${r.leakedRdds}}"""
-      }.mkString("{", ",", "}")
-      val ratiosJson = ratios.map { case (ar, br, rr, wr, wrMed, st) =>
-        f"${jstr(s"${ar}->$br")}:{" +
-          f""""row_growth":$rr%.1f,"wall_ratio":$wr%.2f,""" +
-          f""""wall_ratio_median":$wrMed%.2f,""" +
-          f""""stage_ratios":${st.map { case (n, x) =>
-            f"${jstr(n)}:$x%.2f" }.mkString("{", ",", "}")}}"""
-      }.mkString("{", ",", "}")
-      val json = f"""{"metric":"repair_probe","tf":${jstr(tf)},""" +
-        f""""reports":$withReports,"reps":$reps,""" +
-        f""""note":"one single-timeframe pipeline chain per rep on a """ +
-        """quiet session — growth ratios use the min across reps (noise """ +
-        """on a shared local JVM is strictly additive: GC pacing and """ +
-        """page-cache state swing identical reps 3x at the 60M grid), """ +
-        """so they are the plan's own cost, free of the multi-chain """ +
-        """session debt the rehearsal's concurrent phase carries; """ +
-        f"""heap_after_gc_mb flat across reps = no leak",""" +
-        f""""grids":$gridsJson,"growth":$ratiosJson}"""
-      Files.writeString(Paths.get(path), json + "\n")
-      println(json)
-    }
-    spark.stop()
+    Harness.delete(raw)
+    GridRec(gridRows, runs.map(_._1), runs.map(_._2), runs.map(_._3),
+      runs.map(_._4), runs.map(_._5).max)
   }
 }

@@ -1,12 +1,10 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import graft.core.{GraftConfig, Tables}
-import graft.operators.{Graph, Runner, Similarity}
+import graft.core.{GraftConfig, Json, Tables}
+import graft.operators.{Runner, Similarity}
 import graft.{Bench, SparkEntry}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Scale rehearsal (VERDICT r9 item 4): the sf0.1 gate cannot see
@@ -42,13 +40,6 @@ import org.apache.spark.sql.functions.col
   * grid size scale with it.
   */
 object ScaleBench {
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Gate queries whose true input is the co-activity edge list. */
   private val GraphQueries = Set(
     "q118_triangle_count", "q119_link_prediction", "q269_local_clustering",
@@ -61,10 +52,6 @@ object ScaleBench {
     val outFile = args(2)
     val topN = if (args.length > 3) args(3).toInt else 30
     val rowGrowth = if (args.length > 4) args(4).toDouble else 10.0
-    // linear + 50% shuffle/spill allowance, scaled to the rehearsal ratio
-    // (the r9 "10× data may cost at most 15× time" rule generalized)
-    val queryThreshold = 1.5 * rowGrowth
-
     val ranking: Map[String, Double] =
       """"(q[0-9A-Za-z_]+)":(-?[0-9][0-9.]*)""".r
         .findAllMatchIn(Files.readString(Paths.get("BENCH_LOCAL.json")))
@@ -73,84 +60,44 @@ object ScaleBench {
       .flatMap(n => ranking.get(n).filter(_ > 0).map(n -> _))
       .sortBy(-_._2).take(topN).map(_._1).sorted
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // session setup mirrors Bench (the judged headline conditions):
     // shuffle/cache scratch on tmpfs — at the 30× grid the concurrent
     // phase writes four chains' shuffles + spills at once, and on the
-    // virtual disk that I/O serialized every stage it touched.
-    // Free-space guard (ADVICE r13, mirroring replay()'s): the concurrent
-    // phase's worst tmpfs footprint is the four chains' shuffle files +
-    // spills over the scaled grid — bounded by a few× the raw row bytes
-    // (~56 B/row × grid). Requiring 8× the raw grid under a half of the
-    // usable space leaves co-tenant headroom (tmpfs pages also compete
-    // with the executor heap); oversized rehearsals fall back to the disk
-    // tmpdir — slower, same semantics. Scratch is deleted after
-    // spark.stop() either way, so tmpfs never accumulates.
-    val scratch = java.nio.file.Paths.get("/dev/shm")
-    val gridBytes = (600000L * rowGrowth).toLong * 56L
-    val localDir =
-      if (Files.isWritable(scratch) &&
-          BigInt(gridBytes) * 8 * 2 <
-            BigInt(Files.getFileStore(scratch).getUsableSpace))
-        Files.createTempDirectory(scratch, "graft_scale_scratch").toString
-      else Files.createTempDirectory("graft_scale_scratch").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // virtual disk that I/O serialized every stage it touched
+    Harness.run(scratchRows = Some((600000L * rowGrowth).toLong))(
+      rehearse(_, base, scaled, outFile, chosen, rowGrowth))
+  }
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+  private def rehearse(h: Harness, base: String, scaled: String,
+                       outFile: String, chosen: Seq[String],
+                       rowGrowth: Double): Unit = {
+    val spark = h.spark
+    // linear + 50% shuffle/spill allowance, scaled to the rehearsal ratio
+    // (the r9 "10× data may cost at most 15× time" rule generalized)
+    val queryThreshold = 1.5 * rowGrowth
 
     // pipeline: same shape as Bench (warmup outside the timed window),
     // 600k grid at the gate scale vs the full 6M grid. Stage times come
     // from Runner's timingSink; concurrent timeframe chains sum per name.
+    // Shuffle partitions follow the data (Harness.partsFor), exactly as a
+    // deployment sizes them to its volume.
     val cfg = GraftConfig(timeframes = Seq("1T", "5T", "15T", "1H"))
-    // Partition sizing follows the data, exactly as a deployment would
-    // size spark.sql.shuffle.partitions to its volume (the brief's own
-    // guidance, and the replay() precedent): ~250k rows per partition
-    // bounds FastFill's per-task series buffer — at a PINNED 32
-    // partitions the 30× grid put 560k boxed rows per task and the scan
-    // went GC-bound (repair 76× wall for 30× rows, mostly collection
-    // time). The engine's plans are partition-count-independent; only
-    // memory-per-task changes.
-    def withPartsFor(gridRows: Long)(f: => Unit): Unit = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(cpus.toInt, (gridRows / 250000L).toInt).toString)
-      try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
     def pipeline(gridRows: Long): (Double, Map[String, Double]) = {
       val raw = Bench.genOhlcv(spark, gridRows).cache()
       raw.count()
-      val dir = Files.createTempDirectory("graft_scale_bench").toString
-      val buf = new ConcurrentLinkedQueue[(String, Double)]()
-      Runner.timingSink = Some((n, s) => { buf.add((n, s)); () })
-      val sec =
-        try timed {
-          withPartsFor(gridRows) {
-            val r = Runner.processDataFrame(spark, raw,
-              cfg.copy(resampleMode = "faithful"), sourceTz = None,
-              basename = "EURUSD_scale", outDir = dir)
-            require(r.errors.isEmpty, r.errors.mkString("; "))
-          }
-        } finally Runner.timingSink = None
-      raw.unpersist()
-      import scala.jdk.CollectionConverters._
-      val stages = buf.iterator().asScala.toSeq
-        .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).sum }
-      (sec, stages)
+      val dir = h.tempDir("graft_scale_bench")
+      try h.withPartsFor(gridRows)(Harness.stageTimes {
+        val r = Runner.processDataFrame(spark, raw,
+          cfg.copy(resampleMode = "faithful"), sourceTz = None,
+          basename = "EURUSD_scale", outDir = dir.toString)
+        require(r.errors.isEmpty, r.errors.mkString("; "))
+      }) finally { raw.unpersist(); Harness.delete(dir) }
     }
     val warm = Bench.genOhlcv(spark, 30000L).cache()
     warm.count()
     Runner.processDataFrame(spark, warm, cfg.copy(resampleMode = "faithful"),
       sourceTz = None, basename = "EURUSD_warm",
-      outDir = Files.createTempDirectory("graft_scale_warm").toString)
+      outDir = h.tempDir("graft_scale_warm").toString)
     warm.unpersist()
     // median-of-3 per scale: a single 6M-row pipeline swings ±30% on this
     // host (page cache, tmpfs tenancy), and a one-shot ratio published as
@@ -161,78 +108,29 @@ object ScaleBench {
       // balloon after a heavy rep and the NEXT rep pays the collection —
       // the probe measured a 5x rep-to-rep swing from exactly this
       val runs = Vector.fill(3) { System.gc(); pipeline(gridRows) }
-      val wall = runs.map(_._1).sorted.apply(1)
-      val stages = runs.flatMap(_._2.keys).distinct.map { n =>
-        n -> runs.flatMap(_._2.get(n)).sorted
-          .apply(runs.count(_._2.contains(n)) / 2)
-      }.toMap
-      (wall, stages)
+      (Harness.median(runs.map(_._1)), Harness.perStage(runs.map(_._2))(Harness.median))
     }
     // ── Sequential single-chain stage pass (VERDICT r12 item 1) ──
     // The concurrent stage times above are wall inside FOUR overlapping
     // timeframe chains, so growth and contention are indistinguishable
     // there (the share detector catches only DISPROPORTIONATE growth).
-    // This pass runs each timeframe chain ALONE (one Runner invocation per
+    // This pass runs each timeframe chain ALONE (one RepairProbe rep per
     // timeframe, reports off), so a stage's scaled/base ratio is its own
     // growth, de-contended. Chain stages (repair_/resample_/export_<tf>)
     // appear once per sweep; shared stages (normalize, materialize_cache)
     // run once per timeframe and are summed consistently at both scales,
-    // so their ratios stay apples-to-apples. Median-of-3 sweeps.
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-      f.delete(): Unit
-    }
+    // so their ratios stay apples-to-apples. Median-of-3 sweeps. Every
+    // chain is isolated first (VERDICT r13 item 1): the r13 record's
+    // chain-order pattern (chain 1 clean at x25, chains 2–4 at x149–247)
+    // was session debt, not growth.
     def seqStages(gridRows: Long): Map[String, Double] = {
-      // the input lives as parquet on the scratch dir, NOT as a shared
-      // cached frame: each chain reads it fresh, so clearCache() between
-      // chains can wipe EVERYTHING a previous chain might have left
-      // behind without evicting the chains' common input
-      val rawDir = s"$localDir/seq_raw_$gridRows"
-      Bench.genOhlcv(spark, gridRows).write.mode("overwrite").parquet(rawDir)
+      val raw = RepairProbe.stage(h, gridRows)
       val sweeps = Vector.fill(3) {
-        val acc = scala.collection.mutable.Map.empty[String, Double]
-          .withDefaultValue(0.0)
-        for (tf <- cfg.timeframes) {
-          // per-chain isolation (VERDICT r13 item 1): the r13 record's
-          // chain-order pattern (chain 1 clean at x25, chains 2–4 at
-          // x149–247) was session debt, not growth — cache wipe + GC
-          // before EVERY chain puts each one on the same clean JVM, so a
-          // chain's ratio is its own growth regardless of sweep position.
-          // The blocking unpersist sweep also frees localCheckpoint
-          // blocks, which clearCache() does NOT touch and the async
-          // ContextCleaner frees too late (the 100× probe OOM'd on
-          // exactly this accumulation)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(true))
-          spark.catalog.clearCache()
-          System.gc()
-          val raw = spark.read.parquet(rawDir)
-          val buf = new ConcurrentLinkedQueue[(String, Double)]()
-          Runner.timingSink = Some((n, s) => { buf.add((n, s)); () })
-          val dir = Files.createTempDirectory("graft_scale_seq")
-          try {
-            withPartsFor(gridRows) {
-              val r = Runner.processDataFrame(spark, raw,
-                cfg.copy(timeframes = Seq(tf), resampleMode = "faithful"),
-                sourceTz = None, basename = s"EURUSD_seq_${tf}",
-                outDir = dir.toString, computeReports = false)
-              require(r.errors.isEmpty, r.errors.mkString("; "))
-            }
-          } finally {
-            Runner.timingSink = None
-            deleteRec(dir.toFile)
-          }
-          import scala.jdk.CollectionConverters._
-          for ((n, s) <- buf.iterator().asScala) acc(n) += s
-        }
-        acc.toMap
+        cfg.timeframes.flatMap(tf => RepairProbe.rep(h, raw, gridRows,
+          Seq(tf), reports = false)._2).groupMapReduce(_._1)(_._2)(_ + _)
       }
-      deleteRec(new java.io.File(rawDir))
-      sweeps.flatMap(_.keys).distinct.map { n =>
-        val xs = sweeps.flatMap(_.get(n)).sorted
-        n -> xs(xs.length / 2)
-      }.toMap
+      Harness.delete(raw)
+      Harness.perStage(sweeps)(Harness.median)
     }
     // the sequential pass runs FIRST: it is the precision instrument, and
     // a session that has just pushed 3× four-chain scaled pipelines
@@ -296,10 +194,8 @@ object ScaleBench {
 
     // measured input growth for the graph consumers: their input is the
     // co-activity edge list (quadratic in bucket density when uncapped)
-    def coEdges(dir: String): Long =
-      Graph.coActivityEdges(Tables.events(spark, dir)).count()
-    val edgesBase = coEdges(base)
-    val edgesScaled = coEdges(scaled)
+    val edgesBase = ScaleQueryProbe.coEdges(spark, base)
+    val edgesScaled = ScaleQueryProbe.coEdges(spark, scaled)
     val edgeGrowth =
       if (edgesBase > 0) edgesScaled.toDouble / edgesBase else rowGrowth
     var alarms = Vector.empty[String]
@@ -322,20 +218,8 @@ object ScaleBench {
       // backlog) left by whichever query happened to run before it — the
       // r13 record had q337 at 26.6x vs its code-identical sibling q336
       // at 4.4x purely from session position
-      def run(dir: String): Double = {
-        // blocking unpersist sweep before clearCache: localCheckpoint
-        // blocks from the previous query are invisible to clearCache and
-        // the async cleaner — see ScaleQueryProbe.timedRun
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(true))
-        spark.catalog.clearCache()
-        System.gc()
-        try timed(fn(spark, dir).count())
-        catch { case e: Throwable =>
-          System.err.println(s"[scale] $name @ $dir FAILED: ${e.getMessage}")
-          -1.0
-        }
-      }
+      def run(dir: String): Double =
+        ScaleQueryProbe.isolatedRun(h, s"$name @ $dir")(fn(spark, dir))
       val threshold =
         if (GraphQueries(name))
           queryThreshold * math.max(1.0, edgeGrowth / rowGrowth)
@@ -356,7 +240,7 @@ object ScaleBench {
       if (failed || ratio > threshold)
         alarms :+= f"$name:${tBase}%.2f->${tScaled}%.2f" +
           (if (threshold != queryThreshold) f" (thr ${threshold}%.1fx)" else "")
-      rows :+= f"${jstr(name)}:{" +
+      rows :+= f"${Json.write(name)}:{" +
         f""""base":$tBase%.3f,"scaled":$tScaled%.3f,"ratio":$ratio%.2f}"""
       System.err.println(f"[scale] $name base $tBase%.2f s  scaled $tScaled%.2f s" +
         f"  ratio $ratio%.1f (thr $threshold%.1f)")
@@ -412,19 +296,15 @@ object ScaleBench {
       "FastFill's per-task series buffer grow with scale and the 30x " +
       "repair went GC-bound"
     val stagesJson = stageRows.map { case (n, b, s, r, sg) =>
-      f"${jstr(n)}:{" +
+      f"${Json.write(n)}:{" +
         f""""base":$b%.3f,"scaled":$s%.3f,"ratio":$r%.2f,"share_growth":$sg%.2f}"""
     }.mkString("{", ",", "}")
     val seqJson = seqRows.map { case (n, b, s, r) =>
-      f"${jstr(n)}:{" +
+      f"${Json.write(n)}:{" +
         f""""base":$b%.3f,"scaled":$s%.3f,"ratio":$r%.2f}"""
     }.mkString("{", ",", "}")
     val json =
-      f"""{"metric":"scale_rehearsal","base_sf_dir":${jstr(base)},"scaled_sf_dir":${jstr(scaled)},"scale_factor_ratio":$rowGrowth%.0f,"pipeline_base_sec":$pipeBase%.3f,"pipeline_scaled_sec":$pipeScaled%.3f,"pipeline_ratio":${pipeScaled / pipeBase}%.2f,"pipeline_stages":$stagesJson,"stage_outliers":${stageOutliers.map(jstr).mkString("[", ",", "]")},"sequential_stages":$seqJson,"sequential_outliers":${seqOutliers.map(jstr).mkString("[", ",", "]")},"coactivity_edges_base":$edgesBase,"coactivity_edges_scaled":$edgesScaled,"coactivity_edge_growth":$edgeGrowth%.2f,"ivf_recall10_base":$recallBase%.4f,"ivf_recall10_scaled":$recallScaled%.4f,"alarm_rule":"scaled > ${queryThreshold}%.0fx base (1.5x linear at ratio $rowGrowth%.0f), graph queries normalized by measured edge growth; sequential single-chain stages alarm past 1.5x linear; any failure alarms","alarms":${alarms.map(jstr).mkString("[", ",", "]")},"note":${jstr(note)},"queries":{${rows.mkString(",")}}}"""
-    println(json)
-    Files.writeString(Paths.get(outFile), json + "\n")
-    spark.stop()
-    // tmpfs scratch is finite shared memory — never leave it behind
-    deleteRec(new java.io.File(localDir))
+      f"""{"metric":"scale_rehearsal","base_sf_dir":${Json.write(base)},"scaled_sf_dir":${Json.write(scaled)},"scale_factor_ratio":$rowGrowth%.0f,"pipeline_base_sec":$pipeBase%.3f,"pipeline_scaled_sec":$pipeScaled%.3f,"pipeline_ratio":${pipeScaled / pipeBase}%.2f,"pipeline_stages":$stagesJson,"stage_outliers":${Harness.jsonStrings(stageOutliers)},"sequential_stages":$seqJson,"sequential_outliers":${Harness.jsonStrings(seqOutliers)},"coactivity_edges_base":$edgesBase,"coactivity_edges_scaled":$edgesScaled,"coactivity_edge_growth":$edgeGrowth%.2f,"ivf_recall10_base":$recallBase%.4f,"ivf_recall10_scaled":$recallScaled%.4f,"alarm_rule":"scaled > ${queryThreshold}%.0fx base (1.5x linear at ratio $rowGrowth%.0f), graph queries normalized by measured edge growth; sequential single-chain stages alarm past 1.5x linear; any failure alarms","alarms":${Harness.jsonStrings(alarms)},"note":${Json.write(note)},"queries":{${rows.mkString(",")}}}"""
+    Harness.publish(outFile, json)
   }
 }

@@ -28,15 +28,11 @@ object ScaleGen {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.run()(h => generate(h.spark, src, out, factor))
+  }
 
+  private def generate(spark: SparkSession, src: String,
+                       out: String, factor: Int): Unit = {
     def copies(df: DataFrame)(shift: (DataFrame, Long) => DataFrame): DataFrame =
       (0 until factor).map(c => shift(df, c.toLong)).reduce(_ unionByName _)
 

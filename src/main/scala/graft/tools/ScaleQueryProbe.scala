@@ -1,11 +1,9 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 import graft.SparkEntry
-import graft.core.Tables
+import graft.core.{Json, Tables}
 import graft.operators.{Dedup, Graph}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-query scale evidence beyond the 30× rehearsal (VERDICT r14 item
   * 4): time a NAMED list of gate queries, per-query isolated (cache wipe
@@ -23,12 +21,6 @@ import org.apache.spark.sql.SparkSession
   *          <q1,q2,...> [reps]
   */
 object ScaleQueryProbe {
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   def main(args: Array[String]): Unit = {
     val base = args(0)
@@ -41,34 +33,47 @@ object ScaleQueryProbe {
       SparkEntry.queries.contains(n) || ProbeQueries.contains(n) ||
         LshProbeQueries.contains(n))
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle partitions follow the data, the ScaleBench/deployment
-    // convention (~250k input rows per partition): the first 100× probe
-    // ran at a pinned 32 and the scaled aggregations went
+    // Shuffle partitions follow the data (Harness.partsFor): the first
+    // 100× probe ran at a pinned 32 and the scaled aggregations went
     // SparkOutOfMemoryError — per-task hash maps sized to the 100× input
     // slice exhausted the execution pool before spilling could help.
-    // GRAFT_SQP_PARTS overrides when the consumer's true input (e.g. the
-    // wedge join's edge expansion) needs finer slicing than raw rows.
-    val parts = sys.env.get("GRAFT_SQP_PARTS").map(_.toInt)
-      .getOrElse(math.max(cpus.toInt,
-        (rowGrowth * 600000L / 250000L).toInt))
-    val scratch = Paths.get("/dev/shm")
-    val localDir =
-      if (Files.isWritable(scratch))
-        Files.createTempDirectory(scratch, "graft_sqp_scratch").toString
-      else Files.createTempDirectory("graft_sqp_scratch").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    System.err.println(s"[sqp] shuffle partitions: $parts, heap " +
-      s"${Runtime.getRuntime.maxMemory / 1048576} MB")
+    val rows = (rowGrowth * 600000L).toLong
+    Harness.run(scratchRows = Some(rows)) { h =>
+      System.err.println(s"[sqp] shuffle partitions: ${h.partsFor(rows)}, " +
+        s"heap ${Runtime.getRuntime.maxMemory / 1048576} MB")
+      h.withPartsFor(rows)(probe(h, base, scaled, rowGrowth, outFile, names, reps))
+    }
+  }
 
+  /** `q`'s count with the session isolated first (outside the timed
+    * window; see [[Harness.isolate]] — this is the "session debt" behind
+    * the r13 rehearsal's chain-order artifacts, removed at the source).
+    * Returns the wall seconds, or -1 when `q` fails.
+    */
+  def isolatedRun(h: Harness, label: String)(q: => DataFrame): Double = {
+    h.isolate()
+    try Harness.seconds(q.count())
+    catch { case e: Throwable =>
+      System.err.println(s"[probe] $label FAILED: ${e.getMessage}")
+      -1.0
+    }
+  }
+
+  /** Co-activity edges of `dir`'s events — the graph queries' true
+    * input — or -1 when the census fails.
+    */
+  def coEdges(spark: SparkSession, dir: String): Long =
+    try Graph.coActivityEdges(Tables.events(spark, dir)).count()
+    catch { case e: Throwable =>
+      System.err.println(s"[probe] coEdges @ $dir FAILED: ${e.getMessage}")
+      -1L
+    }
+
+  private def probe(h: Harness, base: String, scaled: String,
+                    rowGrowth: Double, outFile: String, names: Seq[String],
+                    reps: Int): Unit = {
+    val spark = h.spark
+    def tag(dir: String) = if (dir == base) "base" else "scaled"
     // ---- persisted-edge probe mode (VERDICT r16 item 2) ----------------
     // p*-named entries time the PROBE side of the graph build/probe split:
     // the co-activity edge table is built ONCE per dir (timed separately,
@@ -76,101 +81,50 @@ object ScaleQueryProbe {
     // the amortized layout a 100 TB deployment runs, vs the gate queries'
     // rebuild-per-query closures. Build happens BEFORE the timing loop so
     // no probe rep carries build cost.
-    val edgeTableFor = scala.collection.mutable.Map.empty[String, String]
-    var edgeBuilds = Vector.empty[(String, Double)]
-    def buildEdgeTableFor(dir: String): Unit =
-      if (!edgeTableFor.contains(dir)) {
-        val tag = if (dir == base) "base" else "scaled"
-        val tbl = s"graft_bkt_edges_probe_$tag"
-        val t0 = System.nanoTime()
-        val nEdges = Graph.buildEdgeTable(Tables.events(spark, dir), tbl)
-        val sec = (System.nanoTime() - t0) / 1e9
-        edgeBuilds :+= (tag -> sec)
-        edgeTableFor(dir) = tbl
-        System.err.println(
-          f"[sqp] edge table $tbl: $nEdges edges, built in $sec%.1f s")
-      }
-    if (names.exists(ProbeQueries.contains)) {
-      buildEdgeTableFor(base); buildEdgeTableFor(scaled)
-    }
-    // same build/probe split for the persisted near-dup LSH index: the
+    // Same build/probe split for the persisted near-dup LSH index: the
     // corpus signature pass is the build (timed once per dir, published
-    // as lsh_build_*); p347 probes the batch against the stored bands
-    val lshTableFor = scala.collection.mutable.Map.empty[String, String]
-    var lshBuilds = Vector.empty[(String, Double)]
-    def buildLshIndexFor(dir: String): Unit =
-      if (!lshTableFor.contains(dir)) {
-        val tag = if (dir == base) "base" else "scaled"
-        val tbl = s"graft_bkt_lsh_probe_$tag"
-        val t0 = System.nanoTime()
-        val nDocs = Dedup.buildLshIndex(
-          Dedup.exact(Tables.documents(spark, dir).filter(
-            org.apache.spark.sql.functions.col("doc_id") % 2 === 0),
-            "doc_id", "text"),
-          tbl, "doc_id", "text", numHashes = 64, bands = 16,
-          shingleSize = 3)
-        val sec = (System.nanoTime() - t0) / 1e9
-        lshBuilds :+= (tag -> sec)
-        lshTableFor(dir) = tbl
-        System.err.println(
-          f"[sqp] lsh index $tbl: $nDocs docs, built in $sec%.1f s")
-      }
-    if (names.exists(LshProbeQueries.contains)) {
-      buildLshIndexFor(base); buildLshIndexFor(scaled)
+    // as lsh_build_*); p347 probes the batch against the stored bands.
+    def builds(kind: String, needed: Boolean)(
+        build: (String, String) => Long): Map[String, (String, Double)] =
+      if (!needed) Map.empty
+      else Seq(base, scaled).distinct.map { dir =>
+        val tbl = s"graft_bkt_${kind}_probe_${tag(dir)}"
+        val (n, sec) = Harness.timed(build(dir, tbl))
+        System.err.println(f"[sqp] $kind table $tbl: $n rows, built in $sec%.1f s")
+        dir -> (tbl, sec)
+      }.toMap
+    val edgeTables = builds("edges", names.exists(ProbeQueries.contains)) {
+      (dir, tbl) => Graph.buildEdgeTable(Tables.events(spark, dir), tbl)
     }
-    def queryFn(name: String): (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame =
-      if (ProbeQueries.contains(name))
-        (s, dir) => ProbeQueries(name)(s, dir, edgeTableFor(dir))
+    val lshTables = builds("lsh", names.exists(LshProbeQueries.contains)) {
+      (dir, tbl) => Dedup.buildLshIndex(
+        Dedup.exact(Tables.documents(spark, dir).filter(
+          org.apache.spark.sql.functions.col("doc_id") % 2 === 0),
+          "doc_id", "text"),
+        tbl, "doc_id", "text", numHashes = 64, bands = 16, shingleSize = 3)
+    }
+    def query(name: String, dir: String): DataFrame =
+      if (ProbeQueries.contains(name)) ProbeQueries(name)(spark, dir, edgeTables(dir)._1)
       else if (LshProbeQueries.contains(name))
-        (s, dir) => LshProbeQueries(name)(s, dir, lshTableFor(dir))
-      else SparkEntry.queries(name)
+        LshProbeQueries(name)(spark, dir, lshTables(dir)._1)
+      else SparkEntry.queries(name)(spark, dir)
 
-    def timedRun(name: String, dir: String): Double = {
-      // full storage wipe, not just the SQL cache: localCheckpoint blocks
-      // (the graph builders' materialization) are freed by the ASYNC
-      // ContextCleaner only after their RDDs are GC'd — a probe running
-      // heavy queries back-to-back in one JVM accumulates them until the
-      // heap dies (measured: q118 at 100× OOM'd a 24g heap right after
-      // q309's kcore left its checkpoint blocks behind). The blocking
-      // unpersist sweep frees predecessor blocks deterministically,
-      // outside the timed window — this is the "session debt" mechanism
-      // behind the r13 rehearsal's chain-order artifacts, now removed at
-      // the source.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      try { queryFn(name)(spark, dir).count(); () }
-      catch { case e: Throwable =>
-        System.err.println(s"[sqp] $name @ $dir FAILED: ${e.getMessage}")
-        return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
     // min across reps, same estimator rationale as RepairProbe: isolated
     // single-query reps differ only by additive host noise, so the min is
     // the plan's own cost; the full rep list is published beside it
     def minOf(name: String, dir: String): (Double, Seq[Double]) = {
-      val runs = (1 to reps).map(_ => timedRun(name, dir))
+      val runs = (1 to reps).map(_ => isolatedRun(h, s"$name @ $dir")(query(name, dir)))
       val ok = runs.filter(_ > 0)
       (if (ok.isEmpty) -1.0 else ok.min, runs)
     }
 
-    // the graph queries' true input: co-activity edges at both scales.
-    // GRAFT_SQP_EDGES=0 skips the census — the fresh-JVM-per-query
+    // GRAFT_SQP_EDGES=0 skips the edge census — the fresh-JVM-per-query
     // driver loop (the publication mode: residual broadcast/AQE state
     // from a 100× run is unreachable to any in-JVM sweep, so true
     // isolation is one query per JVM) measures it once, not per query.
-    def coEdges(dir: String): Long =
-      try Graph.coActivityEdges(Tables.events(spark, dir)).count()
-      catch { case e: Throwable =>
-        System.err.println(s"[sqp] coEdges @ $dir FAILED: ${e.getMessage}")
-        -1L
-      }
     val edgesOn = sys.env.getOrElse("GRAFT_SQP_EDGES", "1") != "0"
-    val edgesBase = if (edgesOn) coEdges(base) else -1L
-    val edgesScaled = if (edgesOn) coEdges(scaled) else -1L
+    val edgesBase = if (edgesOn) coEdges(spark, base) else -1L
+    val edgesScaled = if (edgesOn) coEdges(spark, scaled) else -1L
     val edgeGrowth =
       if (edgesBase > 0 && edgesScaled > 0) edgesScaled.toDouble / edgesBase
       else -1.0
@@ -184,33 +138,24 @@ object ScaleQueryProbe {
       System.err.println(
         f"[sqp] $n base $b%.2f s  scaled $s%.2f s  ratio $ratio%.1f " +
           f"(rows x$rowGrowth%.0f)")
-      f"${jstr(n)}:{" +
+      f"${Json.write(n)}:{" +
         f""""base":$b%.3f,"scaled":$s%.3f,"ratio":$ratio%.2f,""" +
-        f""""base_runs":${bRuns.map(x => f"$x%.3f").mkString("[", ",", "]")},""" +
-        f""""scaled_runs":${sRuns.map(x => f"$x%.3f").mkString("[", ",", "]")}}"""
+        f""""base_runs":${Harness.jsonSecs(bRuns)},""" +
+        f""""scaled_runs":${Harness.jsonSecs(sRuns)}}"""
     }
-    val builds = (edgeBuilds
-      .map { case (tag, sec) => f""""edge_build_${tag}":$sec%.3f""" } ++
-      lshBuilds
-        .map { case (tag, sec) => f""""lsh_build_${tag}":$sec%.3f""" })
-      .mkString(",")
-    val buildField = if (builds.isEmpty) "" else builds + ","
+    val buildFields = (for {
+      (kind, built) <- Seq("edge" -> edgeTables, "lsh" -> lshTables)
+      dir <- Seq(base, scaled).distinct
+      (_, sec) <- built.get(dir)
+    } yield f""""${kind}_build_${tag(dir)}":$sec%.3f,""").mkString
     val json =
-      f"""{"metric":"scale_query_probe","base_sf_dir":${jstr(base)},"scaled_sf_dir":${jstr(scaled)},"row_growth":$rowGrowth%.0f,"reps":$reps,"estimator":"min-of-reps (isolated reps differ by additive host noise); full rep lists published","coactivity_edges_base":$edgesBase,"coactivity_edges_scaled":$edgesScaled,"coactivity_edge_growth":$edgeGrowth%.2f,$buildField"queries":{${rows.mkString(",")}}}"""
-    println(json)
-    Files.writeString(Paths.get(outFile), json + "\n")
+      f"""{"metric":"scale_query_probe","base_sf_dir":${Json.write(base)},"scaled_sf_dir":${Json.write(scaled)},"row_growth":$rowGrowth%.0f,"reps":$reps,"estimator":"min-of-reps (isolated reps differ by additive host noise); full rep lists published","coactivity_edges_base":$edgesBase,"coactivity_edges_scaled":$edgesScaled,"coactivity_edge_growth":$edgeGrowth%.2f,$buildFields"queries":{${rows.mkString(",")}}}"""
+    Harness.publish(outFile, json)
     // leave the warehouse empty (the Bench convention): the probe tables
     // are scratch; writeBucketed's overwrite also clears orphans, so this
     // is hygiene, not a correctness requirement
-    for (tbl <- edgeTableFor.values ++ lshTableFor.values)
+    for ((tbl, _) <- edgeTables.values ++ lshTables.values)
       graft.operators.Exporter.dropBucketed(spark, tbl)
-    spark.stop()
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-      f.delete(): Unit
-    }
-    deleteRec(new java.io.File(localDir))
   }
 
   /** Probe-side closures of the graph build/probe split: the same three
@@ -221,7 +166,7 @@ object ScaleQueryProbe {
     * separate numbers.
     */
   private val ProbeQueries: Map[String,
-      (SparkSession, String, String) => org.apache.spark.sql.DataFrame] = {
+      (SparkSession, String, String) => DataFrame] = {
     import org.apache.spark.sql.functions._
     Map(
       "p118_triangles_persisted" -> ((s, _, tbl) =>
@@ -261,7 +206,7 @@ object ScaleQueryProbe {
     * cost with the corpus signature pass amortized into lsh_build_*).
     */
   private val LshProbeQueries: Map[String,
-      (SparkSession, String, String) => org.apache.spark.sql.DataFrame] = {
+      (SparkSession, String, String) => DataFrame] = {
     import org.apache.spark.sql.functions._
     Map(
       "p347_neardup_persisted" -> ((s, dir, tbl) => {
