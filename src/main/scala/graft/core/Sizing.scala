@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.storage.StorageLevel
 
 /** Size-aware persist policy for frames a fan-out re-reads (the pipeline's
@@ -33,9 +34,22 @@ object Sizing {
     .orElse(sys.env.get("GRAFT_MAT_SPILL_BYTES")).map(_.toLong)
     .getOrElse(Runtime.getRuntime.maxMemory / 4)
 
-  /** Optimizer size estimate; None when Catalyst has no real number. */
+  /** A fresh plan of `df`'s logical plan. Forcing `df.queryExecution`
+    * itself freezes it: a `persist` of `df` after that is invisible to
+    * `df.queryExecution`, whose plan then re-runs the lineage instead of
+    * reading the cache (`queryExecution.toRdd` callers such as the SMA
+    * scan). Questions asked of a plan before it may be persisted go here.
+    */
+  def freshPlan(df: DataFrame): QueryExecution = {
+    val qe = df.queryExecution
+    new QueryExecution(qe.sparkSession, qe.logical)
+  }
+
+  /** Optimizer size estimate; None when Catalyst has no real number.
+    * Estimated on a [[freshPlan]], so the caller may persist `df` after.
+    */
   def planEstimate(df: DataFrame): Option[Long] = {
-    val s = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val s = freshPlan(df).optimizedPlan.stats.sizeInBytes
     if (s >= UnknownFloor || s < 0) None else Some(s.toLong)
   }
 

@@ -4,11 +4,17 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.security.MessageDigest
 
 import scala.collection.immutable.ListMap
+import scala.concurrent.Await
+import scala.concurrent.duration.{Duration, MINUTES}
 
-import graft.core.{Json, Timing}
+import graft.core.{Json, Sizing, Timing}
 import graft.sources.Readers
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet sink with validation, sidecar metadata and NDJSON audit log
   * (reference O18–O21: src/etl/load/exporter.py).
@@ -22,59 +28,28 @@ import org.apache.spark.sql.functions._
   *  - hash recipe: sha256 over row count, str(min), str(max), and the first
   *    3 non-null OPEN/CLOSE values (exporter.py:76-91).
   *
-  * Everything the driver touches is a fixed-size aggregate; validation is
-  * one agg pass (least/greatest row-wise predicates folded into sums).
+  * Everything the driver touches is fixed-size: the validation
+  * (least/greatest row-wise predicates folded into aggregates) is observed
+  * on the write itself, and the hash collects ≤ 1000 rows of the output.
   */
 object Exporter {
 
   val TsCol: String = Normalize.TsCol
 
-  def validateFinalDf(df: DataFrame,
-                      knownDistinctTs: Boolean = false): ListMap[String, Any] = {
-    require(df.columns.contains(TsCol),
-      s"$TsCol column required before export")
-    val hasOhlc = Seq("OPEN", "HIGH", "LOW", "CLOSE").forall(df.columns.contains)
-
-    var aggs = Vector(
-      count(lit(1)).as("_rows"),
-      min(col(TsCol)).as("_start"),
-      max(col(TsCol)).as("_end"),
-      sum(when(col(TsCol).isNull, 1).otherwise(0)).as("_tsnull"))
-    if (!knownDistinctTs) aggs :+= countDistinct(col(TsCol)).as("_dts")
-    if (hasOhlc) {
-      val anyNeg = Seq("OPEN", "HIGH", "LOW", "CLOSE")
-        .map(c => col(c) < 0).reduce(_ || _)
-      aggs :+= max(when(anyNeg, 1).otherwise(0)).as("_neg")
-      aggs :+= max(when(
-        col("LOW") > least(col("OPEN"), col("HIGH"), col("CLOSE")), 1)
-        .otherwise(0)).as("_invlow")
-      aggs :+= max(when(
-        col("HIGH") < greatest(col("OPEN"), col("LOW"), col("CLOSE")), 1)
-        .otherwise(0)).as("_invhigh")
+  /** O18's validation aggregates: rows, stamp extent, null stamps and, for
+    * an OHLC frame, the negative / OHLC-sanity flags. Plain aggregates only,
+    * so they ride the export's write as a `Dataset.observe` observation.
+    */
+  private def validationAggs(ohlc: Boolean): Seq[Column] = {
+    val ts = col(TsCol)
+    val flags = if (!ohlc) Nil else {
+      val Seq(o, h, l, c) = Seq("OPEN", "HIGH", "LOW", "CLOSE").map(col)
+      Seq((o < 0 || h < 0 || l < 0 || c < 0) -> "_neg",
+        (l > least(o, h, c)) -> "_invlow", (h < greatest(o, l, c)) -> "_invhigh")
+        .map { case (p, n) => max(when(p, 1).otherwise(0)).as(n) }
     }
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-
-    val rows = r.getAs[Long]("_rows")
-    val dups =
-      if (knownDistinctTs) 0L
-      else rows - r.getAs[Long]("_dts") -
-        (if (r.getAs[Long]("_tsnull") > 0) 1 else 0)
-    var report = Json.obj(
-      "index_dtype" -> "datetime64[us, UTC]",
-      "index_tz" -> "UTC",
-      "duplicated_timestamps" -> dups)
-    if (hasOhlc)
-      report ++= Json.obj(
-        "negative_prices" -> (r.getAs[Int]("_neg") == 1),
-        "invalid_low" -> (r.getAs[Int]("_invlow") == 1),
-        "invalid_high" -> (r.getAs[Int]("_invhigh") == 1))
-    report ++= Json.obj(
-      "rows" -> rows,
-      "start" -> (if (rows > 0)
-        Reporting.fmtTs(r.getAs[java.sql.Timestamp]("_start")) else null),
-      "end" -> (if (rows > 0)
-        Reporting.fmtTs(r.getAs[java.sql.Timestamp]("_end")) else null))
-    report
+    Seq(count(lit(1)).as("_rows"), min(ts).as("_start"), max(ts).as("_end"),
+      sum(when(ts.isNull, 1).otherwise(0)).as("_tsnull")) ++ flags
   }
 
   /** O19: case-insensitive partition-column resolution; auto-derive
@@ -103,47 +78,53 @@ object Exporter {
     (out, actual)
   }
 
-  /** Lightweight content hash (exporter.py:76-91): row count, index extent
-    * and a 3-row sample of key columns. `precomputed` (rows, start, end —
-    * already formatted) skips re-aggregating what validation measured; the
-    * key samples come from ONE head scan in time order (first 3 non-null
-    * values per key among the first 1000 rows — beyond that the reference's
-    * head(3) would be all-null anyway in any non-degenerate frame).
+  /** Lightweight content hash (exporter.py:76-91): sha256 over row count,
+    * index extent (already formatted) and the first 3 non-null values per
+    * key among the first 1000 rows in time order (beyond that the
+    * reference's head(3) would be all-null anyway in any non-degenerate
+    * frame). The samples come from ONE small read of the parquet `files` an
+    * export just wrote, pruned to the stamp and the keys — never a re-run
+    * of the frame's lineage.
     */
-  def contentHash(df: DataFrame, keys: Seq[String],
-                  precomputed: Option[(Long, String, String)] = None): String = {
+  private def contentHash(spark: SparkSession, rows: Long, start: String,
+                          end: String, files: Seq[String], schema: StructType,
+                          keys: Seq[String]): String = {
     val md = MessageDigest.getInstance("SHA-256")
-    val (n, t0, t1) = precomputed.getOrElse {
-      val r = df.agg(count(lit(1)).as("_n"), min(col(TsCol)).as("_t0"),
-        max(col(TsCol)).as("_t1")).collect()(0)
-      val c = r.getAs[Long]("_n")
-      (c,
-        if (c > 0) Reporting.fmtTs(r.getAs[java.sql.Timestamp]("_t0")) else "",
-        if (c > 0) Reporting.fmtTs(r.getAs[java.sql.Timestamp]("_t1")) else "")
-    }
-    md.update(n.toString.getBytes)
-    if (n > 0) { md.update(t0.getBytes); md.update(t1.getBytes) }
-    val present = keys.filter(df.columns.contains)
-    if (present.nonEmpty) {
-      val head = df.orderBy(col(TsCol))
-        .select(present.map(col): _*).limit(1000).collect()
-      for ((k, i) <- present.zipWithIndex) {
-        val sample = head.iterator.filterNot(_.isNullAt(i))
-          .map(_.get(i)).take(3).toSeq
-        md.update(sample.mkString("[", ", ", "]").getBytes)
-      }
-    }
+    md.update(rows.toString.getBytes)
+    if (rows > 0) { md.update(start.getBytes); md.update(end.getBytes) }
+    val head =
+      if (rows == 0 || keys.isEmpty) Array.empty[Row]
+      else spark.read.schema(StructType((TsCol +: keys).map(schema(_))))
+        .parquet(files: _*).orderBy(col(TsCol))
+        .select(keys.map(col): _*).limit(1000).collect()
+    for (i <- keys.indices)
+      md.update(head.iterator.filterNot(_.isNullAt(i)).map(_.get(i)).take(3)
+        .mkString("[", ", ", "]").getBytes)
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** O20: validate → zstd parquet (+partitioning) → sidecar JSON → hash.
-    *
-    * The validation aggregate and the parquet write are independent reads
-    * of the (cached) input, so they run CONCURRENTLY — Spark's cache locks
-    * per partition, so racing the first action never duplicates compute.
-    * Validation is warn-only in the reference (exporter.py:56-62), so
-    * write-before-validate-completes cannot change any outcome; the sidecar
-    * still waits for both.
+  /** Parquet data files under `dir` (recursively, for partitioned
+    * layouts); Spark's hidden `_`/`.` files are not data. */
+  private def dataFiles(spark: SparkSession, dir: String): Set[String] = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) Set.empty
+    else {
+      val it = fs.listFiles(path, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .map(_.toString).toSet
+    }
+  }
+
+  /** O20: zstd parquet (+partitioning) with validation → sidecar JSON →
+    * hash, as ONE write: the validation aggregates ride the write as a
+    * `Dataset.observe` observation, so the frame's lineage runs once and
+    * no caller needs to cache it. Validation is warn-only in the reference
+    * (exporter.py:56-62), so measuring it during the write cannot change
+    * any outcome. Beside the write runs only the hash's small read, plus a
+    * distinct-count job when `knownDistinctTs = false` (a distinct count
+    * cannot be observed).
     *
     * `rowGroupSize` maps to parquet.block.size in BYTES (the reference's
     * pyarrow knob counts rows — config_model.py:21 — sizes don't translate,
@@ -157,40 +138,65 @@ object Exporter {
                                writeMode: String = "overwrite",
                                rowGroupSize: Option[Long] = None)
       : ListMap[String, Any] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val valReportF = Future(
-      Timing.timed("ex_validate")(validateFinalDf(df, knownDistinctTs)))(
-      Runner.driverPool)
+    require(df.columns.contains(TsCol),
+      s"$TsCol column required before export")
+    val spark = df.sparkSession
     val (prepared0, parts) = preparePartitionCols(df, partitionCols)
     val prepared = prepared0.drop(Readers.FileOrderCol)
 
-    // A single-partition frame (the shape every single-series pipeline
-    // export has) would write its whole parquet output on ONE task — a
-    // scale-killer at 100 TB and a straggler even at bench scale. Range-
-    // repartition on time so the write parallelizes while part-file order
-    // still follows global time order (part-00000 < part-00001 ranges).
-    val toWrite =
-      if (parts.isEmpty && prepared.columns.contains(TsCol) &&
-          prepared.rdd.getNumPartitions == 1)
+    // A single-partition frame would write its whole parquet output on ONE
+    // task — a scale-killer at 100 TB and a straggler even at bench scale.
+    // Range-repartition on time so the write parallelizes. Only a plan
+    // without exchanges has a partition count before it runs; an adaptive
+    // plan decides its count inside the write itself.
+    val laidOut =
+      if (parts.isEmpty && singlePartition(prepared))
         prepared.repartitionByRange(8, col(TsCol))
       else prepared
+    // observed ABOVE the range exchange: below it, the exchange's sampling
+    // job would run the observation too and double every count
+    val observation = Observation()
+    val ohlc = Seq("OPEN", "HIGH", "LOW", "CLOSE").forall(df.columns.contains)
+    val aggs = validationAggs(ohlc)
+    val toWrite = laidOut.observe(observation, aggs.head, aggs.tail: _*)
     val writer0 = toWrite.write.mode(writeMode)
       .option("compression", compression)
     val writer = rowGroupSize.fold(writer0)(n =>
       writer0.option("parquet.block.size", n))
+    val before = dataFiles(spark, outPath)
     Timing.timed("ex_write")(
       (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
         .parquet(outPath))
-    val valReport = Await.result(valReportF, Duration.Inf)
+    val added = (dataFiles(spark, outPath) -- before).toSeq
+    // delivered on the listener bus after the write returns, normally within
+    // milliseconds; the bound turns a lost event into an error, not a hang
+    val observed = Await.result(observation.future, Duration(10, MINUTES))
+    val rows = observed.getAs[Long]("_rows")
+    val dups =
+      if (knownDistinctTs || rows == 0) 0L
+      else rows -
+        prepared.agg(countDistinct(col(TsCol))).collect()(0).getLong(0) -
+        (if (observed.getAs[Long]("_tsnull") > 0) 1 else 0)
+    def stamp(c: String) =
+      if (rows > 0) Reporting.fmtTs(observed.getAs[java.sql.Timestamp](c)) else null
+    def flag(c: String) = observed.getAs[Int](c) == 1
+    val (start, end) = (stamp("_start"), stamp("_end"))
 
     var exportReport = Json.obj(
       "path" -> outPath,
       "compression" -> compression,
       "engine" -> "spark",
       "partition_cols" -> (if (parts.isEmpty) null else parts),
-      "rows" -> valReport("rows"))
-    exportReport ++= valReport
+      "rows" -> rows,
+      "index_dtype" -> "datetime64[us, UTC]",
+      "index_tz" -> "UTC",
+      "duplicated_timestamps" -> dups)
+    if (ohlc)
+      exportReport ++= Json.obj(
+        "negative_prices" -> flag("_neg"),
+        "invalid_low" -> flag("_invlow"),
+        "invalid_high" -> flag("_invhigh"))
+    exportReport ++= Json.obj("start" -> start, "end" -> end)
     exportReport ++= metadata
 
     val metaPath = Paths.get(outPath + ".meta.json")
@@ -198,13 +204,20 @@ object Exporter {
     Files.writeString(metaPath, Json.write(exportReport))
 
     // hash added AFTER the sidecar write — parity quirk (§2.2.7)
-    val pre = (valReport("rows"), valReport("start"), valReport("end")) match {
-      case (r: Long, s: String, e: String) => Some((r, s, e))
-      case (r: Long, _, _) if r == 0L => Some((0L, "", ""))
-      case _ => None
-    }
-    exportReport + ("content_hash" -> Timing.timed("ex_hash")(contentHash(df,
-      if (df.columns.contains("OPEN")) Seq("OPEN", "CLOSE") else Nil, pre)))
+    val keys = if (df.columns.contains("OPEN")) Seq("OPEN", "CLOSE")
+                 .filter(df.columns.contains) else Nil
+    exportReport + ("content_hash" -> Timing.timed("ex_hash")(
+      contentHash(spark, rows, start, end, added, toWrite.schema, keys)))
+  }
+
+  /** True when `df`'s plan has no exchange and runs as one partition —
+    * known without running a job, and asked of a fresh plan so the
+    * caller's frame stays unplanned. */
+  private def singlePartition(df: DataFrame): Boolean = {
+    val qe = Sizing.freshPlan(df)
+    !qe.executedPlan.isInstanceOf[AdaptiveSparkPlanExec] &&
+      qe.executedPlan.collectFirst { case e: Exchange => e }.isEmpty &&
+      qe.toRdd.getNumPartitions == 1
   }
 
   /** Bucketed parquet sink for co-located joins: tables bucketed (and

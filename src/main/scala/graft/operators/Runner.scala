@@ -8,7 +8,6 @@ import graft.core.{GraftConfig, Json, Rules, Sizing, Timing}
 import graft.sources.Readers
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Pipeline orchestration (reference O22–O24: src/run.py:60-340): per input
   * — normalize → QA report → per timeframe: gap repair then resample →
@@ -24,12 +23,12 @@ object Runner {
   val TsCol: String = Normalize.TsCol
 
   /** Driver-side pool for the pipeline's concurrent chains: the files of
-    * a batch, each file's timeframe chains and reports, and each export's
-    * validate aggregate. Its tasks block on other tasks of the same pool
-    * (a chain waits on its export's validate future), so the pool grows
-    * with demand: a fixed size deadlocks once every thread waits on a
-    * queued task. The threads only wait on Spark jobs, and `runBatch`'s
-    * admission rule bounds how many files, and so threads, are live.
+    * a batch and each file's timeframe chains and reports. Its tasks block
+    * on other tasks of the same pool (a file waits on its chains), so the
+    * pool grows with demand: a fixed size deadlocks once every thread
+    * waits on a queued task. The threads only wait on Spark jobs, and
+    * `runBatch`'s admission rule bounds how many files, and so threads,
+    * are live.
     * Daemon threads — the pool must never keep a driver JVM alive after
     * main() returns; idle ones exit after a minute.
     */
@@ -241,9 +240,6 @@ object Runner {
       }
       val results = (if (baseOk) timeframes else Nil).map { tf =>
         tf -> Future {
-          // The resampled frame is cached: export runs three actions
-          // (validate agg, write, hash) and must not re-execute the repair
-          // chain for each.
           val (src, onGrid) =
             if (correctMode) (baseRepaired.getOrElse(ndf), baseRule.contains(tf))
             else cfg.gapPolicy match {
@@ -252,36 +248,19 @@ object Runner {
                   gp.interpolatePrices, gp.shortGapMinutes,
                   partitionCols = seriesKeys, computeReport = false,
                   cacheResult = true, approxResultBytes = ndfEstBytes).df
-                // materialize here so the export's concurrent validate+write
-                // read a hot cache instead of racing its first computation
+                // materialize here, timed as the repair stage, so the
+                // export's write reads a hot cache
                 timed(s"repair_$tf")(r.count())
                 (r, true)
               case None => (ndf, false)
             }
           // input on the target bucket grid => one row per bucket => the
-          // resample aggregation degenerates to a projection (no shuffle)
-          val resPlain = Resample.resampleOhlc(src, tf,
+          // resample aggregation degenerates to a projection (no shuffle).
+          // Not cached: the export is one write that also observes its
+          // validation, so the resample runs once, inside `export_$tf`.
+          val res = Resample.resampleOhlc(src, tf,
             partitionCols = seriesKeys,
             inputOnBucketGrid = onGrid)
-          // The resampled frame is cached so the export's three concurrent
-          // actions (validate agg, write, hash head) read a hot cache; the
-          // count materializes it first because racing the FIRST
-          // computation of a cached plan serializes the jobs on the
-          // cache's partition locks. Measured both ways at the gate scale:
-          // dropping this cache re-scans the repair cache 3× per chain ×
-          // four concurrent chains and the pipeline went 3.6 s -> 5.0 s.
-          // EXCEPTION — on-grid res at spill scale: there res is a pure
-          // PROJECTION of the repair cache at full row count (the
-          // pipeline's largest frame), and caching it again builds a
-          // second full-size copy (the row-linear `resample_1T` build the
-          // 30× record shows at 0.16 s -> 4.5 s) that a DISK_ONLY source
-          // re-read serves just as well — so past the Sizing threshold the
-          // projection stays uncached and exports read the spilled repair
-          // cache directly.
-          val resSpillSized = onGrid &&
-            Sizing.storageFor(ndfEstBytes) == StorageLevel.DISK_ONLY
-          val res = if (resSpillSized) resPlain else resPlain.cache()
-          if (!resSpillSized) timed(s"resample_$tf")(res.count())
           val name = s"${baseName}_${Rules.suffix(tf)}"
           val path = s"$outDir/$name.parquet"
           val report = timed(s"export_$tf")(
@@ -292,7 +271,6 @@ object Runner {
               knownDistinctTs = true,
               writeMode = cfg.writeMode,
               rowGroupSize = cfg.rowGroupSize))
-          if (!resSpillSized) res.unpersist()
           if (!correctMode && !(src eq ndf)) src.unpersist()
           (StageResult(name, report("rows").asInstanceOf[Long], path), report)
         }

@@ -116,7 +116,7 @@ object ScaleBench {
     // there (the share detector catches only DISPROPORTIONATE growth).
     // This pass runs each timeframe chain ALONE (one RepairProbe rep per
     // timeframe, reports off), so a stage's scaled/base ratio is its own
-    // growth, de-contended. Chain stages (repair_/resample_/export_<tf>)
+    // growth, de-contended. Chain stages (repair_/export_<tf>)
     // appear once per sweep; shared stages (normalize, materialize_cache)
     // run once per timeframe and are summed consistently at both scales,
     // so their ratios stay apples-to-apples. Median-of-3 sweeps. Every
@@ -283,15 +283,9 @@ object ScaleBench {
       "conflates growth with contention; sequential_stages is the " +
       "de-contended measurement — each timeframe chain run ALONE " +
       "(reports off), so those ratios are growth, not contention " +
-      "(VERDICT r12 item 1). A sequential resample_<tf> ratio near the " +
-      "row growth is EXPECTED, not super-linear: on-grid resample is a " +
-      "projection and the stage is purely the row-linear columnar cache " +
-      "build for the export's three readers (base ~0.16 s is real row " +
-      "work with no fixed overhead to amortize, so 30x rows -> ~29x " +
-      "stage; its concurrent twin reads lower only because the " +
-      "concurrent BASE is contention-inflated). Past the core.Sizing " +
-      "spill threshold the projection cache is skipped entirely and the " +
-      "stage leaves the record. Pipeline runs size shuffle partitions to " +
+      "(VERDICT r12 item 1). Resampling has no stage of its own: it " +
+      "runs inside export_<tf>, the one write that also observes the " +
+      "export's validation. Pipeline runs size shuffle partitions to " +
       "~250k rows each (deployment convention): a pinned 32 made " +
       "FastFill's per-task series buffer grow with scale and the 30x " +
       "repair went GC-bound"

@@ -127,11 +127,71 @@ class ReportingExportSpec extends SparkSpec {
   }
 
   test("invalid_low flags interpolation-violated candles but does not fail") {
-    val bad = Seq((ts(0), 10.0, 11.0, 10.5, 10.8)) // LOW > OPEN
+    val bad = Seq(
+      (ts(0), 10.0, 11.0, 10.5, 10.8), // LOW > OPEN
+      (ts(0), 10.0, 11.0, 9.5, 10.8))  // same stamp: one duplicate
       .toDF("TIMESTAMP", "OPEN", "HIGH", "LOW", "CLOSE")
-    val rep = Exporter.validateFinalDf(bad)
+    val path = Files.createTempDirectory("graft_export_bad").toString + "/bad.parquet"
+    val rep = Exporter.writeParquetWithMetadata(bad, path)
     assert(rep("invalid_low") == true)
+    assert(rep("invalid_high") == false)
     assert(rep("negative_prices") == false)
+    assert(rep("duplicated_timestamps") == 1L)
+    assert(spark.read.parquet(path).count() == 2, "validation warns, never fails")
+  }
+
+  test("export hash: pinned recipe; two appends hash like one overwrite") {
+    val dir = Files.createTempDirectory("graft_export_hash").toString
+    // sha256 over rows, str(min), str(max) and the first 3 OPEN/CLOSE values
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    for (part <- Seq("10", "2024-01-01 00:00:00+00:00",
+        "2024-01-01 00:09:00+00:00", "[10.0, 11.0, 12.0]",
+        "[10.25, 11.25, 12.25]")) md.update(part.getBytes)
+    val expected = md.digest().map("%02x".format(_)).mkString
+    val once = Exporter.writeParquetWithMetadata(frame(), s"$dir/once.parquet")
+    assert(once("content_hash") == expected)
+    // the second append's samples come from its own files only: read over
+    // both appends, every stamp is doubled and the OPEN sample would be
+    // [10.0, 10.0, 11.0]
+    val appended = s"$dir/appended.parquet"
+    val hashes = (1 to 2).map(_ => Exporter.writeParquetWithMetadata(frame(),
+      appended, writeMode = "append")("content_hash"))
+    assert(hashes == Seq(expected, expected))
+    assert(spark.read.parquet(appended).count() == 20)
+  }
+
+  test("export of an empty frame: 0 rows, null extent, no wait on the observation") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dir = Files.createTempDirectory("graft_export_empty").toString
+    // folded to an empty relation (no partitions) and an empty
+    // three-partition exchange
+    val empties = Seq(frame().filter(col("OPEN") < 0),
+      frame().repartition(3).filter(col("OPEN") < 0))
+    for ((df, i) <- empties.zipWithIndex) {
+      val run = Future(Exporter.writeParquetWithMetadata(df,
+        s"$dir/empty$i.parquet"))(ExecutionContext.global)
+      val rep = Await.result(run, 60.seconds)
+      assert(rep("rows") == 0L && rep("start") == null && rep("end") == null,
+        s"empty export $i: $rep")
+      assert(rep("negative_prices") == false && rep("invalid_low") == false)
+      assert(rep.contains("content_hash"))
+    }
+  }
+
+  test("a 1-partition frame takes the range layout; observed rows equal count()") {
+    val path = Files.createTempDirectory("graft_export_one").toString + "/one.parquet"
+    val one = (0 until 5000).map { m =>
+      (new Timestamp(ts(0).getTime + m * 60000L),
+        10.0 + m, 10.5 + m, 9.5 + m, 10.25 + m, 100.0)
+    }.toDF("TIMESTAMP", "OPEN", "HIGH", "LOW", "CLOSE", "VOLUME").coalesce(1)
+    val rep = Exporter.writeParquetWithMetadata(one, path)
+    // observed above the range exchange: its sampling job must not count too
+    assert(rep("rows") == one.count())
+    assert(rep("start") == "2024-01-01 00:00:00+00:00")
+    val parts = Files.list(Paths.get(path)).toArray.map(_.toString)
+      .count(_.endsWith(".parquet"))
+    assert(parts > 1, s"the range layout splits the write: $parts part files")
   }
 
   test("writeZOrdered: box rows hit fewer files than a linear layout") {

@@ -352,6 +352,30 @@ class RunnerSpec extends SparkSpec {
     assert(r.exports.map(_.rows) == steps.map(k => (1200L + k - 1) / k))
   }
 
+  test("processDataFrame releases every frame it persists") {
+    import org.apache.spark.sql.functions._
+    val input = spark.range(600).select(
+      timestamp_seconds(lit(1704067200L) + col("id") * 60).as("timestamp"),
+      (lit(1.1) + col("id") * 1e-4).as("open"),
+      (lit(1.1005) + col("id") * 1e-4).as("high"),
+      (lit(1.0995) + col("id") * 1e-4).as("low"),
+      (lit(1.1002) + col("id") * 1e-4).as("close"),
+      (lit(100.0) + col("id")).as("volume")).cache()
+    input.count()
+    val out = Files.createTempDirectory("graft_residue").toString
+    val cfg = GraftConfig(rawPath = out, processedPath = out,
+      timeframes = Seq("1T", "5T"), partitionCols = Nil)
+    // reports on: the quality report's SMA scan runs after the normalize
+    // report has released Normalize's source cache
+    val (r, residue) =
+      try persistResidue(Runner.processDataFrame(spark, input, cfg, None,
+        "EURUSD_residue", out))(_ => Set.empty)
+      finally input.unpersist()
+    assert(r.errors.isEmpty, s"errors: ${r.errors}")
+    assert(r.exports.map(_.rows) == Seq(600L, 120L))
+    assert(residue.isEmpty, s"RDDs left persisted: $residue")
+  }
+
   test("one failing file or base repair leaves the other files to finish") {
     val (raw, out) = batchDirs("graft_isolate", Seq("AAA", "CCC", "DDD"), 30)
     // BBB lacks the required CLOSE column: it fails in Normalize

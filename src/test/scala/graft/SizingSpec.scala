@@ -37,6 +37,28 @@ class SizingSpec extends SparkSpec {
     assert(est.exists(_ > 0), s"range lineage should carry a size: $est")
   }
 
+  test("planEstimate leaves the frame free to read its own cache") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.functions._
+    val df = spark.range(1000).repartition(4)
+      .select(col("id"), (col("id") * 2).as("v"))
+    Sizing.planEstimate(df)
+    df.persist()
+    try {
+      df.count()
+      // what `queryExecution.toRdd` callers (the SMA scan) execute
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      assert(plan.collectFirst { case s: InMemoryTableScanExec => s }.nonEmpty &&
+        plan.collectFirst { case e: Exchange => e }.isEmpty,
+        s"the frame must read its cache, not re-run its exchange:\n$plan")
+    } finally df.unpersist()
+  }
+
   test("leafScanBytes: real for file scans, zero for materialized inputs") {
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft_sz_leaf").toString
