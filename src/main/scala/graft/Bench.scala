@@ -249,8 +249,10 @@ object Bench {
     // Median of 3 runs — the sandbox's virtual disk has multi-second I/O
     // jitter, and a median is the standard way to report wall time under it.
     // per-run GC time + heap high-water: a contaminated/memory-starved run
-    // is self-diagnosing from the JSON (gc spikes or heap near -Xmx)
+    // is self-diagnosing from the JSON (gc spikes or heap near -Xmx); the
+    // per-run codegen compiles show a generated-class cache that thrashes
     var gcPerRun = Vector.empty[Long]
+    var compilesPerRun = Vector.empty[Long]
     var heapHighWater = 0L
     def timedRun(mode: String): Double = {
       // between runs, outside the timed window: a full GC lets Spark's
@@ -261,6 +263,7 @@ object Bench {
       Thread.sleep(200)
       val dir = h.tempDir(s"graft_bench_$mode").toString
       val g0 = Harness.gcMillis()
+      val c0 = Harness.codegenCompiles()
       val sec = Harness.seconds {
         val r = Runner.processDataFrame(spark, raw,
           cfg.copy(resampleMode = mode), sourceTz = None,
@@ -269,15 +272,18 @@ object Bench {
         require(r.exports.length == 4, "four timeframe exports expected")
       }
       gcPerRun :+= Harness.gcMillis() - g0
+      compilesPerRun :+= Harness.codegenCompiles() - c0
       heapHighWater = math.max(heapHighWater,
         Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory)
       sec
     }
     val g0 = Harness.gcMillis()
+    val c0 = Harness.codegenCompiles()
     val (result, firstSec) = Harness.timed(Runner.processDataFrame(spark, raw,
       cfg.copy(resampleMode = "faithful"), sourceTz = None,
       basename = "EURUSD_bench", outDir = outDir))
     gcPerRun :+= Harness.gcMillis() - g0
+    compilesPerRun :+= Harness.codegenCompiles() - c0
     require(result.errors.isEmpty,
       s"pipeline errors: ${result.errors.mkString("; ")}")
     require(result.exports.length == 4, "four timeframe exports expected")
@@ -521,7 +527,7 @@ object Bench {
     val runsJson = Harness.jsonSecs(faithfulRuns)
     val maxHeap = Runtime.getRuntime.maxMemory
     val json =
-      f"""{"metric":"etl_pipeline_sec","value":$pipelineSec%.3f,"unit":"sec","pipeline_runs":$runsJson,"pipeline_min":${faithfulRuns.head}%.3f,"pipeline_canary_factor":$pipelineCanaryFactor%.2f,"pipeline_spread":$spread%.2f,"pipeline_discarded":$disc,"contamination":${Harness.jsonStrings(contamination)},"correct_mode_sec":$correctSec%.3f,"gc_ms_per_run":${gcPerRun.mkString("[", ",", "]")},"heap_high_water_mb":${heapHighWater / 1048576},"heap_max_mb":${maxHeap / 1048576},"input_rows":$inputRows,"exports":${result.exports.map(_.rows).mkString("[", ",", "]")},"query_errors":${Harness.jsonStrings(failed)},"query_medians":${Harness.jsonStrings(medianed)},"queries":$qs,"sf":${Json.write(sfDir)},"canary_factor":$canaryFactor%.2f,"alarms":${Harness.jsonStrings(alarms)},"etl_pipeline_sec":$pipelineSec%.3f}"""
+      f"""{"metric":"etl_pipeline_sec","value":$pipelineSec%.3f,"unit":"sec","pipeline_runs":$runsJson,"pipeline_min":${faithfulRuns.head}%.3f,"pipeline_canary_factor":$pipelineCanaryFactor%.2f,"pipeline_spread":$spread%.2f,"pipeline_discarded":$disc,"contamination":${Harness.jsonStrings(contamination)},"correct_mode_sec":$correctSec%.3f,"gc_ms_per_run":${gcPerRun.mkString("[", ",", "]")},"codegen_compiles_per_run":${compilesPerRun.mkString("[", ",", "]")},"heap_high_water_mb":${heapHighWater / 1048576},"heap_max_mb":${maxHeap / 1048576},"input_rows":$inputRows,"exports":${result.exports.map(_.rows).mkString("[", ",", "]")},"query_errors":${Harness.jsonStrings(failed)},"query_medians":${Harness.jsonStrings(medianed)},"queries":$qs,"sf":${Json.write(sfDir)},"canary_factor":$canaryFactor%.2f,"alarms":${Harness.jsonStrings(alarms)},"etl_pipeline_sec":$pipelineSec%.3f}"""
     println(json)
     // the driver's stdout capture keeps only the LAST 2000 chars, which
     // truncates the 300-entry queries map's line into unparseable JSON

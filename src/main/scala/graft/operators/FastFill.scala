@@ -5,7 +5,6 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.functions.{col, min, unix_micros}
 import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types._
 
@@ -17,9 +16,9 @@ import org.apache.spark.sql.types._
   * consecutive ordered partitions, so a hot series parallelizes across
   * tasks (the 100 TB skew answer). The scan stays narrow; cross-boundary
   * state (grid continuation, ffill carry, interpolation neighbors) comes
-  * from two cheap metadata jobs (per-series anchors + per-partition
-  * boundary summaries, both fixed-size per (partition, series)) folded on
-  * the driver into seeds. The summary pass also checks the layout.
+  * from two cheap metadata passes over the fill's own input RDD (per-series
+  * anchors + per-partition boundary summaries, both fixed-size per
+  * (partition, series)) folded on the driver into seeds. The summary pass also checks the layout.
   * Positions are grid indices, which are globally consistent, so the grid
   * step is required.
   *
@@ -127,7 +126,7 @@ object FastFill {
     val stepUs = stepMicros
 
     val seeds: Map[(Int, List[Any]), Seed] =
-      buildSeeds(df, fIdx, iIdx, tsIdx, kIdx, types, partitionCols, stepUs)
+      buildSeeds(df, fIdx, iIdx, tsIdx, kIdx, types, stepUs)
 
     // generic deep copy for the non-fast path (internal values cloned so
     // nothing references the scan's reused buffer row)
@@ -364,8 +363,9 @@ object FastFill {
 
   /** Two fixed-size metadata jobs over the layout, then a driver
     * prefix/suffix scan — never row-shaped data:
-    *  1. per-series anchors (min stamp): one partial-aggregated groupBy,
-    *     one row per series;
+    *  1. per-series anchors (min stamp): a narrow InternalRow scan emitting
+    *     one stamp per (partition, series run), folded per series on the
+    *     driver;
     *  2. per-(partition, series) boundary summary: the run's stamp extent
     *     (checked by [[RangeLayout.check]]), the grid floor of its last
     *     stamp, last non-null per ffill col and first/last non-null per
@@ -379,27 +379,39 @@ object FastFill {
   private def buildSeeds(prepared: DataFrame, fIdx: Array[Int],
                          iIdx: Array[Int], tsIdx: Int, kIdx: Array[Int],
                          types: Array[DataType],
-                         partitionCols: Seq[String],
                          stepUs: Long): Map[(Int, List[Any]), Seed] = {
-    val nK = kIdx.length; val nF = fIdx.length; val nI = iIdx.length
+    val nF = fIdx.length; val nI = iIdx.length
 
-    // job 1: series anchors (external collect; key externalization in the
-    // summary job matches these values — `fill` checks the key types)
-    val tsCol = prepared.schema.fields(tsIdx).name
-    val anchors: Map[List[Any], Long] = prepared
-      .filter(col(tsCol).isNotNull)
-      .groupBy(partitionCols.map(col): _*)
-      .agg(min(unix_micros(col(tsCol))).as("_a"))
-      .collect()
-      .filterNot(_.isNullAt(nK)) // a keyless empty input still yields a row
-      .map(r => (0 until nK).map(r.get).toList -> r.getLong(nK))
-      .toMap
+    // job 1: series anchors — the least non-null stamp of each series run,
+    // from the same physical RDD as the summary and fill passes (no
+    // aggregate plan of its own), folded per series on the driver; keys are
+    // externalized like the summary job's
+    val rdd = prepared.queryExecution.toRdd
+    val anchors: Map[List[Any], Long] = rdd.mapPartitions { it =>
+      val acc = ArrayBuffer.empty[(List[Any], Long)]
+      var keyInt: Array[Any] = null
+      var least = Long.MaxValue
+      def flush(): Unit = if (keyInt != null)
+        acc += RangeLayout.externalize(keyInt) -> least
+      while (it.hasNext) {
+        val r = it.next()
+        if (!r.isNullAt(tsIdx)) { // null stamps never repair
+          if (!RangeLayout.sameKey(r, keyInt, kIdx, types)) {
+            flush(); keyInt = RangeLayout.keyOf(r, kIdx, types)
+            least = Long.MaxValue
+          }
+          least = math.min(least, r.getLong(tsIdx))
+        }
+      }
+      flush()
+      acc.iterator
+    }.collect().groupMapReduce(_._1)(_._2)(math.min)
     val anchorsB = prepared.sparkSession.sparkContext.broadcast(anchors)
 
     // job 2: per-(partition, series) boundary summaries — plain RDD of a
     // small case class, no DataFrame/encoder detour
     val summaries: Array[SeedSummary] =
-      prepared.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+      rdd.mapPartitionsWithIndex { (pid, it) =>
         val acc = ArrayBuffer.empty[SeedSummary]
         var keyInt: Array[Any] = null // internal, owned (run comparison)
         var tracker: RangeLayout.RunTracker = null

@@ -1,12 +1,15 @@
 package graft.operators
 
 import scala.collection.immutable.ListMap
+import scala.concurrent.Await
+import scala.concurrent.duration.{Duration, MINUTES}
 
 import graft.core.Json
 import graft.sources.Readers
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types._
 
 /** Normalization pipeline (reference operators O5–O10:
@@ -14,9 +17,9 @@ import org.apache.spark.sql.types._
   * datetime/tz normalization → dedup keep-first → sort.
   *
   * The whole transform is one lazy DataFrame graph; the report counters
-  * (coercions, NaT counts, duplicate count) are gathered in a SINGLE
-  * aggregation job over the pre-dedup frame rather than one eager pass per
-  * stage — same numbers, one scan.
+  * (coercions, NaT counts, duplicate count) are a `Dataset.observe`
+  * observation on the deduped frame, gathered by the caller's own first
+  * action on it rather than by one eager pass per stage or a report job.
   *
   * Scale notes: the only shuffles are the dedup's [[RangeLayout]] exchange
   * (keyed on SYMBOL when present, never a single-partition window) and the
@@ -103,31 +106,48 @@ object Normalize {
     *                  input FastFill, Gaps.repairGaps and Reporting's SMA
     *                  require (an empty key list is one keyless series).
     *
-    * The report aggregation is DEFERRED: it first runs when `report` (or
-    * `reportWithPostCount`) is accessed, so callers can materialize their
-    * own cache of `unsorted` first (which also populates the pre-dedup
-    * source cache the agg reads) and compute the report off the critical
-    * path. Call `unpersistSource()` only after the report is computed.
+    * The report counters are a `Dataset.observe` observation on `unsorted`
+    * only, so the caller's first action on `unsorted` (the Runner's cache
+    * materialization) also counts them: no job of its own. `df` carries no
+    * observation — its global sort samples its input in a job of its own,
+    * which would run an observation below it twice. When no action on
+    * `unsorted` completed the observation, `report` runs `unsorted` once
+    * (a no-op write); either way it waits on the observation with a bound.
     */
   final class Result private[operators] (
       val df: DataFrame,
       val unsorted: DataFrame,
-      buildReport: Option[Long] => ListMap[String, Any],
-      sourceCache: Option[DataFrame]) {
-    def unpersistSource(): Unit = sourceCache.foreach(_.unpersist())
-    /** Report with the duplicate count derived from an internal post-dedup
-      * count job.
+      observation: Option[Observation],
+      buildReport: Option[Row] => ListMap[String, Any],
+      keys: Seq[String]) {
+    private lazy val observed: Option[Row] = observation.map { o =>
+      val spark = unsorted.sparkSession
+      // a finished action posts its end event before it returns; drain the
+      // bus so an observation already delivered is seen as such
+      if (!o.future.isCompleted)
+        try GraftSqlBridge.drainListenerBus(spark)
+        catch { case _: java.util.concurrent.TimeoutException => () }
+      if (!o.future.isCompleted)
+        unsorted.write.format("noop").mode("overwrite").save()
+      Await.result(o.future, ObservationWait)
+    }
+    lazy val report: ListMap[String, Any] = buildReport(observed)
+    /** The first non-null value, in file order, of each series key column
+      * (absent for an all-null column); empty without the observation.
       */
-    lazy val report: ListMap[String, Any] = buildReport(None)
-    /** Report using a post-dedup row count the caller already has (e.g.
-      * from its own cache materialization) — no internal count job.
-      */
-    def reportWithPostCount(postRows: Long): ListMap[String, Any] =
-      buildReport(Some(postRows))
+    lazy val firstKeys: Map[String, Any] = observed.fold(Map.empty[String, Any]) { r =>
+      keys.flatMap(k => Option(r.getAs[Any](s"_first_$k")).map(k -> _)).toMap
+    }
   }
 
-  /** O10: the full pipeline. `computeReport = false` skips the counter agg
-    * (the transform stays identical) — used on the hot bench path.
+  /** Bound on the wait for an observation whose action has run: it is
+    * delivered on the listener bus within milliseconds, so the bound turns
+    * a lost event into an error, never a hang.
+    */
+  val ObservationWait: Duration = Duration(10, MINUTES)
+
+  /** O10: the full pipeline. `computeReport = false` leaves the counter
+    * observation out (the transform stays identical) and reports zeros.
     */
   def apply(input: DataFrame,
             columnsMap: ListMap[String, Seq[String]],
@@ -209,14 +229,11 @@ object Normalize {
       else if (sourceTz.isDefined) (s"localized_to_${sourceTz.get}", false)
       else ("localized_to_UTC_assumed", true) // assume_utc / mark_needs_review
 
-    val withTs0 = casted
+    val withTs = casted
       .withColumn("_ts_parsed", parsed)
       .withColumn(TsCol + "_new", localized)
       .drop(dtCol)
       .withColumnRenamed(TsCol + "_new", TsCol)
-    // The report agg and the downstream dedup/sort both consume this frame;
-    // cache it so the parse/localize chain executes once, not twice.
-    val withTs = if (computeReport) withTs0.cache() else withTs0
 
     // O8: dedup keep-first in file order (pre-sort — normalize.py:271 vs 275)
     val dedupKeys = partitionCols.filter(withTs.columns.contains)
@@ -237,62 +254,60 @@ object Normalize {
     // SMA) stay narrow via cross-partition boundary seeds.
     val w = Window.partitionBy((dedupKeys :+ TsCol).map(col): _*)
       .orderBy(col(Readers.FileOrderCol).asc)
-    val deduped =
+    val numbered =
       RangeLayout(withTs, dedupKeys, thenBy = Seq(Readers.FileOrderCol))
         .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
+    def dedup(in: DataFrame): DataFrame =
+      in.filter(col("_rn") === 1)
         .drop("_rn", "_ts_parsed", Readers.FileOrderCol)
 
-    // O9: final sort; pandas sort_index puts NaT last.
-    val sorted = deduped.orderBy(col(TsCol).asc_nulls_last)
-
-    // Single report-aggregation job over the pre-dedup frame: numeric
-    // coercion counts (total nulls after cast — normalize.py:104-109 counts
-    // pre-existing NaNs too), parse-NaT count, post-localize NaT count
-    // (ambiguous), and the duplicate count. Deferred into the Result so
-    // callers can overlap it with their own jobs; `postRows` (the caller's
-    // post-dedup count) saves the internal count job — no countDistinct
-    // either way, keeping this a plain one-pass partial/final aggregate.
+    // The report counters, observed on every pre-dedup row ABOVE the range
+    // exchange (its sampling job runs below it and is never counted):
+    // numeric coercion counts (total nulls after cast — normalize.py:104-109
+    // counts pre-existing NaNs too), parse-NaT count, post-localize NaT
+    // count (ambiguous), the rows the dedup keeps, and the first non-null
+    // series key in file order. Plain aggregates, so they ride the caller's
+    // first action on `unsorted` instead of a job of their own.
     val numericCols = CoercedCols.filter(withTs.columns.contains)
-    def buildReport(postRows: Option[Long]): ListMap[String, Any] = {
-      var preDedupRows = 0L
-      var coercedRows = 0L
-      var ambiguousNats = 0L
-      var coercions = ListMap.empty[String, Long]
-      var removedDuplicates = 0L
-      if (computeReport) {
-        val aggs =
-          Seq(count(lit(1)).as("_n"),
-            sum(when(col("_ts_parsed").isNull, 1).otherwise(0)).as("_parse_nat"),
-            sum(when(col(TsCol).isNull, 1).otherwise(0)).as("_loc_nat")) ++
-            numericCols.map(c =>
-              sum(when(col(c).isNull, 1).otherwise(0)).as(s"_nc_$c"))
-        val row = withTs.agg(aggs.head, aggs.tail: _*).collect()(0)
-        preDedupRows = row.getAs[Long]("_n")
-        coercedRows = row.getAs[Long]("_parse_nat")
-        ambiguousNats = row.getAs[Long]("_loc_nat")
-        coercions = ListMap(numericCols.map(c => c -> row.getAs[Long](s"_nc_$c")): _*)
-        // removed = preDedup - postDedup (pandas counts all-NaT stamps as
-        // duplicates of each other too, which the stamp-keyed dedup mirrors)
-        removedDuplicates = preDedupRows - postRows.getOrElse(deduped.count())
-      }
+    def nulls(c: Column) = sum(when(c.isNull, 1L).otherwise(0L))
+    val observation = if (computeReport) Some(Observation()) else None
+    val unsorted = observation.fold(dedup(numbered)) { o =>
+      val aggs = Seq(count(lit(1)).as("_n"),
+        sum(when(col("_rn") === 1, 1L).otherwise(0L)).as("_kept"),
+        nulls(col("_ts_parsed")).as("_parse_nat"),
+        nulls(col(TsCol)).as("_loc_nat")) ++
+        numericCols.map(c => nulls(col(c)).as(s"_nc_$c")) ++
+        dedupKeys.map(k => min_by(col(k),
+          when(col(k).isNotNull, col(Readers.FileOrderCol))).as(s"_first_$k"))
+      dedup(numbered.observe(o, aggs.head, aggs.tail: _*))
+    }
+
+    // O9: final sort; pandas sort_index puts NaT last.
+    val sorted = dedup(numbered).orderBy(col(TsCol).asc_nulls_last)
+
+    def buildReport(observed: Option[Row]): ListMap[String, Any] = {
+      def n(c: String) = observed.fold(0L)(_.getAs[Long](c))
+      val ambiguousNats = n("_loc_nat")
       Json.obj(
         "columns" -> colReport,
         "dtypes" -> Json.obj(
           "missing_required" -> Seq.empty[String],
-          "numeric_coercions" -> coercions),
+          "numeric_coercions" ->
+            (if (observed.isEmpty) ListMap.empty[String, Long]
+             else ListMap(numericCols.map(c => c -> n(s"_nc_$c")): _*))),
         "datetime" -> Json.obj(
           "datetime_col" -> dtCol,
-          "coerced_rows" -> coercedRows,
+          "coerced_rows" -> n("_parse_nat"),
           "tz_action" -> tzAction,
           "original_tz" -> originalTzStr,
           "final_tz" -> targetTz,
           "ambiguous_count" -> ambiguousNats,
           "needs_review" -> (needsReviewBase || ambiguousNats > 0)),
-        "duplicates" -> Json.obj("removed_duplicates" -> removedDuplicates))
+        // removed = preDedup - postDedup (pandas counts all-NaT stamps as
+        // duplicates of each other too, which the stamp-keyed dedup mirrors)
+        "duplicates" -> Json.obj("removed_duplicates" -> (n("_n") - n("_kept"))))
     }
 
-    new Result(sorted, deduped, buildReport,
-      sourceCache = if (computeReport) Some(withTs) else None)
+    new Result(sorted, unsorted, observation, buildReport, dedupKeys)
   }
 }

@@ -4,7 +4,7 @@ import scala.collection.immutable.ListMap
 
 import graft.core.{Json, Timing}
 import graft.sources.Readers
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
@@ -12,10 +12,12 @@ import org.apache.spark.sql.types.NumericType
 /** Data-quality report + SMA indicator summaries (reference O15–O17:
   * src/etl/utils/reporting.py:26-142).
   *
-  * Cost shape: ONE whole-frame aggregation job for the profile (rows,
-  * extent, per-column NaNs, dup stamps, range stats, CLOSE stats + exact
-  * median) and, when indicators are on, two narrow scans of the range
-  * layout for all SMA windows together. The reference runs ~10 separate
+  * Cost shape: ONE whole-frame aggregation for the profile (rows, extent,
+  * per-column NaNs, dup stamps, range stats, CLOSE stats + exact median) —
+  * plain aggregates the Runner folds into its cache-materializing job
+  * ([[profileAggs]] + [[fromProfile]]), so a pipeline run spends no job of
+  * its own on it — and, when indicators are on, two narrow scans of the
+  * range layout for all SMA windows together. The reference runs ~10 separate
   * pandas passes; each job here scans the frame once. Reports are
   * fixed-size driver aggregates — nothing row-shaped is ever collected.
   */
@@ -46,17 +48,37 @@ object Reporting {
                         smaWindows: Seq[Int] = Seq(10, 50),
                         partitionCols: Seq[String] = Nil,
                         knownDistinctTs: Boolean = false,
-                        /** row count the caller already holds (e.g. the
-                          * Runner's cache-materialization count) — lets the
-                          * CLOSE-median path pick its implementation without
-                          * an extra count job */
+                        /** an upper bound on the frame's rows known before
+                          * the profile job (see [[profileAggs]]) */
                         knownRows: Option[Long] = None): ListMap[String, Any] = {
+    val aggs = profileAggs(df, knownDistinctTs, knownRows)
+    val profile = Timing.timed("qr_profile_agg")(
+      df.agg(aggs.head, aggs.tail: _*).collect()(0))
+    fromProfile(df, profile, computeIndicators, smaWindows, partitionCols,
+      knownDistinctTs)
+  }
 
+  /** The profile's aggregate columns: rows (`_rows`), stamp extent
+    * (`_start`, `_end`), per-column NaNs, dup stamps, range stats and the
+    * CLOSE stats. Plain aggregates of one pass, so a caller can fold them
+    * into a job it runs anyway — the Runner's cache materialization — and
+    * hand the row to [[fromProfile]].
+    *
+    * The exact CLOSE median has two implementations, chosen from
+    * `rowBound`, an upper bound on the rows known before the job:
+    *  - within [[ExactMedianRowThreshold]]: the median() aggregate in this
+    *    pass — partial-aggregated value counts merged on one reducer, fine
+    *    while the distinct-value map stays small;
+    *  - above it, or with no bound: ExactMedian's count/min/finite-max/NaN
+    *    stat columns. median() merges EVERY distinct value through one
+    *    reducer (unbounded state on a 100 TB column); [[fromProfile]]
+    *    locates the middle ranks with fixed-size follow-up jobs, or runs one
+    *    small median() job when the non-null CLOSE count turns out small.
+    */
+  def profileAggs(df: DataFrame, knownDistinctTs: Boolean,
+                  rowBound: Option[Long]): Seq[Column] = {
     val cols = df.columns.filterNot(_ == Readers.FileOrderCol).toSeq
     val dataCols = cols.filterNot(_ == TsCol)
-    val hasHL = cols.contains("HIGH") && cols.contains("LOW")
-    val hasClose = cols.contains("CLOSE")
-
     var aggs = Vector(
       count(lit(1)).as("_rows"),
       min(col(TsCol)).as("_start"),
@@ -65,38 +87,38 @@ object Reporting {
     if (!knownDistinctTs) aggs :+= countDistinct(col(TsCol)).as("_dts")
     aggs ++= dataCols.map(c =>
       sum(when(col(c).isNull, 1).otherwise(0)).as(s"_nan_$c"))
-    if (hasHL) {
+    if (cols.contains("HIGH") && cols.contains("LOW")) {
       val rng = col("HIGH") - col("LOW")
       aggs :+= avg(rng).as("_mean_range")
       aggs :+= max(rng).as("_max_range")
     }
-    // exact CLOSE median, two implementations sharing the one agg pass:
-    //  - below ExactMedianRowThreshold: the median() aggregate —
-    //    partial-aggregated value counts merged on one reducer; fine while
-    //    the distinct-value map stays small
-    //  - above it: ExactMedian's histogram selection — median() merges
-    //    EVERY distinct value through one reducer (unbounded state on a
-    //    100 TB column), so large frames splice count/min/finite-max/NaN
-    //    stats into this same agg and locate the middle ranks with
-    //    fixed-size follow-up jobs
-    // provisional, from the caller-claimed TOTAL row count — the real gate
-    // is the non-null CLOSE count (_cn), known only after the agg runs, so
-    // frames claimed large get the cheap histogram stat columns here and
-    // the final histogram-vs-median() choice is made post-agg
-    val maybeExactMedian = hasClose &&
-      knownRows.exists(_ > ExactMedianRowThreshold)
-    if (hasClose) {
+    if (cols.contains("CLOSE")) {
       aggs :+= min(col("CLOSE")).as("_cmin")
       aggs :+= max(col("CLOSE")).as("_cmax")
       aggs :+= count(col("CLOSE")).as("_cn")
-      if (maybeExactMedian) {
+      if (rowBound.exists(_ <= ExactMedianRowThreshold))
+        aggs :+= median(col("CLOSE")).as("_cmed")
+      else {
         val cd = col("CLOSE").cast("double")
         aggs :+= max(when(isnan(cd), lit(null)).otherwise(cd)).as("_cmaxf")
         aggs :+= sum(when(isnan(cd), 1L).otherwise(0L)).as("_cnan")
-      } else aggs :+= median(col("CLOSE")).as("_cmed")
+      }
     }
-    val r = Timing.timed("qr_profile_agg")(
-      df.agg(aggs.head, aggs.tail: _*).collect()(0))
+    aggs
+  }
+
+  /** The quality report from `r`, a row of [[profileAggs]] over `df`; runs
+    * only the SMA summaries and, on the histogram path, ExactMedian's jobs.
+    */
+  def fromProfile(df: DataFrame, r: Row,
+                  computeIndicators: Boolean = true,
+                  smaWindows: Seq[Int] = Seq(10, 50),
+                  partitionCols: Seq[String] = Nil,
+                  knownDistinctTs: Boolean = false): ListMap[String, Any] = {
+    val cols = df.columns.filterNot(_ == Readers.FileOrderCol).toSeq
+    val dataCols = cols.filterNot(_ == TsCol)
+    val hasHL = cols.contains("HIGH") && cols.contains("LOW")
+    val hasClose = cols.contains("CLOSE")
 
     def opt[T](name: String): Option[T] =
       if (r.isNullAt(r.fieldIndex(name))) None else Some(r.getAs[T](name))
@@ -123,20 +145,19 @@ object Reporting {
     if (hasClose && r.getAs[Long]("_cn") > 0) {
       val cmin = r.getAs[Double]("_cmin")
       val cmax = r.getAs[Double]("_cmax")
+      val cn = r.getAs[Long]("_cn")
       val cmed =
-        if (maybeExactMedian) {
-          if (r.getAs[Long]("_cn") > ExactMedianRowThreshold)
-            graft.functions.ExactMedian.median(df, "CLOSE",
-              n = r.getAs[Long]("_cn"), lo = cmin,
-              hiFinite = opt[Double]("_cmaxf").getOrElse(Double.NaN),
-              nNaN = r.getAs[Long]("_cnan")).getOrElse(Double.NaN)
-          else
-            // the frame is large but its non-null CLOSE count is below the
-            // crossover: one small median() job (merge state bounded by
-            // _cn distinct values) beats the histogram path's two
-            // full-frame selection scans
-            df.agg(median(col("CLOSE"))).collect()(0).getDouble(0)
-        } else r.getAs[Double]("_cmed")
+        if (r.schema.fieldNames.contains("_cmed")) r.getAs[Double]("_cmed")
+        else if (cn > ExactMedianRowThreshold)
+          graft.functions.ExactMedian.median(df, "CLOSE", n = cn, lo = cmin,
+            hiFinite = opt[Double]("_cmaxf").getOrElse(Double.NaN),
+            nNaN = r.getAs[Long]("_cnan")).getOrElse(Double.NaN)
+        else
+          // the bound was unknown or large but the non-null CLOSE count is
+          // below the crossover: one small median() job (merge state
+          // bounded by _cn distinct values) beats the histogram path's two
+          // full-frame selection scans
+          df.agg(median(col("CLOSE"))).collect()(0).getDouble(0)
       val ratios =
         if (cmed != 0.0) Some((cmax / cmed, cmin / cmed)) else None
       val suspicious = ratios.exists { case (rx, rn) => rx > 100 || rn < 0.01 }
@@ -252,14 +273,17 @@ object Reporting {
     val seeds = carries.toMap
 
     // pass 2: seeded ring scan, per-(partition, series) partials —
-    // primitive ring slots (value + present), no per-row allocation
+    // primitive ring slots (value + present), no per-row allocation. Each
+    // emitted mean sums its window's slots oldest to newest (the windowed
+    // avg's own order), never a running sum: a running sum's rounding
+    // carries the series' history since the partition start, so the same
+    // row would read differently under another range partitioning.
     val partials: Array[SmaPartial] = inRdd.mapPartitionsWithIndex { (pid, it) =>
       val acc = scala.collection.mutable.ArrayBuffer.empty[SmaPartial]
       val k = ws.length
       var keyInt: Array[Any] = null
       val ringV = Array.fill(k)(new Array[Double](maxW))
       val ringP = Array.fill(k)(new Array[Boolean](maxW))
-      val sums = new Array[Double](k); val counts = new Array[Int](k)
       val nans = new Array[Long](k)
       val mins = new Array[Double](k); val maxs = new Array[Double](k)
       val lasts = new Array[java.lang.Double](k)
@@ -270,15 +294,21 @@ object Reporting {
         var j = 0
         while (j < k) {
           val w = ws(j)
+          val rv = ringV(j); val rp = ringP(j)
           val slot = (n % w).toInt
-          if (ringP(j)(slot)) { sums(j) -= ringV(j)(slot); counts(j) -= 1 }
-          ringV(j)(slot) = v
-          ringP(j)(slot) = present
-          if (present) { sums(j) += v; counts(j) += 1 }
+          rv(slot) = v
+          rp(slot) = present
           if (emit) {
-            if (counts(j) == 0) nans(j) += 1
+            // slots (n+1) % w .. n % w run oldest to newest
+            var sum = 0.0; var cnt = 0; var i = 1
+            while (i <= w) {
+              val sl = ((n + i) % w).toInt
+              if (rp(sl)) { sum += rv(sl); cnt += 1 }
+              i += 1
+            }
+            if (cnt == 0) nans(j) += 1
             else {
-              val sma = sums(j) / counts(j)
+              val sma = sum / cnt
               if (tsPresent) { lasts(j) = sma; lastTs(j) = ts }
               if (sma < mins(j)) mins(j) = sma
               if (sma > maxs(j)) maxs(j) = sma
@@ -299,7 +329,6 @@ object Reporting {
         if (!sameKey(r, keyInt, kIdx, types)) {
           flush(); keyInt = keyOf(r, kIdx, types)
           ringP.foreach(a => java.util.Arrays.fill(a, false))
-          java.util.Arrays.fill(sums, 0.0); java.util.Arrays.fill(counts, 0)
           java.util.Arrays.fill(nans, 0L)
           java.util.Arrays.fill(mins, Double.MaxValue)
           java.util.Arrays.fill(maxs, Double.MinValue)

@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * The transform graph stays lazy end-to-end; the normalized frame is
   * cached before the multi-timeframe fan-out so the rename/cast/tz/dedup
-  * work executes once, not once per timeframe.
+  * work executes once, not once per timeframe. The job that fills that
+  * cache also yields the output names, the quality profile and Normalize's
+  * observed report counters.
   */
 object Runner {
 
@@ -57,15 +59,19 @@ object Runner {
   /** O22: symbol inference — first value of a symbol-ish column, else the
     * basename prefix before '_' (src/run.py:31-49).
     */
-  def inferSymbol(df: DataFrame, fallback: String): String = {
-    val candidates = Set("symbol", "ticker", "pair", "instrument", "sym")
-    df.columns.find(c => candidates.contains(c.toLowerCase)) match {
+  def inferSymbol(df: DataFrame, fallback: String): String =
+    symbolColumn(df) match {
       case Some(c) =>
         df.select(col(c)).filter(col(c).isNotNull).limit(1)
           .collect().headOption.map(_.get(0).toString.toUpperCase)
           .getOrElse(fallbackSymbol(fallback))
       case None => fallbackSymbol(fallback)
     }
+
+  /** The column [[inferSymbol]] reads: the first symbol-ish column. */
+  private def symbolColumn(df: DataFrame): Option[String] = {
+    val candidates = Set("symbol", "ticker", "pair", "instrument", "sym")
+    df.columns.find(c => candidates.contains(c.toLowerCase))
   }
 
   private def fallbackSymbol(basename: String): String =
@@ -91,20 +97,45 @@ object Runner {
       exports: Seq[StageResult],
       errors: Seq[(String, String)])
 
-  /** O24: process one input frame end-to-end (src/run.py:60-253). */
+  /** O24: process one input frame end-to-end (src/run.py:60-253).
+    *
+    * `inputRows` is an upper bound on the input's rows known before any
+    * job (`runFile` passes the reader's clean row count): it picks the
+    * quality report's CLOSE-median implementation inside the one
+    * cache-materializing job (see `Reporting.profileAggs`).
+    *
+    * Plan shapes are the cost at small inputs: every distinct plan is
+    * compiled by whole-stage codegen, and Spark's generated-class cache is
+    * a Guava LRU of 100 entries in four segments of ~25, keyed on (thread
+    * context class loader, source), so a class compiled on the driver and
+    * on an executor thread is two entries. Each per-file plan this method
+    * does not need (a symbol probe, report aggregates, anchor and count
+    * aggregates) is a set of classes the next file recompiles once the
+    * working set overflows that cache. The reports therefore ride jobs the
+    * pipeline runs anyway: the normalize counters are an observation on
+    * the materializing job, the quality profile folds into its aggregate,
+    * and the symbol of a frame with its own SYMBOL column is observed too.
+    */
   def processDataFrame(spark: SparkSession, input: DataFrame,
                        cfg: GraftConfig, sourceTz: Option[String],
                        basename: String, outDir: String,
-                       computeReports: Boolean = true): RunResult = {
+                       computeReports: Boolean = true,
+                       inputRows: Option[Long] = None): RunResult = {
 
     var errors = Vector.empty[(String, String)]
 
-    // symbol inference + injection (src/run.py:304-319)
-    val symbol = inferSymbol(input, basename)
+    // symbol inference + injection (src/run.py:304-319). A frame whose
+    // symbol column is its own SYMBOL takes the symbol from Normalize's
+    // observation (its first non-null value in file order, as the probe
+    // would read it) — no probe query.
+    val ownSymbol = input.columns.exists(_.equalsIgnoreCase("SYMBOL"))
+    val observeSymbol = computeReports &&
+      symbolColumn(input).exists(_.equalsIgnoreCase("SYMBOL"))
+    val probedSymbol =
+      if (observeSymbol) None else Some(inferSymbol(input, basename))
     val injected =
-      if (input.columns.exists(_.equalsIgnoreCase("SYMBOL")))
-        input.withColumn("SYMBOL", upper(col("SYMBOL")))
-      else input.withColumn("SYMBOL", lit(symbol))
+      if (ownSymbol) input.withColumn("SYMBOL", upper(col("SYMBOL")))
+      else input.withColumn("SYMBOL", lit(probedSymbol.get))
 
     // every window/join/scan below is keyed on the series column — a
     // multi-symbol frame never serializes through one task (the injected
@@ -133,11 +164,19 @@ object Runner {
     var claimed: Option[String] = None
     try {
       // The materializing job is one aggregate over the whole cache: its
-      // count doubles as the post-dedup count for the duplicates report and
-      // its stamp extent names the outputs (no separate count or min/max job).
-      val extent = timed("materialize_cache")(
-        ndf.agg(count(lit(1)), min(col(TsCol)), max(col(TsCol))).collect()(0))
-      val postRows = extent.getLong(0)
+      // row count and stamp extent name the outputs, with reports on it is
+      // the quality report's profile too, and it completes Normalize's
+      // counter observation — no separate count, extent, profile or
+      // report job.
+      val ts = col(TsCol)
+      val aggs =
+        if (computeReports)
+          Reporting.profileAggs(ndf, knownDistinctTs = true, rowBound = inputRows)
+        else Seq(count(lit(1)).as("_rows"), min(ts).as("_start"),
+          max(ts).as("_end"))
+      val profile = timed("materialize_cache")(
+        ndf.agg(aggs.head, aggs.tail: _*).collect()(0))
+      val postRows = profile.getAs[Long]("_rows")
       // defeated-policy tripwire (ADVICE r15): a LogicalRDD-bridged lineage
       // has no plan size estimate, so the persist above silently kept
       // MEMORY_AND_DISK. Now that the count has run we have a REAL row
@@ -160,9 +199,13 @@ object Runner {
           s", est bytes: ${ndfEstBytes.getOrElse(-1L)}" +
           s", level: ${ndf.storageLevel.description}")
 
+      val symbol = probedSymbol.getOrElse(
+        normalized0.firstKeys.get("SYMBOL").map(_.toString.toUpperCase)
+          .getOrElse(fallbackSymbol(basename)))
       val timeframes = if (cfg.timeframes.nonEmpty) cfg.timeframes else Seq("1T")
-      val baseName = outputBasename(symbol, extent.getTimestamp(1),
-        extent.getTimestamp(2))
+      val baseName = outputBasename(symbol,
+        profile.getAs[java.sql.Timestamp]("_start"),
+        profile.getAs[java.sql.Timestamp]("_end"))
       claimOutputs(baseName)
       claimed = Some(baseName)
 
@@ -175,24 +218,12 @@ object Runner {
       // written once all chains are done: one block per file, in timeframe
       // order.
       implicit val ec: ExecutionContext = driverPool
-      // the normalization-report aggregation reads the cached pre-dedup frame
-      // — overlap it with the timeframe chains; the source cache is released
-      // only after the agg has run (Normalize's deferred-report contract)
-      val normReportF: Future[ListMap[String, Any]] =
-        if (computeReports) Future {
-          val r = timed("normalize_report")(
-            normalized0.reportWithPostCount(postRows))
-          normalized0.unpersistSource()
-          r
-        }
-        else { normalized0.unpersistSource()
-          Future.successful(ListMap.empty[String, Any]) }
-      // the QA report reads only the cached frame — overlap it with the
-      // timeframe chains
+      // the QA report's remaining work (the SMA scans) reads only the
+      // cached frame — overlap it with the timeframe chains
       val qualityF: Future[ListMap[String, Any]] =
         if (computeReports) Future(timed("quality_report")(
-          Reporting.dataQualityReport(ndf, partitionCols = seriesKeys,
-            knownDistinctTs = true, knownRows = Some(postRows))))
+          Reporting.fromProfile(ndf, profile, partitionCols = seriesKeys,
+            knownDistinctTs = true)))
         else Future.successful(ListMap.empty[String, Any])
       // Resample mode (O26 `resampleMode`, SURVEY §7.3). "correct" (default):
       // ONE gap repair at the finest configured rule, then every timeframe is
@@ -230,8 +261,9 @@ object Runner {
           baseRepaired = Some(df)
           // materialize BEFORE the fan-out: four chains read this cache
           // concurrently, and racing an unmaterialized cache serializes them
-          // all on the partition lock
-          timed(s"repair_base_$rule")(df.count())
+          // all on the partition lock. A pass over the cached plan's own RDD
+          // fills it without an aggregate plan to compile.
+          timed(s"repair_base_$rule")(df.queryExecution.toRdd.count())
           true
         } catch { case e: Exception =>
           errors :+= s"repair_base_$rule" -> e.getMessage
@@ -243,15 +275,11 @@ object Runner {
           val (src, onGrid) =
             if (correctMode) (baseRepaired.getOrElse(ndf), baseRule.contains(tf))
             else cfg.gapPolicy match {
+              // not cached: the export's one write is its only reader
               case Some(gp) =>
-                val r = Gaps.repairGaps(ndf, tf, gp.useFfillFor,
+                (Gaps.repairGaps(ndf, tf, gp.useFfillFor,
                   gp.interpolatePrices, gp.shortGapMinutes,
-                  partitionCols = seriesKeys, computeReport = false,
-                  cacheResult = true, approxResultBytes = ndfEstBytes).df
-                // materialize here, timed as the repair stage, so the
-                // export's write reads a hot cache
-                timed(s"repair_$tf")(r.count())
-                (r, true)
+                  partitionCols = seriesKeys, computeReport = false).df, true)
               case None => (ndf, false)
             }
           // input on the target bucket grid => one row per bucket => the
@@ -271,7 +299,6 @@ object Runner {
               knownDistinctTs = true,
               writeMode = cfg.writeMode,
               rowGroupSize = cfg.rowGroupSize))
-          if (!correctMode && !(src eq ndf)) src.unpersist()
           (StageResult(name, report("rows").asInstanceOf[Long], path), report)
         }
       }
@@ -292,7 +319,7 @@ object Runner {
         catch { case e: Exception => errors :+= "quality_report" -> e.getMessage
           ListMap.empty[String, Any] }
       val normReport =
-        try Await.result(normReportF, Duration.Inf)
+        try timed("normalize_report")(normalized0.report)
         catch { case e: Exception => errors :+= "normalize_report" -> e.getMessage
           ListMap.empty[String, Any] }
       if (computeReports && cfg.saveReports)
@@ -304,7 +331,6 @@ object Runner {
       claimed.foreach(releaseOutputs)
       baseRepaired.foreach(_.unpersist())
       ndf.unpersist()
-      normalized0.unpersistSource()
     }
   }
 
@@ -376,7 +402,8 @@ object Runner {
             ListMap.empty, Nil, Nil)
         else
           processDataFrame(spark, r.df, cfg, cfg.sourceTzDefault,
-            r.filename, cfg.processedPath)
+            r.filename, cfg.processedPath,
+            inputRows = Some(r.meta("rows").asInstanceOf[Long]))
       catch { case e: Exception =>
         RunResult(fallbackSymbol(r.filename), ListMap.empty, ListMap.empty,
           Nil, Seq("file" -> e.getMessage)) }

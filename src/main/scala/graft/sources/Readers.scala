@@ -69,8 +69,9 @@ object Readers {
     * cache build parses every field once (caching materializes whole rows,
     * so the parser converts every column and populates the corrupt column
     * regardless of downstream pruning — which also satisfies Spark's
-    * corrupt-column-only query restriction), one aggregate that fills it
-    * takes both the total and the corrupt count, and the RETURNED frame's first materialization reads it too
+    * corrupt-column-only query restriction), one RDD pass that fills it
+    * takes both the total and the corrupt count, and the RETURNED frame's
+    * first materialization reads it too
     * — the caller drops it via `ReadResult.release()` afterwards. The
     * returned frame filters on the corrupt column behind an RDD barrier:
     * the barrier references every field, so the row set is identical under
@@ -102,13 +103,20 @@ object Readers {
 
   /** The clean rows of a cached PERMISSIVE scan, behind the
     * projection-proof barrier, with the total and corrupt counts from ONE
-    * aggregate — the job that fills the cache, and the only parse.
+    * pass over the scan's RDD — the job that fills the cache, and the only
+    * parse.
     */
   private def withoutCorruptRows(spark: SparkSession, corruptScan: DataFrame,
                                  path: String, format: String): ReadResult = {
-    val counts = corruptScan
-      .agg(count(lit(1)), count(col(CorruptCol))).collect()(0)
-    val (totalRows, corruptRows) = (counts.getLong(0), counts.getLong(1))
+    // (total, corrupt) per partition from one pass over the scan's own RDD:
+    // the job fills the cache without an aggregate plan to compile
+    val corruptIdx = corruptScan.schema.fieldIndex(CorruptCol)
+    val (totalRows, corruptRows) = corruptScan.queryExecution.toRdd
+      .mapPartitions { it =>
+        var n = 0L; var bad = 0L
+        while (it.hasNext) { if (!it.next().isNullAt(corruptIdx)) bad += 1; n += 1 }
+        Iterator((n, bad))
+      }.collect().foldLeft((0L, 0L)) { case ((a, b), (n, c)) => (a + n, b + c) }
     val clean = corruptScan.filter(col(CorruptCol).isNull).drop(CorruptCol)
     val df = spark
       .createDataFrame(clean.rdd, clean.schema) // projection-proof barrier

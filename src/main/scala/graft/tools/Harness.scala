@@ -155,6 +155,15 @@ object Harness {
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
 
+  /** Classes this JVM's whole-stage codegen has compiled: the count of
+    * Spark's generated-class cache misses. A per-run delta well above the
+    * plans a run builds means the working set overflows that cache (a
+    * Guava LRU of 100 entries in four segments of ~25), so every run
+    * recompiles what the previous one compiled.
+    */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** The middle element (upper middle for an even count). */
   def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 

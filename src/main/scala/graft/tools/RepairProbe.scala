@@ -65,8 +65,8 @@ object RepairProbe {
   // swung 3× between identical reps from exactly that session debt.
   private final case class GridRec(rows: Long, walls: Seq[Double],
                                    stageRuns: Seq[Map[String, Double]],
-                                   gcsMs: Seq[Long], heapsMb: Seq[Long],
-                                   leakedRdds: Int) {
+                                   gcsMs: Seq[Long], compiles: Seq[Long],
+                                   heapsMb: Seq[Long], leakedRdds: Int) {
     val wallMed = Harness.median(walls)
     val stagesMed = Harness.perStage(stageRuns)(Harness.median)
     val stagesMin = Harness.perStage(stageRuns)(_.min)
@@ -112,6 +112,7 @@ object RepairProbe {
             f""""stages_min":${stagesJson(r.stagesMin)},""" +
             f""""walls":${Harness.jsonSecs(r.walls)},""" +
             f""""gc_ms":${r.gcsMs.mkString("[", ",", "]")},""" +
+            f""""codegen_compiles":${r.compiles.mkString("[", ",", "]")},""" +
             f""""heap_after_gc_mb":${r.heapsMb.mkString("[", ",", "]")},""" +
             f""""leaked_rdds":${r.leakedRdds}}"""
         }.mkString("{", ",", "}")
@@ -144,10 +145,13 @@ object RepairProbe {
     println(s"[probe] rows $gridRows shuffle partitions = ${h.partsFor(gridRows)}")
     val runs = (1 to reps).map { i =>
       val g0 = Harness.gcMillis()
+      val c0 = Harness.codegenCompiles()
       val (wall, stages) = rep(h, raw, gridRows, timeframes, reports)
       val gcDelta = Harness.gcMillis() - g0
+      val compiled = Harness.codegenCompiles() - c0
       println(f"[probe] ${timeframes.mkString(",")} rep $i rows $gridRows " +
-        f"wall $wall%.2f s gc $gcDelta ms  " + stages.toSeq.sortBy(_._1)
+        f"wall $wall%.2f s gc $gcDelta ms compiles $compiled  " +
+        stages.toSeq.sortBy(_._1)
         .map { case (n, s) => f"$n=$s%.2f" }.mkString(" "))
       System.gc()
       val rt = Runtime.getRuntime
@@ -157,10 +161,10 @@ object RepairProbe {
       println(f"[probe] post-rep $i: heap used after gc $heapMb MB, " +
         f"persistent RDDs ${rdds.size} " +
         rdds.values.take(5).map(_.name).mkString("[", ",", "]"))
-      (wall, stages, gcDelta, heapMb, rdds.size)
+      (wall, stages, gcDelta, compiled, heapMb, rdds.size)
     }
     Harness.delete(raw)
     GridRec(gridRows, runs.map(_._1), runs.map(_._2), runs.map(_._3),
-      runs.map(_._4), runs.map(_._5).max)
+      runs.map(_._4), runs.map(_._5), runs.map(_._6).max)
   }
 }

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.StructType
   * would re-box every field of every row through the encoder — measured
   * as tens of seconds of pure GC per pipeline at the 60M-row probe scale.
   *
-  * Keep this object MINIMAL: one constructor, no logic. Anything clever
-  * belongs on the graft side of the boundary.
+  * Keep this object MINIMAL: one constructor and one listener-bus drain,
+  * no logic. Anything clever belongs on the graft side of the boundary.
   */
 object GraftSqlBridge {
 
@@ -33,4 +33,12 @@ object GraftSqlBridge {
                               rdd: RDD[InternalRow],
                               schema: StructType): DataFrame =
     spark.asInstanceOf[ClassicSession].internalCreateDataFrame(rdd, schema)
+
+  /** Waits (at most `timeoutMs`) until every event posted so far has been
+    * delivered to the session's listeners — after an action returns, its
+    * `Dataset.observe` results are then either delivered or were never
+    * produced.
+    */
+  def drainListenerBus(spark: SparkSession, timeoutMs: Long = 10000L): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 }

@@ -142,4 +142,49 @@ class NormalizeSpec extends SparkSpec {
       .apply("unmatched").asInstanceOf[Seq[String]]
     assert(unmatched.contains("custom_col"))
   }
+
+  test("observed report: equal whether df, unsorted or nothing ran first") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graft.GraftSqlBridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // a duplicate stamp, an unparseable stamp and a non-numeric CLOSE
+    val rows = Seq(
+      ("2024-01-01 00:00:00", "1.0", "1.2", "0.9", "1.1"),
+      ("2024-01-01 00:00:00", "9.0", "9.2", "8.9", "9.1"),
+      ("not a time", "1.1", "1.3", "1.0", "1.2"),
+      ("2024-01-01 00:01:00", "1.1", "1.3", "1.0", "abc"),
+      ("2024-01-01 00:02:00", "1.2", "1.4", "1.1", "1.3"))
+    val queries = new java.util.concurrent.atomic.AtomicInteger()
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { queries.incrementAndGet(); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = { queries.incrementAndGet(); () }
+    }
+    /** The report after `before` ran on a fresh result, and the queries
+      * the report itself ran. */
+    def report(before: Normalize.Result => Unit): (ListMap[String, Any], Int) = {
+      val res = Normalize(csvDf(rows), cmap, required, sourceTz = None)
+      before(res)
+      GraftSqlBridge.drainListenerBus(spark)
+      spark.listenerManager.register(ql)
+      queries.set(0)
+      try {
+        val r = res.report
+        GraftSqlBridge.drainListenerBus(spark)
+        (r, queries.get)
+      } finally spark.listenerManager.unregister(ql)
+    }
+    val (fresh, freshRuns) = report(_ => ())
+    // df's global sort samples its input in a job of its own: an
+    // observation on df would count that job's rows too
+    val (afterDf, afterDfRuns) = report(_.df.collect())
+    val (afterUnsorted, afterUnsortedRuns) = report(_.unsorted.collect())
+    assert(afterDf == fresh && afterUnsorted == fresh)
+    assert((freshRuns, afterDfRuns, afterUnsortedRuns) == (1, 1, 0),
+      "the report runs unsorted once unless an action on it already did")
+    def sub(k: String) = fresh(k).asInstanceOf[ListMap[String, Any]]
+    assert(sub("duplicates")("removed_duplicates") == 1L)
+    assert(sub("datetime")("coerced_rows") == 1L)
+    assert(sub("dtypes")("numeric_coercions") ==
+      ListMap("OPEN" -> 0L, "HIGH" -> 0L, "LOW" -> 0L, "CLOSE" -> 1L))
+  }
 }

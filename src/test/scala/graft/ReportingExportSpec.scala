@@ -44,6 +44,22 @@ class ReportingExportSpec extends SparkSpec {
     assert(rep("notes").asInstanceOf[Seq[String]].isEmpty)
   }
 
+  test("SMA summaries: identical, unrounded, over 1 and over 4 range partitions") {
+    // inexact decimals and scattered nulls: a running sum's rounding would
+    // depend on where each range partition starts
+    val df = (0 until 2000).map { i =>
+      (Timestamp.from(Instant.parse("2024-01-01T00:00:00Z").plusSeconds(60L * i)),
+        if (i % 97 == 5) None else Some(1.1 + ((i * 7919) % 1013) * 1e-5 / 3))
+    }.toDF("TIMESTAMP", "CLOSE")
+    def sma(parts: Int) = Reporting.dataQualityReport(
+      RangeLayout(df, Nil, partitions = Some(parts)), smaWindows = Seq(10, 50))
+      .apply("indicators")
+    val one = sma(1)
+    assert(sma(4) == one)
+    // and equal to the windowed avg, which sums each frame in row order
+    assert(one == SmaOracle.summaries(df, Seq(10, 50), Nil))
+  }
+
   test("nans and dups surface in report + notes") {
     val df = Seq(
       (ts(0), Some(1.0)), (ts(0), Some(2.0)), (ts(1), Option.empty[Double]))

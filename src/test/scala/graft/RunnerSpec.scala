@@ -365,8 +365,8 @@ class RunnerSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_residue").toString
     val cfg = GraftConfig(rawPath = out, processedPath = out,
       timeframes = Seq("1T", "5T"), partitionCols = Nil)
-    // reports on: the quality report's SMA scan runs after the normalize
-    // report has released Normalize's source cache
+    // reports on: the quality report's SMA scan and Normalize's observed
+    // counters read only the normalized cache
     val (r, residue) =
       try persistResidue(Runner.processDataFrame(spark, input, cfg, None,
         "EURUSD_residue", out))(_ => Set.empty)
@@ -374,6 +374,57 @@ class RunnerSpec extends SparkSpec {
     assert(r.errors.isEmpty, s"errors: ${r.errors}")
     assert(r.exports.map(_.rows) == Seq(600L, 120L))
     assert(residue.isEmpty, s"RDDs left persisted: $residue")
+  }
+
+  test("query census: one processDataFrame runs no probe, report or anchor query") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graft.GraftSqlBridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val (raw, out) = batchDirs("graft_census", Seq("EURUSD"), 90)
+    val cfg = GraftConfig(rawPath = raw.toString, processedPath = out)
+    val read = graft.sources.Readers.read(spark,
+      raw.resolve("EURUSD_2024.csv").toString)
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { queries.add(qe); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = { queries.add(qe); () }
+    }
+    val jl = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    GraftSqlBridge.drainListenerBus(spark)
+    spark.listenerManager.register(ql)
+    spark.sparkContext.addSparkListener(jl)
+    val r = try Runner.processDataFrame(spark, read.df, cfg, None, read.filename,
+      out, inputRows = Some(read.meta("rows").asInstanceOf[Long]))
+    finally {
+      GraftSqlBridge.drainListenerBus(spark)
+      spark.listenerManager.unregister(ql)
+      spark.sparkContext.removeSparkListener(jl)
+      read.release()
+    }
+    assert(r.errors.isEmpty, s"errors: ${r.errors}")
+    assert(r.symbol == "EURUSD" && r.exports.map(_.rows) == Seq(90L, 18L, 6L, 2L))
+    assert(r.normalizationReport("duplicates") ==
+      scala.collection.immutable.ListMap("removed_duplicates" -> 0L))
+    val plans = queries.asScala.toSeq.map(_.analyzed)
+    val aggAliases = plans.flatMap(_.collect {
+      case a: Aggregate => a.aggregateExpressions.map(_.name)
+    }.flatten)
+    // Normalize's counters and FastFill's anchors ride other jobs
+    assert(!aggAliases.exists(Set("_parse_nat", "_a")), aggAliases)
+    // no symbol probe (a one-row limit)
+    val limits = plans.flatMap(_.collect { case l: GlobalLimit => l.limitExpr.eval() })
+    assert(!limits.contains(1), plans.mkString("\n"))
+    // one materializing aggregate (profile + observed counters), then per
+    // timeframe one export write and one content-hash read; the jobs add
+    // the reader-free RDD passes (base fill, anchors, seeds, SMA) and the
+    // range exchanges' sampling
+    assert((plans.size, jobs.get) == (9, 27), plans.mkString("\n---\n"))
   }
 
   test("one failing file or base repair leaves the other files to finish") {
