@@ -85,7 +85,7 @@ object Dedup {
     val toks = split(trim(lower(col(textCol))), "\\s+")
     df.select((col(idCol).as("id") +:
       call_function("minhash_sig",
-        transform(toks, t => pmod(xxhash64(t), lit(P))),
+        call_function("token_hashes", toks, lit(P)),
         lit(numHashes), lit(shingleSize)).as("minhash") +:
       carry.map(col)): _*)
   }
@@ -98,13 +98,12 @@ object Dedup {
                   bands: Int, shingleSize: Int,
                   carry: Seq[String] = Nil): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide evenly into bands")
-    val rows = numHashes / bands
-    val bandHashes = array((0 until bands).map { b =>
-      xxhash64(concat_ws(",",
-        slice(col("minhash"), b * rows + 1, rows)), lit(b))
-    }: _*)
+    // band b hashes signature positions [b·rows, (b+1)·rows) exactly as
+    // xxhash64(concat_ws(",", slice(minhash, b·rows + 1, rows)), b) did —
+    // persisted LSH indexes store these hashes (plans.MinHashBandHashes)
     minHashSignatures(df, idCol, textCol, numHashes, shingleSize, carry)
-      .withColumn("bands", bandHashes)
+      .withColumn("bands", call_function("minhash_band_hashes",
+        col("minhash"), lit(bands), lit(numHashes / bands)))
   }
 
   /** LSH candidate pairs with estimated Jaccard (fraction of agreeing
@@ -138,8 +137,7 @@ object Dedup {
     // computes the signature aggregation once.
     a.join(b, Seq("band", "bh")).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(size(filter(zip_with(col("ma"), col("mb"),
-          (x, y) => when(x === y, 1).otherwise(0)), v => v === 1))
+        round(call_function("agree_count", col("ma"), col("mb"))
           .cast("double") / numHashes, 4).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
       .dropDuplicates("id_a", "id_b")
@@ -221,8 +219,7 @@ object Dedup {
     idx.join(probe, Seq("band", "bh"))
       .filter(col("probe_id") =!= col("id"))
       .select(col("probe_id"), col("id").as("index_id"),
-        round(size(filter(zip_with(col("_pm"), col("minhash"),
-          (x, y) => when(x === y, 1).otherwise(0)), v => v === 1))
+        round(call_function("agree_count", col("_pm"), col("minhash"))
           .cast("double") / numHashes, 4).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
       .dropDuplicates("probe_id", "index_id")
@@ -285,7 +282,7 @@ object Dedup {
     val sh = docs.join(broadcast(candIds), col(idCol) === col("_vid"))
       .select(col("_vid"),
         call_function("shingle_hashes",
-          transform(vtoks, t => xxhash64(t)), lit(shingleSize)).as("sh"))
+          call_function("token_hashes", vtoks), lit(shingleSize)).as("sh"))
     val jacRaw = size(array_intersect(col("_sa"), col("_sb"))).cast("double") /
       size(array_union(col("_sa"), col("_sb")))
     // portable floor rounding (QueryUtils.fr's formula): identical op
@@ -722,25 +719,6 @@ object Dedup {
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
     }
 
-  /** End-to-end embedding-cosine near-duplicate dedup: semantic duplicates
-    * (translations re-crawled, templated rewrites, boilerplate with token
-    * edits) that survive MinHash because their TOKEN overlap is low while
-    * their embedding cosine is high.
-    *
-    * Chain (each stage an existing scale-shaped operator):
-    *  1. candidate pairs at `cosine ≥ threshold` — hyperplane-LSH bucketed
-    *     (`Similarity.nearDuplicates`: equi-join on (band, bits), never
-    *     all-pairs) unless the caller passes a pre-built pair frame with
-    *     (`id_a`, `id_b`) columns (exact bounded pairs in the gate query;
-    *     an IVF-bucketed pair set at production scale);
-    *  2. transitive closure via [[connectedComponents]] (auto-picks the
-    *     large-star/small-star rewrite under hot-cluster skew);
-    *  3. keeper = the component minimum id (the CC label), every other
-    *     member flagged `is_dup` — the same canonical-keeper rule as
-    *     [[exact]], so downstream anti-joins compose across dedup stages.
-    *
-    * @return one row per input id: (`idCol`, `component`, `is_dup`).
-    */
   /** Span-level exact substring dedup (Lee et al. 2022, "Deduplicating
     * Training Data Makes Language Models Better"): remove every token
     * covered by a length-`n` token window whose text occurs ≥ 2 times in
@@ -778,7 +756,7 @@ object Dedup {
       split(trim(lower(col(textCol))), "\\s+").as("_toks"))
     val grams = base.select(col(idCol),
       posexplode(call_function("shingle_hashes_pos",
-        transform(col("_toks"), t => xxhash64(t)), lit(n)))
+        call_function("token_hashes", col("_toks")), lit(n)))
         .as(Seq("_j", "_g")))
     val dup = grams.groupBy(col("_g")).agg(count(lit(1)).as("_c"))
       .filter(col("_c") >= 2).select(col("_g"))
@@ -850,6 +828,25 @@ object Dedup {
         coalesce(col("_dup"), lit(false)).as("is_dup"))
   }
 
+  /** End-to-end embedding-cosine near-duplicate dedup: semantic duplicates
+    * (translations re-crawled, templated rewrites, boilerplate with token
+    * edits) that survive MinHash because their TOKEN overlap is low while
+    * their embedding cosine is high.
+    *
+    * Chain (each stage an existing scale-shaped operator):
+    *  1. candidate pairs at `cosine ≥ threshold` — hyperplane-LSH bucketed
+    *     (`Similarity.nearDuplicates`: equi-join on (band, bits), never
+    *     all-pairs) unless the caller passes a pre-built pair frame with
+    *     (`id_a`, `id_b`) columns (exact bounded pairs in the gate query;
+    *     an IVF-bucketed pair set at production scale);
+    *  2. transitive closure via [[connectedComponents]] (auto-picks the
+    *     large-star/small-star rewrite under hot-cluster skew);
+    *  3. keeper = the component minimum id (the CC label), every other
+    *     member flagged `is_dup` — the same canonical-keeper rule as
+    *     [[exact]], so downstream anti-joins compose across dedup stages.
+    *
+    * @return one row per input id: (`idCol`, `component`, `is_dup`).
+    */
   def embeddingDedup(df: DataFrame, idCol: String, vecCol: String,
                      threshold: Double, pairs: Option[DataFrame] = None,
                      algorithm: String = "auto"): DataFrame = {

@@ -34,25 +34,20 @@ object Similarity {
   private def fr4(c: Column): Column = floor(c * 10000.0 + 0.5) / 10000.0
 
   /** Deterministic random hyperplanes (seed-fixed), dim x nBits. */
-  private def planes(dim: Int, nBits: Int): Seq[Seq[Double]] = {
+  private[graft] def planes(dim: Int, nBits: Int): Seq[Seq[Double]] = {
     val rnd = new scala.util.Random(7)
     Seq.fill(nBits)(Seq.fill(dim)(rnd.nextGaussian()))
   }
 
-  private def dotLit(v: Column, plane: Seq[Double]): Column =
-    aggregate(zip_with(v, array(plane.map(lit): _*), (x, y) => x * y),
-      lit(0.0), (acc, p) => acc + p)
-
-  /** Per-band sign-bit signatures for a vector column: `bands` longs, each
-    * packing `bitsPerBand` hyperplane signs.
+  /** Per-band sign-bit signatures for a vector column, as `array<bigint>`:
+    * `bands` words, each packing `bitsPerBand` hyperplane signs (the
+    * native `lsh_signatures` kernel, plans.HyperplaneSignatures).
     */
-  def lshSignatures(vec: Column, dim: Int, bands: Int, bitsPerBand: Int): Seq[Column] = {
-    val ps = planes(dim, bands * bitsPerBand)
-    (0 until bands).map { b =>
-      (0 until bitsPerBand).map { i =>
-        when(dotLit(vec, ps(b * bitsPerBand + i)) > 0, lit(1L << i)).otherwise(lit(0L))
-      }.reduce((x, y) => x.bitwiseOR(y))
-    }
+  def lshSignatures(s: org.apache.spark.sql.SparkSession, vec: Column, dim: Int,
+                    bands: Int, bitsPerBand: Int): Column = {
+    graft.plans.GraftExtensions.register(s)
+    call_function("lsh_signatures", vec,
+      typedlit(planes(dim, bands * bitsPerBand)), lit(bitsPerBand))
   }
 
   /** Exact brute-force cosine top-k: for each query vector, the k most
@@ -79,11 +74,10 @@ object Similarity {
   def lshNearPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                    threshold: Double, bands: Int = 8, bitsPerBand: Int = 8,
                    maxBucketSize: Int = 2000): DataFrame = {
-    val sigs = lshSignatures(col("emb"), dim, bands, bitsPerBand)
+    val sigs = lshSignatures(df.sparkSession, col("emb"), dim, bands, bitsPerBand)
     val exploded = df
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("emb"))
-      .select(col("id"), col("emb"),
-        posexplode(array(sigs: _*)).as(Seq("band", "bits")))
+      .select(col("id"), col("emb"), posexplode(sigs).as(Seq("band", "bits")))
     val bw = Window.partitionBy("band", "bits").orderBy("id")
     val capped = exploded.withColumn("_bn", row_number().over(bw))
       .filter(col("_bn") <= maxBucketSize).drop("_bn")
@@ -121,36 +115,66 @@ object Similarity {
   // --------------------------------------------------------------------
 
   /** A few Lloyd iterations of k-means over the (sampled) corpus, pure
-    * DataFrame ops: assign = broadcast-centroid argmin, update = groupBy
-    * avg. Deterministic: seeded sample for initialization.
-    */
-  /** Default 3 Lloyd iterations: each one is a full job + driver collect of
-    * k centroids (serial latency, not a scale cost — centroids are tiny);
+    * DataFrame ops: init = the first `k` training rows, each round one
+    * [[lloydUpdate]] (codegen argmin + per-(cluster, position) mean).
+    * Deterministic: seeded sample. A cluster that loses all its members
+    * keeps its previous centroid, so a corpus of at least `k` vectors
+    * always yields `k` centroids.
+    *
+    * Default 3 Lloyd iterations: each one is a full job + driver collect of
+    * k×dim means (serial latency, not a scale cost — centroids are tiny);
     * coarse-quantizer quality plateaus after 2-3 rounds for bucketing
     * purposes.
     */
   def trainCentroids(df: DataFrame, vecCol: String, k: Int,
                      iterations: Int = 3, sampleFraction: Double = 1.0): Seq[Seq[Double]] = {
-    val vecs = df.select(col(vecCol).cast("array<double>").as("v"))
+    require(k >= 1, s"k=$k must be at least 1")
+    val vecs = df.select(col(vecCol).cast("array<double>").as("_v"))
     val training =
       (if (sampleFraction < 1.0) vecs.sample(sampleFraction, seed = 42)
        else vecs).cache()
-    var centroids: Seq[Seq[Double]] =
-      training.limit(k).collect().map(_.getSeq[Double](0).toSeq).toSeq
-    for (_ <- 0 until iterations) {
-      val assigned = training.withColumn("c",
-        nearestCentroid(training.sparkSession, col("v"), centroids))
-      centroids = assigned
-        .groupBy("c")
-        .agg(transformAvg(col("v"), centroids.head.length).as("m"),
-          count(lit(1)).as("n"))
-        .collect()
-        .sortBy(_.getAs[Int]("c"))
-        .map(_.getSeq[Double](1).toSeq).toSeq
+    try {
+      var centroids: Seq[Seq[Double]] =
+        training.limit(k).collect().map(_.getSeq[Double](0).toSeq).toSeq
+      require(centroids.nonEmpty, "trainCentroids needs at least one vector")
+      for (_ <- 0 until iterations) {
+        val means = lloydMeans(training, centroids)
+        centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i)))
+      }
+      centroids
+    } finally {
+      training.unpersist()
+      ()
     }
-    training.unpersist()
-    centroids
   }
+
+  /** One Lloyd update step over the vector column `_v`, as a frame of
+    * (`_c`, `_p`, `_m`): the mean `_m` of position `_p` over the vectors
+    * whose nearest centroid is `_c`. ONE (cluster, position)-keyed
+    * aggregate over a `posexplode` — partial aggregation collapses it
+    * map-side, so the shuffle carries ≤ k·dim rows per task, where one
+    * `avg(v[i])` per position compiled into a ~270 KB mutable projection.
+    * Per (cluster, position) the sum runs over the same rows in the same
+    * order as that form, so the means are bit-identical to it. Vectors
+    * the argmin cannot place (null, or holding a null element) form the
+    * null `_c` group.
+    */
+  private[graft] def lloydUpdate(vecs: DataFrame,
+                                 centroids: Seq[Seq[Double]]): DataFrame =
+    vecs.withColumn("_c", nearestCentroid(vecs.sparkSession, col("_v"), centroids))
+      .select(col("_c"), posexplode(col("_v")).as(Seq("_p", "_x")))
+      .groupBy(col("_c"), col("_p"))
+      .agg(avg(col("_x")).as("_m"))
+
+  /** [[lloydUpdate]] collected: cluster → its mean vector, for every
+    * cluster that has members (k×dim doubles on the driver).
+    */
+  private def lloydMeans(vecs: DataFrame,
+                         centroids: Seq[Seq[Double]]): Map[Int, Seq[Double]] =
+    lloydUpdate(vecs, centroids).collect().toSeq
+      .filterNot(_.isNullAt(0))
+      .groupBy(_.getInt(0))
+      .map { case (c, rs) => c -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)) }
 
   /** Column: index of the nearest centroid by squared L2 (argmin).
     * Backed by the codegen'd `NearestCentroid` expression — one fused
@@ -162,40 +186,31 @@ object Similarity {
   def nearestCentroid(s: org.apache.spark.sql.SparkSession, vec: Column,
                       centroids: Seq[Seq[Double]]): Column = {
     graft.plans.GraftExtensions.register(s)
-    val codebook = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    call_function("nearest_centroid", vec, codebook)
+    call_function("nearest_centroid", vec, typedlit(centroids))
   }
 
-  /** Elementwise mean of an array column (for the k-means update step). */
-  private def transformAvg(vec: Column, dim: Int): Column =
-    array((0 until dim).map(i => avg(vec.getItem(i))): _*)
+  /** Column: the `nProbe` nearest centroid ids for query vector `qe`, as an
+    * array of equi-join keys — squared-L2 scored, ties to the lower index
+    * (the native `nearest_centroids` kernel, plans.NearestCentroids, which
+    * shares [[nearestCentroid]]'s distance loop).
+    */
+  private def probeListsCol(s: org.apache.spark.sql.SparkSession, qe: Column,
+                            centroids: Seq[Seq[Double]], nProbe: Int): Column = {
+    graft.plans.GraftExtensions.register(s)
+    call_function("nearest_centroids", qe, typedlit(centroids), lit(nProbe))
+  }
 
   /** IVF-bucketed top-k: corpus partitioned by nearest centroid; each query
     * probes its `nProbe` closest centroids and ranks exact cosine within
     * those buckets only.
-    */
-  /** `nProbe = nLists` probes every list — the result is then EXACTLY the
+    *
+    * `nProbe = nLists` probes every list — the result is then EXACTLY the
     * brute-force top-k (each corpus vector has one bucket and the probe set
     * covers all of them once), which is how the operator is oracle-checked;
     * smaller nProbe trades recall for probe cost (the production setting).
     * Training cost is controlled independently of probe correctness:
     * `sampleFraction`/`iterations` only shape centroid quality.
     */
-  /** Column: the `nProbe` nearest centroid ids for query vector `qe`, as an
-    * array of equi-join keys (squared-L2 scored, ties to the lower index via
-    * the (dist, idx) struct sort).
-    */
-  private def probeListsCol(qe: Column, centroids: Seq[Seq[Double]],
-                            nProbe: Int): Column = {
-    val scored = array(centroids.zipWithIndex.map { case (cen, i) =>
-      struct(
-        aggregate(zip_with(qe, array(cen.map(lit): _*),
-          (x, y) => (x - y) * (x - y)), lit(0.0), (acc, p) => acc + p).as("d"),
-        lit(i).as("i"))
-    }: _*)
-    transform(slice(array_sort(scored), 1, nProbe), s => s.getField("i"))
-  }
-
   def ivfTopK(queries: DataFrame, corpus: DataFrame, qIdCol: String,
               cIdCol: String, vecCol: String, k: Int,
               nLists: Int = 16, nProbe: Int = 4,
@@ -216,7 +231,8 @@ object Similarity {
       nearestCentroid(corpus.sparkSession, col("ce"), centroids))
     val q = queries.select(col(qIdCol).as("qid"),
         col(vecCol).cast("array<double>").as("qe"))
-      .withColumn("bucket", explode(probeListsCol(col("qe"), centroids, nProbe)))
+      .withColumn("bucket",
+        explode(probeListsCol(queries.sparkSession, col("qe"), centroids, nProbe)))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid"))
     val ranked = broadcast(q).join(c, Seq("bucket"))
       .filter(col("qid") =!= col("cid"))
@@ -317,7 +333,7 @@ object Similarity {
     val q = queries.select(col(qIdCol).as("qid"),
         col(vecCol).cast("array<double>").as("qe"))
       .withColumn("ivf_list",
-        explode(probeListsCol(col("qe"), centroids, nProbe)))
+        explode(probeListsCol(spark, col("qe"), centroids, nProbe)))
     // the union of probed list ids: ≤ nLists ints of metadata, never row
     // data — collected so the scan filter is a literal the catalog can
     // prune partitions with at planning time
@@ -412,7 +428,6 @@ object Similarity {
                       k: Int, iterations: Int): Seq[Seq[Double]] = {
     require(k >= 1, s"k=$k must be at least 1")
     require(iterations >= 0, s"iterations=$iterations must be non-negative")
-    val spark = df.sparkSession
     import org.apache.spark.storage.StorageLevel
     val vecs = df.select(col(idCol).cast("long").as("_id"),
         col(vecCol).cast("array<double>").as("_v"))
@@ -423,18 +438,9 @@ object Similarity {
         .collect().map(_.getSeq[Double](1).toSeq).toSeq
       require(centroids.nonEmpty, "kmeansCentroids needs at least one vector")
       for (_ <- 0 until iterations) {
-        val updated = vecs
-          .withColumn("_c", nearestCentroid(spark, col("_v"), centroids))
-          .select(col("_c"), posexplode(col("_v")).as(Seq("_p", "_x")))
-          .groupBy(col("_c"), col("_p"))
-          .agg(avg(col("_x")).as("_m"))
-          .groupBy(col("_c"))
-          .agg(transform(array_sort(collect_list(struct(col("_p"), col("_m")))),
-            e => e.getField("_m")).as("_centroid"))
-          .collect()
-          .map(r => r.getAs[Int]("_c") -> r.getSeq[Double](1).toSeq).toMap
+        val means = lloydMeans(vecs, centroids)
         centroids = centroids.zipWithIndex.map { case (prev, i) =>
-          updated.get(i).map(_.map(snap)).getOrElse(prev)
+          means.get(i).map(_.map(snap)).getOrElse(prev)
         }
       }
       centroids
@@ -466,7 +472,7 @@ object Similarity {
     val q = queries.select(col(qIdCol).cast("long").as("qid"),
       col(vecCol).cast("array<double>").as("qe"))
     val probes = q.withColumn("bucket",
-      explode(probeListsCol(col("qe"), centroids, nProbe)))
+      explode(probeListsCol(s, col("qe"), centroids, nProbe)))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid"))
     val ivf = broadcast(probes).join(c, Seq("bucket"))
       .filter(col("qid") =!= col("cid"))
@@ -722,7 +728,7 @@ object Similarity {
         .select(col(qIdCol).as("qid"),
           col(vecCol).cast("array<double>").as("qe"))
         .withColumn("ivf_list",
-          explode(probeListsCol(col("qe"), centroids, nProbe)))
+          explode(probeListsCol(spark, col("qe"), centroids, nProbe)))
         .select(col("qid"), col("ivf_list"))
       // codes of probed lists only — the pruned scan
       val codes = broadcast(probes).join(enc, Seq("ivf_list"))

@@ -26,6 +26,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.tzLocalizeDescriptor)
     ext.injectFunction(GraftExtensions.minhashSigDescriptor)
     ext.injectFunction(GraftExtensions.nearestCentroidDescriptor)
+    ext.injectFunction(GraftExtensions.nearestCentroidsDescriptor)
+    ext.injectFunction(GraftExtensions.lshSignaturesDescriptor)
+    ext.injectFunction(GraftExtensions.tokenHashesDescriptor)
+    ext.injectFunction(GraftExtensions.minhashBandHashesDescriptor)
+    ext.injectFunction(GraftExtensions.agreeCountDescriptor)
     ext.injectFunction(GraftExtensions.bloomMightContainDescriptor)
     ext.injectFunction(GraftExtensions.shingleHashesDescriptor)
     ext.injectFunction(GraftExtensions.stopwordLangCountsDescriptor)
@@ -77,16 +82,11 @@ object GraftExtensions {
     (children: Seq[Expression]) => {
       require(children.length == 3,
         "minhash_sig(wordHashes, numHashes, shingleSize)")
-      def lit(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
-            if v != null => v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"minhash_sig $what must be an integer literal, got $other")
-      }
       // array<bigint> cast at the boundary: misuse fails analysis, not
       // the executor (same contract as cosine/shingle_hashes)
       MinHashSignature(Cast(children.head, ArrayType(LongType)),
-        lit(children(1), "numHashes"), lit(children(2), "shingleSize"))
+        intLit(children(1), "minhash_sig numHashes"),
+        intLit(children(2), "minhash_sig shingleSize"))
     })
 
   private[plans] val nearestCentroidDescriptor
@@ -96,22 +96,70 @@ object GraftExtensions {
     (children: Seq[Expression]) => {
       require(children.length == 2,
         "nearest_centroid(vec, centroidsMatrix) takes two arguments")
-      val matrixExpr = children(1)
-      require(matrixExpr.foldable,
-        "nearest_centroid codebook must be a foldable array<array<double>>")
-      // fold the codebook ONCE at plan construction: the expression carries
-      // a double[][] reference constant instead of re-evaluating a
-      // CreateArray tree per row
-      val matrix = matrixExpr.eval() match {
-        case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-          Array.tabulate(a.numElements()) { c =>
-            val row = a.getArray(c)
-            Array.tabulate(row.numElements())(row.getDouble)
-          }
+      NearestCentroid(Cast(children.head, ArrayType(DoubleType)),
+        foldMatrix(children(1), "nearest_centroid codebook"))
+    })
+
+  private[plans] val nearestCentroidsDescriptor
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("nearest_centroids"),
+    new ExpressionInfo(classOf[NearestCentroids].getName, "nearest_centroids"),
+    (children: Seq[Expression]) => {
+      require(children.length == 3,
+        "nearest_centroids(vec, centroidsMatrix, n) takes three arguments")
+      NearestCentroids(Cast(children.head, ArrayType(DoubleType)),
+        foldMatrix(children(1), "nearest_centroids codebook"),
+        intLit(children(2), "nearest_centroids n"))
+    })
+
+  private[plans] val lshSignaturesDescriptor
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("lsh_signatures"),
+    new ExpressionInfo(classOf[HyperplaneSignatures].getName, "lsh_signatures"),
+    (children: Seq[Expression]) => {
+      require(children.length == 3,
+        "lsh_signatures(vec, planesMatrix, bitsPerBand) takes three arguments")
+      HyperplaneSignatures(Cast(children.head, ArrayType(DoubleType)),
+        foldMatrix(children(1), "lsh_signatures planes"),
+        intLit(children(2), "lsh_signatures bitsPerBand"))
+    })
+
+  private[plans] val tokenHashesDescriptor
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("token_hashes"),
+    new ExpressionInfo(classOf[TokenHashes].getName, "token_hashes"),
+    (children: Seq[Expression]) => {
+      require(children.length == 1 || children.length == 2,
+        "token_hashes(tokens[, modulus]) takes one or two arguments")
+      val modulus = children.lift(1).map {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
+            if v != null => v.toString.toLong
         case other => throw new IllegalArgumentException(
-          s"nearest_centroid codebook evaluated to $other")
-      }
-      NearestCentroid(Cast(children.head, ArrayType(DoubleType)), matrix)
+          s"token_hashes modulus must be an integer literal, got $other")
+      }.getOrElse(0L)
+      TokenHashes(Cast(children.head, ArrayType(StringType)), modulus)
+    })
+
+  private[plans] val minhashBandHashesDescriptor
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("minhash_band_hashes"),
+    new ExpressionInfo(classOf[MinHashBandHashes].getName, "minhash_band_hashes"),
+    (children: Seq[Expression]) => {
+      require(children.length == 3,
+        "minhash_band_hashes(minhash, bands, rowsPerBand) takes three arguments")
+      MinHashBandHashes(Cast(children.head, ArrayType(LongType)),
+        intLit(children(1), "minhash_band_hashes bands"),
+        intLit(children(2), "minhash_band_hashes rowsPerBand"))
+    })
+
+  private[plans] val agreeCountDescriptor
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("agree_count"),
+    new ExpressionInfo(classOf[AgreeCount].getName, "agree_count"),
+    (children: Seq[Expression]) => {
+      require(children.length == 2, "agree_count(a, b) takes two arrays")
+      AgreeCount(Cast(children.head, ArrayType(LongType)),
+        Cast(children(1), ArrayType(LongType)))
     })
 
   private[plans] val bloomMightContainDescriptor
@@ -143,12 +191,7 @@ object GraftExtensions {
     (children: Seq[Expression]) => {
       require(children.length == 2,
         "shingle_hashes(wordHashes, shingleSize) takes two arguments")
-      val n = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
-            if v != null => v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"shingle_hashes size must be an integer literal, got $other")
-      }
+      val n = intLit(children(1), "shingle_hashes size")
       // Cast to array<bigint> at the boundary (the cosine/minhash pattern):
       // a non-array argument fails analysis instead of throwing a
       // ClassCastException in the executor
@@ -182,12 +225,7 @@ object GraftExtensions {
     (children: Seq[Expression]) => {
       require(children.length == 2,
         "shingle_hashes_pos(wordHashes, shingleSize) takes two arguments")
-      val n = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
-            if v != null => v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"shingle_hashes_pos size must be an integer literal, got $other")
-      }
+      val n = intLit(children(1), "shingle_hashes_pos size")
       ShingleHashesPos(Cast(children.head, ArrayType(LongType)), n)
     })
 
@@ -198,12 +236,7 @@ object GraftExtensions {
     (children: Seq[Expression]) => {
       require(children.length == 2,
         "misra_gries_keys(keyArray, capacity) takes two arguments")
-      val cap = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
-            if v != null => v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"misra_gries_keys capacity must be an integer literal, got $other")
-      }
+      val cap = intLit(children(1), "misra_gries_keys capacity")
       // array<bigint> cast at the boundary: misuse fails analysis (the
       // cosine/minhash/shingle_hashes contract)
       MisraGriesKeys(Cast(children.head, ArrayType(LongType)), cap)
@@ -247,14 +280,9 @@ object GraftExtensions {
     (children: Seq[Expression]) => {
       require(children.length == 3,
         "cms_sketch(longKey, depth, width) takes three arguments")
-      def intLit(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
-            if v != null => v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"cms_sketch $what must be an integer literal, got $other")
-      }
       CountMinSketchAgg(Cast(children.head, LongType),
-        intLit(children(1), "depth"), intLit(children(2), "width"))
+        intLit(children(1), "cms_sketch depth"),
+        intLit(children(2), "cms_sketch width"))
     })
 
   private[plans] val cmsEstimateDescriptor
@@ -275,10 +303,37 @@ object GraftExtensions {
       CmsEstimate(Cast(children(1), LongType), bytes)
     })
 
+  /** Folds a foldable `array<array<double>>` argument ONCE at plan
+    * construction: the expression carries a `double[][]` reference
+    * constant instead of re-evaluating a CreateArray tree per row.
+    */
+  private def foldMatrix(e: Expression, what: String): Array[Array[Double]] = {
+    require(e.foldable, s"$what must be a foldable array<array<double>>")
+    e.eval() match {
+      case a: org.apache.spark.sql.catalyst.util.ArrayData =>
+        Array.tabulate(a.numElements()) { c =>
+          val row = a.getArray(c)
+          Array.tabulate(row.numElements())(row.getDouble)
+        }
+      case other => throw new IllegalArgumentException(
+        s"$what evaluated to $other")
+    }
+  }
+
+  private def intLit(e: Expression, what: String): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
+        if v != null => v.toString.toInt
+    case other => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
+  }
+
   /** Idempotent registration on a live session. */
   def register(spark: SparkSession): Unit = {
     for ((id, info, builder) <- Seq(cosineSimDescriptor, tzLocalizeDescriptor,
         minhashSigDescriptor, nearestCentroidDescriptor,
+        nearestCentroidsDescriptor, lshSignaturesDescriptor,
+        tokenHashesDescriptor, minhashBandHashesDescriptor,
+        agreeCountDescriptor,
         bloomMightContainDescriptor, shingleHashesDescriptor,
         stopwordLangCountsDescriptor, cjkCountDescriptor,
         misraGriesKeysDescriptor, shingleHashesPosDescriptor,

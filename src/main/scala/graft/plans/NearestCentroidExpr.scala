@@ -1,9 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** Native Catalyst expression: index of the nearest centroid (squared-L2
   * argmin) for an `array<double>` vector against a codebook baked in at
@@ -31,10 +33,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
 case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
     extends UnaryExpression {
 
-  private def mayHaveNullElements: Boolean = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(_, cn) => cn
-    case _ => true
-  }
+  private def mayHaveNullElements: Boolean = NearestCentroid.admitsNulls(child)
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = child.nullable || mayHaveNullElements
@@ -42,76 +41,161 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
 
   override protected def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
+    if (mayHaveNullElements && NearestCentroid.hasNullElement(v)) null
+    else NearestCentroid.argmin(v, centroids)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, v => {
+      val cen = ctx.addReferenceObj("centroids", centroids, "double[][]")
+      val nullCheck =
+        if (mayHaveNullElements) s"graft.plans.NearestCentroid.hasNullElement($v)"
+        else "false"
+      s"""
+         |if ($nullCheck) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = graft.plans.NearestCentroid.argmin($v, $cen);
+         |}
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
+    copy(child = newChild)
+}
+
+/** The shared squared-L2 loops of [[NearestCentroid]] and
+  * [[NearestCentroids]]; static forwarders, called from generated code.
+  */
+object NearestCentroid {
+
+  /** Whether the array type of `e` admits null elements. */
+  def admitsNulls(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, cn) => cn
+    case _ => true
+  }
+
+  def hasNullElement(v: ArrayData): Boolean = {
     val n = v.numElements()
-    if (mayHaveNullElements) {
-      var i = 0
-      while (i < n) {
-        if (v.isNullAt(i)) return null
-        i += 1
-      }
+    var i = 0
+    while (i < n) {
+      if (v.isNullAt(i)) return true
+      i += 1
     }
+    false
+  }
+
+  /** Σ (v_i − row_i)² over the first `m` positions, one accumulator
+    * folded in element order from 0.0 — the IEEE sequence of
+    * `aggregate(zip_with(v, row, (x, y) -> (x - y) * (x - y)), 0.0, ...)`.
+    */
+  def sqDist(v: ArrayData, row: Array[Double], m: Int): Double = {
+    var d = 0.0
+    var i = 0
+    while (i < m) {
+      val diff = v.getDouble(i) - row(i)
+      d += diff * diff
+      i += 1
+    }
+    d
+  }
+
+  /** Index of the nearest centroid, scoring the shared prefix of `v` and
+    * each row; ties keep the lowest index.
+    */
+  def argmin(v: ArrayData, centroids: Array[Array[Double]]): Int = {
+    val n = v.numElements()
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
     while (c < centroids.length) {
       val row = centroids(c)
-      val m = math.min(n, row.length)
-      var d = 0.0
-      var i = 0
-      while (i < m) {
-        val diff = v.getDouble(i) - row(i)
-        d += diff * diff
-        i += 1
-      }
+      val d = sqDist(v, row, math.min(n, row.length))
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
     best
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cen = ctx.addReferenceObj("centroids", centroids, "double[][]")
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val diff = ctx.freshName("diff")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val row = ctx.freshName("row")
-      val hasNull = ctx.freshName("hasNull")
-      val nullScan = if (mayHaveNullElements)
-        s"""
-           |boolean $hasNull = false;
-           |for (int $j = 0; $j < $n; $j++) {
-           |  if ($v.isNullAt($j)) { $hasNull = true; break; }
-           |}
-           |if ($hasNull) { ${ev.isNull} = true; } else {
-         """.stripMargin
-      else ""
-      val nullScanEnd = if (mayHaveNullElements) "}" else ""
-      s"""
-         |int $n = $v.numElements();
-         |$nullScan
-         |int $best = 0; double $bestD = Double.MAX_VALUE;
-         |for (int $c = 0; $c < $cen.length; $c++) {
-         |  double[] $row = $cen[$c];
-         |  int $m = $n < $row.length ? $n : $row.length;
-         |  double $d = 0.0;
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    double $diff = $v.getDouble($i) - $row[$i];
-         |    $d += $diff * $diff;
-         |  }
-         |  if ($d < $bestD) { $bestD = $d; $best = $c; }
-         |}
-         |${ev.value} = $best;
-         |$nullScanEnd
-       """.stripMargin
-    })
+  /** The `n` nearest centroid indices of `v` (null allowed), in the order
+    * of `array_sort` over `struct(dist, idx)`: a distance is null when `v`
+    * is null, holds a null element or differs in length from the row, and
+    * null distances sort first; the rest ascend under Spark's double
+    * ordering (NaN last), ties to the lower index.
+    */
+  def nearestN(v: ArrayData, centroids: Array[Array[Double]], n: Int,
+               checkNulls: Boolean): Array[Int] = {
+    val out = new Array[Int](math.min(n, centroids.length))
+    val outD = new Array[Double](out.length)
+    val outNull = new Array[Boolean](out.length)
+    val len = if (v == null) -1 else v.numElements()
+    val scorable = v != null && !(checkNulls && hasNullElement(v))
+    var filled = 0
+    var c = 0
+    while (c < centroids.length) {
+      val row = centroids(c)
+      val isNull = !scorable || row.length != len
+      val d = if (isNull) 0.0 else sqDist(v, row, len)
+      // insertion into the bounded sorted prefix: strictly-before moves
+      // past a slot, so an equal key stays behind the lower index
+      var p = filled
+      while (p > 0 && (if (isNull) !outNull(p - 1)
+                       else !outNull(p - 1) &&
+                         SQLOrderingUtil.compareDoubles(d, outD(p - 1)) < 0))
+        p -= 1
+      if (p < out.length) {
+        val last = math.min(filled, out.length - 1)
+        var j = last
+        while (j > p) {
+          out(j) = out(j - 1); outD(j) = outD(j - 1); outNull(j) = outNull(j - 1)
+          j -= 1
+        }
+        out(p) = c; outD(p) = d; outNull(p) = isNull
+        if (filled < out.length) filled += 1
+      }
+      c += 1
+    }
+    out
+  }
+}
 
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
+/** Native Catalyst expression: the `n` nearest centroid indices of an
+  * `array<double>` vector, as `array<int>` — the IVF probe list.
+  *
+  * Replaces `array_sort` over k `struct(aggregate(zip_with(...)), idx)`
+  * entries (k interpreted distance folds and an interpreted struct sort
+  * per query) with [[NearestCentroid]]'s distance loop over the same
+  * `double[][]` reference constant plus a bounded insertion into the top
+  * `n`. The list is bit-identical to that form, including its edges: a
+  * null vector, a null element or a length mismatch give null distances,
+  * which sort first (so such a vector probes lists 0..n-1); NaN distances
+  * sort last. Never null.
+  */
+case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
+                            n: Int) extends UnaryExpression {
+  require(n >= 0, s"nearest_centroids n=$n must be non-negative")
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "nearest_centroids"
+
+  override def eval(input: InternalRow): Any =
+    ArrayData.toArrayData(NearestCentroid.nearestN(
+      child.eval(input).asInstanceOf[ArrayData], centroids, n,
+      NearestCentroid.admitsNulls(child)))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = child.genCode(ctx)
+    val cen = ctx.addReferenceObj("centroids", centroids, "double[][]")
+    ev.copy(code = code"""
+      |${v.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
+      |    graft.plans.NearestCentroid.nearestN(${v.isNull} ? null : ${v.value},
+      |      $cen, $n, ${NearestCentroid.admitsNulls(child)}));
+     """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
     copy(child = newChild)
 }

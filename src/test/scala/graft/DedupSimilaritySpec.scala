@@ -227,6 +227,21 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(runs(0) == Seq((1L, 1), (2L, 1), (3L, 0)))
   }
 
+  test("trainCentroids: empty input fails by name; an emptied cluster keeps its centroid") {
+    val empty = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.trainCentroids(empty, "embedding", k = 2, iterations = 1)
+    }
+    assert(e.getMessage.contains("trainCentroids needs at least one vector"))
+    // one partition, so the first-k init is (1,0), (1,0): every tie goes
+    // to index 0, cluster 1 empties and must keep its previous centroid
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        Seq((1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.0)), (3L, Seq(0.0, 1.0))), 1))
+      .toDF("vec_id", "embedding")
+    val cents = Similarity.trainCentroids(df, "embedding", k = 2, iterations = 1)
+    assert(cents == Seq(Seq(2.0 / 3, 1.0 / 3), Seq(1.0, 0.0)), s"$cents")
+  }
+
   test("semanticDedup with k=1 equals brute-force greedy pruning; cells bound candidates") {
     // two tight blobs plus one isolated point; ids interleaved so greedy
     // id-ordering matters

@@ -1,11 +1,13 @@
 package graft
 
 import graft.functions.VectorFunctions
+import graft.operators.VectorOracles
 import graft.plans.GraftExtensions
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The native codegen CosineSimilarity expression: registry wiring, SQL
-  * resolution, value agreement with the HOF form, and edge semantics.
+/** The native codegen expressions: registry wiring, SQL resolution,
+  * value agreement with the HOF forms they replace, and edge semantics.
   */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
@@ -207,6 +209,168 @@ class ExtensionsSpec extends SparkSpec {
     assert(plan.contains("*(1)"), s"expression stays inside codegen:\n$plan")
     assert(spark.sql("SELECT damerau_levenshtein('x', NULL)")
       .collect()(0).isNullAt(0))
+  }
+
+  // -- native LSH / IVF / k-means / MinHash kernels against their HOF
+  // oracles (graft.operators.VectorOracles). Every case runs twice: over a
+  // local relation (the optimizer folds it, so the kernel's interpreted
+  // eval runs) and over an RDD-backed frame (whole-stage codegen).
+
+  private def bothPaths(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.DataFrame] =
+    Seq(df, spark.createDataFrame(df.rdd.repartition(2), df.schema))
+
+  /** Rows of (native, oracle) must agree exactly, row by row. */
+  private def assertSame(df: org.apache.spark.sql.DataFrame, native: Column,
+                         oracle: Column, what: String): Unit =
+    for (d <- bothPaths(df)) {
+      val out = d.select(col("id"), native.as("n"), oracle.as("o"))
+        .orderBy("id").collect()
+      assert(out.nonEmpty)
+      for (r <- out) assert(r.get(1) == r.get(2),
+        s"$what, row ${r.get(0)}: native ${r.get(1)} vs oracle ${r.get(2)}")
+    }
+
+  /** Random vectors plus every edge the kernels must reproduce: zero,
+    * −0.0, NaN, infinity, a null vector, a null element, shorter and
+    * longer vectors, and exact duplicates (ties).
+    */
+  private def edgeVectors(dim: Int): org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(17)
+    val random = (0 until 120).map(_ => Some(Seq.fill(dim)(Some(rnd.nextGaussian()))))
+    val edges: Seq[Option[Seq[Option[Double]]]] = Seq(
+      Some(Seq.fill(dim)(Some(0.0))),
+      Some(Seq.fill(dim)(Some(-0.0))),
+      Some(Some(1.0) +: Seq.fill(dim - 1)(Some(0.0))),
+      Some(Some(Double.NaN) +: Seq.fill(dim - 1)(Some(1.0))),
+      Some(Some(Double.PositiveInfinity) +: Seq.fill(dim - 1)(Some(0.5))),
+      None,
+      Some(None +: Seq.fill(dim - 1)(Some(1.0))),
+      Some(Seq.fill(dim - 1)(Some(1.0))),
+      Some(Seq.fill(dim + 1)(Some(1.0))),
+      Some(Seq.empty[Option[Double]]),
+      random.head, random.head)
+    (random ++ edges).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("id", "v")
+  }
+
+  test("lsh_signatures is bit-identical to the per-plane aggregate(zip_with) oracle") {
+    GraftExtensions.register(spark)
+    val dim = 8
+    val df = edgeVectors(dim)
+    val rnd = new scala.util.Random(5)
+    // random planes plus a zero plane, a −0.0 plane and a plane orthogonal
+    // to the unit vector (dot exactly 0.0 — sign bit 0, not 1)
+    val planes = Seq.fill(13)(Seq.fill(dim)(rnd.nextGaussian())) ++ Seq(
+      Seq.fill(dim)(0.0), Seq.fill(dim)(-0.0), 0.0 +: Seq.fill(dim - 1)(1.0))
+    for (bits <- Seq(1, 4, 16)) {
+      val native = call_function("lsh_signatures", col("v"), typedlit(planes), lit(bits))
+      assertSame(df, native, VectorOracles.lshSignatures(col("v"), planes, bits),
+        s"bitsPerBand=$bits")
+    }
+    // the engine's own seed-fixed planes, 64 bits in one word (bit 63 signs)
+    val wide = graft.operators.Similarity.planes(dim, 64)
+    assertSame(df, call_function("lsh_signatures", col("v"), typedlit(wide), lit(64)),
+      VectorOracles.lshSignatures(col("v"), wide, 64), "bitsPerBand=64")
+  }
+
+  test("nearest_centroids is bit-identical to the array_sort probe-list oracle") {
+    GraftExtensions.register(spark)
+    val dim = 8
+    val df = edgeVectors(dim)
+    val rnd = new scala.util.Random(11)
+    val base = Seq.fill(6)(Seq.fill(dim)(rnd.nextGaussian()))
+    // duplicate centroids (distance ties), zero and −0.0 centroids, and a
+    // row of another length (a null distance for every vector)
+    val cents = base ++ Seq(base(2), Seq.fill(dim)(0.0), Seq.fill(dim)(-0.0),
+      base(0), Seq.fill(dim - 1)(1.0))
+    for (n <- Seq(0, 1, 3, cents.length, cents.length + 2)) {
+      val native = call_function("nearest_centroids", col("v"), typedlit(cents), lit(n))
+      assertSame(df, native, VectorOracles.probeLists(col("v"), cents, n), s"n=$n")
+    }
+  }
+
+  test("agree_count equals the zip_with/filter agreement oracle") {
+    GraftExtensions.register(spark)
+    val rnd = new scala.util.Random(3)
+    def sig(n: Int) = Seq.fill(n)(Some(rnd.nextInt(4).toLong))
+    val pairs: Seq[(Option[Seq[Option[Long]]], Option[Seq[Option[Long]]])] =
+      (0 until 60).map(_ => (Some(sig(16)), Some(sig(16)))) ++ Seq(
+        (Some(sig(16)), Some(sig(12))), (Some(sig(5)), Some(sig(16))),
+        (Some(Seq(None, Some(1L), Some(2L))), Some(Seq(None, Some(1L), None))),
+        (None, Some(sig(4))), (Some(sig(4)), None), (None, None),
+        (Some(Seq.empty), Some(Seq.empty)))
+    val df = pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
+      .toDF("id", "a", "b")
+    assertSame(df, call_function("agree_count", col("a"), col("b")),
+      VectorOracles.agreement(col("a"), col("b")), "agree_count")
+  }
+
+  test("minhash_band_hashes is bit-identical to the concat_ws band-hash oracle") {
+    GraftExtensions.register(spark)
+    val rnd = new scala.util.Random(23)
+    def sig(n: Int) = Seq.fill(n)(Some(rnd.nextLong() % 2147483647L))
+    val sigs: Seq[Option[Seq[Option[Long]]]] =
+      (0 until 60).map(_ => Some(sig(16))) ++ Seq(
+        Some(Seq(Long.MinValue, Long.MaxValue, 0L, -1L).map(Some(_)) ++ sig(12)),
+        Some(None +: sig(15)), Some(sig(7) ++ Seq(None, None) ++ sig(7)),
+        Some(sig(6)), Some(sig(20)), Some(Seq.empty), None)
+    val df = sigs.zipWithIndex.map { case (m, i) => (i.toLong, m) }.toDF("id", "m")
+    for ((bands, rows) <- Seq((4, 4), (16, 1), (1, 16))) {
+      assertSame(df,
+        call_function("minhash_band_hashes", col("m"), lit(bands), lit(rows)),
+        VectorOracles.bandHashes(col("m"), bands, rows), s"$bands x $rows")
+    }
+  }
+
+  test("token_hashes equals per-token xxhash64, with and without pmod") {
+    GraftExtensions.register(spark)
+    val docs: Seq[Option[Seq[Option[String]]]] = Seq(
+      Some(Seq("the", "quick", "brown", "fox").map(Some(_))),
+      Some(Seq("", "汉字", "naïve", "x" * 300).map(Some(_))),
+      Some(Seq(Some("a"), None, Some("b"))),
+      Some(Seq.empty), None)
+    val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
+    assertSame(df, call_function("token_hashes", col("t")),
+      VectorOracles.tokenHashes(col("t"), None), "xxhash64")
+    assertSame(df, call_function("token_hashes", col("t"), lit(2147483647L)),
+      VectorOracles.tokenHashes(col("t"), Some(2147483647L)), "pmod P")
+  }
+
+  test("k-means update: the posexplode mean equals transformAvg over 1 and 4 partitions") {
+    val dim = 6
+    val rnd = new scala.util.Random(29)
+    val rows: Seq[(Long, Option[Seq[Option[Double]]])] =
+      (0 until 400).map(i => (i.toLong,
+      Option(Seq.fill(dim)(Option(rnd.nextGaussian() + (i % 3) * 4.0))))) ++
+      Seq((400L, None), (401L, Some(None +: Seq.fill(dim - 1)(Some(1.0)))),
+        (402L, Some(Seq.fill(dim)(Some(-0.0)))))
+    val cents = Seq(Seq.fill(dim)(0.0), Seq.fill(dim)(4.0), Seq.fill(dim)(8.0),
+      Seq.fill(dim)(8.0)) // a duplicate: cluster 3 stays empty
+    def frame(data: Seq[(Long, Option[Seq[Option[Double]]])], parts: Int) =
+      spark.createDataFrame(spark.sparkContext.parallelize(data, parts))
+        .toDF("id", "_v").select(col("_v").cast("array<double>").as("_v"))
+    // compared as raw bits: == would equate 0.0 and −0.0
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    def nativeMeans(df: org.apache.spark.sql.DataFrame) =
+      graft.operators.Similarity.lloydUpdate(df, cents).collect().toSeq
+        .filterNot(_.isNullAt(0)).groupBy(_.getInt(0))
+        .map { case (c, rs) => c -> bits(rs.sortBy(_.getInt(1)).map(_.getDouble(2))) }
+    for (parts <- Seq(1, 4)) {
+      val df = frame(rows, parts)
+      val oracle = VectorOracles.lloydUpdate(df, cents).collect()
+        .filterNot(_.isNullAt(0))
+        .map(r => r.getInt(0) -> bits(r.getSeq[Double](1).toSeq)).toMap
+      val native = nativeMeans(df)
+      assert(native.keySet == Set(0, 1, 2) && oracle.keySet == native.keySet)
+      for (c <- native.keys) assert(native(c) == oracle(c),
+        s"$parts partitions, cluster $c: ${native(c)} vs ${oracle(c)}")
+    }
+    // on values whose sums are exact the fold order cannot matter: the
+    // means are then identical across partitionings too
+    val exact = (0 until 400).map(i => (i.toLong,
+      Option(Seq.fill(dim)(Option((rnd.nextInt(64) + (i % 3) * 64) / 16.0)))))
+    assert(nativeMeans(frame(exact, 1)) == nativeMeans(frame(exact, 4)))
   }
 
   test("array expressions reject non-array arguments at analysis time") {

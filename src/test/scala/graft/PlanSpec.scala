@@ -190,6 +190,37 @@ class PlanSpec extends SparkSpec {
     } finally graft.operators.Similarity.dropIvfIndex(spark, table)
   }
 
+  /** The lambda functions in `df`'s optimized plan. */
+  private def lambdas(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions).flatMap(_.collect {
+      case l: org.apache.spark.sql.catalyst.expressions.LambdaFunction => l.sql
+    })
+
+  test("LSH, IVF, k-means and MinHash paths run no interpreted lambdas") {
+    // higher-order functions evaluate their lambdas per element outside
+    // whole-stage codegen; these per-row hot paths use native kernels
+    val emb = Tables.embeddings(spark, d)
+    val docs = Tables.documents(spark, d)
+    val table = "bkt_ivf_lambda_planspec"
+    try {
+      val cents = graft.operators.Similarity.buildIvfIndex(emb, table, "vec_id",
+        "embedding", nLists = 4, iterations = 1)
+      val paths = Seq(
+        "lshNearPairs" -> graft.operators.Similarity.lshNearPairs(emb,
+          "vec_id", "embedding", dim = cents.head.length, threshold = 0.9),
+        "trainCentroids update" -> graft.operators.Similarity.lloydUpdate(
+          emb.select(col("embedding").cast("array<double>").as("_v")), cents),
+        "ivfProbe" -> graft.operators.Similarity.ivfProbe(spark, table,
+          emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3, nProbe = 2),
+        "withMinHash" -> graft.operators.Dedup.withMinHash(docs, "doc_id",
+          "text", numHashes = 64, bands = 16, shingleSize = 5),
+        "minHashLshPairs" -> graft.operators.Dedup.minHashLshPairs(docs,
+          "doc_id", "text"))
+      for ((name, df) <- paths)
+        assert(lambdas(df).isEmpty, s"$name plans lambdas: ${lambdas(df)}")
+    } finally graft.operators.Similarity.dropIvfIndex(spark, table)
+  }
+
   test("whole-stage codegen covers the scan-filter-project pipeline") {
     val p = plan(Tables.lineitem(spark, d)
       .filter(col("l_quantity") > 30)
