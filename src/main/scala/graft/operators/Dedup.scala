@@ -144,31 +144,56 @@ object Dedup {
       .select("id_a", "id_b", "est_jaccard")
   }
 
-  /** Persist the banded MinHash index of a corpus as a BUCKETED managed
-    * table — the persisted-index form of near-dup dedup, the q54 / edge-
-    * table build/probe shape applied to the dedup family. At 100 TB the
-    * MinHash signature pass is the expensive corpus scan (tokenize +
-    * shingle + `numHashes` mins per document); every incremental dedup
-    * run re-pays it unless the banded signatures are a stored table
-    * written ONCE at corpus-build time and probed by each incoming batch.
+  /** A persisted LSH index without the signature store [[lshIndexProbe]]
+    * needs: written before the index split into postings and signatures
+    * (or with its sidecar removed). Rebuild it with [[buildLshIndex]].
+    */
+  final class LshIndexLayoutError(msg: String) extends IllegalStateException(msg)
+
+  /** Persist the banded MinHash index of a corpus — the persisted-index
+    * form of near-dup dedup, the q54 / edge-table build/probe shape applied
+    * to the dedup family. At 100 TB the MinHash signature pass is the
+    * expensive corpus scan (tokenize + shingle + `numHashes` mins per
+    * document); every incremental dedup run re-pays it unless the banded
+    * signatures are stored ONCE at corpus-build time and probed by each
+    * incoming batch.
     *
-    * Layout: one row per (document, band) — (`id`, `minhash`, `band`,
-    * `bh`) — bucketed by the FULL band-join key pair (`band`, `bh`), so a
-    * probe batch's band join shuffles ONLY the batch side: the corpus
-    * side's scan partitioning equals the join's required clustering
-    * exactly and reads its buckets in place. (Bucketing by `bh` alone is
-    * semantically sufficient but Spark's conservative co-partition
-    * default — requireAllClusterKeysForCoPartition — would re-shuffle
-    * it.) Degenerate buckets (boilerplate text shared by millions
-    * of documents) are capped at `maxBucketSize` rows at build time, the
-    * same skew guard as [[minHashLshPairs]] — a deployment dedups the
-    * corpus FIRST (q41/q75) and indexes the kept documents, so verbatim
-    * groups don't exist on the index side by construction.
+    * Layout: the classic posting-list / forward-index pair, each value
+    * stored once.
+    *  - Postings, the table `table`: one row per (document, band) —
+    *    (`band`, `bh`, `id`) — bucketed and sorted by the FULL band-join
+    *    key pair (`band`, `bh`), so a probe batch's band join shuffles ONLY
+    *    the batch side: the corpus side's scan partitioning equals the
+    *    join's required clustering exactly and reads its buckets in place.
+    *    (Bucketing by `bh` alone is semantically sufficient but Spark's
+    *    conservative co-partition default —
+    *    requireAllClusterKeysForCoPartition — would re-shuffle it.)
+    *  - Signatures, the sidecar `Exporter.sidecarTable(table,
+    *    "signatures")` in `_sidecars/signatures/` under the table's
+    *    location: one row per indexed document — (`id`, `minhash`) —
+    *    bucketed by `id` into the same bucket count, so a probe fetches its
+    *    candidates' signatures by shuffling only the candidate list.
+    * Per document at the default 64 hashes × 16 bands that is 16 × 20 B of
+    * postings plus one 520 B signature, where one row per (document, band)
+    * carrying the signature was 16 × 532 B; as zstd parquet on disk the
+    * 500-document perfbench `llm_dedup` index measured 1,361,389 →
+    * 223,394 B (6.1× smaller).
     *
-    * Returns the number of indexed documents. Freshness is the caller's
-    * contract (probe answers are about the indexed snapshot); rebuild =
-    * call again (drop-and-replace, `Exporter.writeBucketed` semantics,
-    * non-atomic).
+    * Both tables are written one file per bucket (each is hash-
+    * partitioned into exactly its buckets before the write), not one per
+    * (task, bucket). The signatures are computed once, held
+    * (MEMORY_AND_DISK) for the two writes, then released. Degenerate
+    * buckets (boilerplate text shared by millions of documents) are capped
+    * at `maxBucketSize` postings at build time, the same skew guard as
+    * [[minHashLshPairs]] — a deployment dedups the corpus FIRST (q41/q75)
+    * and indexes the kept documents, so verbatim groups don't exist on the
+    * index side by construction. Document ids must be unique.
+    *
+    * Returns the number of indexed documents (those with a signature; a
+    * null text has none). Freshness is the caller's contract (probe
+    * answers are about the indexed snapshot); rebuild = call again
+    * (drop-and-replace, `Exporter.writeBucketed` semantics, non-atomic);
+    * `Exporter.dropBucketed(table)` removes both parts.
     */
   def buildLshIndex(docs: DataFrame, table: String, idCol: String,
                     textCol: String, numHashes: Int = 64, bands: Int = 16,
@@ -176,20 +201,52 @@ object Dedup {
                     maxBucketSize: Int = 100000): Long = {
     val sigs = withMinHash(docs.select(col(idCol), col(textCol)), idCol,
         textCol, numHashes, bands, shingleSize)
-      .select(col("id"), col("minhash"),
-        posexplode(col("bands")).as(Seq("band", "bh")))
-    val bw = Window.partitionBy("band", "bh").orderBy("id")
-    val capped = sigs
-      .withColumn("_bn", row_number().over(bw))
-      .filter(col("_bn") <= maxBucketSize)
-      .drop("_bn")
-    // numBuckets <= 0 (the default): scale with the corpus input rather
-    // than a constant tuned for one tier (Exporter.adaptiveBuckets)
-    val nb = if (numBuckets > 0) numBuckets
-             else Exporter.adaptiveBuckets(docs)
-    Exporter.writeBucketed(capped, table, Seq("band", "bh"), nb,
-      sortCols = Seq("band", "bh", "id"))
-    docs.sparkSession.table(table).select(col("id")).distinct().count()
+      .filter(col("minhash").isNotNull)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // numBuckets <= 0 (the default): scale with the corpus input rather
+      // than a constant tuned for one tier (Exporter.adaptiveBuckets)
+      val nb = if (numBuckets > 0) numBuckets
+               else Exporter.adaptiveBuckets(docs)
+      val indexed = sigs.count() // fills the held signatures
+      // the cap window runs on the bucket partitioning itself, so each
+      // write task holds exactly one bucket
+      val postings = sigs
+        .select(col("id"), posexplode(col("bands")).as(Seq("band", "bh")))
+        .repartition(nb, col("band"), col("bh"))
+      val bw = Window.partitionBy("band", "bh").orderBy("id")
+      val capped = postings
+        .withColumn("_bn", row_number().over(bw))
+        .filter(col("_bn") <= maxBucketSize)
+        .select(col("band"), col("bh"), col("id"))
+      Exporter.writeBucketed(capped, table, Seq("band", "bh"), nb,
+        sortCols = Seq("band", "bh", "id"))
+      Exporter.writeBucketedSidecar(
+        sigs.select(col("id"), col("minhash")).repartition(nb, col("id")),
+        table, "signatures", Seq("id"), nb, sortCols = Seq("id"))
+      indexed
+    } finally {
+      sigs.unpersist(false)
+      ()
+    }
+  }
+
+  /** The signature store of the LSH index `table` and its bucket count;
+    * throws [[LshIndexLayoutError]] when the index has none.
+    */
+  private def signatureStore(spark: org.apache.spark.sql.SparkSession,
+                             table: String): (String, Int) = {
+    val store = Exporter.sidecarTable(table, "signatures")
+    def fail(why: String): Nothing = throw new LshIndexLayoutError(
+      s"LSH index '$table' $why: it predates the postings/signatures " +
+        "layout or lost its signature store — rebuild it with " +
+        "Dedup.buildLshIndex")
+    if (!spark.catalog.tableExists(store))
+      fail(s"has no signature store ('$store')")
+    val buckets = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(store))
+      .bucketSpec.map(_.numBuckets)
+    (store, buckets.getOrElse(fail(s"has an unbucketed signature store ('$store')")))
   }
 
   /** Probe a new batch of documents against a persisted LSH index (built
@@ -198,8 +255,20 @@ object Dedup {
     * (`probe_id`, `index_id`, `est_jaccard`) at or above `threshold`,
     * deduplicated across bands. The batch side is signature-hashed here
     * (one narrow codegen pass, linear in the batch); the corpus side is
-    * ONLY the index table scan — no corpus text is touched, no corpus
-    * shuffle happens (see the bucketing contract on [[buildLshIndex]]).
+    * ONLY the two index scans — no corpus text is touched, no corpus
+    * shuffle happens (see the layout on [[buildLshIndex]]):
+    *  1. the batch's band rows, each carrying its document's signature,
+    *     join the postings, which are read in place;
+    *  2. the candidates take ONE exchange keyed on `index_id` into the
+    *     index's bucket count — the partitioning of the signature store —
+    *     and drop their cross-band duplicate (`probe_id`, `index_id`)
+    *     pairs there;
+    *  3. so the distinct pairs fetch their index signatures with no further
+    *     exchange, the signature store is read in place, and `est_jaccard`
+    *     is computed and filtered.
+    * Two exchanges, both batch-linear (band rows and candidate pairs, each
+    * with the batch signature), and one signature pass over the batch. An
+    * index without a signature store throws [[LshIndexLayoutError]].
     * Callers wanting exact Jaccard verify the candidates against the
     * stored documents afterwards (q347's shape, mirroring q41's
     * estimate-prefilter-then-exact-verify contract).
@@ -209,20 +278,26 @@ object Dedup {
                     numHashes: Int = 64, bands: Int = 16,
                     shingleSize: Int = 5,
                     threshold: Double = 0.5): DataFrame = {
-    val idx = spark.table(table)
+    val (store, nb) = signatureStore(spark, table)
     val probe = withMinHash(batch.select(col(idCol), col(textCol)), idCol,
         textCol, numHashes, bands, shingleSize)
+      // posexplode_outer: its null rows (a document without bands) never
+      // match the inner band join, and unlike posexplode it infers no
+      // `size(bands) > 0` filter under the projection, which would compute
+      // every batch signature a second time
       .select(col("id").as("probe_id"), col("minhash").as("_pm"),
-        posexplode(col("bands")).as(Seq("band", "bh")))
-    // estimate immediately after the band join, signature arrays dropped
-    // before the cross-band dedup shuffle (minHashLshPairs' ordering)
-    idx.join(probe, Seq("band", "bh"))
+        posexplode_outer(col("bands")).as(Seq("band", "bh")))
+    spark.table(table).join(probe, Seq("band", "bh"))
       .filter(col("probe_id") =!= col("id"))
-      .select(col("probe_id"), col("id").as("index_id"),
-        round(call_function("agree_count", col("_pm"), col("minhash"))
+      .select(col("probe_id"), col("id").as("index_id"), col("_pm"))
+      .repartition(nb, col("index_id"))
+      .dropDuplicates("probe_id", "index_id")
+      .join(spark.table(store).select(col("id").as("index_id"),
+        col("minhash").as("_im")), "index_id")
+      .select(col("probe_id"), col("index_id"),
+        round(call_function("agree_count", col("_pm"), col("_im"))
           .cast("double") / numHashes, 4).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-      .dropDuplicates("probe_id", "index_id")
   }
 
   /** The full incoming-batch near-dup SCREEN against a persisted LSH
@@ -273,9 +348,11 @@ object Dedup {
     val candRaw = lshIndexProbe(spark, table, repBatch, idCol, textCol,
         numHashes, bands, shingleSize, estThreshold)
       .select(col("probe_id"), col("index_id"))
-    val cand = broadcast(spark.createDataFrame(
+    // broadcast-hinted only where it is joined: a hint under the union
+    // below is no join side and only logs a HintErrorLogger warning
+    val cand = spark.createDataFrame(
       spark.sparkContext.parallelize(candRaw.collect().toIndexedSeq, 1),
-      candRaw.schema))
+      candRaw.schema)
     val candIds = cand.select(col("probe_id").as("_vid"))
       .union(cand.select(col("index_id").as("_vid"))).distinct()
     val vtoks = split(trim(lower(col(textCol))), "\\s+")
@@ -288,7 +365,7 @@ object Dedup {
     // portable floor rounding (QueryUtils.fr's formula): identical op
     // sequence on both engines at representation boundaries
     val jac = floor(jacRaw * lit(1e4) + lit(0.5)) / lit(1e4)
-    val verified = cand
+    val verified = broadcast(cand)
       .join(sh.select(col("_vid").as("probe_id"), col("sh").as("_sa")),
         "probe_id")
       .join(sh.select(col("_vid").as("index_id"), col("sh").as("_sb")),

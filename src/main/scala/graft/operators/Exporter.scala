@@ -220,18 +220,6 @@ object Exporter {
       qe.toRdd.getNumPartitions == 1
   }
 
-  /** Bucketed parquet sink for co-located joins: tables bucketed (and
-    * sorted) the same way on the same key join WITHOUT a shuffle — the
-    * scan's bucketing satisfies the join's required distribution, so a
-    * repeated big-big join (fact-to-fact enrichment, incremental dedup
-    * against yesterday's corpus) pays its exchange ONCE at write time
-    * instead of on every query. Pick `numBuckets` so one bucket's rows fit
-    * an executor core's working memory at target scale; co-join partners
-    * MUST use the same count and keys (Spark only elides the exchange when
-    * both sides' bucketing matches). Bucketed tables are catalog tables
-    * (`saveAsTable`) — plain `.parquet(path)` files carry no bucket
-    * metadata.
-    */
   /** Scale-adaptive bucket count for a persisted-index write: one bucket
     * per `graft.index.bucket.bytes` (default 256 MB — the fanout gate's
     * granularity) of the BUILD INPUT's leaf scan volume, clamped to
@@ -263,6 +251,18 @@ object Exporter {
     p
   }
 
+  /** Bucketed parquet sink for co-located joins: tables bucketed (and
+    * sorted) the same way on the same key join WITHOUT a shuffle — the
+    * scan's bucketing satisfies the join's required distribution, so a
+    * repeated big-big join (fact-to-fact enrichment, incremental dedup
+    * against yesterday's corpus) pays its exchange ONCE at write time
+    * instead of on every query. Pick `numBuckets` so one bucket's rows fit
+    * an executor core's working memory at target scale; co-join partners
+    * MUST use the same count and keys (Spark only elides the exchange when
+    * both sides' bucketing matches). Bucketed tables are catalog tables
+    * (`saveAsTable`) — plain `.parquet(path)` files carry no bucket
+    * metadata.
+    */
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
                     numBuckets: Int, sortCols: Seq[String] = Nil,
                     compression: String = "zstd",
@@ -285,12 +285,47 @@ object Exporter {
       spark.sql(s"DROP TABLE IF EXISTS `$table`")
       dropManagedLocation(spark, table)
     }
+    bucketedWriter(df, bucketCols, numBuckets, sortCols, compression, writeMode)
+      .saveAsTable(table)
+  }
+
+  private def bucketedWriter(df: DataFrame, bucketCols: Seq[String],
+                             numBuckets: Int, sortCols: Seq[String],
+                             compression: String, writeMode: String) = {
     val w0 = df.drop(Readers.FileOrderCol).write.mode(writeMode)
       .option("compression", compression)
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
     val w = if (sortCols.nonEmpty) w0.sortBy(sortCols.head, sortCols.tail: _*)
             else w0
-    w.format("parquet").saveAsTable(table)
+    w.format("parquet")
+  }
+
+  /** Catalog name of the sidecar table `name` of the table `owner`. */
+  def sidecarTable(owner: String, name: String): String = s"${owner}__$name"
+
+  /** A bucketed SIDECAR of the managed table `owner`: written like
+    * [[writeBucketed]] (same bucketing, sorting and overwrite semantics),
+    * but as the external table [[sidecarTable]]`(owner, name)` whose files
+    * live in `_sidecars/<name>/` inside `owner`'s managed location. The
+    * underscore hides them from `owner`'s own scans (the
+    * `_ivf_codebook.json` convention) while the sidecar's own root stays
+    * visible to its scan; [[dropBucketed]] on `owner`, or an overwrite of it,
+    * deletes the files and drops the sidecar's catalog entry with them; a
+    * size count of `owner`'s directory counts them. Write `owner` first:
+    * Spark refuses to create a managed table in a non-empty location.
+    */
+  def writeBucketedSidecar(df: DataFrame, owner: String, name: String,
+                           bucketCols: Seq[String], numBuckets: Int,
+                           sortCols: Seq[String] = Nil): Unit = {
+    require(bucketCols.nonEmpty, "bucketed write needs bucket columns")
+    val spark = df.sparkSession
+    val table = sidecarTable(owner, name)
+    val path = new Path(new Path(managedLocation(spark, owner), "_sidecars"), name)
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(path)) fs.delete(path, true)
+    bucketedWriter(df, bucketCols, numBuckets, sortCols, "zstd", "overwrite")
+      .option("path", path.toString).saveAsTable(table)
   }
 
   /** Catalog-table twin of the path-based partitioned export: write `df`
@@ -326,10 +361,11 @@ object Exporter {
     new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
   }
 
-  /** Drop a bucketed table AND its on-disk location — the cleanup twin of
-    * `writeBucketed` for harnesses/tests that must leave the warehouse
-    * empty (DROP TABLE on the in-memory catalog does not touch files the
-    * catalog never knew about).
+  /** Drop a bucketed table AND its on-disk location, sidecars included
+    * ([[writeBucketedSidecar]]) — the cleanup twin of `writeBucketed` for
+    * harnesses/tests that must leave the warehouse empty (DROP TABLE on
+    * the in-memory catalog does not touch files the catalog never knew
+    * about).
     */
   def dropBucketed(spark: org.apache.spark.sql.SparkSession,
                    table: String): Unit = {
@@ -339,12 +375,26 @@ object Exporter {
 
   /** Delete a managed table's default warehouse directory if it exists
     * (identifier lowercased, default database — the layout Spark uses for
-    * `saveAsTable` without an explicit path).
+    * `saveAsTable` without an explicit path), first dropping its sidecars
+    * ([[sidecarTable]]-named tables of that database stored inside it):
+    * their files go with the directory, so their entries would otherwise
+    * dangle. Only the sidecar-named tables are looked up.
     */
   private def dropManagedLocation(spark: org.apache.spark.sql.SparkSession,
                                   table: String): Unit = {
     val loc = managedLocation(spark, table)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val inside = fs.makeQualified(loc).toString.stripSuffix("/") + "/"
+    val prefix = sidecarTable(table, "").toLowerCase
+    val catalog = spark.sessionState.catalog
+    // a table listed here may be dropped concurrently before its lookup
+    def locationOf(t: org.apache.spark.sql.catalyst.TableIdentifier) =
+      scala.util.Try(catalog.getTableMetadata(t).storage.locationUri).toOption.flatten
+    catalog.listTables("default")
+      .filter(t => t.database.isDefined && t.table.startsWith(prefix))
+      .filter(t => locationOf(t).exists(u =>
+        fs.makeQualified(new Path(u)).toString.startsWith(inside)))
+      .foreach(catalog.dropTable(_, ignoreIfNotExists = true, purge = false))
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 

@@ -115,11 +115,13 @@ object Similarity {
   // --------------------------------------------------------------------
 
   /** A few Lloyd iterations of k-means over the (sampled) corpus, pure
-    * DataFrame ops: init = the first `k` training rows, each round one
-    * [[lloydUpdate]] (codegen argmin + per-(cluster, position) mean).
-    * Deterministic: seeded sample. A cluster that loses all its members
-    * keeps its previous centroid, so a corpus of at least `k` vectors
-    * always yields `k` centroids.
+    * DataFrame ops: init = the first `k` DISTINCT training vectors in
+    * training order, each round one [[lloydUpdate]] (codegen argmin +
+    * per-(cluster, position) mean). Deterministic: seeded sample. Twin
+    * seeds would leave the later twin's cluster empty every round (ties go
+    * to the lower index), so a training set with fewer than `k` distinct
+    * vectors fails by name. A cluster that loses all its members keeps its
+    * previous centroid, so the result always has `k` centroids.
     *
     * Default 3 Lloyd iterations: each one is a full job + driver collect of
     * k×dim means (serial latency, not a scale cost — centroids are tiny);
@@ -134,9 +136,10 @@ object Similarity {
       (if (sampleFraction < 1.0) vecs.sample(sampleFraction, seed = 42)
        else vecs).cache()
     try {
-      var centroids: Seq[Seq[Double]] =
-        training.limit(k).collect().map(_.getSeq[Double](0).toSeq).toSeq
+      var centroids = firstDistinct(training, k)
       require(centroids.nonEmpty, "trainCentroids needs at least one vector")
+      require(centroids.length == k, s"trainCentroids needs k=$k distinct " +
+        s"training vectors, found ${centroids.length}")
       for (_ <- 0 until iterations) {
         val means = lloydMeans(training, centroids)
         centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i)))
@@ -145,6 +148,32 @@ object Similarity {
     } finally {
       training.unpersist()
       ()
+    }
+  }
+
+  /** The first `k` distinct vectors of column 0 of `vecs`, in row order
+    * (fewer when `vecs` has fewer). Reads the first `k` rows — one job, as
+    * a first-`k` init always did. Only when duplicates leave them short does
+    * one cluster-side pass rank every distinct vector by its first row
+    * (`monotonically_increasing_id` follows row order; `vecs` is held, so
+    * the order is the one `limit` read) and bring just those `k` to the
+    * driver: the driver never reads more than `k` rows. Vectors compare as
+    * Spark's grouping does: 0.0 equals -0.0 (such twins are equally far
+    * from every vector) and NaN equals NaN.
+    */
+  private def firstDistinct(vecs: DataFrame, k: Int): Seq[Seq[Double]] = {
+    def read(df: DataFrame) = df.collect().map(_.getSeq[Double](0).toSeq).toSeq
+    val head = read(vecs.limit(k))
+    // -0.0 + 0.0 is 0.0; doubleToLongBits maps every NaN to one value
+    val key = (v: Seq[Double]) =>
+      v.map(d => java.lang.Double.doubleToLongBits(d + 0.0))
+    if (head.distinctBy(key).length == head.length) head
+    else {
+      val v = vecs.columns.head
+      read(vecs.withColumn("_r", monotonically_increasing_id())
+        .groupBy(col(v)).agg(min_by(col(v), col("_r")).as("_first"),
+          min(col("_r")).as("_r"))
+        .orderBy(col("_r")).limit(k).select(col("_first")))
     }
   }
 
@@ -276,7 +305,11 @@ object Similarity {
         nLists, iterations, sampleFraction)
       val assigned = c0.withColumn("ivf_list",
         nearestCentroid(spark, col("ce"), centroids))
-      Exporter.writePartitioned(assigned, table, Seq("ivf_list"))
+      // clustered by list first: a list is written by as few tasks as its
+      // size needs (AQE splits a skewed one), not by every task that
+      // holds one of its rows (one file per (task, list))
+      Exporter.writePartitioned(assigned.hint("rebalance", col("ivf_list")),
+        table, Seq("ivf_list"))
       writeCodebook(spark, table, centroids)
       centroids
     } finally {
@@ -299,24 +332,60 @@ object Similarity {
     finally out.close()
   }
 
-  /** The codebook written by `buildIvfIndex` (one small JSON file — read
-    * through the JSON source so no hand-rolled parsing).
+  /** The codebook written by `buildIvfIndex` (one small JSON file, read
+    * and parsed on the driver — no Spark job).
     */
   def readCodebook(spark: org.apache.spark.sql.SparkSession,
                    table: String): Seq[Seq[Double]] = {
     val path = new org.apache.hadoop.fs.Path(
       Exporter.managedLocation(spark, table), "_ivf_codebook.json")
     // the underscore prefix hides the sidecar from data discovery (that is
-    // the point), so path-based spark.read.json cannot see it — read the
-    // bytes through the filesystem and parse from a Dataset instead
+    // the point), so it is read through the filesystem
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(path)
     val json =
       try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
       finally in.close()
-    import spark.implicits._
-    spark.read.json(Seq(json).toDS()).select(col("centroids")).first()
-      .getSeq[scala.collection.Seq[Double]](0).map(_.toSeq).toSeq
+    parseCodebook(json)
+  }
+
+  /** The `centroids` array of a codebook JSON document. Each number is
+    * Jackson's `getDoubleValue` of its token — the call Spark's JSON source
+    * makes for a double column, so the values are bit-identical to reading
+    * the document through `spark.read.json`. A `null` component is a
+    * non-finite one (JSON has no NaN or infinity, so [[writeCodebook]]
+    * renders them as `null`) and reads back as NaN: like an infinite one,
+    * a NaN distance is never the argmin, so such a centroid stays as
+    * unreachable at probe time as it was when the corpus was assigned.
+    */
+  private[graft] def parseCodebook(json: String): Seq[Seq[Double]] = {
+    import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
+    val p = new JsonFactory().createParser(json)
+    def fail(what: String): Nothing = throw new IllegalArgumentException(
+      s"IVF codebook: $what")
+    def array[T](item: => T): Seq[T] = {
+      if (p.currentToken != JsonToken.START_ARRAY) fail("expected an array")
+      val out = Seq.newBuilder[T]
+      while (p.nextToken() != JsonToken.END_ARRAY) out += item
+      out.result()
+    }
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT) fail("expected an object")
+      var centroids: Option[Seq[Seq[Double]]] = None
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val name = p.currentName
+        p.nextToken()
+        if (name == "centroids")
+          centroids = Some(array(array(p.currentToken match {
+            case JsonToken.VALUE_NUMBER_INT | JsonToken.VALUE_NUMBER_FLOAT =>
+              p.getDoubleValue
+            case JsonToken.VALUE_NULL => Double.NaN
+            case t => fail(s"non-numeric centroid component $t")
+          })))
+        else p.skipChildren()
+      }
+      centroids.getOrElse(fail("no centroids field"))
+    } finally p.close()
   }
 
   /** Probe a persisted IVF index: each query scores the codebook (a plan

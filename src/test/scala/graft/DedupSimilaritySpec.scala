@@ -233,13 +233,57 @@ class DedupSimilaritySpec extends SparkSpec {
       Similarity.trainCentroids(empty, "embedding", k = 2, iterations = 1)
     }
     assert(e.getMessage.contains("trainCentroids needs at least one vector"))
-    // one partition, so the first-k init is (1,0), (1,0): every tie goes
-    // to index 0, cluster 1 empties and must keep its previous centroid
+    // one partition, so the init is the first three rows. Round 1 gives
+    // c1 {(3,2), (1,0)} -> (2,1) and c2 {(1,3), (1,1)} -> (1,2); in round 2
+    // (1,3) ties c0/c2 and (1,1) ties c1/c2, both go to the lower index,
+    // so cluster 2 empties and must keep its previous centroid
     val df = spark.createDataFrame(spark.sparkContext.parallelize(
-        Seq((1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.0)), (3L, Seq(0.0, 1.0))), 1))
+        Seq((0.0, 3.0), (3.0, 2.0), (1.0, 3.0), (1.0, 0.0), (1.0, 1.0))
+          .zipWithIndex.map { case ((x, y), i) => (i.toLong, Seq(x, y)) }, 1))
       .toDF("vec_id", "embedding")
-    val cents = Similarity.trainCentroids(df, "embedding", k = 2, iterations = 1)
-    assert(cents == Seq(Seq(2.0 / 3, 1.0 / 3), Seq(1.0, 0.0)), s"$cents")
+    val cents = Similarity.trainCentroids(df, "embedding", k = 3, iterations = 2)
+    assert(cents == Seq(Seq(0.5, 3.0), Seq(5.0 / 3, 1.0), Seq(1.0, 2.0)), s"$cents")
+  }
+
+  test("trainCentroids: seeds are the first k distinct vectors; too few fails by name") {
+    def vecs(vs: Seq[Double]*) = spark.createDataFrame(spark.sparkContext
+        .parallelize(vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }, 1))
+      .toDF("vec_id", "embedding")
+    // a duplicate inside the first k rows: the twin is skipped, not seeded
+    // (a twin centroid's cluster would stay empty every round)
+    val dup = vecs(Seq(1.0, 0.0), Seq(1.0, 0.0), Seq(0.0, 1.0))
+    assert(Similarity.trainCentroids(dup, "embedding", k = 2, iterations = 0) ==
+      Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)))
+    assert(Similarity.trainCentroids(dup, "embedding", k = 2, iterations = 1) ==
+      Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)))
+    // the only other distinct vectors lie far past the first k rows, in the
+    // last of three partitions; -0.0 twins 0.0, (2,2) repeats
+    def spread(vs: Seq[Double]*) = spark.createDataFrame(spark.sparkContext
+        .parallelize(vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }, 3))
+      .toDF("vec_id", "embedding")
+    val late = spread(Seq.fill(200)(Seq(0.0, 1.0)) ++ Seq(Seq(-0.0, 1.0),
+      Seq(2.0, 2.0), Seq(2.0, 2.0), Seq(3.0, 3.0), Seq(4.0, 4.0)): _*)
+    assert(Similarity.trainCentroids(late, "embedding", k = 3, iterations = 0) ==
+      Seq(Seq(0.0, 1.0), Seq(2.0, 2.0), Seq(3.0, 3.0)))
+    // a seed is the first row of its vector, bit for bit
+    val negZero = vecs(Seq(-0.0, 1.0), Seq(-0.0, 1.0), Seq(0.0, 1.0),
+      Seq(5.0, 5.0), Seq(6.0, 6.0))
+    val seeds = Similarity.trainCentroids(negZero, "embedding", k = 3,
+      iterations = 0)
+    assert(seeds.map(_.map(java.lang.Double.doubleToRawLongBits)) ==
+      Seq(Seq(-0.0, 1.0), Seq(5.0, 5.0), Seq(6.0, 6.0))
+        .map(_.map(java.lang.Double.doubleToRawLongBits)), s"$seeds")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.trainCentroids(dup, "embedding", k = 3, iterations = 1)
+    }
+    assert(e.getMessage.contains("trainCentroids needs k=3 distinct training " +
+      "vectors, found 2"), e.getMessage)
+    val few = intercept[IllegalArgumentException] {
+      Similarity.trainCentroids(spread(Seq.fill(300)(Seq(1.0, 1.0)) :+
+        Seq(7.0, 7.0): _*), "embedding", k = 4, iterations = 1)
+    }
+    assert(few.getMessage.contains("trainCentroids needs k=4 distinct " +
+      "training vectors, found 2"), few.getMessage)
   }
 
   test("semanticDedup with k=1 equals brute-force greedy pruning; cells bound candidates") {

@@ -1012,10 +1012,25 @@ class PlanSpec extends SparkSpec {
 
   test("q347: the persisted LSH index joins its band buckets in place") {
     // the whole point of the stored index: a probe batch shuffles ONLY
-    // itself — the corpus side's band join reads the bucketed layout
-    // directly (join keys (band, bh) ⊇ bucket key bh satisfies the
-    // clustered distribution). Broadcast is disabled so the gate-scale
-    // index can't dodge the claim by being small.
+    // itself — the corpus side's band join reads the bucketed postings
+    // directly (join keys = bucket keys (band, bh)), and the candidates'
+    // signature fetch reads the id-bucketed signature store directly.
+    // Broadcast is disabled so the gate-scale index can't dodge the claim
+    // by being small.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // (table, exchanged on its way into the join that reads it?) of every
+    // table scan in the plan
+    def scans(p: SparkPlan, under: Boolean): Seq[(String, Boolean)] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan, under)
+      case f: FileSourceScanExec =>
+        Seq(f.tableIdentifier.map(_.table).getOrElse("?") -> under)
+      case e: Exchange => e.children.flatMap(scans(_, under = true))
+      case j: BaseJoinExec => j.children.flatMap(scans(_, under = false))
+      case o => o.children.flatMap(scans(_, under))
+    }
     val tbl = "graft_bkt_lsh_planspec"
     val docs = Tables.documents(spark, d)
     val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -1028,13 +1043,25 @@ class PlanSpec extends SparkSpec {
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
         numHashes = 64, bands = 16, shingleSize = 3, threshold = 0.35)
       val p = plan(probe)
-      assert(p.contains("SelectedBucketsCount"),
-        s"index side must be a bucketed scan:\n$p")
-      // exactly two exchanges: the probe side entering the band join and
-      // the cross-band candidate dedup — never a third on the index side
+      assert("SelectedBucketsCount".r.findAllIn(p).length == 2,
+        s"both index parts must be bucketed scans:\n$p")
+      val store = graft.operators.Exporter.sidecarTable(tbl, "signatures")
+      val index = scans(probe.queryExecution.executedPlan, under = false)
+        .filter(s => s._1 == tbl || s._1 == store)
+      assert(index.map(_._1).sorted == Seq(tbl, store).sorted &&
+        index.forall(!_._2),
+        s"no exchange between either index-side scan and its join, got $index:\n$p")
+      // exactly two exchanges, both on the batch side: the probe's band
+      // rows entering the band join, and the candidates keyed on index_id
+      // (the cross-band dedup, laid out as the signature store's buckets)
       val n = "Exchange hashpartitioning".r.findAllIn(p).length
-      assert(n == 2,
-        s"expected 2 exchanges (probe side + candidate dedup), got $n:\n$p")
+      assert(n == 2, s"expected 2 batch-side exchanges, got $n:\n$p")
+      // one scan of the batch, and its signature computed once per row
+      val batchScans = scans(probe.queryExecution.executedPlan, under = false)
+        .count(_._1 == "?")
+      val sigs = "minhash_sig".r.findAllIn(p).length
+      assert(batchScans == 1 && sigs == 1,
+        s"expected one batch scan and signature pass, got $batchScans, $sigs:\n$p")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
       graft.operators.Exporter.dropBucketed(spark, tbl)
