@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.GraftSqlBridge
 
 /** Round snapshots for the iterative operators: connected components
   * (both algorithms), PageRank, label propagation, k-core and k-truss.
@@ -58,7 +59,7 @@ object Snapshot {
     */
   def release(snap: DataFrame, blocking: Boolean = false): Unit =
     snap.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
-      .foreach(_.unpersist(blocking))
+      .foreach(GraftSqlBridge.release(_, blocking))
 
   /** Runs an iterative operator's `body` with a fresh [[Loop]]; if `body`
     * throws, every snapshot the loop still holds is released.

@@ -1,103 +1,43 @@
 package graft.operators
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalable as-of join: for each left row, the latest right row with
   * `rightTs <= leftTs` within the same key (the Q12 semantic — "latest
   * order at-or-before each event, per user").
   *
-  * Shape: tag both sides, union, partition, sort within partitions by
-  * (key, ts, side), then one forward scan carrying the last-seen right
-  * row. ONE shuffle of combined size — no range-join explosion, no
-  * per-row subquery. This is the standard distributed as-of algorithm
-  * (merge-scan over co-partitioned sorted runs). Per-key STATE is one
-  * row, but the default hash layout still scans one key's entire
-  * timeline through a single task — a straggler ceiling for a hot key.
+  * Shape: tag both sides, union, RANGE-partition and sort within
+  * partitions on (key, ts, side), then one forward [[RangeScan]] carrying
+  * the last-seen right row. ONE shuffle of combined size — no range-join
+  * explosion, no per-row subquery. This is the standard distributed as-of
+  * algorithm (merge-scan over co-partitioned sorted runs), with the range
+  * layout's boundary seeds: a hot key spans consecutive partitions, and
+  * the summary job supplies each partition with the latest right row of
+  * its key's earlier partitions. Per-key state is one row; driver memory
+  * is O(partitions × keys), never row-shaped data. Keys follow Spark's
+  * join-key semantics (NaN = NaN, -0.0 = +0.0).
   *
-  * The scan runs at the `InternalRow` level (`queryExecution.toRdd` in,
-  * [[GraftSqlBridge.internalCreateDataFrame]] out, the FastFill
-  * convention): timestamps are bare epoch-micros longs, the carried
-  * right row is one `UnsafeRow` struct copy, and each output row is a
-  * `JoinedRow` over a byte-copied left struct plus a small attach row
-  * rebuilt only when the carry changes — no external-Row encoder, no
-  * per-field boxing on the 99% path.
-  *
-  * `crossPartition = true` removes the hot-key ceiling with FastFill's
-  * range layout + boundary seeds (`FastFill.scala` — the same technique,
-  * much smaller state): the unified stream is RANGE-partitioned on
-  * (key, ts, side) so a hot key spans consecutive partitions, and a
-  * fixed-size seed job supplies each partition with the latest
-  * right-side row from earlier partitions of its first key. The layout
-  * is pinned with an eager `localCheckpoint` so the seed pass and the
-  * scan observe ONE partitioning (uncached range exchanges re-sample
-  * bounds per job). Driver/seed memory is O(partitions ×
-  * keys-per-boundary), never row-shaped data.
+  * The scan runs at the `InternalRow` level: timestamps are bare
+  * epoch-micros longs, the carried right row is one `UnsafeRow` struct
+  * copy, and each output row is a `JoinedRow` over a byte-copied left
+  * struct plus a small attach row rebuilt only when the carry changes — no
+  * external-Row encoder, no per-field boxing on the 99% path.
   *
   * The decorrelated join+regroup form (RelationalQueries q12) is kept for
   * the oracle gate; this operator is the 100 TB path.
   */
 object AsofJoin {
 
-  /** One (partition, key-run) seed record: the run's last right payload
-    * (an owned `InternalRow` copy, null when the run had no right row).
-    */
-  private final case class AsofRun(pid: Int, key: List[Any],
-                                   lastRight: InternalRow)
-
-  private def externalizeKey(v: Any): Any = v match {
-    case u: UTF8String => u.toString
-    case x => x
-  }
-
-  /** Canonical form of a key value for run detection and seed lookup,
-    * matching Spark SQL's join/grouping key semantics for fractional
-    * types (ADVICE r16): all NaN bit patterns collapse to the one
-    * canonical NaN (Spark treats NaN = NaN as TRUE in join keys) and
-    * -0.0 collapses to +0.0 (Spark normalizes the zero sign before
-    * hashing), so a key run never splits — and a cross-partition seed
-    * is never missed — on a bit-pattern difference a Spark equi-join
-    * would ignore. Everything else passes through unchanged.
-    */
-  private def canonKey(v: Any): Any = v match {
-    case d: java.lang.Double =>
-      if (d.doubleValue() == 0.0d) java.lang.Double.valueOf(0.0d)
-      else if (java.lang.Double.isNaN(d.doubleValue()))
-        java.lang.Double.valueOf(java.lang.Double.NaN)
-      else d
-    case f: java.lang.Float =>
-      if (f.floatValue() == 0.0f) java.lang.Float.valueOf(0.0f)
-      else if (java.lang.Float.isNaN(f.floatValue()))
-        java.lang.Float.valueOf(java.lang.Float.NaN)
-      else f
-    case x => x
-  }
-
-  /** Key equality over canonicalized boxed values: `Objects.equals`, so
-    * canonical NaN equals canonical NaN (java.lang.Double.equals is
-    * bits-based — the NaN-safe semantics Spark SQL gives join keys),
-    * while every other whitelisted type keeps its value-based equals
-    * (UTF8String, boxed integrals, Decimal's compareTo-based equals).
-    * Both arguments MUST have passed through [[canonKey]].
-    */
-  private def keyEq(a: Any, b: Any): Boolean = java.util.Objects.equals(a, b)
-
   /** @param left     probe side (keeps all rows)
     * @param right    reference side (latest at-or-before row is attached)
-    * @param keyCols  equi-join keys
+    * @param keyCols  equi-join keys (string/numeric/boolean/date/timestamp)
     * @param leftTs   event-time column on the left
     * @param rightTs  event-time column on the right
     * @param pickCols right-side columns to attach (null when no match)
-    * @param crossPartition range-partition on (key, ts) with boundary
-    *                 seeds so one hot key's timeline parallelizes across
-    *                 tasks; the default hash layout scans each key in one
-    *                 task (fine when no key dominates a partition)
     * @param direction "backward" (latest right at-or-before, the default)
     *                 or "forward" (earliest right at-or-after — the
     *                 next-quote-after-trade variant). Only the scan order
@@ -118,7 +58,6 @@ object AsofJoin {
   def asof(left: DataFrame, right: DataFrame, keyCols: Seq[String],
            leftTs: String, rightTs: String,
            pickCols: Seq[String],
-           crossPartition: Boolean = false,
            direction: String = "backward",
            toleranceSec: Option[Long] = None): DataFrame = {
     require(direction == "backward" || direction == "forward",
@@ -159,68 +98,44 @@ object AsofJoin {
     // at equal ts the right side (_side = 0) must be SEEN first in scan
     // order so the match is inclusive — ascending _side does that under
     // both time directions
-    val tsOrder =
-      if (direction == "backward") col("_ts").asc else col("_ts").desc
+    val backward = direction == "backward"
+    val tsOrder = if (backward) col("_ts").asc else col("_ts").desc
     val sortCols = (keyCols.map(c => col(c).asc) :+ tsOrder :+ col("_side").asc)
-    val unioned = l.unionByName(r)
-    val combined =
-      if (!crossPartition)
-        unioned.repartition(keyCols.map(col): _*)
-          .sortWithinPartitions(sortCols: _*)
-      else
-        // eager localCheckpoint PINS the sampled range bounds: every
-        // downstream job (the seed pass, the scan) reads these exact
-        // materialized partitions instead of re-executing the exchange
-        unioned.repartitionByRange(sortCols: _*)
-          .sortWithinPartitions(sortCols: _*)
-          .localCheckpoint()
+    val combined = l.unionByName(r)
+      .repartitionByRange(sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
 
     val n = keyCols.length
-    val keyTypes: Array[DataType] =
-      unionSchema.fields.take(n).map(_.dataType)
-    // sameKey (and the seed-map lookup) compare BOXED internal values —
-    // value-equal for UTF8String/boxed primitives, but reference-equal for
-    // BinaryType's Array[Byte] (every row would start a new key run and
-    // silently reset the carry) and undefined for array/map/struct keys.
-    // Mirror FastFill's guard: fail loudly at plan time, not silently at
-    // scan time.
-    // Fractional/decimal keys are whitelisted too (ADVICE r15), with
-    // Spark SQL's join-key semantics (ADVICE r16): key values pass
-    // through `canonKey` before run detection and seed storage/lookup,
-    // so NaN keys form runs like any other value (Spark treats
-    // NaN = NaN as TRUE for join/grouping keys — all bit patterns
-    // collapse to one canonical NaN) and -0.0/+0.0 are one key (Spark
-    // normalizes the zero sign), INCLUDING across a range-partition
-    // boundary where the pre-r17 boxed hashCode mismatch dropped the
-    // seed carry (AsofJoinSpec pins both corners). Decimal keys need no
-    // canonicalization: Decimal.equals is compareTo-based, scale-stable.
-    require(keyTypes.forall {
-      case StringType | IntegerType | LongType | ShortType | ByteType |
-           BooleanType | DateType | TimestampType | TimestampNTZType |
-           FloatType | DoubleType => true
-      case _: DecimalType => true
-      case _ => false
-    }, "asofJoin: key columns must be string/numeric/boolean/date/timestamp" +
-      " (key-run equality compares boxed internal values; binary and nested" +
-      " keys compare by reference)")
     val nLeft = leftFields.length
     val rightStruct = unionSchema("_right").dataType.asInstanceOf[StructType]
     val nRight = rightStruct.length // pickCols + _rts
     val pickTypes: Array[DataType] =
       rightStruct.fields.take(pickCols.length).map(_.dataType)
-    val backward = direction == "backward"
     val tolUs = toleranceSec.map(_ * 1000000L)
 
-    // per-partition carry-in: key of the partition's FIRST run -> latest
-    // right row for that key in EARLIER partitions (range layout only)
-    val seeds: Map[(Int, List[Any]), InternalRow] =
-      if (crossPartition) buildSeeds(combined, n, keyTypes, nRight)
-      else Map.empty
+    val scan = new RangeScan("AsofJoin", combined, keyCols, "_ts",
+      descending = !backward)
+    // a run's summary is its last right row; its seed is the latest right
+    // row of the key's earlier runs
+    val lastRights = scan.summarize { run =>
+      var last: InternalRow = null
+      while (run.hasNext) {
+        val row = run.next()
+        if (row.getInt(n + 1) == 0) last = row.getStruct(n + 3, nRight).copy()
+      }
+      last
+    }
+    val seeds = scan.seeds(lastRights) { runs =>
+      var carry: InternalRow = null
+      runs.map { case (_, last) =>
+        val seed = carry
+        if (last != null) carry = last
+        seed
+      }
+    }
 
-    val outRdd = combined.queryExecution.toRdd.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var curKey: Array[Any] = null // owned internal values
-      var lastRight: InternalRow = null // owned copy
+    scan.scanFrame(seeds, outSchema) { (seed: InternalRow, run) =>
+      var lastRight = seed // owned copy
       // the attach row is rebuilt only when the carry changes; it is
       // immutable thereafter, so every JoinedRow until the next right row
       // may share it (tolerance misses share the all-null instance)
@@ -237,29 +152,8 @@ object AsofJoin {
           }
           attach = new GenericInternalRow(a)
         }
-      def sameKey(row: InternalRow): Boolean = {
-        if (curKey == null) return false
-        var i = 0
-        while (i < n) {
-          val v =
-            if (row.isNullAt(i)) null
-            else canonKey(row.get(i, keyTypes(i)))
-          if (!keyEq(v, curKey(i))) return false
-          i += 1
-        }
-        true
-      }
-      it.flatMap { row =>
-        if (!sameKey(row)) {
-          curKey = Array.tabulate(n)(i =>
-            if (row.isNullAt(i)) null
-            else canonKey(InternalRow.copyValue(row.get(i, keyTypes(i)))))
-          lastRight =
-            if (seeds.isEmpty) null
-            else seeds.getOrElse(
-              (pid, curKey.map(externalizeKey).toList), null)
-          rebuildAttach()
-        }
+      rebuildAttach()
+      run.flatMap { row =>
         if (row.getInt(n + 1) == 0) { // right side: update state
           lastRight = row.getStruct(n + 3, nRight).copy()
           rebuildAttach()
@@ -283,8 +177,6 @@ object AsofJoin {
         }
       }
     }
-    GraftSqlBridge.internalCreateDataFrame(
-      left.sparkSession, outRdd, outSchema)
   }
 
   /** pandas merge_asof `direction='nearest'` parity: for each left row,
@@ -335,61 +227,5 @@ object AsofJoin {
       when(useBack, col(s"asof_$c")).otherwise(col(s"_f_$c"))
         .as(s"asof_$c"))
     joined.select(out: _*)
-  }
-
-  /** One fixed-size metadata job over the pinned layout + a driver prefix
-    * fold: each partition emits one record per key-run — (pid, key, last
-    * right payload in the run, or null) — and the driver walks each key's
-    * runs in partition order so partition p's carry-in is the latest
-    * right row any earlier partition saw. Mirrors `FastFill.buildSeeds`
-    * with single-row state; rides the same physical RDD as the scan.
-    */
-  private def buildSeeds(combined: DataFrame, n: Int,
-                         keyTypes: Array[DataType], nRight: Int)
-      : Map[(Int, List[Any]), InternalRow] = {
-    val runs: Array[AsofRun] = combined.queryExecution.toRdd.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val acc = scala.collection.mutable.ArrayBuffer.empty[AsofRun]
-      var keyInt: Array[Any] = null
-      var lastRight: InternalRow = null
-      def flush(): Unit = if (keyInt != null)
-        acc += AsofRun(pid, keyInt.map(externalizeKey).toList, lastRight)
-      def sameKey(row: InternalRow): Boolean = {
-        if (keyInt == null) return false
-        var i = 0
-        while (i < n) {
-          val v =
-            if (row.isNullAt(i)) null
-            else canonKey(row.get(i, keyTypes(i)))
-          if (!keyEq(v, keyInt(i))) return false
-          i += 1
-        }
-        true
-      }
-      while (it.hasNext) {
-        val row = it.next()
-        if (!sameKey(row)) {
-          flush()
-          keyInt = Array.tabulate(n)(i =>
-            if (row.isNullAt(i)) null
-            else canonKey(InternalRow.copyValue(row.get(i, keyTypes(i)))))
-          lastRight = null
-        }
-        if (row.getInt(n + 1) == 0)
-          lastRight = row.getStruct(n + 3, nRight).copy()
-      }
-      flush()
-      acc.iterator
-    }.collect()
-
-    val seeds = scala.collection.mutable.Map.empty[(Int, List[Any]), InternalRow]
-    for ((key, runs0) <- runs.groupBy(_.key)) {
-      var carry: InternalRow = null
-      for (r <- runs0.sortBy(_.pid)) {
-        if (carry != null) seeds((r.pid, key)) = carry
-        if (r.lastRight != null) carry = r.lastRight
-      }
-    }
-    seeds.toMap
   }
 }

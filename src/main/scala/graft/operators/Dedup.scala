@@ -118,7 +118,10 @@ object Dedup {
     val sigs = withMinHash(df.select(col(idCol), col(textCol)), idCol, textCol,
         numHashes, bands, shingleSize)
       .select(col("id"), col("minhash"),
-        posexplode(col("bands")).as(Seq("band", "bh")))
+        // posexplode_outer: posexplode infers a `size(bands) > 0` filter
+        // below the projection and computes every signature twice; the
+        // outer form's null rows never match the inner band join
+        posexplode_outer(col("bands")).as(Seq("band", "bh")))
     val bw = Window.partitionBy("band", "bh").orderBy("id")
     val capped = sigs
       .withColumn("_bn", row_number().over(bw))

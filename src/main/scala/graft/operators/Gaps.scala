@@ -4,9 +4,12 @@ import scala.collection.immutable.ListMap
 
 import graft.core.{Json, Rules}
 import graft.sources.Readers
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Time-grid construction, gap detection/classification and gap repair
   * (reference O11–O13: src/etl/transform/gaps.py).
@@ -17,7 +20,7 @@ import org.apache.spark.sql.functions._
   *  - missing stamps: grid anti-join observed (gaps.py:63);
   *  - clustering: gaps-and-islands — `ts - row_number * step` island key,
   *    then one groupBy (replaces the reference's Python loop, gaps.py:72-117);
-  *  - repair: one narrow [[FastFill]] scan over the [[RangeLayout]] does
+  *  - repair: one narrow [[FastFill]] scan over the range layout does
   *    pandas `reindex` (exactly-on-grid rows only — off-grid rows drop, the
   *    §2.2.4 quirk), ffill and linear interpolation (gaps.py:148-169).
   *
@@ -114,62 +117,40 @@ object Gaps {
   /** Keyless (single-series) gap clusters WITHOUT a global window: a
     * keyless `Window.orderBy` serializes the whole series onto one task —
     * the r6-flagged scale trap. Instead the observed on-grid stamps are
-    * RANGE-partitioned by stamp, every task detects the gaps between ITS
-    * consecutive stamps in one narrow scan, and the only cross-task state
-    * is each partition's (first, last) stamp — fixed-size metadata
-    * stitched on the driver, never row data.
+    * RANGE-partitioned by stamp and clustered by a [[RangeScan]]: every
+    * task emits the gaps between ITS consecutive stamps, plus the gap
+    * between the previous non-empty partition's last stamp (its seed) and
+    * its own first one.
     *
     * @param obs  observed on-grid rows; only `TsCol` is read
     * @return (start, end, missing_count) — one row per gap cluster
     */
   private def keylessGapClusters(obs: DataFrame,
                                  stepMicros: Long): DataFrame = {
-    val spark = obs.sparkSession
-    import spark.implicits._
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val ranged = obs.select(unix_micros(col(TsCol)).as("us")).as[Long]
+    val nPart = obs.sparkSession.sessionState.conf.numShufflePartitions
+    val ranged = obs.select(unix_micros(col(TsCol)).as("us"))
       .repartitionByRange(nPart, col("us"))
       .sortWithinPartitions("us")
-    // tag 0 = in-partition gap pair (prev, cur); tag 1/2 = the partition's
-    // first/last stamp keyed by partition id. Checkpointed because both
-    // the boundary collect and the pair job below read it (it is tiny:
-    // one row per gap + two per partition).
-    val tagged = ranged.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-      if (!it.hasNext) Iterator.empty
-      else {
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-        var cur = it.next()
-        val first = cur
-        var prev = cur
-        while (it.hasNext) {
-          cur = it.next()
-          if (cur - prev > stepMicros) out += ((0, prev, cur))
-          prev = cur
-        }
-        out += ((1, pid, first))
-        out += ((2, pid, prev))
-        out.iterator
-      }
-    }.localCheckpoint()
-    val bounds = tagged.filter(_._1 != 0).collect()
-    val firsts = bounds.filter(_._1 == 1).map(t => t._2 -> t._3).toMap
-    val lasts = bounds.filter(_._1 == 2).map(t => t._2 -> t._3).toMap
-    val pids = firsts.keys.toSeq.sorted
-    // a gap spanning two range partitions appears as (last of i, first of
-    // the next non-empty partition) — empty partitions were never emitted
-    val stitched = pids.zip(pids.drop(1)).collect {
-      case (a, b) if firsts(b) - lasts(a) > stepMicros =>
-        (lasts(a), firsts(b))
+    val scan = new RangeScan("Gaps", ranged, Nil, "us")
+    val seeds = scan.seeds(scan.summarize(_ => ())) { runs =>
+      null +: runs.init.map(r => java.lang.Long.valueOf(r._1.lastUs))
     }
-    tagged.filter(_._1 == 0).map(t => (t._2, t._3))
-      .union(spark.createDataset(stitched))
-      .toDF("_p", "_c")
-      .select(
-        timestamp_micros(col("_p") + stepMicros).as("start"),
-        timestamp_micros(col("_c") - stepMicros).as("end"),
-        (((col("_c") - col("_p")) / stepMicros).cast("long") - 1)
-          .as("missing_count"))
+    val pairs = StructType(Seq(
+      StructField("_p", LongType), StructField("_c", LongType)))
+    scan.scanFrame(seeds, pairs) { (seed: java.lang.Long, run) =>
+      var prev: Long = if (seed != null) seed else run.next().getLong(0)
+      run.flatMap { r =>
+        val (p, c) = (prev, r.getLong(0))
+        prev = c
+        if (c - p > stepMicros)
+          Iterator.single(new GenericInternalRow(Array[Any](p, c)): InternalRow)
+        else Iterator.empty
+      }
+    }.select(
+      timestamp_micros(col("_p") + stepMicros).as("start"),
+      timestamp_micros(col("_c") - stepMicros).as("end"),
+      (((col("_c") - col("_p")) / stepMicros).cast("long") - 1)
+        .as("missing_count"))
   }
 
   /** length + 4-way classification columns (order short → overnight → long
@@ -203,16 +184,13 @@ object Gaps {
     * (gaps.py:121-190). One extra aggregation job produces the report
     * (filled counts before/after, remaining NaNs, rows_after).
     *
-    * `df` must be in the [[RangeLayout]] on (partitionCols, TIMESTAMP) —
-    * Normalize's output is; [[FastFill.fill]] throws
-    * [[RangeLayout.LayoutError]] otherwise.
+    * `df` must be in the range layout ([[RangeScan.layout]]) on
+    * (partitionCols, TIMESTAMP) — Normalize's output is; [[FastFill.fill]]
+    * throws [[RangeScan.LayoutError]] otherwise.
     *
-    * Storage note: KEYED report-mode repair leaves zero persistent-RDD
-    * residue (GapsSpec pin). The KEYLESS report path additionally leaves
-    * the gap-cluster `localCheckpoint` from [[keylessGapClusters]] — KBs
-    * (one row per gap + two per partition), reclaimed by the
-    * ContextCleaner once the plan is unreachable; it cannot be
-    * unpersisted eagerly because the clusters frame is consumed lazily.
+    * The returned frame is not cached; a report-mode call caches the
+    * repaired frame only while its report jobs run and leaves no
+    * persistent RDD behind (GapsSpec pin).
     */
   def repairGaps(df: DataFrame, rule: String,
                  useFfillFor: Seq[String] = Seq("VOLUME"),
@@ -220,13 +198,7 @@ object Gaps {
                  shortGapMinutes: Int = 5,
                  partitionCols: Seq[String] = Nil,
                  computeReport: Boolean = true,
-                 maxGapsInReport: Int = 10000,
-                 cacheResult: Boolean = false,
-                 /** caller's size hint for the `cacheResult` persist level
-                   * (core.Sizing): the repaired frame's own plan stats are
-                   * the bridge's unknown sentinel, so only a hint can
-                   * trigger the large-frame DISK_ONLY spill */
-                 approxResultBytes: Option[Long] = None): Result = {
+                 maxGapsInReport: Int = 10000): Result = {
 
     val dataCols = df.columns.filterNot(c =>
       c == TsCol || c == Readers.FileOrderCol || partitionCols.contains(c)).toSeq
@@ -258,46 +230,20 @@ object Gaps {
       .select((partitionCols ++ Seq(TsCol) ++ dataCols ++
         ffillCols.map(c => s"_wasnull_$c") :+ "_generated").map(col): _*)
 
-    var report = Json.obj(
-      "detected_gaps" -> Seq.empty[Any],
-      "filled_counts" -> ListMap.empty[String, Any],
-      "remaining_nans" -> ListMap.empty[String, Any],
-      "rows_after" -> 0L)
-
-    // No-report path: drop the accounting columns BEFORE caching, so the
-    // RETURNED frame is the cached plan itself and the caller's
-    // `unpersist()` actually releases it. Returning a projection OVER the
-    // cache (the old shape) made every caller-side unpersist a silent
-    // no-op — a leak of one series-sized cache per pipeline run that the
-    // 30× rehearsal exposed as a GC storm (persistent RDDs grew by one per
-    // run; at gate scale the 27 MB leak was invisible). The cache is also
-    // smaller: the flag columns never reach storage.
-    if (!computeReport) {
-      val clean = repaired1.drop(
-        ffillCols.map(c => s"_wasnull_$c") :+ "_generated": _*)
-      return Result(
-        if (cacheResult)
-          clean.persist(graft.core.Sizing.storageFor(
-            approxResultBytes.orElse(graft.core.Sizing.planEstimate(clean))))
-        else clean, report)
-    }
-    // Report path. The report needs the accounting columns (`_wasnull_*`,
-    // `_generated`) that the returned frame must NOT carry, so the two
-    // plans differ — and a cache must live on the RETURNED plan for the
-    // caller's `unpersist()` to work (same leak class as the no-report
-    // path above, fixed r13). Shape: a SCOPED cache on the pre-drop frame
-    // feeds the two report jobs and is FULLY released (blocking) before
-    // the clean projection is cached for the caller — the two cache
-    // entries must never coexist: a cache registered over another one
-    // leaves an orphaned buffer RDD behind when the inner entry is
-    // removed (Spark's non-cascade uncache recompiles the dependent
-    // entry; the GapsSpec pin caught the leak). Price: a cacheResult
-    // caller's first action recomputes the fill chain once — this path
-    // has no production caller (Runner passes computeReport=false);
-    // unpersist-correctness is the contract under test.
+    val clean = repaired1.drop(
+      ffillCols.map(c => s"_wasnull_$c") :+ "_generated": _*)
+    if (!computeReport)
+      return Result(clean, Json.obj(
+        "detected_gaps" -> Seq.empty[Any],
+        "filled_counts" -> ListMap.empty[String, Any],
+        "remaining_nans" -> ListMap.empty[String, Any],
+        "rows_after" -> 0L))
+    // The report reads the accounting columns (`_wasnull_*`, `_generated`)
+    // that the returned frame drops, twice (the flat aggregate and the gap
+    // clusters): a scoped cache of the pre-drop frame feeds both and is
+    // released, blocking, before return.
     val repaired = repaired1.cache()
-
-    if (computeReport) {
+    val report = {
       val step = Rules.stepSeconds(rule)
       // the flat agg runs FIRST: it is the job that materializes the cache,
       // and it parallelizes better than the windowed cluster pass below
@@ -340,7 +286,7 @@ object Gaps {
           "classification" -> r.getAs[String]("classification"))
       }
 
-      report = Json.obj(
+      Json.obj(
         "detected_gaps" -> gapList,
         "filled_counts" -> ListMap(ffillCols.map(c =>
           c -> row.getAs[Long](s"_filled_$c")): _*),
@@ -349,16 +295,8 @@ object Gaps {
         "rows_after" -> row.getAs[Long]("_rows"))
     }
 
-    // release the scoped report cache BEFORE caching the returned frame
-    // (see the shape note above); blocking so no buffer outlives the call
     repaired.unpersist(blocking = true)
-    val clean =
-      repaired1.drop(ffillCols.map(c => s"_wasnull_$c") :+ "_generated": _*)
-    Result(
-      if (cacheResult)
-        clean.persist(graft.core.Sizing.storageFor(
-          approxResultBytes.orElse(graft.core.Sizing.planEstimate(clean))))
-      else clean, report)
+    Result(clean, report)
   }
 
   /** Cluster a small frame of missing stamps into gap records (the

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * observation on the deduped frame, gathered by the caller's own first
   * action on it rather than by one eager pass per stage or a report job.
   *
-  * Scale notes: the only shuffles are the dedup's [[RangeLayout]] exchange
+  * Scale notes: the only shuffles are the dedup's range-layout exchange
   * (keyed on SYMBOL when present, never a single-partition window) and the
   * final sort; the rename and required-column logic is driver-side name
   * logic, exactly like the reference's `_build_rename_map`.
@@ -102,9 +102,9 @@ object Normalize {
     *                  order-insensitive consumers (aggregation, windowed
     *                  repair, resample) should prefer this: a global range
     *                  sort mid-pipeline is pure waste. This frame is in the
-    *                  [[RangeLayout]] on (partitionCols, TIMESTAMP) — the
-    *                  input FastFill, Gaps.repairGaps and Reporting's SMA
-    *                  require (an empty key list is one keyless series).
+    *                  range layout ([[RangeScan.layout]]) on (partitionCols,
+    *                  TIMESTAMP) — the input FastFill, Gaps.repairGaps and
+    *                  Reporting's SMA require (an empty key list is one keyless series).
     *
     * The report counters are a `Dataset.observe` observation on `unsorted`
     * only, so the caller's first action on `unsorted` (the Runner's cache
@@ -255,7 +255,7 @@ object Normalize {
     val w = Window.partitionBy((dedupKeys :+ TsCol).map(col): _*)
       .orderBy(col(Readers.FileOrderCol).asc)
     val numbered =
-      RangeLayout(withTs, dedupKeys, thenBy = Seq(Readers.FileOrderCol))
+      RangeScan.layout(withTs, dedupKeys, thenBy = Seq(Readers.FileOrderCol))
         .withColumn("_rn", row_number().over(w))
     def dedup(in: DataFrame): DataFrame =
       in.filter(col("_rn") === 1)

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.NumericType
   * per-column NaNs, dup stamps, range stats, CLOSE stats + exact median) —
   * plain aggregates the Runner folds into its cache-materializing job
   * ([[profileAggs]] + [[fromProfile]]), so a pipeline run spends no job of
-  * its own on it — and, when indicators are on, two narrow scans of the
-  * range layout for all SMA windows together. The reference runs ~10 separate
+  * its own on it — and, when indicators are on, one [[RangeScan]] (two
+  * narrow jobs over the range layout) for all SMA windows together. The reference runs ~10 separate
   * pandas passes; each job here scans the frame once. Reports are
   * fixed-size driver aggregates — nothing row-shaped is ever collected.
   */
@@ -39,9 +39,9 @@ object Reporting {
     * distinct by construction (anything post-dedup) can skip the
     * countDistinct expand — the reported value is identically 0.
     *
-    * With `computeIndicators`, `df` must be in the [[RangeLayout]] on
-    * (partitionCols, TIMESTAMP): the SMA summaries run as a seeded
-    * parallel scan and throw [[RangeLayout.LayoutError]] otherwise.
+    * With `computeIndicators`, `df` must be in the range layout
+    * ([[RangeScan.layout]]) on (partitionCols, TIMESTAMP): the SMA summaries
+    * are a [[RangeScan]] and throw [[RangeScan.LayoutError]] otherwise.
     */
   def dataQualityReport(df: DataFrame,
                         computeIndicators: Boolean = true,
@@ -191,101 +191,69 @@ object Reporting {
     report
   }
 
-  /** Per-scan SMA partial for one (partition, series): fixed-size driver
-    * records collected off an `InternalRow` scan — the scans below never
-    * cross the external-Row encoder (boxing 60M rows per pass measured as
-    * the quality report's dominant cost at the 100× probe scale).
+  /** One (partition, series run)'s SMA partial, per window: the last
+    * non-null SMA and its stamp, the null-SMA count, min and max.
     */
   private final case class SmaPartial(
       lasts: Array[java.lang.Double], lastTs: Array[java.lang.Long],
       nans: Array[Long],
       mins: Array[java.lang.Double], maxs: Array[java.lang.Double])
 
-  /** SMA summaries over the [[RangeLayout]]: a series spans consecutive
-    * ordered partitions (a keyless frame is one series), so the ring-buffer
-    * scan runs per partition in parallel, primed with the previous
-    * partitions' trailing CLOSE values (a trailing window of w rows only
-    * ever needs the last w-1 predecessor rows). min_periods=1 semantics:
-    * value = mean of the non-null entries in the trailing window, null only
-    * when the whole window is null. Two narrow jobs: a tail-collection pass
-    * (≤ maxW-1 values plus the stamp extent per (partition, series) —
-    * fixed-size metadata, never row-shaped data; the extents are checked by
-    * [[RangeLayout.check]]) and the seeded scan emitting per-(partition,
-    * series) partials merged on the driver. Task memory is bounded by
-    * max(smaWindows) ring slots, never by series length.
+  /** SMA summaries as a [[RangeScan]] over the range layout: a series
+    * spans consecutive ordered partitions (a keyless frame is one series),
+    * so the ring-buffer scan runs per partition in parallel, primed with
+    * the previous partitions' trailing CLOSE values (a trailing window of w
+    * rows only ever needs the last w-1 predecessor rows). min_periods=1
+    * semantics: value = mean of the non-null entries in the trailing
+    * window, null only when the whole window is null. Two narrow jobs: the
+    * summary job collects each run's last maxW-1 values (nulls included —
+    * the ring counts null entries as window slots, exactly like
+    * rowsBetween), and the seeded scan emits one partial per run, merged on
+    * the driver. Task memory is bounded by max(smaWindows) ring slots,
+    * never by series length.
     */
   private def smaSummaries(df: DataFrame, smaWindows: Seq[Int],
                            partitionCols: Seq[String]): ListMap[String, Any] = {
-    import RangeLayout.{externalize, keyOf, sameKey}
     val ws = smaWindows.toArray
     val maxW = ws.max
-    val schema = df.schema
-    val types = schema.fields.map(_.dataType)
-    val kIdx = partitionCols.map(schema.fieldIndex).toArray
-    val tsIdx = schema.fieldIndex(TsCol)
-    val cIdx = schema.fieldIndex("CLOSE")
-    // both passes run on the SAME physical RDD of the layout — partition
-    // ids are consistent by construction, and neither pass crosses the
-    // external-Row encoder (internal values: a timestamp is a bare long of
-    // epoch micros). Runs are detected on owned internal key values; map
-    // keys are externalized once per run.
-    val inRdd = df.queryExecution.toRdd
+    val tsIdx = df.schema.fieldIndex(TsCol)
+    val cIdx = df.schema.fieldIndex("CLOSE")
+    val scan = new RangeScan("Reporting SMA", df, partitionCols, TsCol)
 
-    // pass 1: per-(partition, series) trailing values (nulls included — the
-    // ring counts null entries as window slots, exactly like rowsBetween)
-    // and stamp extent
-    val tails: Array[(RangeLayout.Run, Array[java.lang.Double])] =
-      inRdd.mapPartitionsWithIndex { (pid, it) =>
-        val acc = scala.collection.mutable.ArrayBuffer
-          .empty[(RangeLayout.Run, Array[java.lang.Double])]
-        var keyInt: Array[Any] = null
-        var tracker: RangeLayout.RunTracker = null
-        var buf: scala.collection.mutable.ArrayDeque[java.lang.Double] = null
-        def flush(): Unit = if (keyInt != null)
-          acc += ((tracker.run, buf.toArray))
-        while (it.hasNext) {
-          val r = it.next()
-          if (!sameKey(r, keyInt, kIdx, types)) {
-            flush(); keyInt = keyOf(r, kIdx, types)
-            tracker = new RangeLayout.RunTracker(pid, externalize(keyInt))
-            buf = scala.collection.mutable.ArrayDeque.empty
-          }
-          tracker.add(if (r.isNullAt(tsIdx)) Long.MinValue else r.getLong(tsIdx))
-          buf += (if (r.isNullAt(cIdx)) null
-                  else java.lang.Double.valueOf(r.getDouble(cIdx)))
-          if (buf.length > maxW - 1) buf.removeHead()
-        }
-        flush()
-        acc.iterator
-      }.collect()
-    RangeLayout.check("Reporting SMA", tails.map(_._1))
-
-    // driver: carry-in per (partition, series) = last maxW-1 values of the
-    // concatenated predecessor tails
-    val carries = scala.collection.mutable.Map.empty[(Int, List[Any]), Array[java.lang.Double]]
-    for ((k, runs) <- tails.groupBy(_._1.key)) {
-      var run = Vector.empty[java.lang.Double]
-      for ((r, tail) <- runs.sortBy(_._1.pid)) {
-        carries((r.pid, k)) = run.toArray
-        run = (run ++ tail).takeRight(maxW - 1)
+    val tails = scan.summarize { run =>
+      val buf = scala.collection.mutable.ArrayDeque.empty[java.lang.Double]
+      while (run.hasNext) {
+        val r = run.next()
+        buf += (if (r.isNullAt(cIdx)) null
+                else java.lang.Double.valueOf(r.getDouble(cIdx)))
+        if (buf.length > maxW - 1) buf.removeHead()
+      }
+      buf.toArray
+    }
+    // a run's carry-in: the last maxW-1 values of its predecessors' tails
+    val seeds = scan.seeds(tails) { runs =>
+      var carry = Vector.empty[java.lang.Double]
+      runs.map { case (_, tail) =>
+        val c = carry.toArray
+        carry = (carry ++ tail).takeRight(maxW - 1)
+        c
       }
     }
-    val seeds = carries.toMap
 
-    // pass 2: seeded ring scan, per-(partition, series) partials —
-    // primitive ring slots (value + present), no per-row allocation. Each
-    // emitted mean sums its window's slots oldest to newest (the windowed
-    // avg's own order), never a running sum: a running sum's rounding
-    // carries the series' history since the partition start, so the same
-    // row would read differently under another range partitioning.
-    val partials: Array[SmaPartial] = inRdd.mapPartitionsWithIndex { (pid, it) =>
-      val acc = scala.collection.mutable.ArrayBuffer.empty[SmaPartial]
+    // the seeded ring scan — primitive ring slots (value + present), no
+    // per-row allocation. Each emitted mean sums its window's slots oldest
+    // to newest (the windowed avg's own order), never a running sum: a
+    // running sum's rounding carries the series' history since the
+    // partition start, so the same row would read differently under
+    // another range partitioning.
+    val partials: Array[SmaPartial] = scan.scan(seeds) {
+        (carry: Array[java.lang.Double], run) =>
       val k = ws.length
-      var keyInt: Array[Any] = null
       val ringV = Array.fill(k)(new Array[Double](maxW))
       val ringP = Array.fill(k)(new Array[Boolean](maxW))
       val nans = new Array[Long](k)
-      val mins = new Array[Double](k); val maxs = new Array[Double](k)
+      val mins = Array.fill(k)(Double.MaxValue)
+      val maxs = Array.fill(k)(Double.MinValue)
       val lasts = new Array[java.lang.Double](k)
       val lastTs = new Array[java.lang.Long](k)
       var n = 0L
@@ -318,35 +286,20 @@ object Reporting {
         }
         n += 1
       }
-      def flush(): Unit = if (keyInt != null)
-        acc += SmaPartial(lasts.clone(), lastTs.clone(), nans.clone(),
-          ws.indices.map(j => if (mins(j) != Double.MaxValue)
-            java.lang.Double.valueOf(mins(j)) else null).toArray,
-          ws.indices.map(j => if (maxs(j) != Double.MinValue)
-            java.lang.Double.valueOf(maxs(j)) else null).toArray)
-      while (it.hasNext) {
-        val r = it.next()
-        if (!sameKey(r, keyInt, kIdx, types)) {
-          flush(); keyInt = keyOf(r, kIdx, types)
-          ringP.foreach(a => java.util.Arrays.fill(a, false))
-          java.util.Arrays.fill(nans, 0L)
-          java.util.Arrays.fill(mins, Double.MaxValue)
-          java.util.Arrays.fill(maxs, Double.MinValue)
-          java.util.Arrays.fill(lasts.asInstanceOf[Array[AnyRef]], null)
-          java.util.Arrays.fill(lastTs.asInstanceOf[Array[AnyRef]], null)
-          n = 0L
-          for (c <- seeds.getOrElse((pid, externalize(keyInt)),
-              Array.empty[java.lang.Double]))
-            push(c != null, if (c != null) c.doubleValue() else 0.0,
-              emit = false, tsPresent = false, 0L)
-        }
+      if (carry != null)
+        for (c <- carry)
+          push(c != null, if (c != null) c.doubleValue() else 0.0,
+            emit = false, tsPresent = false, 0L)
+      while (run.hasNext) {
+        val r = run.next()
         val present = !r.isNullAt(cIdx)
         val tsP = !r.isNullAt(tsIdx)
         push(present, if (present) r.getDouble(cIdx) else 0.0,
           emit = true, tsP, if (tsP) r.getLong(tsIdx) else 0L)
       }
-      flush()
-      acc.iterator
+      Iterator.single(SmaPartial(lasts, lastTs, nans,
+        mins.map(m => if (m != Double.MaxValue) java.lang.Double.valueOf(m) else null),
+        maxs.map(m => if (m != Double.MinValue) java.lang.Double.valueOf(m) else null)))
     }.collect()
 
     // merge: nans sum; min/max fold; last = value at the latest non-null-SMA

@@ -149,7 +149,7 @@ object Resample {
                interpolatePrices: Boolean = true,
                dropIncomplete: Boolean = true,
                partitionCols: Seq[String] = Nil): DataFrame = {
-    val repaired = Gaps.repairGaps(RangeLayout(df, partitionCols), rule,
+    val repaired = Gaps.repairGaps(RangeScan.layout(df, partitionCols), rule,
       useFfillFor, interpolatePrices,
       partitionCols = partitionCols, computeReport = false).df
     resampleOhlc(repaired, rule, dropIncomplete, partitionCols = partitionCols)

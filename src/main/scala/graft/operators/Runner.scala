@@ -238,7 +238,7 @@ object Runner {
       // exporter.py only forwards `normalization_report` — so skipping the
       // report aggregation is parity AND removes two jobs per timeframe.
       //
-      // `ndf` is Normalize's output, in the RangeLayout on (keys, TIMESTAMP)
+      // `ndf` is Normalize's output, in the range layout on (keys, TIMESTAMP)
       // that the repair and SMA scans require: they run as narrow
       // mapPartitions with no shuffle and no sort, parallel across a single
       // symbol's time ranges (cross-boundary state via FastFill's seeds).
@@ -256,8 +256,7 @@ object Runner {
           // rows — same magnitude, so ndf's estimate serves as its size hint
           val df = Gaps.repairGaps(ndf, rule, gp.useFfillFor,
             gp.interpolatePrices, gp.shortGapMinutes, partitionCols = seriesKeys,
-            computeReport = false, cacheResult = true,
-            approxResultBytes = ndfEstBytes).df
+            computeReport = false).df.persist(Sizing.storageFor(ndfEstBytes))
           baseRepaired = Some(df)
           // materialize BEFORE the fan-out: four chains read this cache
           // concurrently, and racing an unmaterialized cache serializes them

@@ -543,7 +543,7 @@ object ExtensionQueries {
     },
 
     // The distributed as-of OPERATOR (tag-union + merge scan — AsofJoin
-    // scaladoc) in its hot-key-proof range layout (crossPartition), checked
+    // scaladoc) in its hot-key-proof range layout, checked
     // against the same correlated-subquery oracle as q12: identical
     // semantics, one-shuffle plan, and no per-key straggler ceiling.
     "q44_asof_operator" -> { (s, d) =>
@@ -552,7 +552,7 @@ object ExtensionQueries {
       val orders = Tables.orders(s, d)
         .select(col("o_custkey").as("user_id"), col("o_orderdate"))
       graft.operators.AsofJoin.asof(events, orders, Seq("user_id"),
-          "ts", "o_orderdate", Seq("o_orderdate"), crossPartition = true)
+          "ts", "o_orderdate", Seq("o_orderdate"))
         .select(col("event_id"),
           col("asof_o_orderdate").cast("timestamp_ntz").as("asof_order"))
         .orderBy("event_id")

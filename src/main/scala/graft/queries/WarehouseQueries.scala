@@ -441,8 +441,7 @@ object WarehouseQueries {
       val orders = Tables.orders(s, d)
         .select(col("o_custkey").as("user_id"), col("o_orderdate"))
       graft.operators.AsofJoin.asof(events, orders, Seq("user_id"),
-          "ts", "o_orderdate", Seq("o_orderdate"), crossPartition = true,
-          direction = "forward")
+          "ts", "o_orderdate", Seq("o_orderdate"), direction = "forward")
         .select(col("event_id"),
           col("asof_o_orderdate").cast("timestamp_ntz").as("next_order"))
         .orderBy("event_id")
@@ -699,8 +698,7 @@ object WarehouseQueries {
             (col("event_id") % 2400).cast("int")).cast("timestamp")
             .as("pts"))
       graft.operators.AsofJoin.asof(probes, hist, Seq("user_id"),
-          "pts", "valid_from", Seq("o_orderstatus", "valid_to"),
-          crossPartition = true)
+          "pts", "valid_from", Seq("o_orderstatus", "valid_to"))
         // interval check: the matched run must still be open at the probe
         // (true by construction once zero-width runs are gone; surfacing
         // it makes the contract hash-checked instead of assumed)

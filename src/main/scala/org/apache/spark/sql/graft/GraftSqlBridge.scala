@@ -13,14 +13,14 @@ import org.apache.spark.sql.types.StructType
   * hand an `RDD[InternalRow]` back to Catalyst without detouring through
   * the external `Row` encoder.
   *
-  * This is what makes the InternalRow fill scan ([[graft.operators.FastFill]])
+  * This is what makes the carry scans ([[graft.operators.RangeScan]])
   * allocation-free at the boundaries: `Dataset.queryExecution.toRdd` is
   * public, but the only public return path (`createDataFrame(RDD[Row])`)
   * would re-box every field of every row through the encoder — measured
   * as tens of seconds of pure GC per pipeline at the 60M-row probe scale.
   *
-  * Keep this object MINIMAL: one constructor and one listener-bus drain,
-  * no logic. Anything clever belongs on the graft side of the boundary.
+  * Keep this object MINIMAL: one constructor, one block release and one
+  * listener-bus drain, no logic. Anything clever belongs on the graft side of the boundary.
   */
 object GraftSqlBridge {
 
@@ -33,6 +33,14 @@ object GraftSqlBridge {
                               rdd: RDD[InternalRow],
                               schema: StructType): DataFrame =
     spark.asInstanceOf[ClassicSession].internalCreateDataFrame(rdd, schema)
+
+  /** Drops the cached or locally checkpointed blocks of `rdd`.
+    * `RDD.unpersist` does the same but warns, for a locally checkpointed
+    * RDD, that its lineage cannot be recomputed — true and expected for a
+    * snapshot released on purpose.
+    */
+  def release(rdd: RDD[_], blocking: Boolean): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking)
 
   /** Waits (at most `timeoutMs`) until every event posted so far has been
     * delivered to the session's listeners — after an action returns, its

@@ -3,7 +3,7 @@ package graft
 import scala.collection.immutable.ListMap
 
 import graft.core.GraftConfig
-import graft.operators.{FastFill, Normalize, RangeLayout, Reporting, Runner}
+import graft.operators.{FastFill, Normalize, RangeScan, Reporting, Runner}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -65,7 +65,7 @@ class CrossPartitionSpec extends SparkSpec {
 
   /** The fixture laid out on `parts` range partitions, pinned (cached). */
   private def laidOut(df: DataFrame, parts: Int, keys: Seq[String] = Seq("SYMBOL")): DataFrame = {
-    val laid = RangeLayout(df, keys, partitions = Some(parts)).cache()
+    val laid = RangeScan.layout(df, keys, partitions = Some(parts)).cache()
     assert(laid.count() > 0 && laid.rdd.getNumPartitions == parts)
     laid
   }
@@ -126,9 +126,9 @@ class CrossPartitionSpec extends SparkSpec {
     // the cached fixture itself is shuffled: stamps go backwards and series
     // interleave
     for ((name, bad) <- Seq("shuffled" -> df, "hash-sorted" -> hashed)) {
-      val e1 = intercept[RangeLayout.LayoutError](fill(bad).count())
+      val e1 = intercept[RangeScan.LayoutError](fill(bad).count())
       assert(e1.getMessage.contains("FastFill"), s"$name: ${e1.getMessage}")
-      val e2 = intercept[RangeLayout.LayoutError](smas(bad))
+      val e2 = intercept[RangeScan.LayoutError](smas(bad))
       assert(e2.getMessage.contains("Reporting SMA"), s"$name: ${e2.getMessage}")
     }
     hashed.unpersist(); df.unpersist()
@@ -203,10 +203,10 @@ class CrossPartitionSpec extends SparkSpec {
     }
   }
 
-  test("cross-partition as-of join matches the hash layout on a hot key") {
+  test("cross-partition as-of join matches the brute-force oracle on a hot key") {
     import graft.operators.AsofJoin
-    val spark2 = spark
-    import spark2.implicits._
+    val s = AsofOracle.session(spark, 8)
+    import s.implicits._
     def ts(us: Long) = new java.sql.Timestamp(us / 1000)
     // one hot key (u=1) with 3000 events + sparse quotes, two cold keys;
     // quote gaps engineered so several range-partition boundaries fall
@@ -222,18 +222,8 @@ class CrossPartitionSpec extends SparkSpec {
         100.0 + i)) ++
       (0 until 40 by 7).map(i => (2L, ts(t0 + i * 3600000000L), 900.0 + i))
     ).toDF("user_id", "qts", "price")
-
-    val hash = AsofJoin.asof(events, quotes, Seq("user_id"),
+    val range = AsofJoin.asof(events, quotes, Seq("user_id"),
       "ts", "qts", Seq("price"))
-    // AQE would coalesce this KB-sized fixture's range shuffle into one
-    // partition (size-based — the right call in production, useless for a
-    // boundary test); pin it off while the eager checkpoint materializes
-    val adaptive = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val range =
-      try AsofJoin.asof(events, quotes, Seq("user_id"),
-        "ts", "qts", Seq("price"), crossPartition = true)
-      finally spark.conf.set("spark.sql.adaptive.enabled", adaptive)
 
     // the range layout must actually split the hot key across tasks —
     // otherwise this test proves nothing
@@ -241,64 +231,88 @@ class CrossPartitionSpec extends SparkSpec {
       .select(expr("spark_partition_id()").as("p")).distinct().count()
     assert(spread > 1, s"hot key confined to $spread partition(s)")
 
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("user_id", "ts", "name").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2),
-          Option(r.get(r.fieldIndex("asof_price")))))
-    assert(canon(range).sameElements(canon(hash)),
-      "range-partitioned scan must equal the single-task-per-key scan")
+    val qs = quotes.collect().toSeq.map(r =>
+      (r.getLong(0), AsofOracle.micros(r.getTimestamp(1)), r.getDouble(2)))
+    val want = events.collect().map(r => (r.getLong(0), r.getTimestamp(1),
+        r.getString(2),
+        AsofOracle.attach(r.getLong(0), AsofOracle.micros(r.getTimestamp(1)), qs)))
+      .sortBy(t => (t._1, t._2.getTime, t._3)).toSeq
+    val got = range.orderBy("user_id", "ts", "name").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2),
+        Option(r.get(r.fieldIndex("asof_price"))).map(_.asInstanceOf[Double])))
+      .toSeq
+    assert(got == want,
+      "range-partitioned scan must equal the brute-force latest-at-or-before")
+  }
+
+  test("as-of seeds follow the scan's partitions under a downstream coalesce") {
+    import graft.operators.AsofJoin
+    val s = AsofOracle.session(spark, 8)
+    import s.implicits._
+    def ts(us: Long) = new java.sql.Timestamp(us / 1000)
+    // one hot key, 3000 events a minute apart, one quote 30 s after the
+    // first event: every event but the first attaches it, and the carry
+    // reaches every later range partition only through its seed
+    val events = (0 until 3000).map(i => (1L, ts(t0 + i * 60000000L), i))
+      .toDF("user_id", "ts", "eid")
+    val quotes = Seq((1L, ts(t0 + 30000000L), 7.0)).toDF("user_id", "qts", "price")
+    val out = AsofJoin.asof(events, quotes, Seq("user_id"), "ts", "qts",
+      Seq("price"))
+    val spread = out.select(expr("spark_partition_id()")).distinct().count()
+    assert(spread > 1, s"hot key confined to $spread partition(s)")
+    // a coalesce runs all scan partitions in one task: seeds must follow
+    // the scan's partitions, not the task's
+    for ((name, df) <- Seq("as is" -> out, "coalesced" -> out.coalesce(1)))
+      assert(df.filter($"asof_price".isNull).count() == 1L, name)
   }
 
   test("as-of tolerance nulls stale matches identically in both layouts") {
     import graft.operators.AsofJoin
-    val spark2 = spark
-    import spark2.implicits._
     def ts(us: Long) = new java.sql.Timestamp(us / 1000)
     // quotes at t0 and t0+100min on the hot key; events march forward a
     // minute apart, so with a 10-minute tolerance exactly events 0..10
     // and 100..110 match — including one boundary-exact case (diff ==
     // tolerance must MATCH, mirroring pandas' closed interval)
-    val events = (0 until 200)
-      .map(i => (1L, ts(t0 + i * 60000000L), s"e$i"))
-      .toDF("user_id", "ts", "name")
-    val quotes = Seq(
-      (1L, ts(t0), 100.0),
-      (1L, ts(t0 + 100L * 60000000L), 200.0)
-    ).toDF("user_id", "qts", "price")
-    def matched(crossPartition: Boolean): Seq[(String, Option[Any])] = {
-      val adaptive = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try AsofJoin.asof(events, quotes, Seq("user_id"), "ts", "qts",
-          Seq("price"), crossPartition = crossPartition,
-          toleranceSec = Some(600L))
+    val events = (0 until 200).map(i => (1L, ts(t0 + i * 60000000L), s"e$i"))
+    val quotes = Seq((1L, ts(t0), 100.0), (1L, ts(t0 + 100L * 60000000L), 200.0))
+    def matched(partitions: Int): Seq[(String, Option[Any])] = {
+      val s = AsofOracle.session(spark, partitions)
+      import s.implicits._
+      AsofJoin.asof(events.toDF("user_id", "ts", "name"),
+          quotes.toDF("user_id", "qts", "price"), Seq("user_id"), "ts", "qts",
+          Seq("price"), toleranceSec = Some(600L))
         .orderBy("name").collect()
         .map(r => (r.getString(r.fieldIndex("name")),
           Option(r.get(r.fieldIndex("asof_price"))))).toSeq
-      finally spark.conf.set("spark.sql.adaptive.enabled", adaptive)
     }
-    val hash = matched(crossPartition = false)
+    val one = matched(1)
     val expectMatched = (0 to 10).map(i => s"e$i").toSet ++
       (100 to 110).map(i => s"e$i").toSet
-    assert(hash.filter(_._2.isDefined).map(_._1).toSet == expectMatched,
-      s"10-min tolerance must keep exactly the fresh matches: $hash")
-    assert(matched(crossPartition = true) == hash,
-      "tolerance must behave identically under the range layout")
+    assert(one.filter(_._2.isDefined).map(_._1).toSet == expectMatched,
+      s"10-min tolerance must keep exactly the fresh matches: $one")
+    val qs = quotes.map(q => (q._1, AsofOracle.micros(q._2), q._3))
+    val want = events.map(e => (e._3, AsofOracle.attach(e._1,
+      AsofOracle.micros(e._2), qs, toleranceUs = Some(600L * 1000000L))))
+      .sortBy(_._1)
+    assert(one == want, "tolerance must equal the brute-force oracle")
+    assert(matched(8) == one,
+      "tolerance must behave identically over 8 range partitions")
   }
 
   test("as-of float keys: NaN and signed zero follow Spark join-key semantics") {
     import graft.operators.AsofJoin
-    val spark2 = spark
-    import spark2.implicits._
+    val s = AsofOracle.session(spark, 8)
+    import s.implicits._
     def ts(us: Long) = new java.sql.Timestamp(us / 1000)
     // ONE logical key under Spark SQL join semantics, alternating
     // -0.0/+0.0 bit patterns row by row, plus a NaN-keyed stretch; a
     // single quote per key right after the first event, so every later
-    // event's match rides the run carry — and, in the range layout,
-    // the cross-partition seed. Pre-r17 both corners missed: each NaN
-    // row started a fresh run (IEEE NaN != NaN), and a seed stored
-    // under one zero sign was not FOUND under the other at a partition
-    // edge (boxed hashCode mismatch). canonKey pins Spark's semantics:
-    // NaN = NaN for keys, -0.0 = +0.0 always.
+    // event's match rides the run carry — and, across range partitions,
+    // the seed. Both corners once missed: each NaN row started a fresh run
+    // (IEEE NaN != NaN), and a seed stored under one zero sign was not
+    // FOUND under the other at a partition edge (boxed hashCode mismatch).
+    // RangeScan's key canonicalization pins Spark's semantics: NaN = NaN
+    // for keys, -0.0 = +0.0 always.
     val events = (
       (0 until 2000).map(i => (if (i % 2 == 0) 0.0 else -0.0,
         ts(t0 + i * 60000000L), s"z$i")) ++
@@ -308,18 +322,16 @@ class CrossPartitionSpec extends SparkSpec {
       (-0.0, ts(t0 + 30000000L), 7.0), // stored under the MINUS sign
       (Double.NaN, ts(t0 + 30000000L), 9.0)
     ).toDF("k", "qts", "price")
-    def run(crossPartition: Boolean): Seq[(String, Option[Any])] = {
-      val adaptive = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try AsofJoin.asof(events, quotes, Seq("k"), "ts", "qts", Seq("price"),
-          crossPartition = crossPartition)
-        .orderBy("name").collect()
-        .map(r => (r.getString(r.fieldIndex("name")),
-          Option(r.get(r.fieldIndex("asof_price"))))).toSeq
-      finally spark.conf.set("spark.sql.adaptive.enabled", adaptive)
-    }
-    val hash = run(crossPartition = false)
-    val byName = hash.toMap
+    val out = AsofJoin.asof(events, quotes, Seq("k"), "ts", "qts", Seq("price"))
+    // the range layout must split the hot zero key across tasks, so the
+    // seed lookup actually exercises the canonicalized map key
+    val spread = out.filter($"k" === 0.0)
+      .select(expr("spark_partition_id()").as("p")).distinct().count()
+    assert(spread > 1, s"hot zero key confined to $spread partition(s)")
+    val byName = out.collect()
+      .map(r => (r.getString(r.fieldIndex("name")),
+        Option(r.get(r.fieldIndex("asof_price"))))).toMap
+    assert(byName.size == 2050)
     assert(byName("z0").isEmpty && byName("n0").isEmpty,
       "events before the quote must not match")
     val zMisses = (1 until 2000).filter(i => byName(s"z$i") != Some(7.0))
@@ -328,19 +340,6 @@ class CrossPartitionSpec extends SparkSpec {
     val nMisses = (1 until 50).filter(i => byName(s"n$i") != Some(9.0))
     assert(nMisses.isEmpty,
       s"NaN keys must form runs like Spark join keys ($nMisses missed)")
-    // the range layout must split the hot zero key across tasks, so the
-    // seed lookup actually exercises the canonicalized map key
-    val adaptive = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val spread =
-      try AsofJoin.asof(events, quotes, Seq("k"), "ts", "qts", Seq("price"),
-          crossPartition = true)
-        .filter($"k" === 0.0)
-        .select(expr("spark_partition_id()").as("p")).distinct().count()
-      finally spark.conf.set("spark.sql.adaptive.enabled", adaptive)
-    assert(spread > 1, s"hot zero key confined to $spread partition(s)")
-    assert(run(crossPartition = true) == hash,
-      "range layout must equal the hash layout on NaN/signed-zero keys")
   }
 
   test("as-of nearest picks the closer side, backward on ties") {

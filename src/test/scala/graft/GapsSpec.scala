@@ -5,7 +5,7 @@ import java.time.Instant
 
 import scala.collection.immutable.ListMap
 
-import graft.operators.{Gaps, RangeLayout}
+import graft.operators.{Gaps, RangeScan}
 import org.apache.spark.sql.functions._
 
 /** Ports of tests/test_phase8_gaps.py: 10×1-min frame with minutes 3–4
@@ -26,7 +26,7 @@ class GapsSpec extends SparkSpec {
 
   // repair input in the range layout (keyless unless keys are given)
   private def laid(df: org.apache.spark.sql.DataFrame,
-                   keys: Seq[String] = Nil) = RangeLayout(df, keys)
+                   keys: Seq[String] = Nil) = RangeScan.layout(df, keys)
 
   test("detect_gaps finds the 2-stamp cluster and classifies it short") {
     val gaps = Gaps.detectGaps(frame(), "1T", shortGapMinutes = 5).collect()
@@ -122,45 +122,39 @@ class GapsSpec extends SparkSpec {
       gaps(1).getAs[Long]("missing_count") == 1L)
   }
 
-  test("report-mode cacheResult leaves no persistent RDD after unpersist") {
-    // Pin for the cache/projection-mismatch leak class (fixed twice: the
-    // no-report path in r13, the report path in r14): the RETURNED frame
-    // must be the cached plan itself, so the caller's unpersist releases
-    // storage. A projection over the cache makes unpersist a silent no-op
-    // — one leaked series-sized cache per pipeline run, GC storm at 30×.
-    //
-    // KEYED series (the production shape — Runner always keys by SYMBOL):
-    // the keyed report path must leave ZERO registry residue. (The keyless
-    // path additionally leaves its tiny gap-cluster localCheckpoint for
-    // the ContextCleaner — documented on repairGaps.)
+  test("report-mode repair leaves no persistent RDD, keyed or keyless") {
+    // Pin for the scoped report cache: the report's two jobs read a cache
+    // of the pre-drop frame, and repairGaps must release it before
+    // returning — for KEYED series (the production shape: Runner keys by
+    // SYMBOL) and for the KEYLESS gap clusters, whose range scan holds no
+    // checkpoint either.
     //
     // Concurrency note: all suites share one SparkContext and run in
     // parallel, so a global registry count can be polluted by another
-    // suite caching inside this test's window. The plan-identity property
-    // is pinned race-free via storageLevel on the returned frame; the
-    // no-leak property gets three windows — a REAL leak (an RDD this call
-    // cached that nothing can ever unpersist) fails every window, while
-    // cross-suite pollution is transient.
+    // suite caching inside this test's window. A REAL leak (an RDD this
+    // call cached that nothing can ever unpersist) fails every one of the
+    // three windows, while cross-suite pollution is transient.
     val keyed = laid((0 until 10).filterNot(m => m == 3 || m == 4).flatMap(m =>
       Seq(("A", ts(m), m.toDouble, 100.0), ("B", ts(m), m + 0.5, 200.0)))
       .toDF("SYMBOL", "TIMESTAMP", "CLOSE", "VOLUME"), Seq("SYMBOL"))
-    val cleanWindow = (1 to 3).iterator.map { _ =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val res = Gaps.repairGaps(keyed, "1T",
-        useFfillFor = Seq("VOLUME"), interpolatePrices = true,
-        partitionCols = Seq("SYMBOL"), cacheResult = true)
-      assert(res.report("rows_after") == 20L, "report computed off the cache")
-      assert(res.df.storageLevel.useMemory,
-        "the RETURNED frame is the cached plan (not a projection over it)")
-      assert(res.df.count() == 20L)
-      res.df.unpersist(blocking = true)
-      assert(res.df.storageLevel ==
-        org.apache.spark.storage.StorageLevel.NONE,
-        "caller-side unpersist releases the returned cache")
-      (spark.sparkContext.getPersistentRDDs.keySet -- before).size
-    }.indexWhere(_ == 0)
-    assert(cleanWindow >= 0, "every window left persistent RDDs behind: " +
-      "the scoped report cache (or the returned cache) leaked")
+    val keyless = laid(frame())
+    for ((name, df, keys, rows, gaps) <- Seq(
+        ("keyed", keyed, Seq("SYMBOL"), 20L, 2),
+        ("keyless", keyless, Nil, 10L, 1))) {
+      val cleanWindow = (1 to 3).iterator.map { _ =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val res = Gaps.repairGaps(df, "1T",
+          useFfillFor = Seq("VOLUME"), interpolatePrices = true,
+          partitionCols = keys)
+        assert(res.report("rows_after") == rows, s"$name: report computed")
+        assert(res.report("detected_gaps").asInstanceOf[Seq[Any]].length == gaps,
+          name)
+        assert(res.df.count() == rows, name)
+        (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      }.indexWhere(_ == 0)
+      assert(cleanWindow >= 0, s"$name: every window left persistent RDDs " +
+        "behind: the scoped report cache leaked")
+    }
   }
 
   test("overnight classification beats long (dead long_gap parity)") {
@@ -209,7 +203,7 @@ class GapsSpec extends SparkSpec {
       .toDF("SYMBOL", "TIMESTAMP", "OPEN", "VOLUME")
     for (keys <- Seq(Nil, Seq("SYMBOL")); parts <- Seq(1, 6)) {
       val what = s"keys=$keys parts=$parts"
-      val df = RangeLayout(rows, keys, partitions = Some(parts)).cache()
+      val df = RangeScan.layout(rows, keys, partitions = Some(parts)).cache()
       df.count()
       val res = Gaps.repairGaps(df, "5T", useFfillFor = Seq("VOLUME"),
         partitionCols = keys)

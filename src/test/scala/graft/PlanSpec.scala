@@ -218,6 +218,17 @@ class PlanSpec extends SparkSpec {
           "doc_id", "text"))
       for ((name, df) <- paths)
         assert(lambdas(df).isEmpty, s"$name plans lambdas: ${lambdas(df)}")
+      // each band-join side computes its signatures once: posexplode would
+      // infer a `size(bands) > 0` filter below the signature projection
+      // and run tokenize + MinHash a second time per document
+      val join = paths.toMap.apply("minHashLshPairs").queryExecution
+        .optimizedPlan.collectFirst {
+          case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+        }.get
+      for (side <- Seq(join.left, join.right)) {
+        val sigs = "minhash_sig".r.findAllIn(side.toString).length
+        assert(sigs == 1, s"expected one signature pass per side, got $sigs:\n$side")
+      }
     } finally graft.operators.Similarity.dropIvfIndex(spark, table)
   }
 

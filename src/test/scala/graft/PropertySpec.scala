@@ -5,7 +5,7 @@ import java.time.Instant
 
 import scala.collection.immutable.ListMap
 
-import graft.operators.{Dedup, Gaps, Normalize, RangeLayout, Resample}
+import graft.operators.{Dedup, Gaps, Normalize, RangeScan, Resample}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -83,7 +83,7 @@ class PropertySpec extends AnyFunSuite {
     for (minutes <- samples(gen, 5)) {
       if (minutes.length >= 2) {
         val obs = minutes.map(m => (ts(m), 100.0 + m)).toMap
-        val df = RangeLayout(
+        val df = RangeScan.layout(
           minutes.map(m => (ts(m), 100.0 + m)).toDF("TIMESTAMP", "OPEN"), Nil)
         val out = Gaps.repairGaps(df, "1T", useFfillFor = Nil,
           computeReport = false).df.collect()
@@ -125,7 +125,7 @@ class PropertySpec extends AnyFunSuite {
           else 100.0 + m * 1.7 + (if (sym == "A") 0 else 50)
         (sym, ts(m), v)
       }
-      val df = RangeLayout(rows.toDF("SYMBOL", "TIMESTAMP", "CLOSE"),
+      val df = RangeScan.layout(rows.toDF("SYMBOL", "TIMESTAMP", "CLOSE"),
         Seq("SYMBOL"))
       def key(r: org.apache.spark.sql.Row) =
         (r.getString(0), r.getTimestamp(1))
@@ -166,7 +166,7 @@ class PropertySpec extends AnyFunSuite {
         val df = rows.toDF("SYMBOL", "TIMESTAMP", "CLOSE", "VOLUME").cache()
         df.count()
         def repaired(n: Int) = {
-          val laid = RangeLayout(df, Seq("SYMBOL"), partitions = Some(n))
+          val laid = RangeScan.layout(df, Seq("SYMBOL"), partitions = Some(n))
             .cache()
           laid.count()
           val out = Gaps.repairGaps(laid, "1T", useFfillFor = Seq("VOLUME"),
@@ -242,37 +242,58 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("cross-partition as-of join equals hash layout on random fixtures") {
-    // random key skew, duplicate stamps, keys with no right rows, right
-    // rows after every left row — the seed fold must be invisible
+  /** Random as-of fixtures in `s`: key skew, duplicate left stamps, keys
+    * with no right rows, right rows after every left row. Right stamps are
+    * distinct per key (two right rows on one stamp have no defined winner).
+    */
+  private def asofFixture(s: org.apache.spark.sql.SparkSession, seed: Long,
+                          nKeys: Int, nLeft: Int, nRight: Int, hot: Boolean) = {
+    import s.implicits._
+    val rnd = new scala.util.Random(seed)
+    val events = (0 until nLeft).map { j =>
+      // hot: key 1 holds two thirds of the events
+      val k = if (!hot || j % 3 == 0) 1L + rnd.nextInt(nKeys) else 1L
+      (k, ts(rnd.nextInt(240)), j.toLong)
+    }
+    val quotes = (0 until nRight)
+      .map(j => (1L + rnd.nextInt(nKeys), rnd.nextInt(240), j))
+      .distinctBy(q => (q._1, q._2))
+      .map { case (k, m, j) => (k, ts(m), j * 1.5) }
+    (events.toDF("k", "ts", "eid"), quotes.toDF("k", "qts", "v"),
+      events.map(e => (e._1, e._2, e._3)),
+      quotes.map(q => (q._1, AsofOracle.micros(q._2), q._3)))
+  }
+
+  /** `asof` over the fixture equals the brute-force oracle row for row. */
+  private def checkAsof(s: org.apache.spark.sql.SparkSession, seed: Long,
+                        nKeys: Int, nLeft: Int, nRight: Int, hot: Boolean,
+                        direction: String): Unit = {
+    val (events, quotes, ev, qs) = asofFixture(s, seed, nKeys, nLeft, nRight, hot)
+    val want = ev.map { case (k, t, eid) =>
+      (k, t, eid, AsofOracle.attach(k, AsofOracle.micros(t), qs,
+        backward = direction == "backward"))
+    }.sortBy(t => (t._1, t._2.getTime, t._3))
+    val got = graft.operators.AsofJoin.asof(events, quotes, Seq("k"),
+        "ts", "qts", Seq("v"), direction = direction)
+      .collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
+        Option(r.get(3)).map(_.asInstanceOf[Double])))
+      .sortBy(t => (t._1, t._2.getTime, t._3)).toSeq
+    assert(got == want, s"seed=$seed $direction nKeys=$nKeys nLeft=$nLeft " +
+      s"nRight=$nRight partitions=${s.conf.get("spark.sql.shuffle.partitions")}")
+  }
+
+  test("cross-partition as-of join equals brute-force at-or-before on random fixtures") {
+    // the seed fold must be invisible: a hot key spread over 8 range
+    // partitions attaches exactly what the driver-side scan does
     val caseGen = for {
       nKeys <- Gen.chooseNum(1, 4)
       hotLen <- Gen.chooseNum(50, 400)
       nRight <- Gen.chooseNum(0, 30)
     } yield (nKeys, hotLen, nRight)
-    val adaptive = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try for (((nKeys, hotLen, nRight), i) <- samples(caseGen, 4).zipWithIndex) {
-      val rnd = new scala.util.Random(77L + i)
-      val events = (0 until hotLen).map { j =>
-        val k = if (j % 3 == 0) 1L + rnd.nextInt(nKeys) else 1L // key 1 hot
-        (k, ts(rnd.nextInt(240)), j.toLong)
-      }.toDF("k", "ts", "eid")
-      // distinct (k, qts) pairs: two right rows on one stamp have no
-      // defined winner (sort ties), which would flake either layout
-      val quotes = (0 until nRight)
-        .map(j => (1L + rnd.nextInt(nKeys), rnd.nextInt(240), j))
-        .distinctBy(q => (q._1, q._2))
-        .map { case (k, m, j) => (k, ts(m), j * 1.5) }.toDF("k", "qts", "v")
-      def run(cross: Boolean) =
-        graft.operators.AsofJoin.asof(events, quotes, Seq("k"),
-            "ts", "qts", Seq("v"), crossPartition = cross)
-          .collect()
-          .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
-            Option(r.get(3)))).sortBy(t => (t._1, t._2.getTime, t._3))
-      assert(run(true).sameElements(run(false)),
-        s"case $i: nKeys=$nKeys hotLen=$hotLen nRight=$nRight")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+    val s = AsofOracle.session(spark, 8)
+    for (((nKeys, hotLen, nRight), i) <- samples(caseGen, 4).zipWithIndex)
+      checkAsof(s, 77L + i, nKeys, hotLen, nRight, hot = true, "backward")
   }
 
   test("forward as-of equals brute-force earliest-at-or-after on random fixtures") {
@@ -281,37 +302,10 @@ class PropertySpec extends AnyFunSuite {
       nLeft <- Gen.chooseNum(20, 200)
       nRight <- Gen.chooseNum(0, 30)
     } yield (nKeys, nLeft, nRight)
-    for (((nKeys, nLeft, nRight), i) <- samples(caseGen, 4).zipWithIndex) {
-      val rnd = new scala.util.Random(991L + i)
-      val events = (0 until nLeft)
-        .map(j => (1L + rnd.nextInt(nKeys), ts(rnd.nextInt(240)), j.toLong))
-        .toDF("k", "ts", "eid")
-      val quotes = (0 until nRight)
-        .map(j => (1L + rnd.nextInt(nKeys), rnd.nextInt(240), j))
-        .distinctBy(q => (q._1, q._2))
-        .map { case (k, m, j) => (k, ts(m), j * 1.5) }.toDF("k", "qts", "v")
-      val ref = {
-        val qs = quotes.collect()
-          .map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2)))
-        events.collect().map { r =>
-          val (k, t, eid) = (r.getLong(0), r.getTimestamp(1), r.getLong(2))
-          val next = qs.filter(q => q._1 == k && !q._2.before(t))
-            .sortBy(_._2.getTime).headOption.map(_._3)
-          (k, t, eid, next)
-        }.sortBy(t => (t._1, t._2.getTime, t._3)).toSeq
-      }
-      for (cross <- Seq(false, true)) {
-        val got = graft.operators.AsofJoin.asof(events, quotes, Seq("k"),
-            "ts", "qts", Seq("v"), crossPartition = cross,
-            direction = "forward")
-          .collect()
-          .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
-            Option(r.get(3)).map(_.asInstanceOf[Double])))
-          .sortBy(t => (t._1, t._2.getTime, t._3)).toSeq
-        assert(got == ref,
-          s"case $i cross=$cross: nKeys=$nKeys nLeft=$nLeft nRight=$nRight")
-      }
-    }
+    for (((nKeys, nLeft, nRight), i) <- samples(caseGen, 4).zipWithIndex;
+         parts <- Seq(1, 8))
+      checkAsof(AsofOracle.session(spark, parts), 991L + i, nKeys, nLeft,
+        nRight, hot = false, "forward")
   }
 
   test("census trimmed mean equals driver-side sorted trim on random fixtures") {

@@ -7,7 +7,7 @@ import java.time.Instant
 import scala.collection.immutable.ListMap
 
 import graft.core.Json
-import graft.operators.{Exporter, RangeLayout, Reporting}
+import graft.operators.{Exporter, RangeScan, Reporting}
 import org.apache.spark.sql.functions.{col, input_file_name}
 
 /** Ports of test_phase7_export.py + reporting assertions (test.py,
@@ -25,7 +25,7 @@ class ReportingExportSpec extends SparkSpec {
     }.toDF("TIMESTAMP", "OPEN", "HIGH", "LOW", "CLOSE", "VOLUME")
 
   test("quality report has the reference's fields and values") {
-    val rep = Reporting.dataQualityReport(RangeLayout(frame(), Nil),
+    val rep = Reporting.dataQualityReport(RangeScan.layout(frame(), Nil),
       smaWindows = Seq(3, 5))
     assert(rep("rows") == 10L)
     assert(rep("candles_count") == 10L)
@@ -52,7 +52,7 @@ class ReportingExportSpec extends SparkSpec {
         if (i % 97 == 5) None else Some(1.1 + ((i * 7919) % 1013) * 1e-5 / 3))
     }.toDF("TIMESTAMP", "CLOSE")
     def sma(parts: Int) = Reporting.dataQualityReport(
-      RangeLayout(df, Nil, partitions = Some(parts)), smaWindows = Seq(10, 50))
+      RangeScan.layout(df, Nil, partitions = Some(parts)), smaWindows = Seq(10, 50))
       .apply("indicators")
     val one = sma(1)
     assert(sma(4) == one)
