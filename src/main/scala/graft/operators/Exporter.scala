@@ -80,22 +80,27 @@ object Exporter {
 
   /** Lightweight content hash (exporter.py:76-91): sha256 over row count,
     * index extent (already formatted) and the first 3 non-null values per
-    * key among the first 1000 rows in time order (beyond that the
+    * key among the first 1000 rows in (time, series) order (beyond that the
     * reference's head(3) would be all-null anyway in any non-degenerate
-    * frame). The samples come from ONE small read of the parquet `files` an
-    * export just wrote, pruned to the stamp and the keys — never a re-run
-    * of the frame's lineage.
+    * frame; the series keys break the ties of series sharing a stamp, which
+    * part-file order would otherwise break differently on every write).
+    * The samples come from ONE small read of the parquet `files` an export
+    * just wrote under `outPath`, pruned to the stamp, the series keys and
+    * the keys — never a re-run of the frame's lineage. A series key that is
+    * a partition column is read from the partition directories.
     */
   private def contentHash(spark: SparkSession, rows: Long, start: String,
-                          end: String, files: Seq[String], schema: StructType,
+                          end: String, outPath: String, files: Seq[String],
+                          schema: StructType, seriesKeys: Seq[String],
                           keys: Seq[String]): String = {
     val md = MessageDigest.getInstance("SHA-256")
     md.update(rows.toString.getBytes)
     if (rows > 0) { md.update(start.getBytes); md.update(end.getBytes) }
     val head =
       if (rows == 0 || keys.isEmpty) Array.empty[Row]
-      else spark.read.schema(StructType((TsCol +: keys).map(schema(_))))
-        .parquet(files: _*).orderBy(col(TsCol))
+      else spark.read.option("basePath", outPath)
+        .schema(StructType((TsCol +: (seriesKeys ++ keys).distinct).map(schema(_))))
+        .parquet(files: _*).orderBy((TsCol +: seriesKeys).map(col): _*)
         .select(keys.map(col): _*).limit(1000).collect()
     for (i <- keys.indices)
       md.update(head.iterator.filterNot(_.isNullAt(i)).map(_.get(i)).take(3)
@@ -126,6 +131,9 @@ object Exporter {
     * distinct-count job when `knownDistinctTs = false` (a distinct count
     * cannot be observed).
     *
+    * `seriesKeys` are the frame's series key columns (the hash samples
+    * rows in (time, series) order).
+    *
     * `rowGroupSize` maps to parquet.block.size in BYTES (the reference's
     * pyarrow knob counts rows — config_model.py:21 — sizes don't translate,
     * so only an explicit byte value is honored).
@@ -136,7 +144,8 @@ object Exporter {
                                metadata: ListMap[String, Any] = ListMap.empty,
                                knownDistinctTs: Boolean = false,
                                writeMode: String = "overwrite",
-                               rowGroupSize: Option[Long] = None)
+                               rowGroupSize: Option[Long] = None,
+                               seriesKeys: Seq[String] = Nil)
       : ListMap[String, Any] = {
     require(df.columns.contains(TsCol),
       s"$TsCol column required before export")
@@ -207,7 +216,8 @@ object Exporter {
     val keys = if (df.columns.contains("OPEN")) Seq("OPEN", "CLOSE")
                  .filter(df.columns.contains) else Nil
     exportReport + ("content_hash" -> Timing.timed("ex_hash")(
-      contentHash(spark, rows, start, end, added, toWrite.schema, keys)))
+      contentHash(spark, rows, start, end, outPath, added, toWrite.schema,
+        seriesKeys.filter(df.columns.contains), keys)))
   }
 
   /** True when `df`'s plan has no exchange and runs as one partition —

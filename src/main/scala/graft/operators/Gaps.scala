@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (reference O11–O13: src/etl/transform/gaps.py).
   *
   * Spark shapes:
-  *  - expected grid: per-series `sequence(min, max, interval)` + explode —
-  *    partition-local, no shuffle (O11, gaps.py:59-61);
+  *  - expected grid: generated inline by the [[FastFill]] reindex, never
+  *    materialized (O11, gaps.py:59-61);
   *  - missing stamps: grid anti-join observed (gaps.py:63);
   *  - clustering: gaps-and-islands — `ts - row_number * step` island key,
   *    then one groupBy (replaces the reference's Python loop, gaps.py:72-117);
@@ -24,34 +24,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    pandas `reindex` (exactly-on-grid rows only — off-grid rows drop, the
   *    §2.2.4 quirk), ffill and linear interpolation (gaps.py:148-169).
   *
-  * `partitionCols` (SYMBOL) keys every window, join and scan; the grid
-  * explode is guarded against pathological spans.
+  * `partitionCols` (SYMBOL) keys every window, join and scan.
   */
 object Gaps {
 
   val TsCol: String = Normalize.TsCol
-
-  /** Max grid points generated per series before refusing (driver guard —
-    * a mis-parsed epoch would otherwise explode sequence() memory).
-    */
-  val MaxGridPerSeries: Long = 200000000L
-
-  /** O11: dense expected grid between each series' observed min/max. */
-  def expectedGrid(df: DataFrame, rule: String,
-                   partitionCols: Seq[String] = Nil): DataFrame = {
-    val step = Rules.stepSeconds(rule)
-    val spans =
-      if (partitionCols.isEmpty) df.agg(min(col(TsCol)).as("_t0"), max(col(TsCol)).as("_t1"))
-      else df.groupBy(partitionCols.map(col): _*)
-        .agg(min(col(TsCol)).as("_t0"), max(col(TsCol)).as("_t1"))
-    spans
-      .filter(col("_t0").isNotNull)
-      .filter((unix_seconds(col("_t1")) - unix_seconds(col("_t0"))) / step
-        < MaxGridPerSeries)
-      .select(partitionCols.map(col) :+
-        explode(expr(s"sequence(_t0, _t1, ${Rules.intervalExpr(rule)})"))
-          .as(TsCol): _*)
-  }
 
   /** O12: gap detection + classification. Returns a DataFrame of
     * (start, end, length_minutes, missing_count, classification) ordered by

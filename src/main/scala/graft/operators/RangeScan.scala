@@ -3,7 +3,8 @@ package graft.operators
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
-import org.apache.spark.rdd.RDD
+import org.apache.spark.Partition
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Alias
@@ -156,6 +157,41 @@ object RangeScan {
         .collect { case (k, a: Alias) if a.child.foldable => k }.toSet
       case _ => Set.empty
     }
+
+  /** Merges runs of consecutive partitions of `rdd` into one partition
+    * each, in order, so a range layout stays one: a group closes before
+    * its `weights` (one per partition) would pass `target`, and always
+    * holds at least one partition. No shuffle.
+    */
+  def mergeContiguous[T: ClassTag](rdd: RDD[T], weights: Array[Long],
+                                   target: Long): RDD[T] = {
+    val groups = ArrayBuffer(ArrayBuffer.empty[Int])
+    var acc = 0L
+    for (p <- weights.indices) {
+      if (groups.last.nonEmpty && acc + weights(p) > target) {
+        groups += ArrayBuffer.empty[Int]
+        acc = 0L
+      }
+      groups.last += p
+      acc += weights(p)
+    }
+    if (groups.length == weights.length) rdd
+    else rdd.coalesce(groups.length, shuffle = false,
+      Some(Contiguous(groups.map(_.toArray).toArray)))
+  }
+
+  /** Fixed groups of parent partitions, in order. */
+  private final case class Contiguous(groups: Array[Array[Int]])
+      extends PartitionCoalescer with Serializable {
+    override def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val parts: Array[Partition] = parent.partitions
+      groups.map { g =>
+        val pg = new PartitionGroup()
+        g.foreach(p => pg.partitions += parts(p))
+        pg
+      }
+    }
+  }
 
   /** One series run inside one partition, as the summary job saw it. A
     * null stamp counts as `Long.MinValue`: first when ascending and last

@@ -254,40 +254,52 @@ object Runner {
         try {
           // the repaired frame is the normalized frame plus synthesized grid
           // rows — same magnitude, so ndf's estimate serves as its size hint
-          val df = Gaps.repairGaps(ndf, rule, gp.useFfillFor,
-            gp.interpolatePrices, gp.shortGapMinutes, partitionCols = seriesKeys,
-            computeReport = false).df.persist(Sizing.storageFor(ndfEstBytes))
-          baseRepaired = Some(df)
-          // materialize BEFORE the fan-out: four chains read this cache
-          // concurrently, and racing an unmaterialized cache serializes them
-          // all on the partition lock. A pass over the cached plan's own RDD
-          // fills it without an aggregate plan to compile.
-          timed(s"repair_base_$rule")(df.queryExecution.toRdd.count())
+          val df = timed(s"repair_base_$rule")(Gaps.repairGaps(ndf, rule,
+            gp.useFfillFor, gp.interpolatePrices, gp.shortGapMinutes,
+            partitionCols = seriesKeys, computeReport = false).df)
+          baseRepaired = Some(df.persist(Sizing.storageFor(ndfEstBytes)))
           true
         } catch { case e: Exception =>
           errors :+= s"repair_base_$rule" -> e.getMessage
           false
         }
       }
-      val results = (if (baseOk) timeframes else Nil).map { tf =>
+      // Correct mode resamples every timeframe from the base in ONE call:
+      // its summary job (the carries of every coarse rule) is the base's
+      // first pass, so it also fills the cache BEFORE the fan-out — four
+      // chains racing an unmaterialized cache would serialize on its
+      // partition lock. Each returned frame is then one narrow scan, and
+      // each export is one write job. The base rule's input is on its own
+      // grid: no carries. Not cached: each export's write is its only
+      // reader, and it also observes its validation.
+      val correctFrames: Map[String, DataFrame] =
+        if (!correctMode || !baseOk) Map.empty
+        else try {
+          val rules = timeframes.distinct
+          rules.zip(timed("resample_summary")(
+            Resample.resampleOhlc(baseRepaired.getOrElse(ndf), rules,
+              dropIncomplete = true, extraNumericPolicy = "mean",
+              emitEmpty = false, partitionCols = seriesKeys,
+              onGrid = baseRule))).toMap
+        } catch { case e: Exception =>
+          errors :+= "resample" -> e.getMessage
+          Map.empty
+        }
+      val results = (if (baseOk) timeframes else Nil)
+          .filter(tf => !correctMode || correctFrames.contains(tf)).map { tf =>
         tf -> Future {
-          val (src, onGrid) =
-            if (correctMode) (baseRepaired.getOrElse(ndf), baseRule.contains(tf))
+          val res =
+            if (correctMode) correctFrames(tf)
             else cfg.gapPolicy match {
-              // not cached: the export's one write is its only reader
+              // not cached: the export's one write is its only reader; the
+              // repaired frame is on the rule's grid, so no carries
               case Some(gp) =>
-                (Gaps.repairGaps(ndf, tf, gp.useFfillFor,
+                Resample.resampleOhlc(Gaps.repairGaps(ndf, tf, gp.useFfillFor,
                   gp.interpolatePrices, gp.shortGapMinutes,
-                  partitionCols = seriesKeys, computeReport = false).df, true)
-              case None => (ndf, false)
+                  partitionCols = seriesKeys, computeReport = false).df, tf,
+                  partitionCols = seriesKeys, inputOnBucketGrid = true)
+              case None => Resample.resampleOhlc(ndf, tf, partitionCols = seriesKeys)
             }
-          // input on the target bucket grid => one row per bucket => the
-          // resample aggregation degenerates to a projection (no shuffle).
-          // Not cached: the export is one write that also observes its
-          // validation, so the resample runs once, inside `export_$tf`.
-          val res = Resample.resampleOhlc(src, tf,
-            partitionCols = seriesKeys,
-            inputOnBucketGrid = onGrid)
           val name = s"${baseName}_${Rules.suffix(tf)}"
           val path = s"$outDir/$name.parquet"
           val report = timed(s"export_$tf")(
@@ -297,7 +309,8 @@ object Runner {
                 "timeframe" -> tf, "symbol" -> symbol),
               knownDistinctTs = true,
               writeMode = cfg.writeMode,
-              rowGroupSize = cfg.rowGroupSize))
+              rowGroupSize = cfg.rowGroupSize,
+              seriesKeys = seriesKeys))
           (StageResult(name, report("rows").asInstanceOf[Long], path), report)
         }
       }

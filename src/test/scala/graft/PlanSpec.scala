@@ -1356,4 +1356,53 @@ class PlanSpec extends SparkSpec {
       s"partition pruning must appear in the scan:\n$p")
     assert(read.count() == 25)
   }
+
+  test("a correct-mode coarse export writes with no shuffle exchange") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.graft.GraftSqlBridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val input = spark.range(600).select(
+      timestamp_seconds(lit(1704067200L) + col("id") * 60).as("timestamp"),
+      (lit(1.1) + col("id") * 1e-4).as("open"),
+      (lit(1.1005) + col("id") * 1e-4).as("high"),
+      (lit(1.0995) + col("id") * 1e-4).as("low"),
+      (lit(1.1002) + col("id") * 1e-4).as("close"),
+      (lit(100.0) + col("id")).as("volume"))
+    val out = java.nio.file.Files.createTempDirectory("graft_coarse_plan").toString
+    val cfg = graft.core.GraftConfig(rawPath = out, processedPath = out,
+      timeframes = Seq("1T", "5T", "1H"))
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { writes.add(qe); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftSqlBridge.drainListenerBus(spark)
+    spark.listenerManager.register(ql)
+    val r = try graft.operators.Runner.processDataFrame(spark, input, cfg, None,
+      "EURUSD_plan", out)
+    finally {
+      GraftSqlBridge.drainListenerBus(spark)
+      spark.listenerManager.unregister(ql)
+    }
+    assert(r.errors.isEmpty, s"errors: ${r.errors}")
+    def shuffles(p: SparkPlan): Seq[SparkPlan] = p.flatMap {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case x: ShuffleExchangeExec => Seq(x)
+      case _ => Nil
+    }
+    import scala.jdk.CollectionConverters._
+    val coarse = writes.asScala.toSeq.flatMap { qe =>
+      qe.executedPlan.collectFirst {
+        case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+            if Seq("_5m.parquet", "_1h.parquet").exists(c.outputPath.toString.endsWith) => qe
+      }
+    }
+    assert(coarse.size == 2, writes.asScala.map(_.executedPlan).mkString("\n---\n"))
+    for (qe <- coarse)
+      assert(shuffles(qe.executedPlan).isEmpty, qe.executedPlan.toString)
+  }
 }

@@ -62,7 +62,8 @@ class PropertySpec extends AnyFunSuite {
         val df = minutes.map(m =>
           (ts(m), 100.0 + m, 100.5 + m, 99.5 + m, 100.2 + m, 10.0 * (m + 1)))
           .toDF("TIMESTAMP", "OPEN", "HIGH", "LOW", "CLOSE", "VOLUME")
-        val res = Resample.resampleOhlc(df, "5T", dropIncomplete = false)
+        val res = Resample.resampleOhlc(RangeScan.layout(df, Nil), "5T",
+          dropIncomplete = false)
           .collect()
         val totalVol = res.map(_.getAs[Double]("VOLUME")).sum
         assert(math.abs(totalVol - minutes.map(m => 10.0 * (m + 1)).sum) < 1e-9,

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import java.time.Instant
 
-import graft.operators.Resample
+import graft.operators.{RangeScan, Resample}
 import org.apache.spark.sql.functions._
 
 /** Ports of tests/test_phase9_resample.py + the §2.2.1-3 parity traps:
@@ -15,6 +15,9 @@ class ResampleSpec extends SparkSpec {
   private def ts(min: Int): Timestamp =
     Timestamp.from(Instant.parse(f"2024-01-01T00:$min%02d:00Z"))
 
+  /** Inputs go in the range layout, as Resample requires. */
+  private def laid(df: org.apache.spark.sql.DataFrame) = RangeScan.layout(df, Nil)
+
   // 6 one-minute candles: OPEN=10..15, HIGH=+0.5, LOW=-0.5, CLOSE=+0.25
   private def frame() =
     (0 until 6).map { m =>
@@ -24,7 +27,7 @@ class ResampleSpec extends SparkSpec {
     }.toDF("TIMESTAMP", "OPEN", "HIGH", "LOW", "CLOSE", "VOLUME")
 
   test("5T resample: first/max/min/last/sum per bucket") {
-    val res = Resample.resampleOhlc(frame(), "5T", dropIncomplete = false)
+    val res = Resample.resampleOhlc(laid(frame()), "5T", dropIncomplete = false)
       .orderBy("TIMESTAMP").collect()
     assert(res.length == 2)
     val b0 = res(0)
@@ -45,7 +48,7 @@ class ResampleSpec extends SparkSpec {
       (ts(1), Some(2.0), Option.empty[Double]),
       (ts(2), Some(3.0), Some(3.5)))
       .toDF("TIMESTAMP", "OPEN", "CLOSE")
-    val r = Resample.resampleOhlc(df, "5T", dropIncomplete = false).collect()(0)
+    val r = Resample.resampleOhlc(laid(df), "5T", dropIncomplete = false).collect()(0)
     assert(r.getAs[Double]("OPEN") == 2.0, "first non-null OPEN")
     assert(r.getAs[Double]("CLOSE") == 3.5, "last non-null CLOSE")
   }
@@ -56,14 +59,14 @@ class ResampleSpec extends SparkSpec {
       (ts(0), 1.0, 1.0, 100.0),
       (ts(10), 2.0, 2.0, 50.0))
       .toDF("TIMESTAMP", "OPEN", "CLOSE", "VOLUME")
-    val out = Resample.resampleOhlc(df, "5T", dropIncomplete = false,
+    val out = Resample.resampleOhlc(laid(df), "5T", dropIncomplete = false,
       emitEmpty = true).orderBy("TIMESTAMP").collect()
     assert(out.length == 3)
     val empty = out(1)
     assert(empty.isNullAt(empty.fieldIndex("OPEN")))
     assert(empty.getAs[Double]("VOLUME") == 0.0, "pandas sum(empty)=0.0")
     // drop_incomplete then removes it
-    val dropped = Resample.resampleOhlc(df, "5T", dropIncomplete = true,
+    val dropped = Resample.resampleOhlc(laid(df), "5T", dropIncomplete = true,
       emitEmpty = true).collect()
     assert(dropped.length == 2)
   }
@@ -73,10 +76,10 @@ class ResampleSpec extends SparkSpec {
       (ts(0), 1.0, 10.0, "x"),
       (ts(1), 2.0, 20.0, "y"))
       .toDF("TIMESTAMP", "CLOSE", "spread_pts", "note")
-    val out = Resample.resampleOhlc(df, "5T")
+    val out = Resample.resampleOhlc(laid(df), "5T")
     assert(!out.columns.contains("note"), "non-numeric unmapped dropped")
     assert(out.select("spread_pts").as[Double].head() == 15.0)
-    val sumOut = Resample.resampleOhlc(df, "5T", extraNumericPolicy = "sum")
+    val sumOut = Resample.resampleOhlc(laid(df), "5T", extraNumericPolicy = "sum")
     assert(sumOut.select("spread_pts").as[Double].head() == 30.0)
   }
 
@@ -85,13 +88,13 @@ class ResampleSpec extends SparkSpec {
     // pandas resample floors labels to 00:00, 00:05, 00:10 regardless
     val df = Seq(2, 7, 12).map(m => (ts(m), 1.0 + m, 1.0 + m))
       .toDF("TIMESTAMP", "OPEN", "CLOSE")
-    val out = Resample.resampleOhlc(df, "5T", inputOnBucketGrid = true)
+    val out = Resample.resampleOhlc(laid(df), "5T", inputOnBucketGrid = true)
       .orderBy("TIMESTAMP").collect()
     assert(out.map(_.getAs[Timestamp]("TIMESTAMP")).toSeq ==
       Seq(ts(0), ts(5), ts(10)))
     assert(out.map(_.getAs[Double]("OPEN")).toSeq == Seq(3.0, 8.0, 13.0))
-    // and the projection path agrees with the groupBy path
-    val grouped = Resample.resampleOhlc(df, "5T")
+    // and the seedless on-grid scan agrees with the carried scan
+    val grouped = Resample.resampleOhlc(laid(df), "5T")
       .orderBy("TIMESTAMP").collect()
     assert(out.map(_.toSeq).toSeq == grouped.map(_.toSeq).toSeq)
   }
@@ -100,7 +103,7 @@ class ResampleSpec extends SparkSpec {
     val df = (0 until 10).map { m =>
       (ts(m), 1.0 + m, 1.0 + m, 10.0 * (m + 1), "EURUSD")
     }.toDF("TIMESTAMP", "OPEN", "CLOSE", "VOLUME", "SYMBOL")
-    val correct = Resample.resampleOhlc(df, "5T").orderBy("TIMESTAMP").collect()
+    val correct = Resample.resampleOhlc(laid(df), "5T").orderBy("TIMESTAMP").collect()
     assert(correct(0).getAs[String]("SYMBOL") == "EURUSD")
     assert(correct(0).getAs[Double]("VOLUME") == 150.0, "true 5-min sum")
     // faithful mode reindexes onto the 5T grid first -> only boundary rows

@@ -422,9 +422,59 @@ class RunnerSpec extends SparkSpec {
     assert(!limits.contains(1), plans.mkString("\n"))
     // one materializing aggregate (profile + observed counters), then per
     // timeframe one export write and one content-hash read; the jobs add
-    // the reader-free RDD passes (base fill, anchors, seeds, SMA) and the
-    // range exchanges' sampling
-    assert((plans.size, jobs.get) == (9, 27), plans.mkString("\n---\n"))
+    // the reader-free RDD passes (anchors, seeds, SMA, the resample summary
+    // that also fills the base cache) and the range exchanges' sampling. A
+    // coarse export is one write job: no exchange, no sampling job.
+    assert((plans.size, jobs.get) == (9, 18), plans.mkString("\n---\n"))
+  }
+
+  test("content_hash of a multi-series export follows its recipe in (time, series) order") {
+    import org.apache.spark.sql.functions.col
+    // AAA and BBB on the same 600 one-minute stamps, in one file; default
+    // config: SYMBOL is a partition directory, not a column of the files
+    val work = Files.createTempDirectory("graft_hash")
+    val raw = Files.createDirectories(work.resolve("raw"))
+    val sb = new StringBuilder("timestamp,open,high,low,close,volume,symbol\n")
+    for (m <- 0 until 600; (s, o) <- Seq("aaa" -> 1.1, "bbb" -> 2.2)) {
+      val p = o + m * 0.001
+      sb.append(f"2024-01-01 ${m / 60}%02d:${m % 60}%02d:00,$p%.4f,${p + 0.0005}%.4f," +
+        f"${p - 0.0005}%.4f,${p + 0.0002}%.4f,${100 + m},$s\n")
+    }
+    Files.writeString(raw.resolve("PAIR_2024.csv"), sb.toString)
+    val cfg = GraftConfig(rawPath = raw.toString,
+      processedPath = work.resolve("processed").toString)
+    val r = Runner.runBatch(spark, cfg, dryRun = false).head
+    assert(r.errors.isEmpty, s"errors: ${r.errors}")
+    assert(r.exports.map(_.rows) == Seq(1200L, 240L, 80L, 20L))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val logged = Files.readAllLines(
+      Paths.get(s"${cfg.processedPath}/exports/export_log.ndjson")).asScala
+      .map(json.readTree).map(n => n.get("path").asText -> n.get("content_hash").asText).toMap
+    for (e <- r.exports) {
+      // the recipe on the driver: sha256 over rows, extent and the first 3
+      // non-null OPEN/CLOSE of the first 1000 rows by (TIMESTAMP, SYMBOL)
+      val rows = spark.read.parquet(e.path)
+        .select("TIMESTAMP", "SYMBOL", "OPEN", "CLOSE").collect()
+        .sortBy(x => (x.getTimestamp(0).getTime, x.getString(1)))
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      md.update(rows.length.toString.getBytes)
+      md.update(graft.operators.Reporting.fmtTs(rows.head.getTimestamp(0)).getBytes)
+      md.update(graft.operators.Reporting.fmtTs(rows.last.getTimestamp(0)).getBytes)
+      val head = rows.take(1000)
+      for (i <- Seq(2, 3))
+        md.update(head.iterator.filterNot(_.isNullAt(i)).map(_.get(i)).take(3)
+          .mkString("[", ", ", "]").getBytes)
+      assert(logged(e.path) == md.digest().map("%02x".format(_)).mkString, e.name)
+      // every part file is in (series, time) order
+      val parts = Files.walk(Paths.get(e.path)).iterator.asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      for (f <- parts) {
+        val stamps = spark.read.option("basePath", e.path).parquet(f.toString)
+          .select(col("SYMBOL"), col("TIMESTAMP")).collect()
+          .map(x => (x.getString(0), x.getTimestamp(1).getTime)).toSeq
+        assert(stamps == stamps.sorted, s"${e.name}: $f out of order")
+      }
+    }
   }
 
   test("one failing file or base repair leaves the other files to finish") {
