@@ -11,6 +11,7 @@ import graft.core.{Json, Sizing, Timing}
 import graft.sources.Readers
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.RDDScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
@@ -80,19 +81,20 @@ object Exporter {
 
   /** Lightweight content hash (exporter.py:76-91): sha256 over row count,
     * index extent (already formatted) and the first 3 non-null values per
-    * key among the first 1000 rows in (time, series) order (beyond that the
+    * key among the first 1000 rows in (time, SYMBOL) order (beyond that the
     * reference's head(3) would be all-null anyway in any non-degenerate
-    * frame; the series keys break the ties of series sharing a stamp, which
-    * part-file order would otherwise break differently on every write).
-    * The samples come from ONE small read of the parquet `files` an export
-    * just wrote under `outPath`, pruned to the stamp, the series keys and
-    * the keys — never a re-run of the frame's lineage. A series key that is
-    * a partition column is read from the partition directories.
+    * frame; the series key SYMBOL, when present, breaks the ties of series
+    * sharing a stamp, which part-file order would otherwise break
+    * differently on every write). The samples come from ONE small read of
+    * the parquet `files` an export just wrote under `outPath`, pruned to
+    * the stamp, SYMBOL and the keys — never a re-run of the frame's
+    * lineage. A SYMBOL partition column is read from the partition
+    * directories.
     */
   private def contentHash(spark: SparkSession, rows: Long, start: String,
                           end: String, outPath: String, files: Seq[String],
-                          schema: StructType, seriesKeys: Seq[String],
-                          keys: Seq[String]): String = {
+                          schema: StructType, keys: Seq[String]): String = {
+    val seriesKeys = Seq("SYMBOL").filter(schema.fieldNames.contains)
     val md = MessageDigest.getInstance("SHA-256")
     md.update(rows.toString.getBytes)
     if (rows > 0) { md.update(start.getBytes); md.update(end.getBytes) }
@@ -131,9 +133,6 @@ object Exporter {
     * distinct-count job when `knownDistinctTs = false` (a distinct count
     * cannot be observed).
     *
-    * `seriesKeys` are the frame's series key columns (the hash samples
-    * rows in (time, series) order).
-    *
     * `rowGroupSize` maps to parquet.block.size in BYTES (the reference's
     * pyarrow knob counts rows — config_model.py:21 — sizes don't translate,
     * so only an explicit byte value is honored).
@@ -144,8 +143,7 @@ object Exporter {
                                metadata: ListMap[String, Any] = ListMap.empty,
                                knownDistinctTs: Boolean = false,
                                writeMode: String = "overwrite",
-                               rowGroupSize: Option[Long] = None,
-                               seriesKeys: Seq[String] = Nil)
+                               rowGroupSize: Option[Long] = None)
       : ListMap[String, Any] = {
     require(df.columns.contains(TsCol),
       s"$TsCol column required before export")
@@ -217,16 +215,24 @@ object Exporter {
                  .filter(df.columns.contains) else Nil
     exportReport + ("content_hash" -> Timing.timed("ex_hash")(
       contentHash(spark, rows, start, end, outPath, added, toWrite.schema,
-        seriesKeys.filter(df.columns.contains), keys)))
+        keys)))
   }
 
   /** True when `df`'s plan has no exchange and runs as one partition —
     * known without running a job, and asked of a fresh plan so the
-    * caller's frame stays unplanned. */
+    * caller's frame stays unplanned. A frame read from
+    * [[RangeScan.mergeContiguous]]'s output does not count: its one
+    * partition was sized from its input (a resampled frame smaller than
+    * one input partition) and is in (series, time) order. */
   private def singlePartition(df: DataFrame): Boolean = {
     val qe = Sizing.freshPlan(df)
-    !qe.executedPlan.isInstanceOf[AdaptiveSparkPlanExec] &&
-      qe.executedPlan.collectFirst { case e: Exchange => e }.isEmpty &&
+    val plan = qe.executedPlan
+    !plan.isInstanceOf[AdaptiveSparkPlanExec] &&
+      plan.collectFirst { case e: Exchange => e }.isEmpty &&
+      !plan.collectLeaves().exists {
+        case s: RDDScanExec => s.rdd.isInstanceOf[RangeScan.Merged[_]]
+        case _ => false
+      } &&
       qe.toRdd.getNumPartitions == 1
   }
 

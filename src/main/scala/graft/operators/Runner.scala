@@ -213,10 +213,13 @@ object Runner {
       // normalized frame — run them CONCURRENTLY (the reference loops
       // sequentially, src/run.py:192-250; Spark schedules concurrent jobs on
       // one session, so four repair→resample→export chains overlap their
-      // shuffle/write latencies instead of stacking them). Failure isolation
-      // is unchanged: each chain catches independently. The NDJSON log is
-      // written once all chains are done: one block per file, in timeframe
-      // order.
+      // shuffle/write latencies instead of stacking them). Each chain's
+      // export catches independently; in correct mode the chains share one
+      // resample summary job (below), so a failure there — including a
+      // runtime failure of the lazy base repair, which first runs inside it
+      // — fails every timeframe under the error key `resample`. The NDJSON
+      // log is written once all chains are done: one block per file, in
+      // timeframe order.
       implicit val ec: ExecutionContext = driverPool
       // the QA report's remaining work (the SMA scans) reads only the
       // cached frame — overlap it with the timeframe chains
@@ -248,7 +251,8 @@ object Runner {
           Some(timeframes.minBy(Rules.stepSeconds))
         else None
       // a failed base repair fails every timeframe (it is isolated like one:
-      // the reports still finish) — no chain may export the unrepaired frame
+      // the reports still finish) — no chain may export the unrepaired frame.
+      // Only its planning runs here: its job is the resample summary's.
       val baseOk = baseRule.forall { rule =>
         val gp = cfg.gapPolicy.get
         try {
@@ -309,8 +313,7 @@ object Runner {
                 "timeframe" -> tf, "symbol" -> symbol),
               knownDistinctTs = true,
               writeMode = cfg.writeMode,
-              rowGroupSize = cfg.rowGroupSize,
-              seriesKeys = seriesKeys))
+              rowGroupSize = cfg.rowGroupSize))
           (StageResult(name, report("rows").asInstanceOf[Long], path), report)
         }
       }

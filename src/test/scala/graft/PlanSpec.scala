@@ -1358,6 +1358,16 @@ class PlanSpec extends SparkSpec {
   }
 
   test("a correct-mode coarse export writes with no shuffle exchange") {
+    assertCoarseExportsUnshuffled(Seq("symbol", "year"))
+  }
+
+  test("a correct-mode coarse export with no partition columns writes with no shuffle exchange") {
+    // the exporter's single-partition guard must leave the resampled
+    // frame's sized partitions as they are
+    assertCoarseExportsUnshuffled(Nil)
+  }
+
+  private def assertCoarseExportsUnshuffled(partitionCols: Seq[String]): Unit = {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -1374,7 +1384,7 @@ class PlanSpec extends SparkSpec {
       (lit(100.0) + col("id")).as("volume"))
     val out = java.nio.file.Files.createTempDirectory("graft_coarse_plan").toString
     val cfg = graft.core.GraftConfig(rawPath = out, processedPath = out,
-      timeframes = Seq("1T", "5T", "1H"))
+      timeframes = Seq("1T", "5T", "1H"), partitionCols = partitionCols)
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val ql = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { writes.add(qe); () }
@@ -1404,5 +1414,11 @@ class PlanSpec extends SparkSpec {
     assert(coarse.size == 2, writes.asScala.map(_.executedPlan).mkString("\n---\n"))
     for (qe <- coarse)
       assert(shuffles(qe.executedPlan).isEmpty, qe.executedPlan.toString)
+    // partitions sized from the input's rows: one file per coarse export
+    for (e <- r.exports if Seq("_5m.parquet", "_1h.parquet").exists(e.path.endsWith)) {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(e.path)).iterator
+        .asScala.count(_.getFileName.toString.startsWith("part-"))
+      assert(files == 1, e.path)
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import java.time.Instant
 
-import graft.operators.{RangeScan, Resample}
+import graft.operators.{RangeScan, Resample, ResampleOracle}
 import org.apache.spark.sql.functions._
 
 /** Ports of tests/test_phase9_resample.py + the §2.2.1-3 parity traps:
@@ -93,8 +93,8 @@ class ResampleSpec extends SparkSpec {
     assert(out.map(_.getAs[Timestamp]("TIMESTAMP")).toSeq ==
       Seq(ts(0), ts(5), ts(10)))
     assert(out.map(_.getAs[Double]("OPEN")).toSeq == Seq(3.0, 8.0, 13.0))
-    // and the seedless on-grid scan agrees with the carried scan
-    val grouped = Resample.resampleOhlc(laid(df), "5T")
+    // and the seedless on-grid scan agrees with the groupBy oracle
+    val grouped = ResampleOracle.resampleOhlc(laid(df), "5T")
       .orderBy("TIMESTAMP").collect()
     assert(out.map(_.toSeq).toSeq == grouped.map(_.toSeq).toSeq)
   }

@@ -429,9 +429,21 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("content_hash of a multi-series export follows its recipe in (time, series) order") {
+    // default config: SYMBOL is a partition directory, not a column of the files
+    assertHashRecipeAndPartOrder(GraftConfig().partitionCols)
+  }
+
+  test("content_hash and part-file order of a multi-series export with no partition columns") {
+    // no partition directories: SYMBOL is in the files, and the exporter
+    // writes the resampled frames' partitions as they are
+    assertHashRecipeAndPartOrder(Nil)
+  }
+
+  /** AAA and BBB on the same 600 one-minute stamps, in one file: each
+    * export's logged hash equals a driver-side recomputation of the recipe,
+    * and every part file is in (SYMBOL, TIMESTAMP) order. */
+  private def assertHashRecipeAndPartOrder(partitionCols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.col
-    // AAA and BBB on the same 600 one-minute stamps, in one file; default
-    // config: SYMBOL is a partition directory, not a column of the files
     val work = Files.createTempDirectory("graft_hash")
     val raw = Files.createDirectories(work.resolve("raw"))
     val sb = new StringBuilder("timestamp,open,high,low,close,volume,symbol\n")
@@ -442,7 +454,8 @@ class RunnerSpec extends SparkSpec {
     }
     Files.writeString(raw.resolve("PAIR_2024.csv"), sb.toString)
     val cfg = GraftConfig(rawPath = raw.toString,
-      processedPath = work.resolve("processed").toString)
+      processedPath = work.resolve("processed").toString,
+      partitionCols = partitionCols)
     val r = Runner.runBatch(spark, cfg, dryRun = false).head
     assert(r.errors.isEmpty, s"errors: ${r.errors}")
     assert(r.exports.map(_.rows) == Seq(1200L, 240L, 80L, 20L))
@@ -474,6 +487,10 @@ class RunnerSpec extends SparkSpec {
           .map(x => (x.getString(0), x.getTimestamp(1).getTime)).toSeq
         assert(stamps == stamps.sorted, s"${e.name}: $f out of order")
       }
+      // a coarse export keeps the resampled frame's one partition: one file
+      // per partition directory
+      if (!e.name.endsWith("_1m"))
+        assert(parts.groupBy(_.getParent).values.forall(_.size == 1), s"${e.name}: $parts")
     }
   }
 
