@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.GraftSqlBridge
 
-/** Round snapshots for the iterative operators: connected components
-  * (both algorithms), PageRank, label propagation, k-core and k-truss.
+/** Round snapshots for the iterative operators: connected components,
+  * PageRank, label propagation, k-core and k-truss.
   *
   * A snapshot is a frame materialized by `Dataset.localCheckpoint` into a
   * `LogicalRDD` leaf. A lazy loop otherwise plans each round over the
@@ -35,8 +35,7 @@ import org.apache.spark.sql.graft.GraftSqlBridge
   * the snapshots listed below stay alive because the returned lazy frame
   * reads them; Spark's ContextCleaner releases them once that frame is
   * garbage. Everything else is released before return.
-  *  - `connectedComponents`: the last round's labels (pointer jumping) or
-  *    edge set (star)
+  *  - `connectedComponents`: the last round's labels
   *  - `pageRankFixedPoint`: the edge list, plus the last rank snapshot
   *    when `iterations` exceeds [[Interval]]
   *  - `labelPropagation`: the adjacency and the node set, plus the last

@@ -635,24 +635,11 @@ object Dedup {
     * it contains, which doubles as the canonical representative
     * (`component == id` selects the keeper).
     *
-    * Two algorithms behind one API, both O(log) rounds with fixed-size
-    * convergence probes (nothing row-shaped reaches the driver):
-    *
-    *  - `"pointer-jumping"` (default): per-round min-label propagation
-    *    (edges⋈labels + partial-aggregated min) followed by the jump
-    *    `comp := comp(comp)` — the jump doubles effective hop distance per
-    *    round, so rounds are O(log diameter). The per-round propagation
-    *    join carries ALL edges every round, which a star-shaped hot
-    *    cluster inflates.
-    *  - `"star"`: alternating large-star/small-star edge rewriting
-    *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    *    SoCC'14). Each round REWRITES the edge set toward per-component
-    *    stars, so hot-cluster edges collapse onto the component minimum as
-    *    rounds progress — the per-round join volume shrinks instead of
-    *    replaying, which is the right trade under adversarial skew
-    *    (a 10k-leaf star converges in one round).
-    *  - `"auto"`: one fixed-size max-degree probe over the pair set picks
-    *    between them (hot degree ≥ 16384 → star).
+    * Pointer jumping, O(log diameter) rounds with a fixed-size convergence
+    * probe (nothing row-shaped reaches the driver): each round propagates
+    * the minimum label over every edge (edges⋈labels + partial-aggregated
+    * min), then jumps `comp := comp(comp)`, which doubles the effective hop
+    * distance per round.
     *
     * Throws if `maxIter` rounds don't converge (a silent partial clustering
     * would under-dedup downstream). Round snapshots and what the result
@@ -662,56 +649,19 @@ object Dedup {
     */
   def connectedComponents(nodes: DataFrame, idCol: String,
                           pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 25,
-                          algorithm: String = "pointer-jumping"): DataFrame = {
-    val ids = nodes.select(col(idCol).cast("long").as("id")).distinct()
-    // materialize the caller's pair frame ONCE: it may be expensive to
-    // produce (q75's cosine pair build), and both the auto skew probe and
-    // the algorithms' initial edge materialization would otherwise each
-    // replay it. Safe to release afterwards — both algorithms return
-    // frames rooted in their own snapshots (graft.core.Snapshot).
-    import org.apache.spark.storage.StorageLevel
-    val pn = pairs
-      .select(col(aCol).cast("long").as(aCol), col(bCol).cast("long").as(bCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val out = try {
-      algorithm match {
-        case "pointer-jumping" => ccPointerJumping(ids, pn, aCol, bCol, maxIter)
-        case "star"            => ccStar(ids, pn, aCol, bCol, maxIter)
-        case "auto" =>
-          // one fixed-size skew probe: pointer jumping replays EVERY edge
-          // through the propagation join each round, so a hot node (star-
-          // shaped near-dup cluster: boilerplate, headers, license text)
-          // makes each round pay the hot degree again; the star rewrite
-          // contracts it instead. Low-skew graphs keep pointer jumping
-          // (fewer, cheaper jobs per round).
-          val maxDeg = pn
-            .select(col(aCol).as("n"))
-            .unionByName(pn.select(col(bCol).as("n")))
-            .groupBy(col("n")).agg(count(lit(1)).as("d"))
-            .agg(coalesce(max(col("d")), lit(0L))).collect()(0).getLong(0)
-          if (maxDeg >= 16384) ccStar(ids, pn, aCol, bCol, maxIter)
-          else ccPointerJumping(ids, pn, aCol, bCol, maxIter)
-        case other => throw new IllegalArgumentException(
-          s"unknown connectedComponents algorithm '$other' " +
-            "(expected pointer-jumping, star, or auto)")
-      }
-    } finally pn.unpersist(false)
-    out.select(col("id").as(idCol), col("comp").as("component"))
-  }
-
-  private def ccPointerJumping(ids: DataFrame, pairs: DataFrame,
-                               aCol: String, bCol: String,
-                               maxIter: Int): DataFrame =
+                          maxIter: Int = 25): DataFrame =
     Snapshot.loop("cc-pj") { loop =>
+      val ids = nodes.select(col(idCol).cast("long").as("id")).distinct()
       // eager: every round reads the edge set (r18: a persisted edge set
       // kept q290's whole build in each round's plan, ~0.3–1.0 s of driver
-      // planning per ~0.07 s round). The rounds are lazy: their label-sum
+      // planning per ~0.07 s round). Both orientations come from one
+      // generator, so the snapshot's job evaluates the caller's pair build
+      // (q75's cosine pairs) once. The rounds are lazy: their label-sum
       // probe materializes them.
+      val (a, b) = (col(aCol).cast("long"), col(bCol).cast("long"))
       val edges = loop.take(pairs
-        .select(col(aCol).cast("long").as("s"), col(bCol).cast("long").as("d"))
-        .unionByName(pairs
-          .select(col(bCol).cast("long").as("s"), col(aCol).cast("long").as("d")))
+        .select(inline(array(struct(a.as("s"), b.as("d")),
+          struct(b.as("s"), a.as("d")))))
         .distinct(), eager = true)
       // coalesce covers the empty node set: sum() over zero rows is null,
       // and the loop then converges on 0 == 0
@@ -737,66 +687,7 @@ object Dedup {
         throw new IllegalStateException(
           s"connectedComponents did not converge in $maxIter rounds — " +
             "raise maxIter (cluster diameter exceeds the bound)")
-      r.frame
-    }
-
-  /** Alternating large-star/small-star rounds (Kiveris et al., SoCC'14).
-    * Edge set is kept oriented large→small; a round rewrites every edge
-    * toward the neighborhood minimum (large-star hangs big neighbors onto
-    * it, small-star contracts the small ones), and at the fixpoint the
-    * edges ARE the labeling: one (node, component-min) edge per non-min
-    * node. Convergence = the (count, endpoint-sum, xxhash64-sum) probe of
-    * the edge set repeating — a fixed-size aggregate; a false positive
-    * needs a 64-bit hash-sum collision between consecutive rounds on top
-    * of equal counts and sums.
-    */
-  private def ccStar(ids: DataFrame, pairs: DataFrame,
-                     aCol: String, bCol: String, maxIter: Int): DataFrame =
-    Snapshot.loop("cc-star") { loop =>
-      // lazy snapshots throughout: each one's probe materializes it
-      val init = loop.take(pairs
-        .select(greatest(col(aCol), col(bCol)).cast("long").as("s"),
-          least(col(aCol), col(bCol)).cast("long").as("d"))
-        .filter(col("s") =!= col("d"))
-        .distinct(), eager = false)
-      // xxhash64 spans the full long range, so its sum accumulates in
-      // decimal — a long sum would hit ANSI ARITHMETIC_OVERFLOW
-      def probe(e: DataFrame): Seq[Any] = e.agg(count(lit(1)),
-        coalesce(sum(col("s") + col("d")), lit(0L)),
-        coalesce(sum(xxhash64(col("s"), col("d")).cast("decimal(20,0)")),
-          lit(0).cast("decimal(30,0)"))).collect()(0).toSeq
-      val p0 = probe(init)
-      val r =
-        if (p0.head == 0L) Snapshot.Stable(init, 0, converged = true) // no edges
-        else loop.untilStable(init, Some(p0), maxIter, eager = false) { edges =>
-          // large-star: for every node u, neighbors v > u re-link to
-          // m = min(Γ(u) ∪ {u}); output stays oriented v > u >= m
-          val sym = edges.select(col("s").as("u"), col("d").as("v"))
-            .unionByName(edges.select(col("d").as("u"), col("s").as("v")))
-          val lm = sym.groupBy(col("u")).agg(min(col("v")).as("mv"))
-            .select(col("u"), least(col("u"), col("mv")).as("m"))
-          val large = sym.join(lm, "u").filter(col("v") > col("u"))
-            .select(col("v").as("s"), col("m").as("d"))
-            .distinct()
-          // small-star: for every node u, its smaller neighbors (plus u)
-          // hang off m = min of them; d >= m always, so orientation holds
-          val sm = large.groupBy(col("s")).agg(min(col("d")).as("m"))
-          large.join(sm, "s")
-            .filter(col("d") =!= col("m"))
-            .select(col("d").as("s"), col("m").as("d"))
-            .unionByName(sm.select(col("s"), col("m").as("d")))
-            .distinct()
-        }(probe)
-      if (!r.converged)
-        throw new IllegalStateException(
-          s"connectedComponents(star) did not converge in $maxIter rounds — " +
-            "raise maxIter")
-      // star fixpoint: every non-min node carries exactly one edge to its
-      // component min; isolated nodes label themselves
-      val lab = r.frame.groupBy(col("s")).agg(min(col("d")).as("comp"))
-        .select(col("s").as("lid"), col("comp"))
-      ids.join(lab, col("id") === col("lid"), "left")
-        .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+      r.frame.select(col("id").as(idCol), col("comp").as("component"))
     }
 
   /** Span-level exact substring dedup (Lee et al. 2022, "Deduplicating
@@ -919,8 +810,7 @@ object Dedup {
     *     all-pairs) unless the caller passes a pre-built pair frame with
     *     (`id_a`, `id_b`) columns (exact bounded pairs in the gate query;
     *     an IVF-bucketed pair set at production scale);
-    *  2. transitive closure via [[connectedComponents]] (auto-picks the
-    *     large-star/small-star rewrite under hot-cluster skew);
+    *  2. transitive closure via [[connectedComponents]];
     *  3. keeper = the component minimum id (the CC label), every other
     *     member flagged `is_dup` — the same canonical-keeper rule as
     *     [[exact]], so downstream anti-joins compose across dedup stages.
@@ -928,13 +818,12 @@ object Dedup {
     * @return one row per input id: (`idCol`, `component`, `is_dup`).
     */
   def embeddingDedup(df: DataFrame, idCol: String, vecCol: String,
-                     threshold: Double, pairs: Option[DataFrame] = None,
-                     algorithm: String = "auto"): DataFrame = {
+                     threshold: Double,
+                     pairs: Option[DataFrame] = None): DataFrame = {
     val p = pairs.getOrElse(
       Similarity.nearDuplicates(df, idCol, vecCol, threshold))
     connectedComponents(df.select(col(idCol)), idCol,
-        p.select(col("id_a"), col("id_b")), "id_a", "id_b",
-        algorithm = algorithm)
+        p.select(col("id_a"), col("id_b")), "id_a", "id_b")
       .withColumn("is_dup", col(idCol) =!= col("component"))
   }
 }

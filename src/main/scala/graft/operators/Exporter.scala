@@ -7,13 +7,10 @@ import scala.collection.immutable.ListMap
 import scala.concurrent.Await
 import scala.concurrent.duration.{Duration, MINUTES}
 
-import graft.core.{Json, Sizing, Timing}
+import graft.core.{Json, Timing}
 import graft.sources.Readers
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.execution.RDDScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -151,21 +148,10 @@ object Exporter {
     val (prepared0, parts) = preparePartitionCols(df, partitionCols)
     val prepared = prepared0.drop(Readers.FileOrderCol)
 
-    // A single-partition frame would write its whole parquet output on ONE
-    // task — a scale-killer at 100 TB and a straggler even at bench scale.
-    // Range-repartition on time so the write parallelizes. Only a plan
-    // without exchanges has a partition count before it runs; an adaptive
-    // plan decides its count inside the write itself.
-    val laidOut =
-      if (parts.isEmpty && singlePartition(prepared))
-        prepared.repartitionByRange(8, col(TsCol))
-      else prepared
-    // observed ABOVE the range exchange: below it, the exchange's sampling
-    // job would run the observation too and double every count
     val observation = Observation()
     val ohlc = Seq("OPEN", "HIGH", "LOW", "CLOSE").forall(df.columns.contains)
     val aggs = validationAggs(ohlc)
-    val toWrite = laidOut.observe(observation, aggs.head, aggs.tail: _*)
+    val toWrite = prepared.observe(observation, aggs.head, aggs.tail: _*)
     val writer0 = toWrite.write.mode(writeMode)
       .option("compression", compression)
     val writer = rowGroupSize.fold(writer0)(n =>
@@ -216,24 +202,6 @@ object Exporter {
     exportReport + ("content_hash" -> Timing.timed("ex_hash")(
       contentHash(spark, rows, start, end, outPath, added, toWrite.schema,
         keys)))
-  }
-
-  /** True when `df`'s plan has no exchange and runs as one partition —
-    * known without running a job, and asked of a fresh plan so the
-    * caller's frame stays unplanned. A frame read from
-    * [[RangeScan.mergeContiguous]]'s output does not count: its one
-    * partition was sized from its input (a resampled frame smaller than
-    * one input partition) and is in (series, time) order. */
-  private def singlePartition(df: DataFrame): Boolean = {
-    val qe = Sizing.freshPlan(df)
-    val plan = qe.executedPlan
-    !plan.isInstanceOf[AdaptiveSparkPlanExec] &&
-      plan.collectFirst { case e: Exchange => e }.isEmpty &&
-      !plan.collectLeaves().exists {
-        case s: RDDScanExec => s.rdd.isInstanceOf[RangeScan.Merged[_]]
-        case _ => false
-      } &&
-      qe.toRdd.getNumPartitions == 1
   }
 
   /** Scale-adaptive bucket count for a persisted-index write: one bucket

@@ -280,15 +280,12 @@ object Graph {
   /** Per-node triangle counts over an undirected edge list (self-loops and
     * duplicate/reversed edges collapse first).
     *
-    * Scale shape: edges orient from the LOWER (degree, node) endpoint to
-    * the higher before wedge building, so every wedge apex enumerates
-    * only its higher-degree-or-later neighbors — the classic bound that
-    * caps per-apex wedge count at O(sqrt(|E|)) arboricity-style instead
-    * of a hub's full degree squared (a 10M-degree hub contributes zero
-    * apex wedges; its triangles close at its neighbors). Wedge closure is
-    * one more keyed equi-join against the oriented edges; per-node counts
-    * explode each triangle to its three corners and aggregate. No
-    * cartesian, no windows; every join keys on node ids.
+    * Scale shape: degree-oriented enumeration ([[orientedTriangles]]) caps
+    * per-apex wedge count arboricity-style instead of a hub's full degree
+    * squared (a 10M-degree hub contributes zero apex wedges; its triangles
+    * close at its neighbors); per-node counts explode each triangle to its
+    * three corners and aggregate. No cartesian, no windows; every join
+    * keys on node ids.
     */
   def triangleCount(edges: DataFrame, srcCol: String = "src",
                     dstCol: String = "dst"): DataFrame = {
@@ -318,6 +315,22 @@ object Graph {
       if (graft.core.Sizing.materializeForFanout(edges))
         undLazy.localCheckpoint(true)
       else undLazy
+    val corners = orientedTriangles(und)
+      .select(explode(array(col("apex"), col("x"), col("y"))).as("node"))
+    corners.groupBy("node").agg(count(lit(1)).as("n_triangles"))
+  }
+
+  /** Every triangle of an undirected edge set (id-ordered `a` < `b`,
+    * distinct, no self-loops) exactly once, as (`apex`, `x`, `y`) with
+    * `x` < `y`.
+    *
+    * Edges orient from the LOWER (degree, node) endpoint to the higher, so
+    * every wedge apex enumerates only its higher-degree-or-later neighbors:
+    * wedge volume is Σ C(outdeg, 2), arboricity-bounded (O(E^1.5) worst
+    * case), instead of a hub's full degree squared. Wedge closure is one
+    * more keyed equi-join against the edge set. No cartesian, no windows.
+    */
+  private def orientedTriangles(und: DataFrame): DataFrame = {
     val deg = und.select(col("a").as("n"))
       .unionAll(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -343,11 +356,8 @@ object Graph {
     // wedge pairs are id-ordered (x < y), so the closing edge probes the
     // id-ordered undirected set — a plain two-key equi-join (an OR over
     // the two orientations would plan as a nested loop)
-    val closed = wedges.join(und,
-      col("x") === col("a") && col("y") === col("b"))
-    val corners = closed.select(explode(array(col("apex"), col("x"),
-      col("y"))).as("node"))
-    corners.groupBy("node").agg(count(lit(1)).as("n_triangles"))
+    wedges.join(und, col("x") === col("a") && col("y") === col("b"))
+      .select(col("apex"), col("x"), col("y"))
   }
 
   /** Common-neighbors link prediction: for node pairs NOT already joined
@@ -535,39 +545,14 @@ object Graph {
         .join(sym.select(col("u").as("b"), col("v").as("w")), Seq("b", "w"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
     }
-    // DENSE: degree-ORIENTED triangle enumeration (the triangleCount
-    // device): orient each edge from its lower (degree, node) endpoint,
-    // build wedges only at apexes over their higher neighbors, close
-    // against the undirected set, then explode each found triangle onto
-    // its three edges — each triangle reaches each edge exactly once, so
-    // the counts match the symmetric form. Wedge volume drops to
-    // Σ C(outdeg, 2), arboricity-bounded (O(E^1.5) worst case) — on the
-    // 10× scale rehearsal's near-clique co-activity graph (avg deg 305,
-    // Σ deg² = 1.4e9) the symmetric form's peel rounds ran minutes each.
-    def supportOriented(cur: DataFrame): DataFrame = {
-      val deg = cur.select(col("a").as("n"))
-        .unionAll(cur.select(col("b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val keyed = cur
-        .join(deg.withColumnRenamed("n", "a").withColumnRenamed("d", "da"),
-          "a")
-        .join(deg.withColumnRenamed("n", "b").withColumnRenamed("d", "db"),
-          "b")
-        .select(
-          when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
-            struct(col("a").as("lo"), col("b").as("hi")))
-            .otherwise(struct(col("b").as("lo"), col("a").as("hi")))
-            .as("e"))
-        .select(col("e.lo").as("lo"), col("e.hi").as("hi"))
-      val wedges = keyed.as("e1")
-        .join(keyed.select(col("lo"), col("hi").as("hi2")).as("e2"),
-          Seq("lo"))
-        .filter(col("hi") < col("hi2"))
-        .select(col("lo").as("apex"), col("hi").as("x"), col("hi2").as("y"))
-      val tri = wedges
-        .join(cur, col("x") === col("a") && col("y") === col("b"))
-        .select(col("apex"), col("x"), col("y"))
-      tri
+    // DENSE: degree-ORIENTED triangle enumeration (orientedTriangles, as
+    // in triangleCount), then each found triangle exploded onto its three
+    // edges — each triangle reaches each edge exactly once, so the counts
+    // match the symmetric form. On the 10× scale rehearsal's near-clique
+    // co-activity graph (avg deg 305, Σ deg² = 1.4e9) the symmetric form's
+    // peel rounds ran minutes each.
+    def supportOriented(cur: DataFrame): DataFrame =
+      orientedTriangles(cur)
         .select(explode(array(
           struct(least(col("apex"), col("x")).as("a"),
             greatest(col("apex"), col("x")).as("b")),
@@ -576,7 +561,6 @@ object Graph {
           struct(col("x").as("a"), col("y").as("b")))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
-    }
     Snapshot.loop("ktruss") { loop =>
       // eager: the first round's wedge join reads the edge set several
       // times, and the density probe below reads it first

@@ -3,7 +3,7 @@ package graft.operators
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
-import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.Partition
 import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -164,24 +164,7 @@ object RangeScan {
     * holds at least one partition. No shuffle.
     */
   def mergeContiguous[T: ClassTag](rdd: RDD[T], weights: Array[Long],
-                                   target: Long): Merged[T] =
-    new Merged(merge(rdd, weights, target))
-
-  /** [[mergeContiguous]]'s output: partitions sized to a target and still
-    * in the range layout. A writer keeps them as they are: re-partitioning
-    * adds a shuffle and scatters their (keys, stamp) order.
-    */
-  final class Merged[T: ClassTag] private[RangeScan] (prev: RDD[T])
-      extends RDD[T](prev) {
-    override protected def getPartitions: Array[Partition] = prev.partitions
-    override def compute(split: Partition, context: TaskContext): Iterator[T] =
-      prev.iterator(split, context)
-    override protected def getPreferredLocations(split: Partition): Seq[String] =
-      prev.preferredLocations(split)
-  }
-
-  private def merge[T: ClassTag](rdd: RDD[T], weights: Array[Long],
-                                 target: Long): RDD[T] = {
+                                   target: Long): RDD[T] = {
     val groups = ArrayBuffer(ArrayBuffer.empty[Int])
     var acc = 0L
     for (p <- weights.indices) {

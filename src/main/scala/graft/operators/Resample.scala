@@ -154,17 +154,20 @@ object Resample {
     * reindexes onto the target-frequency grid and silently drops every
     * source row not exactly on it — so coarse candles are grid-samples, not
     * true aggregates. Kept as an explicit, documented mode for parity.
-    * `df` may have any layout: the repair input is laid out here.
+    * `df` must be in the range layout on (partitionCols, TIMESTAMP)
+    * ([[RangeScan.layout]]); the repair throws [[RangeScan.LayoutError]]
+    * otherwise.
     */
   def faithful(df: DataFrame, rule: String,
                useFfillFor: Seq[String] = Seq("VOLUME"),
                interpolatePrices: Boolean = true,
-               dropIncomplete: Boolean = true,
+               shortGapMinutes: Int = 5,
                partitionCols: Seq[String] = Nil): DataFrame = {
-    val repaired = Gaps.repairGaps(RangeScan.layout(df, partitionCols), rule,
-      useFfillFor, interpolatePrices,
-      partitionCols = partitionCols, computeReport = false).df
-    resampleOhlc(repaired, rule, dropIncomplete, partitionCols = partitionCols,
+    // not cached: a caller's one action is its only reader; the repaired
+    // frame is on the rule's grid, so no carries
+    val repaired = Gaps.repairGaps(df, rule, useFfillFor, interpolatePrices,
+      shortGapMinutes, partitionCols, computeReport = false).df
+    resampleOhlc(repaired, rule, partitionCols = partitionCols,
       inputOnBucketGrid = true)
   }
 

@@ -295,13 +295,9 @@ object Runner {
           val res =
             if (correctMode) correctFrames(tf)
             else cfg.gapPolicy match {
-              // not cached: the export's one write is its only reader; the
-              // repaired frame is on the rule's grid, so no carries
               case Some(gp) =>
-                Resample.resampleOhlc(Gaps.repairGaps(ndf, tf, gp.useFfillFor,
-                  gp.interpolatePrices, gp.shortGapMinutes,
-                  partitionCols = seriesKeys, computeReport = false).df, tf,
-                  partitionCols = seriesKeys, inputOnBucketGrid = true)
+                Resample.faithful(ndf, tf, gp.useFfillFor, gp.interpolatePrices,
+                  gp.shortGapMinutes, partitionCols = seriesKeys)
               case None => Resample.resampleOhlc(ndf, tf, partitionCols = seriesKeys)
             }
           val name = s"${baseName}_${Rules.suffix(tf)}"

@@ -910,12 +910,7 @@ object ExtensionQueries {
         .select(col("id_a"), col("id_b"),
           fr(cosineFast(s, col("ea"), col("eb")), 4).as("sim"))
         .filter(col("sim") >= 0.38)
-      // star rewrite, not auto: the probe's answer is known (bounded
-      // slice, low skew) and star's shrinking edge set converges in
-      // fewer latency-bound rounds on small graphs — measured 1.9 s vs
-      // 2.8 s for pointer jumping on this pair set
-      Dedup.embeddingDedup(emb, "vec_id", "emb", 0.38, pairs = Some(pairs),
-          algorithm = "star")
+      Dedup.embeddingDedup(emb, "vec_id", "emb", 0.38, pairs = Some(pairs))
         .select(col("vec_id"), col("component"), col("is_dup"))
         .orderBy("vec_id")
     },

@@ -322,10 +322,8 @@ class AnalyticsGraphSpec extends SparkSpec {
     val diamond = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (1L, 3L))
       .toDF("src", "dst")
     val cases = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
-      ("cc pointer-jumping", 1,
+      ("connectedComponents", 1,
         () => Dedup.connectedComponents(nodes, "n", path, "src", "dst")),
-      ("cc star", 1, () => Dedup.connectedComponents(nodes, "n", path,
-        "src", "dst", algorithm = "star")),
       ("pageRankFixedPoint", 1, () => Graph.pageRankFixedPoint(path)),
       ("pageRankFixedPoint past 8 rounds", 2,
         () => Graph.pageRankFixedPoint(path, iterations = 20)),

@@ -389,14 +389,10 @@ class DedupSimilaritySpec extends SparkSpec {
       .as[(Long, Long)].collect()
     assert(out.forall(_._2 == 1L), "one path component labeled by its min")
     // a run that fails to converge still releases every round snapshot
-    for (algorithm <- Seq("pointer-jumping", "star")) {
-      val (_, residue) = persistResidue(intercept[IllegalStateException] {
-        Dedup.connectedComponents(nodes, "doc_id", pairs, "a", "b",
-          maxIter = 2, algorithm = algorithm)
-      })(_ => Set.empty)
-      assert(residue.isEmpty,
-        s"$algorithm left RDDs persisted after throwing: $residue")
-    }
+    val (_, residue) = persistResidue(intercept[IllegalStateException] {
+      Dedup.connectedComponents(nodes, "doc_id", pairs, "a", "b", maxIter = 2)
+    })(_ => Set.empty)
+    assert(residue.isEmpty, s"RDDs left persisted after throwing: $residue")
   }
 
   test("paragraph dedup keeps first occurrence; empty documents drop") {
@@ -477,43 +473,36 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(out(5L).getAs[Boolean]("enc_pass"), "empty text is clean")
   }
 
-  test("connected components: star algorithm matches pointer jumping on random graphs") {
+  test("connected components equal union-find on random graphs") {
     val rnd = new scala.util.Random(11)
     for (trial <- 1 to 3) {
       val n = 60 + trial * 40
       val nodes = (1L to n.toLong).toDF("doc_id")
       val es = Seq.fill(n)((rnd.nextInt(n) + 1L, rnd.nextInt(n) + 1L))
         .filter(p => p._1 != p._2)
-      val pairs = es.toDF("a", "b")
-      val pj = Dedup.connectedComponents(nodes, "doc_id", pairs, "a", "b")
-        .as[(Long, Long)].collect().sorted.toSeq
-      val st = Dedup.connectedComponents(nodes, "doc_id", pairs, "a", "b",
-        algorithm = "star").as[(Long, Long)].collect().sorted.toSeq
-      assert(pj == st, s"algorithms disagree on random graph trial $trial")
-      if (trial == 1) {
-        val auto = Dedup.connectedComponents(nodes, "doc_id", pairs, "a",
-          "b", algorithm = "auto").as[(Long, Long)].collect().sorted.toSeq
-        assert(pj == auto, "auto mode must agree (skew probe picks either)")
-      }
+      val got = Dedup.connectedComponents(nodes, "doc_id", es.toDF("a", "b"),
+        "a", "b").as[(Long, Long)].collect().toMap
+      assert(got == UnionFindOracle.components(1L to n.toLong, es),
+        s"union-find disagrees on random graph trial $trial")
     }
   }
 
-  test("connected components(star): 1000-node path (worst diameter) converges") {
+  test("connected components: 1000-node path (worst diameter) converges") {
     val n = 1000L
     val nodes = (1L to n).toDF("doc_id")
     val path = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
-    val out = Dedup.connectedComponents(nodes, "doc_id", path, "a", "b",
-      algorithm = "star").as[(Long, Long)].collect()
+    val out = Dedup.connectedComponents(nodes, "doc_id", path, "a", "b")
+      .as[(Long, Long)].collect()
     assert(out.length == n && out.forall(_._2 == 1L),
       "one path component labeled by its min")
   }
 
-  test("connected components(star): 10k-leaf star (worst skew) converges fast") {
+  test("connected components: 10k-leaf star (worst skew) converges fast") {
     val n = 10001L
     val nodes = (1L to n).toDF("doc_id")
     val star = (2L to n).map(i => (1L, i)).toDF("a", "b")
     val out = Dedup.connectedComponents(nodes, "doc_id", star, "a", "b",
-      maxIter = 4, algorithm = "star").as[(Long, Long)].collect()
+      maxIter = 4).as[(Long, Long)].collect()
     assert(out.length == n && out.forall(_._2 == 1L),
       "hub component labeled 1 within a tight round budget")
   }
@@ -521,14 +510,11 @@ class DedupSimilaritySpec extends SparkSpec {
   test("connected components: empty node set and edgeless nodes, no NPE") {
     val noNodes = Seq.empty[Long].toDF("doc_id")
     val noPairs = Seq.empty[(Long, Long)].toDF("a", "b")
-    for (alg <- Seq("pointer-jumping", "star", "auto")) {
-      assert(Dedup.connectedComponents(noNodes, "doc_id", noPairs, "a", "b",
-        algorithm = alg).count() == 0)
-      val lone = Dedup.connectedComponents(Seq(7L, 9L).toDF("doc_id"),
-        "doc_id", noPairs, "a", "b", algorithm = alg)
-        .as[(Long, Long)].collect().sorted.toSeq
-      assert(lone == Seq((7L, 7L), (9L, 9L)), "edgeless nodes self-label")
-    }
+    assert(Dedup.connectedComponents(noNodes, "doc_id", noPairs, "a", "b")
+      .count() == 0)
+    val lone = Dedup.connectedComponents(Seq(7L, 9L).toDF("doc_id"),
+      "doc_id", noPairs, "a", "b").as[(Long, Long)].collect().sorted.toSeq
+    assert(lone == Seq((7L, 7L), (9L, 9L)), "edgeless nodes self-label")
   }
 
   test("vocabulary counts tokens globally; repetition ratio flags loops") {

@@ -1362,8 +1362,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("a correct-mode coarse export with no partition columns writes with no shuffle exchange") {
-    // the exporter's single-partition guard must leave the resampled
-    // frame's sized partitions as they are
+    // the export must keep the resampled frame's sized partitions as they
+    // are
     assertCoarseExportsUnshuffled(Nil)
   }
 

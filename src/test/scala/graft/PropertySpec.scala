@@ -377,26 +377,13 @@ class PropertySpec extends AnyFunSuite {
       } yield (a.toLong, b.toLong))
     } yield (n, edges)
     for (((n, edges), i) <- samples(caseGen, 6).zipWithIndex) {
-      // reference: classic union-find over the same edges
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
-      for ((a, b) <- edges) {
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      // min-id per component, via a second pass rooting every node
-      val expected = (0 until n).map(x => x.toLong -> find(x).toLong).toMap
       val nodes = (0L until n.toLong).toDF("id")
       val pairs = if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("a", "b")
                   else edges.toDF("a", "b")
       val got = Dedup.connectedComponents(nodes, "id", pairs, "a", "b")
         .as[(Long, Long)].collect().toMap
-      // union-find roots by path order; min-label propagation roots at the
-      // component minimum — normalize both to min-per-component
-      val byComp = expected.groupBy(_._2).flatMap { case (_, m) =>
-        val mn = m.keys.min; m.keys.map(_ -> mn)
-      }
-      assert(got == byComp, s"case $i: n=$n edges=${edges.take(10)}")
+      assert(got == UnionFindOracle.components(0L until n.toLong, edges),
+        s"case $i: n=$n edges=${edges.take(10)}")
     }
   }
 

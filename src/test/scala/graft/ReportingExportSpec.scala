@@ -112,8 +112,8 @@ class ReportingExportSpec extends SparkSpec {
     }.toDF("TIMESTAMP", "OPEN", "HIGH", "LOW", "CLOSE", "VOLUME")
     Exporter.writeParquetWithMetadata(
       big.coalesce(1), small, rowGroupSize = Some(4096L))
-    // the exporter range-parallelizes single-partition writes; every part
-    // file holds ~625 rows, far above the 4KB block budget
+    // one partition, one part file of 5000 rows, far above the 4KB block
+    // budget
     val part = Files.list(Paths.get(small)).toArray.map(_.toString)
       .filter(p => p.endsWith(".parquet") && !p.contains(".meta"))
     assert(part.nonEmpty)
@@ -195,19 +195,18 @@ class ReportingExportSpec extends SparkSpec {
     }
   }
 
-  test("a 1-partition frame takes the range layout; observed rows equal count()") {
+  test("a 1-partition frame writes one part file; observed rows equal count()") {
     val path = Files.createTempDirectory("graft_export_one").toString + "/one.parquet"
     val one = (0 until 5000).map { m =>
       (new Timestamp(ts(0).getTime + m * 60000L),
         10.0 + m, 10.5 + m, 9.5 + m, 10.25 + m, 100.0)
     }.toDF("TIMESTAMP", "OPEN", "HIGH", "LOW", "CLOSE", "VOLUME").coalesce(1)
     val rep = Exporter.writeParquetWithMetadata(one, path)
-    // observed above the range exchange: its sampling job must not count too
     assert(rep("rows") == one.count())
     assert(rep("start") == "2024-01-01 00:00:00+00:00")
     val parts = Files.list(Paths.get(path)).toArray.map(_.toString)
       .count(_.endsWith(".parquet"))
-    assert(parts > 1, s"the range layout splits the write: $parts part files")
+    assert(parts == 1, s"the write keeps the frame's partitioning: $parts part files")
   }
 
   test("writeZOrdered: box rows hit fewer files than a linear layout") {

@@ -107,7 +107,7 @@ class ResampleSpec extends SparkSpec {
     assert(correct(0).getAs[String]("SYMBOL") == "EURUSD")
     assert(correct(0).getAs[Double]("VOLUME") == 150.0, "true 5-min sum")
     // faithful mode reindexes onto the 5T grid first -> only boundary rows
-    val faithful = Resample.faithful(df, "5T", useFfillFor = Seq("VOLUME"))
+    val faithful = Resample.faithful(laid(df), "5T", useFfillFor = Seq("VOLUME"))
       .orderBy("TIMESTAMP").collect()
     assert(faithful(0).getAs[Double]("VOLUME") == 10.0,
       "grid-sample quirk: single boundary row, not the true aggregate")
